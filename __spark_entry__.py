@@ -3022,7 +3022,7 @@ def q_jsonld_canonicalize_distributed(spark: SparkSession, sf_dir: str) -> DataF
     after round 2, so DuckDB replays h2 analytically; duplicate-content
     documents are disambiguated with sha256(h2 || input_label) where the
     input label '_:g' || sha256(doc_id)[:12] || 'b0' is itself
-    replayable (operators/jsonld.py _globalize_label)."""
+    replayable (the BlankGen prefix of operators/jsonld.py triples_stage)."""
     from json_ld_spark.operators.canonical import canonicalize_bnodes_df
 
     _utc(spark)
@@ -4433,7 +4433,7 @@ def q_dedup_lsh_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate-quality evaluation of banded MinHash (dedup.
     lsh_pr_eval): precision/recall of the RAW 8-band × 2-row candidate
     set (md5 hash family — engine-replayable) against exact 3-gram
-    Jaccard ≥ 0.7 ground truth on the sampled dup-injected corpus —
+    Jaccard ≥ 0.4 ground truth on the sampled dup-injected corpus —
     the tuning-loop measurement of every dedup deployment, itself a
     first-class oracled operator. The corpus injects BOTH exact dups
     and 45%-prefix truncated NEAR-dups (Jaccard ~0.45, squarely on the
@@ -6190,7 +6190,7 @@ FROM lab CROSS JOIN UNNEST([
 # Distributed variant: docs are turn_idx%5==0, anon {{@type, role, text,
 # turn}} (4 quads, no conv). Duplicate-content documents share h2 and
 # are disambiguated with sha256(h2 || input_label); the input label is
-# '_:g' || sha256(doc_id)[:12] || 'b0' (_globalize_label + BlankGen).
+# '_:g' || sha256(doc_id)[:12] || 'b0' (triples_stage's BlankGen prefix).
 _CANON_DIST_SQL = _BASE_CTE + f"""
 , sigged AS (
   SELECT conv_id || '#' || CAST(turn_idx AS VARCHAR) AS doc_id,

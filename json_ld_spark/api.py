@@ -20,8 +20,8 @@ from .rdf import Quad, expanded_to_quads
 
 # processed expand_context cache: calling expand() per document with the
 # same options reprocessed the context every call (measured 34% of the
-# standalone expand+toRdf path; the Spark stages already cache via
-# operators/jsonld._active_context). ActiveContext reuse across
+# standalone expand+toRdf path; the Spark stages share this cache via
+# operators/jsonld._doc_stage). ActiveContext reuse across
 # documents is the established contract there — the expand_iri memo
 # mutating in place is a feature (it warms across documents).
 _INITIAL_CTX_CACHE: dict = {}

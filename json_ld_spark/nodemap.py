@@ -7,9 +7,9 @@ Reference parity:
   - merge_node semantics                ↔ node_map.rs:211-262
   - flatten (ordered/unordered)         ↔ crates/core/src/flattening/mod.rs:59-179
   - BlankGen ↔ the sequential Generator (flattening/environment.rs), kept
-    sequential *within* a document (document-local determinism); documents
-    are made globally unique later by hash-prefixing labels
-    (json_ld_spark.canon.hash_bnode_label / operators.canonicalize).
+    sequential *within* a document (document-local determinism); labels
+    are made globally unique by a per-document prefix on the generator
+    (operators/jsonld.py triples_stage: "_:g<sha256(doc_id)[:12]>b0").
 
 The node map is the central KG structure: graph → node-id → merged node.
 In the Spark pipeline the per-document part runs inside the expansion UDF

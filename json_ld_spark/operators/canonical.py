@@ -202,7 +202,7 @@ def canonicalize_bnodes_df(
     # Disambiguate identical hashes (automorphic orbits / byte-identical
     # duplicate documents) with a row-local deterministic tiebreaker:
     # sha2(h || input_label). The input label is already globally unique
-    # (doc-hash-prefixed, operators/jsonld.py _globalize_label), so the
+    # (doc-hash BlankGen prefix, operators/jsonld.py triples_stage), so the
     # 128-bit truncation collides w.p. ~n²/2^129. A row_number() window
     # over partitionBy(h) here — the round-2 design — would funnel every
     # bnode of a hot duplicated document through ONE task; the groupBy

@@ -2065,12 +2065,12 @@ def square_count(
     ).dropDuplicates()
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
     mids = deg.where(F.col("d") <= max_degree).select(F.col("a").alias("m"))
-    w1 = sym.select(F.col("a").alias("m"), F.col("b").alias("x"))
-    w2 = sym.select(F.col("a").alias("m"), F.col("b").alias("y"))
+    # mids is O(|V|): no broadcast hint, AQE picks the join from its size
+    legs = sym.select(F.col("a").alias("m"), "b").join(mids, "m")
     wedges = (
-        w1.join(w2, "m")
+        legs.select("m", F.col("b").alias("x"))
+        .join(legs.select("m", F.col("b").alias("y")), "m")
         .where(F.col("x") < F.col("y"))
-        .join(F.broadcast(mids) if max_degree <= 1024 else mids, "m")
     )
     diag = wedges.groupBy("x", "y").agg(F.count(F.lit(1)).alias("c"))
     return diag.agg(

@@ -1,16 +1,23 @@
-"""Spark stages for the JSON-LD pipeline: expand / flatten / triples.
+"""Spark stages for the JSON-LD pipeline: expand / flatten / triples / frame.
 
 Architecture (SURVEY.md §1.3, §3.3): document-local algorithms (expansion,
-node-map walk, quad emission) run inside Arrow-batched `mapInPandas`
-iterators — one Python call per partition batch, never per row crossing
-the JVM boundary. Cross-document work (node merge, dedup, linking,
-canonicalization) is DataFrame-native in the other operator modules.
+node-map walk, quad emission, framing) run inside one Arrow-batched
+`mapInPandas` kernel, `_doc_stage` — one Python call per partition batch,
+never per row crossing the JVM boundary. Each stage only supplies a
+per-document function and its output schema; options, loader, active
+context and quarantine are the kernel's. Cross-document work (node merge,
+dedup, linking, canonicalization) is DataFrame-native in the other
+operator modules.
+
+Quarantine: a document that raises `JsonLdError` or is not JSON becomes
+an error row (expand / flatten / frame) or no rows (triples); any other
+exception is a bug and fails the job.
 
 Blank-node determinism: inside each document the sequential generator
 produces the reference's labels ("b0", "b1", …;
-crates/core/src/flattening/environment.rs); before documents merge into
-the corpus triple table each label is prefixed with a hash of the doc_id
-(SURVEY.md §1.3 "Generator" row), so labels are globally unique and
+crates/core/src/flattening/environment.rs). For the corpus triple table
+the generator's prefix carries a hash of the doc_id ("_:g<sha256[:12]>b0",
+SURVEY.md §1.3 "Generator" row), so labels are born globally unique and
 deterministic with no cross-partition coordination.
 """
 
@@ -18,13 +25,15 @@ from __future__ import annotations
 
 import hashlib
 import json
-from typing import Any, Iterator, Optional
+from typing import Any, Callable, Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..api import _initial_context
 from ..canonicalize import canonicalize_quads
-from ..context import ActiveContext, Loader, dict_loader, no_loader, process_context
+from ..context import ActiveContext, dict_loader, no_loader
+from ..errors import JsonLdError
 from ..expand import expand_document
 from ..nodemap import BlankGen, flatten_expanded
 from ..options import JsonLdOptions, options_payload
@@ -72,41 +81,59 @@ FLATTENED_SCHEMA = T.StructType(
     ]
 )
 
-# module-level cache: processed active contexts per (ctx_json, base, mode)
-_CTX_CACHE: dict[tuple, ActiveContext] = {}
-
-
-def _active_context(
-    ctx_json: Optional[str],
-    base: Optional[str],
-    processing_mode: str,
-    registry: Optional[dict],
-) -> ActiveContext:
-    key = (ctx_json, base, processing_mode)
-    got = _CTX_CACHE.get(key)
-    if got is None:
-        active = ActiveContext(base_iri=base, original_base_url=base)
-        if ctx_json:
-            loader: Loader = dict_loader(registry) if registry else no_loader
-            active = process_context(
-                active,
-                json.loads(ctx_json),
-                base,
-                loader=loader,
-                processing_mode=processing_mode,
-            )
-        _CTX_CACHE[key] = active
-        got = active
-    return got
+FRAMED_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.StringType(), False),
+        T.StructField("framed", T.StringType(), True),
+        T.StructField("error", T.StringType(), True),
+    ]
+)
 
 
 def _doc_hash_prefix(doc_id: str) -> str:
     return hashlib.sha256(doc_id.encode("utf-8")).hexdigest()[:12]
 
 
-def _globalize_label(label: str, prefix: str) -> str:
-    # "_:b0" -> "_:g<dochash>b0": globally unique, deterministic
-    return f"_:g{prefix}{label[2:]}"
+def _doc_stage(
+    df: DataFrame,
+    per_doc: Callable[[Any, Any, ActiveContext, JsonLdOptions], list],
+    schema: T.StructType,
+    context: Any,
+    options: JsonLdOptions | None,
+    context_registry: dict | None,
+    doc_col: str,
+    id_col: str,
+    error_row: Optional[Callable[[str], tuple]],
+) -> DataFrame:
+    """The one document-stage kernel. Per task: options and loader are
+    rebuilt once (the loader is not shipped, the registry is) and the
+    active context comes from `api._initial_context`, which caches only
+    loader-free contexts — a registry can serve different content under
+    the same IRI. Per document: parse, then
+    `per_doc(doc_id, parsed_doc, active, opts)` returns the output rows
+    as tuples in schema order; a malformed document yields
+    `(doc_id, *error_row(msg))`, or nothing when `error_row` is None."""
+    payload = options_payload(options or JsonLdOptions())
+    columns = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        opts = JsonLdOptions(
+            **payload,
+            loader=dict_loader(context_registry) if context_registry else no_loader,
+        )
+        active = _initial_context(opts.with_(expand_context=context), None)
+        for pdf in batches:
+            rows: list = []
+            # tolist() beats Series.__iter__ by ~2x for string columns
+            for doc_id, doc in zip(pdf[id_col].tolist(), pdf[doc_col].tolist()):
+                try:
+                    rows += per_doc(doc_id, _loads(doc), active, opts)
+                except (JsonLdError, json.JSONDecodeError) as ex:
+                    if error_row is not None:
+                        rows.append((doc_id, *error_row(f"{type(ex).__name__}: {ex}")))
+            yield pd.DataFrame(rows, columns=columns)
+
+    return df.mapInPandas(run, schema=schema)
 
 
 def expand_stage(
@@ -119,44 +146,15 @@ def expand_stage(
 ) -> DataFrame:
     """doc JSON column → expanded JSON column (errors captured per row,
     not poisoning the batch — the quarantine pattern of SURVEY.md §2 D3)."""
-    opts = options or JsonLdOptions()
-    ctx_json = json.dumps(context) if context is not None else None
-    base = opts.base
-    mode = opts.processing_mode
-    payload = options_payload(opts)
-    registry = context_registry
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local_opts = JsonLdOptions(
-            **payload,
-            loader=dict_loader(registry) if registry else no_loader,
-        )
-        active = _active_context(ctx_json, base, mode, registry)
-        for pdf in batches:
-            out_ids, out_exp, out_err, out_warn = [], [], [], []
-            for doc_id, doc in zip(pdf[id_col], pdf[doc_col]):
-                try:
-                    expanded, warnings = expand_document(
-                        _loads(doc), active, local_opts, base
-                    )
-                    out_exp.append(json.dumps(expanded, ensure_ascii=False))
-                    out_err.append(None)
-                    out_warn.append(len(warnings))
-                except Exception as ex:  # noqa: BLE001 - quarantine row
-                    out_exp.append(None)
-                    out_err.append(f"{type(ex).__name__}: {ex}")
-                    out_warn.append(0)
-                out_ids.append(doc_id)
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_ids,
-                    "expanded": out_exp,
-                    "error": out_err,
-                    "n_warnings": pd.array(out_warn, dtype="int32"),
-                }
-            )
+    def per_doc(doc_id, doc, active, opts):
+        expanded, warnings = expand_document(doc, active, opts, opts.base)
+        return [(doc_id, json.dumps(expanded, ensure_ascii=False), None, len(warnings))]
 
-    return df.mapInPandas(run, schema=EXPANDED_SCHEMA)
+    return _doc_stage(
+        df, per_doc, EXPANDED_SCHEMA, context, options, context_registry,
+        doc_col, id_col, lambda msg: (None, msg, 0),
+    )
 
 
 def triples_stage(
@@ -171,66 +169,31 @@ def triples_stage(
 ) -> DataFrame:
     """doc JSON column → triple rows (the full §3.3 flagship path:
     expand → node map → quads, one fused Arrow pass per partition).
+    Malformed documents emit no rows.
 
-    globalize_bnodes: hash-prefix per-doc labels for the corpus graph.
+    globalize_bnodes: label blank nodes "_:g<sha256(doc_id)[:12]>b<n>".
     canonical_bnodes: content-hash canonical labels (golden comparison).
     """
-    opts = options or JsonLdOptions()
-    ctx_json = json.dumps(context) if context is not None else None
-    base, mode = opts.base, opts.processing_mode
-    rdf_direction = opts.rdf_direction
-    generalized = opts.produce_generalized_rdf
-    payload = options_payload(opts)
-    registry = context_registry
+    global_labels = globalize_bnodes and not canonical_bnodes
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local_opts = JsonLdOptions(
-            **payload,
-            loader=dict_loader(registry) if registry else no_loader,
+    def per_doc(doc_id, doc, active, opts):
+        expanded, _w = expand_document(doc, active, opts, opts.base)
+        gen = BlankGen(f"g{_doc_hash_prefix(str(doc_id))}b") if global_labels else BlankGen()
+        quads = expanded_to_quads(
+            expanded,
+            rdf_direction=opts.rdf_direction,
+            produce_generalized_rdf=opts.produce_generalized_rdf,
+            gen=gen,
+            mutate_ok=True,
         )
-        active = _active_context(ctx_json, base, mode, registry)
-        for pdf in batches:
-            rows: dict[str, list] = {k.name: [] for k in TRIPLE_SCHEMA.fields}
-            # tolist() beats Series.__iter__ by ~2x for string columns
-            for doc_id, doc in zip(pdf[id_col].tolist(), pdf[doc_col].tolist()):
-                try:
-                    expanded, _w = expand_document(
-                        _loads(doc), active, local_opts, base
-                    )
-                    quads = expanded_to_quads(
-                        expanded,
-                        rdf_direction=rdf_direction,
-                        produce_generalized_rdf=generalized,
-                        gen=BlankGen(),
-                        mutate_ok=True,
-                    )
-                except Exception:  # noqa: BLE001 - skip bad doc
-                    continue
-                if canonical_bnodes:
-                    quads = canonicalize_quads(quads)
-                elif globalize_bnodes:
-                    prefix = _doc_hash_prefix(str(doc_id))
-                    quads = [
-                        tuple(
-                            _globalize_label(t, prefix)
-                            if isinstance(t, str) and t.startswith("_:")
-                            else t
-                            for t in q
-                        )
-                        for q in quads
-                    ]
-                for graph, subj, pred, kind, obj, dt, lang in quads:
-                    rows["doc_id"].append(doc_id)
-                    rows["graph"].append(graph)
-                    rows["subj"].append(subj)
-                    rows["pred"].append(pred)
-                    rows["obj_kind"].append(kind)
-                    rows["obj"].append(obj)
-                    rows["datatype"].append(dt)
-                    rows["lang"].append(lang)
-            yield pd.DataFrame(rows)
+        if canonical_bnodes:
+            quads = canonicalize_quads(quads)
+        return [(doc_id, *q) for q in quads]
 
-    return df.mapInPandas(run, schema=TRIPLE_SCHEMA)
+    return _doc_stage(
+        df, per_doc, TRIPLE_SCHEMA, context, options, context_registry,
+        doc_col, id_col, None,
+    )
 
 
 def flatten_stage(
@@ -242,50 +205,16 @@ def flatten_stage(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """doc → one row per flattened node (expanded → node map → flat)."""
-    opts = options or JsonLdOptions()
-    ctx_json = json.dumps(context) if context is not None else None
-    base, mode = opts.base, opts.processing_mode
-    payload = options_payload(opts)
-    registry = context_registry
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local_opts = JsonLdOptions(
-            **payload,
-            loader=dict_loader(registry) if registry else no_loader,
-        )
-        active = _active_context(ctx_json, base, mode, registry)
-        for pdf in batches:
-            ids, nodes, node_ids, errs = [], [], [], []
-            for doc_id, doc in zip(pdf[id_col], pdf[doc_col]):
-                try:
-                    expanded, _w = expand_document(
-                        _loads(doc), active, local_opts, base
-                    )
-                    flat = flatten_expanded(expanded, ordered=True, gen=BlankGen())
-                    for node in flat:
-                        ids.append(doc_id)
-                        nodes.append(json.dumps(node, ensure_ascii=False))
-                        node_ids.append(node.get("@id"))
-                        errs.append(None)
-                except Exception as ex:  # noqa: BLE001
-                    ids.append(doc_id)
-                    nodes.append(None)
-                    node_ids.append(None)
-                    errs.append(f"{type(ex).__name__}: {ex}")
-            yield pd.DataFrame(
-                {"doc_id": ids, "node_json": nodes, "node_id": node_ids, "error": errs}
-            )
+    def per_doc(doc_id, doc, active, opts):
+        expanded, _w = expand_document(doc, active, opts, opts.base)
+        flat = flatten_expanded(expanded, ordered=True, gen=BlankGen())
+        return [(doc_id, json.dumps(n, ensure_ascii=False), n.get("@id"), None) for n in flat]
 
-    return df.mapInPandas(run, schema=FLATTENED_SCHEMA)
-
-
-FRAMED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("framed", T.StringType(), True),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
+    return _doc_stage(
+        df, per_doc, FLATTENED_SCHEMA, context, options, context_registry,
+        doc_col, id_col, lambda msg: (None, None, msg),
+    )
 
 
 def frame_stage(
@@ -302,10 +231,10 @@ def frame_stage(
     expand → frame → compact against the frame's context.
 
     The frame is an authored document (small by construction), so it is
-    frame-expanded ONCE on the driver and shipped to executors as plain
-    JSON in the task closure — per-row work is document-local, the
-    stage is a mapInPandas projection with no shuffle, and output JSON
-    is key-sorted so byte-equality is partition-invariant."""
+    frame-expanded ONCE on the driver and shipped to executors in the
+    task closure — per-row work is document-local, the stage is a
+    mapInPandas projection with no shuffle, and output JSON is
+    key-sorted so byte-equality is partition-invariant."""
     from ..api import expand as _expand
     from ..frame import finalize_framed, frame_expanded
 
@@ -314,43 +243,19 @@ def frame_stage(
         frame_expansion=True,
         loader=dict_loader(context_registry) if context_registry else no_loader,
     )
-    expanded_frame_json = json.dumps(_expand(frame_doc, frame_opts, opts.base))
-    frame_ctx_json = json.dumps(
-        frame_doc.get("@context") if isinstance(frame_doc, dict) else None
+    expanded_frame = _expand(frame_doc, frame_opts, opts.base)
+    frame_ctx = frame_doc.get("@context") if isinstance(frame_doc, dict) else None
+
+    def per_doc(doc_id, doc, active, opts):
+        expanded, _w = expand_document(doc, active, opts, opts.base)
+        framed = frame_expanded(expanded, expanded_frame, opts)
+        result = finalize_framed(framed, frame_ctx, opts, opts.base)
+        return [(doc_id, json.dumps(result, ensure_ascii=False, sort_keys=True), None)]
+
+    return _doc_stage(
+        df, per_doc, FRAMED_SCHEMA, context, opts, context_registry,
+        doc_col, id_col, lambda msg: (None, msg),
     )
-    ctx_json = json.dumps(context) if context is not None else None
-    base, mode = opts.base, opts.processing_mode
-    payload = options_payload(opts)
-    registry = context_registry
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local_opts = JsonLdOptions(
-            **payload,
-            loader=dict_loader(registry) if registry else no_loader,
-        )
-        expanded_frame = json.loads(expanded_frame_json)
-        frame_ctx = json.loads(frame_ctx_json)
-        active = _active_context(ctx_json, base, mode, registry)
-        for pdf in batches:
-            ids, outs, errs = [], [], []
-            for doc_id, doc in zip(pdf[id_col], pdf[doc_col]):
-                try:
-                    expanded, _w = expand_document(
-                        _loads(doc), active, local_opts, base
-                    )
-                    framed = frame_expanded(expanded, expanded_frame, local_opts)
-                    result = finalize_framed(framed, frame_ctx, local_opts, base)
-                    outs.append(
-                        json.dumps(result, ensure_ascii=False, sort_keys=True)
-                    )
-                    errs.append(None)
-                except Exception as ex:  # noqa: BLE001 - quarantine row
-                    outs.append(None)
-                    errs.append(f"{type(ex).__name__}: {ex}")
-                ids.append(doc_id)
-            yield pd.DataFrame({"doc_id": ids, "framed": outs, "error": errs})
-
-    return df.mapInPandas(run, schema=FRAMED_SCHEMA)
 
 
 def from_rdf_stage(

@@ -2,15 +2,20 @@
 parity, entity linking, node merge, distributed canonicalization,
 checkpoint resume. Run on local[4]."""
 
+import hashlib
+import json
 import os
 
 import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from json_ld_spark.operators import checkpoint as cp
 from json_ld_spark.operators.canonical import canonicalize_bnodes_df
 from json_ld_spark.operators.jsonld import (
+    EXPANDED_SCHEMA,
+    _doc_stage,
     dedup_triples,
     expand_stage,
     flatten_stage,
@@ -86,14 +91,75 @@ def test_expand_and_flatten_stages(spark):
         ("d1", '{"@id": "http://n/1", "http://ex/p": {"http://ex/q": "deep"}}'),
         ("d2", '{"@id": "http://n/2", "http://ex/p": "x"}'),
         ("bad", "{not json"),
+        ("num_id", '{"@id": 5, "http://ex/p": "x"}'),
+        ("num_ctx", '{"@context": 5, "@id": "http://n/3", "http://ex/p": "x"}'),
     ]
+    quarantined = {
+        "bad": "JSONDecodeError: ",
+        "num_id": "InvalidIdValue: ",
+        "num_ctx": "InvalidContext: ",
+    }
     df = spark.createDataFrame(rows, "doc_id string, doc string")
     exp = expand_stage(df).collect()
     by_id = {r["doc_id"]: r for r in exp}
-    assert by_id["d1"]["error"] is None and by_id["bad"]["error"] is not None
+    assert by_id["d1"]["error"] is None
+    for doc_id, prefix in quarantined.items():
+        assert by_id[doc_id]["error"].startswith(prefix)
+        assert by_id[doc_id]["expanded"] is None
     flat = flatten_stage(df)
     d1_nodes = flat.filter(F.col("doc_id") == "d1").collect()
     assert sorted(r["node_id"] for r in d1_nodes) == ["_:b0", "http://n/1"]
+    flat_errors = {
+        r["doc_id"]: r["error"] for r in flat.where(F.col("error").isNotNull()).collect()
+    }
+    assert flat_errors.keys() == quarantined.keys()
+    for doc_id, prefix in quarantined.items():
+        assert flat_errors[doc_id].startswith(prefix)
+    # the triple table has no error column: quarantined docs emit no rows
+    triple_docs = {r["doc_id"] for r in triples_stage(df).select("doc_id").collect()}
+    assert triple_docs == {"d1", "d2"}
+
+
+def test_doc_stage_fails_job_on_non_jsonld_error(spark):
+    """Only JsonLdError and JSON decode errors are quarantined; any other
+    exception is a bug and must fail the job, not vanish."""
+
+    def per_doc(doc_id, doc, active, opts):
+        raise KeyError("bug")
+
+    df = spark.createDataFrame([("d1", "{}")], "doc_id string, doc string")
+    out = _doc_stage(
+        df, per_doc, EXPANDED_SCHEMA, None, None, None, "doc", "doc_id",
+        lambda msg: (None, msg, 0),
+    )
+    with pytest.raises(PythonException, match="KeyError"):
+        out.collect()
+
+
+def test_expand_stage_context_registry_not_cached_across_registries(spark):
+    """The same context IRI served by different registries must resolve
+    per registry, also when a Python worker is reused between jobs."""
+    df = spark.createDataFrame(
+        [("d", '{"p": "v"}')], "doc_id string, doc string"
+    ).coalesce(1)
+    for target in ("http://a/p", "http://b/p", "http://a/p"):
+        registry = {"http://ex/ctx": {"@context": {"p": target}}}
+        row = expand_stage(
+            df, context="http://ex/ctx", context_registry=registry
+        ).collect()[0]
+        assert row["error"] is None
+        assert json.loads(row["expanded"]) == [{target: [{"@value": "v"}]}]
+
+
+def test_jsonld_operator_has_one_doc_stage_kernel():
+    """Structural guard: every document stage goes through _doc_stage —
+    one mapInPandas call, and no blanket exception handler."""
+    from json_ld_spark.operators import jsonld
+
+    with open(jsonld.__file__, encoding="utf-8") as f:
+        src = f.read()
+    assert src.count("mapInPandas(") == 1
+    assert "except Exception" not in src
 
 
 def test_triples_stage_globalized_bnodes(spark):
@@ -109,6 +175,12 @@ def test_triples_stage_globalized_bnodes(spark):
     labels_b = {r["subj"] for r in t if r["doc_id"] == "dB"}
     assert labels_a.isdisjoint(labels_b)
     assert all(s.startswith("_:g") for s in subjects)
+    # the format _CANON_DIST_SQL replays: "_:g" + sha256(doc_id)[:12] + "b<n>"
+    for doc_id, labels in (("dA", labels_a), ("dB", labels_b)):
+        prefix = "_:g" + hashlib.sha256(doc_id.encode()).hexdigest()[:12]
+        assert labels == {prefix + "b0", prefix + "b1"}
+    local = triples_stage(df, globalize_bnodes=False).collect()
+    assert {r["subj"] for r in local if r["doc_id"] == "dA"} == {"_:b0", "_:b1"}
 
 
 def test_node_table_merge(spark, transcripts):
