@@ -3,10 +3,11 @@
 ``entry(spark)`` runs the flagship KG-construction pipeline at sf0.001.
 ``queries()`` exposes one callable per implemented operator from
 SURVEY.md §2 (the §2-I relational checklist plus the JSON-LD/KG/dedup/
-similarity/text/multimodal operator families); ``oracle_sql()`` gives a
-DuckDB-equivalent for every SQL-expressible one. Column names are
-aliased identically on both sides (the driver hash-compares values after
-sorting columns by name).
+similarity/text/multimodal operator families); ``oracle_sql()`` gives the
+DuckDB equivalent of every one. Both are read from the query registry
+(``json_ld_spark/queries/``), where ``@query(oracle=...)`` pairs each
+query with its oracle. Column names are aliased identically on both
+sides (the driver hash-compares values after sorting columns by name).
 
 Determinism notes (cross-engine value-hash parity):
 - session timezone forced to UTC in every query (parquet timestamps are
@@ -20,49 +21,19 @@ Determinism notes (cross-engine value-hash parity):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
-from pyspark.sql.window import Window
+from pyspark.sql import DataFrame, SparkSession
 
-from json_ld_spark.operators import dedup as dd
-from json_ld_spark.operators import graphops as gops
 from json_ld_spark.operators import linking as lk
-from json_ld_spark.operators import multimodal as mm
-from json_ld_spark.operators import similarity as sim
-from json_ld_spark.operators import textops as tx
-from json_ld_spark.operators.jsonld import (
-    dedup_triples,
-    expand_stage,
-    flatten_stage,
-    node_table,
-    triples_stage,
-)
-from json_ld_spark.operators.native import transcript_triples_native
-from json_ld_spark.options import JsonLdOptions
 from json_ld_spark.plans.kg import build_kg
-from json_ld_spark.sources.transcripts import (
-    TRANSCRIPT_CONTEXT,
-    transcripts_from_documents,
-    turns_to_jsonld,
-)
+from json_ld_spark.queries import REGISTRY, QueryFn
+from json_ld_spark.queries._common import _utc
+from json_ld_spark.sources.transcripts import transcripts_from_documents
 
 SF001 = "/root/testdata/sf0.001"
 
-TRIPLE_COLS = ["graph", "subj", "pred", "obj_kind", "obj", "datatype", "lang"]
-
-
-def _utc(spark: SparkSession) -> None:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
-def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# --------------------------------------------------------------------------
-# flagship entry
-# --------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: transcripts → JSON-LD triple extraction → entity linking
@@ -75,12226 +46,25 @@ def entry(spark: SparkSession) -> DataFrame:
     return parts["triples"].select("subj", "pred", "obj_kind", "obj", "datatype")
 
 
-# --------------------------------------------------------------------------
-# KG pipeline queries (SURVEY.md §2 C/D/E + north_star stages)
-# --------------------------------------------------------------------------
-
-def q_kg_triples_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Catalyst-native triple extraction (operators/native.py) — the
-    whole-stage-codegen 100 TB path."""
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    return transcript_triples_native(t).select(*TRIPLE_COLS)
-
-
-def q_kg_triples_generic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full JSON-LD engine (context processing + expansion + node map
-    + toRdf) via Arrow-batched mapInPandas — same quads as the native
-    path (asserted by tests/test_spark_pipeline.py), same oracle."""
-    _utc(spark)
-    docs = turns_to_jsonld(transcripts_from_documents(spark, sf_dir))
-    trip = triples_stage(docs, context=TRANSCRIPT_CONTEXT, options=JsonLdOptions())
-    return trip.select(*TRIPLE_COLS)
-
-
-def q_kg_nquads_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N-Quads sink + source roundtrip (sources/nquads.py; the reference
-    consumes N-Quads via nquads-syntax in tests/to_rdf.rs:16): native
-    triples serialized to wire lines (pure-JVM escape), written as text,
-    re-read through the one-regex distributed parser. Output = the same
-    triple table, so the kg_triples_native oracle applies verbatim."""
-    import shutil
-    import tempfile
-
-    from json_ld_spark.sources.nquads import read_nquads, write_nquads
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    quads = transcript_triples_native(t).select(*TRIPLE_COLS)
-    out = tempfile.mkdtemp(prefix="nquads_rt_")
-    shutil.rmtree(out, ignore_errors=True)
-    write_nquads(quads, out)
-    return read_nquads(spark, out).select(*TRIPLE_COLS)
-
-
-def q_kg_rdfs_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RDFS (ρdf) entailment materialization (operators/entailment.py;
-    beyond-reference — the Rust workspace stops at toRdf): the
-    transcript KG under a 3-level class hierarchy with subPropertyOf,
-    domain and range. Schema closure is iterative on the tiny ontology;
-    the corpus is only touched by broadcast joins."""
-    from json_ld_spark.operators.entailment import (
-        DOMAIN, RANGE, SUB_CLASS, SUB_PROP, rdfs_closure,
-    )
-
-    _utc(spark)
-    v = "https://example.org/transcript#"
-    onto = spark.createDataFrame(
-        [
-            (None, v + "Turn", SUB_CLASS, "iri", v + "Utterance", None, None),
-            (None, v + "Utterance", SUB_CLASS, "iri", v + "Resource", None, None),
-            (None, v + "Conversation", SUB_CLASS, "iri", v + "Resource", None, None),
-            (None, v + "role", SUB_PROP, "iri", v + "attribute", None, None),
-            (None, v + "conversation", DOMAIN, "iri", v + "Turn", None, None),
-            (None, v + "conversation", RANGE, "iri", v + "Conversation", None, None),
-        ],
-        "graph string, subj string, pred string, obj_kind string, "
-        "obj string, datatype string, lang string",
-    )
-    t = transcripts_from_documents(spark, sf_dir)
-    quads = transcript_triples_native(t).select(*TRIPLE_COLS).unionByName(onto)
-    return rdfs_closure(quads).select(*TRIPLE_COLS)
-
-
-def q_kg_owl_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OWL property-axiom closure (entailment.owl_property_closure,
-    the pD*/OWL-Horst property fragment; beyond-reference): declare
-    tx:nextTurn owl:TransitiveProperty and tx:prevTurn =
-    nextTurn⁻ (owl:inverseOf), then materialize over the per-conv
-    turn-adjacency chains — nextTurn closes to every later turn,
-    prevTurn materializes the full reverse reachability. Axiom tables
-    broadcast; the transitive loop is path-doubled semi-naive over
-    the predicate-filtered slice. Oracle: on a chain the closure is
-    analytic — all ordered turn pairs within a conversation."""
-    from json_ld_spark.operators.entailment import (
-        INVERSE_OF, RDF_TYPE as _RT, TRANSITIVE_PROP, owl_property_closure,
-    )
-    from json_ld_spark.operators.native import transcript_adjacency_native
-
-    _utc(spark)
-    v = "https://example.org/transcript#"
-    onto = spark.createDataFrame(
-        [
-            (None, v + "nextTurn", _RT, "iri", TRANSITIVE_PROP, None, None),
-            (None, v + "nextTurn", INVERSE_OF, "iri", v + "prevTurn", None, None),
-        ],
-        "graph string, subj string, pred string, obj_kind string, "
-        "obj string, datatype string, lang string",
-    )
-    t = transcripts_from_documents(spark, sf_dir)
-    # materialize the adjacency slice once: the closure's final union
-    # necessarily scans its input, and re-deriving it would re-run the
-    # transcript parse per scan (the parse dominates the closure cost)
-    adj = (
-        transcript_adjacency_native(t, with_doc_id=False)
-        .select(*TRIPLE_COLS)
-        .localCheckpoint(eager=False)
-    )
-    return owl_property_closure(adj, schema=onto).select(*TRIPLE_COLS)
-
-
-def q_kg_owl_functional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """owl:FunctionalProperty conflict report
-    (entailment.functional_conflicts): declare tx:role functional,
-    inject a second conflicting role assertion for every 7th document
-    (the multi-source disagreement case), and report (subj, pred,
-    n_values) per violating focus — the pairs a fusion pipeline would
-    route into merge_same_as or quarantine, deliberately NOT
-    auto-smelted (pD* rdfp1 would entail sameAs here). One broadcast
-    join + one subject-keyed agg."""
-    from json_ld_spark.operators.entailment import (
-        FUNCTIONAL_PROP, RDF_TYPE as _RT, functional_conflicts,
-    )
-    from json_ld_spark.operators.native import transcript_triples_native
-
-    _utc(spark)
-    v = "https://example.org/transcript#"
-    xs = "http://www.w3.org/2001/XMLSchema#string"
-    onto = spark.createDataFrame(
-        [(None, v + "role", _RT, "iri", FUNCTIONAL_PROP, None, None)],
-        "graph string, subj string, pred string, obj_kind string, "
-        "obj string, datatype string, lang string",
-    )
-    t = transcripts_from_documents(spark, sf_dir)
-    doc_id = (
-        F.substring(F.col("conv_id"), 6, 100).cast("int") * 16
-        + F.col("turn_idx")
-    )
-    extra = (
-        t.filter(doc_id % 7 == 0)
-        .select(
-            F.lit(None).cast("string").alias("graph"),
-            F.concat(
-                F.lit("https://example.org/conv/"), F.col("conv_id"),
-                F.lit("/turn/"), F.col("turn_idx").cast("string"),
-            ).alias("subj"),
-            F.lit(v + "role").alias("pred"),
-            F.lit("literal").alias("obj_kind"),
-            F.lit("auditor").alias("obj"),
-            F.lit(xs).alias("datatype"),
-            F.lit(None).cast("string").alias("lang"),
-        )
-    )
-    quads = transcript_triples_native(t, with_doc_id=False).select(
-        *TRIPLE_COLS
-    ).unionByName(extra)
-    return functional_conflicts(quads, schema=onto)
-
-
-def q_kg_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KG lifecycle (operators/maintenance.py): absorb a transcript
-    delta without rebuilding the world — base KG (turns < 12) gets its
-    tool facts retracted and the new turns (>= 12) merged in; the node
-    table is splice-refreshed (only delta-touched subjects recompute).
-    Output = the refreshed node table; oracle = full recompute in SQL
-    (the splice == full-recompute invariant, driver-checked)."""
-    from json_ld_spark.operators.maintenance import (
-        affected_subjects, merge_triples, refresh_node_table,
-    )
-
-    _utc(spark)
-    v = "https://example.org/transcript#"
-    t = transcripts_from_documents(spark, sf_dir)
-    base = transcript_triples_native(t.filter(F.col("turn_idx") < 12))
-    adds = transcript_triples_native(t.filter(F.col("turn_idx") >= 12))
-    deletes = base.filter(F.col("pred") == v + "tool")
-    merged = merge_triples(base, adds=adds, deletes=deletes)
-    old_nodes = node_table(dedup_triples(base))
-    nodes = refresh_node_table(
-        old_nodes, merged, affected_subjects(adds=adds, deletes=deletes)
-    )
-    return nodes.select(
-        "node_id",
-        F.array_join("types", ",").alias("types_csv"),
-        F.array_join("preds", ",").alias("preds_csv"),
-        F.col("out_degree").cast("long").alias("out_degree"),
-        F.col("n_docs").cast("long").alias("n_docs"),
-    )
-
-
-def q_kg_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL 1.1 UPDATE (maintenance.update_where): DELETE {?t role
-    ?r} INSERT {?t speakerRole ?r} WHERE {?t role ?r} — the WHERE
-    bindings evaluate once, both templates instantiate as projections,
-    delete-before-insert semantics."""
-    from json_ld_spark.operators.maintenance import update_where
-
-    _utc(spark)
-    v = "https://example.org/transcript#"
-    t = transcripts_from_documents(spark, sf_dir)
-    tri3 = (
-        transcript_triples_native(t)
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-    )
-    return update_where(
-        tri3,
-        where=[("?t", v + "role", "?r")],
-        delete=[("?t", v + "role", "?r")],
-        insert=[("?t", v + "speakerRole", "?r")],
-    )
-
-
-def q_kg_sameas_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-source KG fusion (maintenance.merge_same_as): two mirror
-    ingestion sources re-emit every conversation under their own IRI
-    base and assert an owl:sameAs alias chain A←B←C. Each mirror also
-    contributes source-local facts: an ingestSource literal, mirror-B's
-    mirrorOf link pointing at mirror-C's alias IRI (object-side rewrite
-    → canonical self-loop), and BOTH mirrors assert rdf:type
-    Conversation (the cross-source duplicate fact that must collapse to
-    one row). merge_same_as runs connected components over the alias
-    edges, rewrites subjects and IRI objects onto the lexicographic-min
-    representative (= the canonical example.org IRI), drops the
-    absorbed sameAs assertions, and dedups on the quad key. Oracle:
-    analytic replay — base triples + the four fused rows per
-    conversation, all under canonical IRIs."""
-    from json_ld_spark.operators.maintenance import OWL_SAMEAS, merge_same_as
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    t1 = transcript_triples_native(t, with_doc_id=False).select(*TRIPLE_COLS)
-    convs = t.select("conv_id").dropDuplicates()
-    mb = "https://mirror-b.example.org/conv/"
-    mc = "https://mirror-c.example.org/conv/"
-    a_iri = F.concat(F.lit(_CB), F.col("conv_id"))
-    b_iri = F.concat(F.lit(mb), F.col("conv_id"))
-    c_iri = F.concat(F.lit(mc), F.col("conv_id"))
-
-    def conv_quads(s, p, kind, o, dt=None):
-        return convs.select(
-            F.lit(None).cast("string").alias("graph"),
-            s.alias("subj"),
-            F.lit(p).alias("pred"),
-            F.lit(kind).alias("obj_kind"),
-            o.alias("obj"),
-            F.lit(dt).cast("string").alias("datatype"),
-            F.lit(None).cast("string").alias("lang"),
-        )
-
-    src = t1
-    for part in (
-        conv_quads(a_iri, OWL_SAMEAS, "iri", b_iri),
-        conv_quads(b_iri, OWL_SAMEAS, "iri", c_iri),
-        conv_quads(b_iri, _V + "ingestSource", "literal", F.lit("mirror-b"), _XS),
-        conv_quads(c_iri, _V + "ingestSource", "literal", F.lit("mirror-c"), _XS),
-        conv_quads(b_iri, _V + "mirrorOf", "iri", c_iri),
-        conv_quads(b_iri, _RDF_TYPE, "iri", F.lit(_V + "Conversation")),
-        conv_quads(c_iri, _RDF_TYPE, "iri", F.lit(_V + "Conversation")),
-    ):
-        src = src.unionByName(part)
-    return merge_same_as(src).select(*TRIPLE_COLS)
-
-
-def q_kg_shacl_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KG quality gate (operators/validate.py): SHACL-core shape
-    validation of the transcript KG, with deterministic corruption
-    families injected so every constraint kind fires — role triples
-    deleted (minCount), a second conversation link added (maxCount),
-    the conversation object downgraded to a literal (nodeKind), the
-    timestamp datatype flipped (datatype), non-numeric / out-of-range
-    turnIndex values added (pattern + numeric + min/maxInclusive),
-    a role replaced outside the allowed set (in), conversations typed
-    only for conv%3≠1 (class), text blanked (minLength), a wrong
-    pipeline tag (hasValue) and a duplicated language tag (uniqueLang).
-    Shapes broadcast; the corpus side is one (focus, shape) count
-    shuffle, one value join, and one value-keyed type join for
-    sh:class. Oracle: analytic replay of exactly the injected
-    violations."""
-    from json_ld_spark.operators.validate import Shape, validate_shapes
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    tri = transcript_triples_native(t, with_doc_id=False)
-    idx = F.regexp_extract("subj", "/turn/([0-9]+)$", 1).cast("int")
-    tri = (
-        tri.filter(~((F.col("pred") == _V + "role") & (idx % 7 == 3)))
-        .withColumn(
-            "datatype",
-            F.when(
-                (F.col("pred") == _V + "timestamp") & (idx % 17 == 9),
-                F.lit(_XS),
-            ).otherwise(F.col("datatype")),
-        )
-        .withColumn(
-            "obj_kind",
-            F.when(
-                (F.col("pred") == _V + "conversation") & (idx % 19 == 11),
-                F.lit("literal"),
-            ).otherwise(F.col("obj_kind")),
-        )
-        .withColumn(
-            "obj",
-            F.when(
-                (F.col("pred") == _V + "role") & (idx == 6), F.lit("auditor")
-            )
-            .when((F.col("pred") == _V + "text") & (idx == 13), F.lit(""))
-            .otherwise(F.col("obj")),
-        )
-    )
-    subj = F.concat(
-        F.lit(_CB), "conv_id", F.lit("/turn/"), F.col("turn_idx").cast("string")
-    )
-
-    def turn_quads(filt, p, kind, o, dt=None, lang=None):
-        return t.filter(filt).select(
-            F.lit(None).cast("string").alias("graph"),
-            subj.alias("subj"),
-            F.lit(p).alias("pred"),
-            F.lit(kind).alias("obj_kind"),
-            o.cast("string").alias("obj"),
-            F.lit(dt).cast("string").alias("datatype"),
-            F.lit(lang).cast("string").alias("lang"),
-        )
-
-    always = F.lit(True)
-    conv_num = F.substring("conv_id", 6, 100).cast("int")
-    conv_types = (
-        t.select("conv_id").distinct()
-        .filter(conv_num % 3 != 1)
-        .select(
-            F.lit(None).cast("string").alias("graph"),
-            F.concat(F.lit(_CB), "conv_id").alias("subj"),
-            F.lit(_RDF_TYPE).alias("pred"),
-            F.lit("iri").alias("obj_kind"),
-            F.lit(_V + "Conversation").alias("obj"),
-            F.lit(None).cast("string").alias("datatype"),
-            F.lit(None).cast("string").alias("lang"),
-        )
-    )
-    for extra in (
-        turn_quads(
-            F.col("turn_idx") % 11 == 5, _V + "conversation", "iri",
-            F.concat(F.lit(_CB), "conv_id", F.lit("/alt")),
-        ),
-        turn_quads(
-            F.col("turn_idx") % 13 == 7, _V + "turnIndex", "literal",
-            F.concat(F.lit("x"), F.col("turn_idx").cast("string")), _XI,
-        ),
-        turn_quads(F.col("turn_idx") == 14, _V + "turnIndex", "literal",
-                   F.lit("99"), _XI),
-        turn_quads(F.col("turn_idx") == 5, _V + "turnIndex", "literal",
-                   F.lit("-1"), _XI),
-        turn_quads(
-            always, _V + "pipeline", "literal",
-            F.when(F.col("turn_idx") == 12, F.lit("v1")).otherwise(F.lit("v2")),
-            _XS,
-        ),
-        turn_quads(
-            always, _V + "note", "literal",
-            F.concat(F.lit("note-"), F.col("turn_idx").cast("string")),
-            lang="en",
-        ),
-        turn_quads(F.col("turn_idx") == 1, _V + "note", "literal",
-                   F.lit("dup"), lang="en"),
-        conv_types,
-    ):
-        tri = tri.unionByName(extra)
-    shapes = [
-        Shape("s_role", _V + "Turn", _V + "role", min_count=1, max_count=1,
-              node_kind="literal", datatype=_XS,
-              in_values=("user", "assistant", "system", "tool")),
-        Shape("s_conv", _V + "Turn", _V + "conversation", min_count=1,
-              max_count=1, node_kind="iri", cls=_V + "Conversation"),
-        Shape("s_ts", _V + "Turn", _V + "timestamp", datatype=_XD),
-        Shape("s_idx", _V + "Turn", _V + "turnIndex", pattern="^[0-9]+$",
-              min_inclusive=0.0, max_inclusive=15.0),
-        Shape("s_text", _V + "Turn", _V + "text", min_length=1),
-        Shape("s_pipe", _V + "Turn", _V + "pipeline", has_value="v2"),
-        Shape("s_note", _V + "Turn", _V + "note", unique_lang=True),
-    ]
-    return validate_shapes(tri, shapes).select(
-        "focus", "shape_id", "constraint_kind", "value", "n"
-    )
-
-
-def q_kg_node_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed node-map merge (merge_node, node_map.rs:211-262) as a
-    hash aggregation over the deduped triple table."""
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    nodes = node_table(dedup_triples(transcript_triples_native(t)))
-    return nodes.select(
-        "node_id",
-        F.array_join("types", ",").alias("types_csv"),
-        F.array_join("preds", ",").alias("preds_csv"),
-        F.col("out_degree").cast("long").alias("out_degree"),
-        F.col("n_docs").cast("long").alias("n_docs"),
-    )
-
-
-def q_kg_bucketed_node_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pay-the-shuffle-once story measured END-TO-END: materialize
-    the KG under write-audit-publish AND as a subj-bucketed managed
-    table (plans/kg.materialize_kg(bucketed_table=...)), then compute
-    the node table FROM THE BUCKETED TABLE. The bucketed scan reports
-    HashPartitioning(subj), so the (graph, subj) node merge plans with
-    ZERO Exchange — the shuffle was paid once at publish time
-    (PLANS.md §25; plan asserted in tests/test_layout.py). Output and
-    oracle are identical to kg_node_table."""
-    import re as _re
-
-    from json_ld_spark.plans.kg import materialize_kg
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    tag = _re.sub(r"[^A-Za-z0-9]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    out_dir = f"/tmp/json_ld_spark_bucketed/{tag}"
-    table = f"kg_triples_bucketed_{tag}"
-    materialize_kg(t, out_dir, n_buckets=16, bucketed_table=table)
-    nodes = node_table(spark.table(table))
-    return nodes.select(
-        "node_id",
-        F.array_join("types", ",").alias("types_csv"),
-        F.array_join("preds", ",").alias("preds_csv"),
-        F.col("out_degree").cast("long").alias("out_degree"),
-        F.col("n_docs").cast("long").alias("n_docs"),
-    )
-
-
-def q_kg_fuzzy_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typo-tolerant entity linking (linking.fuzzy_link_entities):
-    blocked Levenshtein match — prefix-OR-suffix 2-char pigeonhole
-    blocks (recall 1.0 at max_dist=1 for surfaces >= 4 chars), exact
-    integer distances, (dist, prior desc, entity_id) top-1 per
-    surface; fuzzy work runs at vocabulary level, the corpus stream
-    only equi-joins back. Oracle: same blocks + levenshtein() +
-    ROW_NUMBER replay."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    mention_src = docs.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("subj"),
-        "text",
-    )
-    mentions = lk.extract_mentions(mention_src)
-    dictionary = lk.synthesize_entity_dictionary(spark, sf_dir, max_entities=2000)
-    return lk.fuzzy_link_entities(mentions, dictionary, max_dist=1)
-
-
-def q_kg_entity_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mention extraction (JVM posexplode) + broadcast dictionary join +
-    vectorized pandas-UDF link scoring (north_star entity-linking stage)."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    mention_src = docs.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("subj"),
-        "text",
-    )
-    mentions = lk.extract_mentions(mention_src)
-    dictionary = lk.synthesize_entity_dictionary(spark, sf_dir, max_entities=2000)
-    links = lk.link_entities(mentions, dictionary, strategy="broadcast")
-    return links.select(
-        "subj",
-        "surface",
-        "entity_id",
-        F.col("tf").cast("long").alias("tf"),
-        F.col("first_pos").cast("long").alias("first_pos"),
-        F.round("prior", 6).alias("prior_r"),
-        F.round("score", 6).alias("score_r"),
-    )
-
-
-def q_kg_entity_links_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same linking semantics through the SALTED shuffle-join strategy
-    (hot-surface skew mitigation: probe side salted by xxhash64(subj),
-    dictionary replicated x n_salts). Shares kg_entity_links' oracle —
-    the strategy changes only the physical plan, so the value hash must
-    be identical."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    mention_src = docs.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("subj"),
-        "text",
-    )
-    mentions = lk.extract_mentions(mention_src)
-    dictionary = lk.synthesize_entity_dictionary(spark, sf_dir, max_entities=2000)
-    links = lk.link_entities(mentions, dictionary, strategy="salted", n_salts=8)
-    return links.select(
-        "subj",
-        "surface",
-        "entity_id",
-        F.col("tf").cast("long").alias("tf"),
-        F.col("first_pos").cast("long").alias("first_pos"),
-        F.round("prior", 6).alias("prior_r"),
-        F.round("score", 6).alias("score_r"),
-    )
-
-
-def q_kg_triples_interned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IRI interning roundtrip (SURVEY.md §4 'Vocabulary' row): encode
-    term columns to xxhash64 ids, verify dictionary injectivity, decode
-    via broadcast join — output must equal the plain extraction
-    (same DuckDB oracle as kg_triples_native)."""
-    from json_ld_spark.operators import interning as it
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    triples = transcript_triples_native(t).select(*TRIPLE_COLS)
-    dictionary = it.build_iri_dictionary(triples)
-    it.verify_dictionary(dictionary)
-    encoded = it.encode_triples(triples)
-    decoded = it.decode_triples(encoded, dictionary)
-    return decoded.select(*TRIPLE_COLS)
-
-
-def q_kg_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end build_kg (extraction + linking + dedup + node merge);
-    per-predicate triple counts, reconstructed end-to-end in the DuckDB
-    oracle (extraction counts from the transcript synthesis; the
-    mentions count replays dictionary build + top-1 linking + pair
-    dedup in SQL)."""
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    dictionary = lk.synthesize_entity_dictionary(spark, sf_dir, max_entities=500)
-    parts = build_kg(t, entity_dictionary=dictionary, engine="native")
-    return (
-        parts["triples"]
-        .groupBy("pred")
-        .agg(F.count(F.lit(1)).alias("n_triples"))
-        .orderBy("pred")
-    )
-
-
-def q_kg_dataset_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed dataset comparison (SURVEY.md §2 H rows at corpus
-    scale): diff the extracted triples against a deterministically
-    perturbed copy (every turnIndex quad with value % 5 == 0 dropped;
-    one synthetic quad injected per turn_idx==0 subject) — the anti/semi
-    join P/R machinery the golden scoring uses, as a first-class
-    operator. Oracle reconstructs the same counts in SQL."""
-    from json_ld_spark.operators.diff import diff_summary
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    base = transcript_triples_native(t).select(*TRIPLE_COLS)
-    v = "https://example.org/transcript#"
-    turn_pred = v + "turnIndex"
-    # try_cast: ANSI mode would throw casting IRI objects, and SQL AND
-    # does not short-circuit
-    right = base.filter(
-        ~(
-            (F.col("pred") == turn_pred)
-            & ((F.col("obj").try_cast("long") % 5) == 0)
-        )
-    )
-    injected = (
-        base.filter((F.col("pred") == turn_pred) & (F.col("obj") == "0"))
-        .select(
-            "graph", "subj",
-            F.lit(v + "extra").alias("pred"),
-            F.lit("literal").alias("obj_kind"),
-            F.lit("x").alias("obj"),
-            F.lit("http://www.w3.org/2001/XMLSchema#string").alias("datatype"),
-            F.lit(None).cast("string").alias("lang"),
-        )
-    )
-    right = right.unionByName(injected)
-    # no bnodes in this corpus: canonicalization off keeps the oracle exact
-    return diff_summary(base, right, canonicalize=False)
-
-
-def q_jsonld_canonical_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cardinality oracle for the canonical-bnodes toRdf path: the quad
-    VALUES are content-hash labels (no SQL twin — jsonld_triples_
-    canonical stays rows-only), but per-doc triple count and
-    bnode-rootedness are DuckDB-derivable and bind the path's shape."""
-    base = q_jsonld_triples_canonical(spark, sf_dir)
-    return base.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_triples"),
-        F.max(F.col("subj").startswith("_:")).alias("bnode_rooted"),
-    )
-
-
-def q_jsonld_expand_generic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Expansion stage alone (expand_document via mapInPandas): per-doc
-    structural facts extracted from the expanded JSON (top-object key
-    count + sample property values + warning counts) — all DuckDB-
-    derivable from the deterministic transcript synthesis, so this stage
-    gets a value oracle instead of the round-1 rows-only check."""
-    _utc(spark)
-    docs = turns_to_jsonld(transcripts_from_documents(spark, sf_dir))
-    out = expand_stage(docs, context=TRANSCRIPT_CONTEXT, options=JsonLdOptions())
-    root = F.get_json_object("expanded", "$[0]")
-    v = "https://example.org/transcript#"
-    return out.select(
-        "doc_id",
-        F.size(F.json_object_keys(root)).cast("long").alias("n_props"),
-        F.get_json_object("expanded", "$[0].@id").alias("subj"),
-        F.get_json_object(
-            "expanded", f"$[0]['{v}role'][0]['@value']"
-        ).alias("role"),
-        F.get_json_object("expanded", f"$[0]['{v}turnIndex'][0]['@value']")
-        .cast("long")
-        .alias("turn_val"),
-        F.col("n_warnings").cast("long").alias("n_warnings"),
-        F.col("error").isNotNull().alias("failed"),
-    )
-
-
-def q_jsonld_flatten_generic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flattening stage (expand → node map → flat node list): per-node
-    id, key count, and a sample property value — DuckDB-derivable
-    (empty @id-only nodes are dropped per flatten §D6, so each turn doc
-    yields exactly its turn node)."""
-    _utc(spark)
-    docs = turns_to_jsonld(transcripts_from_documents(spark, sf_dir))
-    out = flatten_stage(docs, context=TRANSCRIPT_CONTEXT, options=JsonLdOptions())
-    v = "https://example.org/transcript#"
-    return out.select(
-        "doc_id",
-        "node_id",
-        F.size(F.json_object_keys("node_json")).cast("long").alias("n_keys"),
-        F.get_json_object("node_json", f"$['{v}role'][0]['@value']").alias("role"),
-    )
-
-
-def _canon_docs(t: DataFrame) -> DataFrame:
-    """Doc builder for the canonical-label queries: same as
-    turns_to_jsonld but @id dropped on turn_idx%3==0 (bnode-rooted)."""
-    anon_struct = F.struct(
-        F.lit("Turn").alias("@type"),
-        F.col("role").alias("role"),
-        F.col("text").alias("text"),
-        F.col("conv_id").alias("conv"),
-        F.col("turn_idx").alias("turn"),
-    )
-    named_struct = F.struct(
-        F.concat(F.col("conv_id"), F.lit("/turn/"), F.col("turn_idx").cast("string")).alias("@id"),
-        F.lit("Turn").alias("@type"),
-        F.col("role").alias("role"),
-        F.col("text").alias("text"),
-        F.col("conv_id").alias("conv"),
-        F.col("turn_idx").alias("turn"),
-    )
-    return t.select(
-        F.concat(F.col("conv_id"), F.lit("#"), F.col("turn_idx").cast("string")).alias("doc_id"),
-        F.when(F.col("turn_idx") % 3 == 0, F.to_json(anon_struct, {"ignoreNullFields": "true"}))
-        .otherwise(F.to_json(named_struct, {"ignoreNullFields": "true"}))
-        .alias("doc"),
-    )
-
-
-def q_jsonld_triples_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """toRdf with hash-based canonical blank-node labels (SURVEY.md §2
-    D10): docs where every third turn loses its @id become bnode-rooted;
-    labels must be content-deterministic.
-
-    VALUE-EXACT oracle (round-3): the local canonicalizer
-    (canonicalize.py) stabilizes after 2 refinement rounds on
-    single-bnode documents, so the label is
-    '_:c' || sha256(S||chr(31)||sha256(S||chr(31)))[:16] with
-    S = chr(30)-join of the sorted quad signatures — DuckDB replays the
-    whole chain from the deterministic transcript synthesis."""
-    _utc(spark)
-    docs = _canon_docs(transcripts_from_documents(spark, sf_dir))
-    trip = triples_stage(
-        docs, context=TRANSCRIPT_CONTEXT, options=JsonLdOptions(), canonical_bnodes=True
-    )
-    return trip.select("doc_id", "subj", "pred", "obj_kind", "obj")
-
-
-def q_kg_canonical_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental canonicalization for a document delta
-    (maintenance.incremental_canonicalize): the canonical triple table
-    absorbs edited documents (turn_idx%4==1 get ' [edited]' appended —
-    some are bnode-rooted, so their canonical labels MUST change) and
-    deletions (turn_idx%16==15) by recomputing ONLY the delta docs and
-    splicing — the kept rows are never reshuffled. Result is provably
-    equal to a full canonical rebuild of the merged corpus (canonical
-    labels are pure per-document content functions; asserted in
-    tests/test_maintenance.py), so the oracle replays the full-rebuild
-    sha chain over the post-delta document set."""
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    base = triples_stage(
-        _canon_docs(t), context=TRANSCRIPT_CONTEXT, options=JsonLdOptions(),
-        canonical_bnodes=True,
-    ).select("doc_id", "subj", "pred", "obj_kind", "obj")
-    upserts = _canon_docs(
-        t.filter(F.col("turn_idx") % 4 == 1)
-        .withColumn("text", F.concat(F.col("text"), F.lit(" [edited]")))
-    )
-    deletes = t.filter(F.col("turn_idx") % 16 == 15).select(
-        F.concat(F.col("conv_id"), F.lit("#"), F.col("turn_idx").cast("string")).alias("doc_id")
-    )
-    from json_ld_spark.operators.maintenance import incremental_canonicalize
-
-    return incremental_canonicalize(
-        base, upserts=upserts, deletes=deletes,
-        context=TRANSCRIPT_CONTEXT, options=JsonLdOptions(),
-    )
-
-
-def q_jsonld_fromrdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverse direction (SURVEY.md §2 G1): triples → from_rdf_stage →
-    expanded docs; reports per-doc reconstruction size. Rows-only."""
-    from json_ld_spark.operators.jsonld import from_rdf_stage
-
-    _utc(spark)
-    docs = turns_to_jsonld(transcripts_from_documents(spark, sf_dir))
-    trip = triples_stage(docs, context=TRANSCRIPT_CONTEXT, options=JsonLdOptions())
-    back = from_rdf_stage(trip)
-    v = "https://example.org/transcript#"
-    return back.select(
-        "doc_id",
-        F.get_json_object("expanded", "$[0].@id").alias("root_id"),
-        F.size(F.json_object_keys(F.get_json_object("expanded", "$[0]")))
-        .cast("long")
-        .alias("n_keys"),
-        F.get_json_object("expanded", f"$[0]['{v}text'][0]['@value']").alias("text"),
-    )
-
-
-def q_jsonld_compact_generic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compaction (SURVEY.md §2 F): expand (with the transcript context
-    as expand_context — round 1 expanded context-less and compacted
-    near-empty docs) → compact back against the same context, per doc
-    via mapInPandas. Every compacted field is extracted and checked
-    against the DuckDB-reconstructed expected value (full roundtrip
-    value oracle)."""
-    import pandas as pd_
-
-    _utc(spark)
-    docs = turns_to_jsonld(transcripts_from_documents(spark, sf_dir))
-
-    def run(batches):
-        import json as _json
-
-        from json_ld_spark.api import compact as _compact
-
-        opts = JsonLdOptions(expand_context=TRANSCRIPT_CONTEXT)
-        for pdf in batches:
-            out = []
-            for doc in pdf["doc"].tolist():
-                compacted = _compact(_json.loads(doc), TRANSCRIPT_CONTEXT, options=opts)
-                compacted.pop("@context", None)
-                out.append(_json.dumps(compacted, ensure_ascii=False, sort_keys=True))
-            yield pd_.DataFrame({"doc_id": pdf["doc_id"], "compacted": out})
-
-    schema = "doc_id string, compacted string"
-    res = docs.mapInPandas(run, schema=schema)
-    return res.select(
-        "doc_id",
-        F.get_json_object("compacted", "$.@id").alias("c_id"),
-        F.get_json_object("compacted", "$.@type").alias("c_type"),
-        F.get_json_object("compacted", "$.role").alias("c_role"),
-        F.get_json_object("compacted", "$.text").alias("c_text"),
-        F.get_json_object("compacted", "$.tool").alias("c_tool"),
-        F.get_json_object("compacted", "$.ts").alias("c_ts"),
-        F.get_json_object("compacted", "$.conv").alias("c_conv"),
-        F.get_json_object("compacted", "$.turn").cast("long").alias("c_turn"),
-    )
-
-
-def q_jsonld_frame_generic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON-LD 1.1 FRAMING (frame.py + operators/jsonld.frame_stage —
-    beyond-reference: the Rust workspace has no framing crate). Each
-    per-turn document carries a @graph of [turn node, conversation
-    node]; the frame selects Turn nodes and @embed:@always-s the
-    conversation they reference, so the framed output is the nested
-    reshape a KG consumer asks for. Every framed field (incl. the
-    embedded conversation's label) is extracted and value-checked
-    against the DuckDB-reconstructed expectation."""
-    from json_ld_spark.operators.jsonld import frame_stage
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    ctx = {**TRANSCRIPT_CONTEXT, "label": _V + "label"}
-    ts_lex = F.date_format(F.col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-    turn_el = F.struct(
-        F.concat(F.col("conv_id"), F.lit("/turn/"),
-                 F.col("turn_idx").cast("string")).alias("@id"),
-        F.lit("Turn").alias("@type"),
-        F.col("role").alias("role"),
-        F.col("text").alias("text"),
-        F.col("tool").alias("tool"),
-        ts_lex.alias("ts"),
-        F.col("conv_id").alias("conv"),
-        F.col("turn_idx").alias("turn"),
-        F.lit(None).cast("string").alias("label"),
-    )
-    conv_el = F.struct(
-        F.col("conv_id").alias("@id"),
-        F.lit("Conversation").alias("@type"),
-        F.lit(None).cast("string").alias("role"),
-        F.lit(None).cast("string").alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit(None).cast("string").alias("ts"),
-        F.lit(None).cast("string").alias("conv"),
-        F.lit(None).cast("int").alias("turn"),
-        F.concat(F.lit("conversation "), F.col("conv_id")).alias("label"),
-    )
-    docs = t.select(
-        F.concat(F.col("conv_id"), F.lit("#"),
-                 F.col("turn_idx").cast("string")).alias("doc_id"),
-        F.to_json(
-            F.struct(F.array(turn_el, conv_el).alias("@graph")),
-            {"ignoreNullFields": "true"},
-        ).alias("doc"),
-    )
-    framed = frame_stage(
-        docs,
-        frame_doc={"@context": ctx, "@type": "Turn",
-                   "conv": {"@embed": "@always"}},
-        context=ctx,
-    )
-    return framed.select(
-        "doc_id",
-        F.get_json_object("framed", "$.@id").alias("f_id"),
-        F.get_json_object("framed", "$.@type").alias("f_type"),
-        F.get_json_object("framed", "$.role").alias("f_role"),
-        F.get_json_object("framed", "$.text").alias("f_text"),
-        F.get_json_object("framed", "$.tool").alias("f_tool"),
-        F.get_json_object("framed", "$.ts").alias("f_ts"),
-        F.get_json_object("framed", "$.turn").cast("long").alias("f_turn"),
-        F.get_json_object("framed", "$.conv.@id").alias("f_conv_id"),
-        F.get_json_object("framed", "$.conv.@type").alias("f_conv_type"),
-        F.get_json_object("framed", "$.conv.label").alias("f_conv_label"),
-        F.col("error").alias("f_err"),
-    )
-
-
-def q_kg_frame_conversations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Framing composed with the corpus pipeline: triples → one
-    expanded JSON-LD document PER CONVERSATION (from_rdf_stage grouped
-    on the conv prefix — group state is one conversation's quads) →
-    frame_stage selecting assistant turns (@requireAll pins the match
-    to type∧role). Demonstrates the KG→document reshape path end to
-    end; the oracle recomputes the per-conversation assistant count
-    and lexicographic-min turn IRI analytically."""
-    from json_ld_spark.operators.jsonld import frame_stage, from_rdf_stage
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    triples = transcript_triples_native(t).withColumn(
-        "conv_id", F.substring_index(F.col("doc_id"), "#", 1)
-    ).drop("doc_id")
-    conv_docs = from_rdf_stage(triples, group_col="conv_id").select(
-        F.col("conv_id").alias("doc_id"), F.col("expanded").alias("doc")
-    )
-    framed = frame_stage(
-        conv_docs,
-        frame_doc={
-            "@context": TRANSCRIPT_CONTEXT,
-            "@type": "Turn",
-            "role": "assistant",
-            "@requireAll": True,
-        },
-    )
-    g = F.get_json_object("framed", "$.@graph")
-    single = F.get_json_object("framed", "$.@id")
-    return framed.select(
-        F.col("doc_id").alias("conv_id"),
-        F.when(g.isNotNull(), F.json_array_length(g))
-        .when(single.isNotNull(), F.lit(1))
-        .otherwise(F.lit(0)).cast("long").alias("n_assistant"),
-        F.coalesce(
-            F.get_json_object("framed", "$.@graph[0].@id"), single
-        ).alias("first_id"),
-    )
-
-
-# --------------------------------------------------------------------------
-# deduplication family (training-data ops)
-# --------------------------------------------------------------------------
-
-def _docs_with_dups(docs: DataFrame) -> DataFrame:
-    """documents ∪ re-keyed copies of every 10th doc (deterministic
-    duplicate injection so exact-dedup output is non-trivial)."""
-    base = docs.select("doc_id", "text")
-    dups = (
-        docs.filter(F.col("doc_id") % 10 == 0)
-        .select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
-    )
-    return base.unionByName(dups)
-
-
-def q_dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact (normalized-hash) duplicate groups."""
-    _utc(spark)
-    corpus = _docs_with_dups(_read(spark, sf_dir, "documents"))
-    out = dd.exact_duplicates(corpus)
-    return out.select(
-        "doc_id", "content_hash", "canonical_id",
-        F.col("group_size").cast("long").alias("group_size"),
-    )
-
-
-def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-3-gram Jaccard over a deterministic document sample
-    (brute-force pairs; the LSH variants below prune candidates)."""
-    _utc(spark)
-    docs = (
-        _docs_with_dups(_read(spark, sf_dir, "documents"))
-        .filter(F.col("doc_id") % 25 == 0)
-    )
-    ids = docs.select("doc_id")
-    pairs = (
-        ids.select(F.col("doc_id").alias("doc_a"))
-        .crossJoin(ids.select(F.col("doc_id").alias("doc_b")))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-    )
-    out = dd.jaccard_pairs(docs, pairs, threshold=0.2)
-    return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard_r"))
-
-
-def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric containment verification (dedup.containment_pairs):
-    8-word excerpts are injected for every sampled document, and the
-    shingle-containment check flags excerpt⊂parent pairs that Jaccard
-    misses entirely (tiny union overlap, containment 1.0) — the
-    quote/boilerplate-inclusion detector. Oracle: brute-force list
-    intersections in SQL over the same deterministic corpus."""
-    _utc(spark)
-    base = (
-        _read(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") % 25 == 0)
-    )
-    words8 = F.array_join(
-        F.slice(F.split(F.trim("text"), r"\s+"), 1, 8), " "
-    )
-    exc = base.select(
-        (F.col("doc_id") + 2000000).alias("doc_id"), words8.alias("text")
-    )
-    corpus = base.unionByName(exc)
-    ids = corpus.select("doc_id")
-    pairs = (
-        ids.select(F.col("doc_id").alias("doc_a"))
-        .crossJoin(ids.select(F.col("doc_id").alias("doc_b")))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-    )
-    return dd.containment_pairs(corpus, pairs, threshold=0.9)
-
-
-def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH banded candidates verified by exact Jaccard. Oracle:
-    brute-force exact Jaccard >= 0.7 in DuckDB — equal whenever band
-    recall is 1.0 on the corpus. 32 bands x 2 rows: per-pair miss
-    probability at the corpus's weakest oracle pair (j=0.9) is
-    0.19^32 ~ 1e-23; the 16x4 default measurably missed that pair
-    (3.8e-8 odds — fixed hash family, unlucky draw), so the query runs
-    the wider band family and the exact-Jaccard verify keeps precision
-    at 1.0 regardless of the extra candidates."""
-    _utc(spark)
-    corpus = _docs_with_dups(_read(spark, sf_dir, "documents"))
-    cands = dd.minhash_lsh_candidates(corpus, num_hashes=64, bands=32)
-    out = dd.jaccard_pairs(corpus, cands, threshold=0.7)
-    return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard_r"))
-
-
-def q_kg_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CONVERSATION-level near-dedup on the transcripts table (the
-    north-star input): every 7th conversation is re-injected minus its
-    last turn (a deterministic near-duplicate), conversation text is
-    assembled in pinned turn order (array_sort over collected
-    (turn_idx, text) structs — never accumulation order), then the
-    standard MinHash 32x2 band family + exact-Jaccard verify finds the
-    injected pairs. The production shape for trillion-turn dedup: one
-    conv-keyed agg + the banded candidate join — never all-pairs.
-    Oracle: transcript synthesis + injection + string_agg(ORDER BY
-    turn_idx) replayed in SQL, brute-force exact Jaccard >= 0.7 (band
-    recall 1.0 at the injected pairs' ~0.9 Jaccard; same argument as
-    dedup_minhash_lsh)."""
-    from json_ld_spark.sources.transcripts import transcripts_from_documents
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    conv_num = F.split(F.col("conv_id"), "-").getItem(1).cast("long")
-    dups = (
-        t.filter((conv_num % 7 == 0) & (F.col("turn_idx") < 15))
-        .withColumn("conv_id", F.concat(F.col("conv_id"), F.lit("-dup")))
-    )
-    allt = t.unionByName(dups)
-    corpus = (
-        allt.groupBy("conv_id")
-        .agg(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("turn_idx", "text"))
-                    ),
-                    lambda s: s["text"],
-                ),
-            ).alias("text")
-        )
-        .select(F.col("conv_id").alias("doc_id"), "text")
-    )
-    cands = dd.minhash_lsh_candidates(corpus, num_hashes=64, bands=32)
-    out = dd.jaccard_pairs(corpus, cands, threshold=0.7)
-    return out.select(
-        F.col("doc_a").alias("conv_a"),
-        F.col("doc_b").alias("conv_b"),
-        F.round("jaccard", 6).alias("jaccard_r"),
-    )
-
-
-def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental MinHash dedup (dedup.incremental_minhash_dedup):
-    the injected duplicate copies arrive as the NEW batch and are
-    checked against the base corpus's persisted band index + among
-    themselves — old x old pairs are NOT regenerated (the per-batch
-    production shape; dedup_minhash_lsh is the from-scratch twin).
-    Oracle: brute-force exact Jaccard >= 0.7 restricted to pairs with
-    at least one new-side doc; same 32x2 band recall argument as the
-    full run."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    old = docs.select("doc_id", "text")
-    new = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    out = dd.incremental_minhash_dedup(
-        old, new, num_hashes=64, bands=32, threshold=0.7
-    )
-    return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard_r"))
-
-
-def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash block-LSH near-duplicates (hamming <= 3). Block-
-    permutation recall is exactly 1.0 for hamming < n_blocks
-    (pigeonhole), so an all-pairs DuckDB simhash oracle checks the full
-    output; the md5 token hash keeps both engines bit-identical."""
-    _utc(spark)
-    corpus = _docs_with_dups(_read(spark, sf_dir, "documents"))
-    out = dd.simhash_near_duplicates(corpus, token_hash="md5")
-    return out.select("doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming"))
-
-
-# --------------------------------------------------------------------------
-# graph analytics over the constructed KG (operators/graphops.py)
-# --------------------------------------------------------------------------
-
-def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Part co-purchase graph: undirected edge {u, v} when two parts
-    share an order (orders sampled by key % 5 to bound the oracle's
-    all-pairs replay; the Spark side scales to the full table — the
-    per-order fan-out is C(lines_per_order, 2), bounded by order size,
-    not corpus size)."""
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    return (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .dropDuplicates()
-    )
-
-
-def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT set-similarity join via prefix filtering (SSJoin/PPJoin
-    family): rarest-first global token order, |T|-ceil(t|T|)+1 prefix,
-    equi-join on prefix tokens, exact-Jaccard verify. Recall is a
-    pigeonhole LEMMA (not a probabilistic band argument), so this
-    shares the MinHash query's brute-force oracle verbatim — two
-    independent candidate generators, one ground truth."""
-    _utc(spark)
-    corpus = _docs_with_dups(_read(spark, sf_dir, "documents"))
-    cands = dd.prefix_filter_candidates(corpus, threshold=0.7)
-    out = dd.jaccard_pairs(corpus, cands, threshold=0.7)
-    return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard_r"))
-
-
-def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup GROUP ASSIGNMENT: connected components (Large-Star/
-    Small-Star, O(log^2 n) rounds — graphops.connected_components) over
-    the exact-3-gram Jaccard near-dup pairs; every sampled doc gets a
-    dup_group id (= min doc_id of its component, singletons map to
-    themselves). The step after pair generation that an actual corpus
-    dedup needs: pick one survivor per group. Oracle: DuckDB recursive
-    CTE computing min reachable id over the same pair set."""
-    _utc(spark)
-    docs, sim_pairs = _dup_doc_pairs(spark, sf_dir)
-    ids = docs.select("doc_id")
-    comp = gops.connected_components(sim_pairs, src="doc_a", dst="doc_b")
-    return (
-        ids.join(comp, ids["doc_id"] == comp["node"], "left")
-        .select(
-            ids["doc_id"].alias("doc_id"),
-            F.coalesce(comp["component"], ids["doc_id"]).cast("long").alias("dup_group"),
-        )
-    )
-
-
-def _dup_doc_pairs(spark: SparkSession, sf_dir: str):
-    """Shared by dedup_components / data_cluster_split: the sampled
-    duplicate-heavy corpus and its exact-3-gram-Jaccard near-dup pairs
-    (all-pairs generation is the deterministic test-sized candidate
-    source; production generators are the LSH families)."""
-    docs = (
-        _docs_with_dups(_read(spark, sf_dir, "documents"))
-        .filter(F.col("doc_id") % 25 == 0)
-    )
-    ids = docs.select("doc_id")
-    pairs = (
-        ids.select(F.col("doc_id").alias("doc_a"))
-        .crossJoin(ids.select(F.col("doc_id").alias("doc_b")))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-    )
-    sim_pairs = dd.jaccard_pairs(docs, pairs, threshold=0.2).select("doc_a", "doc_b")
-    return docs, sim_pairs
-
-
-def q_data_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature (alpha=0.5) mixture re-weighting of the documents
-    corpus by source (sampling.temperature_mix, the multilingual-LM
-    exponentiated-sampling recipe): head sources Bernoulli-downsample,
-    tail sources fractionally repeat, total stays ~corpus-sized.
-    Rates derive from exact integer counts with one correctly-rounded
-    double division (sqrt is IEEE-exact), so every per-row draw is
-    bit-identical cross-engine. Oracle: full SQL replay (counts →
-    integer-scaled sqrt weights → epochs → md5-bridge draws →
-    generate_series replication)."""
-    _utc(spark)
-    from json_ld_spark.operators.sampling import temperature_mix
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return temperature_mix(
-        docs, group_col="source", alpha=0.5, seed="tm"
-    ).select("doc_id", "source", "epoch")
-
-
-def q_data_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inactivity-gap sessionization of the events stream
-    (temporal.sessionize, 30-min gap): one shuffle on user_id feeds
-    the lag + running-sum window pair; boundary decisions compare
-    integer microseconds, so every assignment is engine-exact.
-    Oracle: the same LAG + cumulative SUM windows in SQL."""
-    _utc(spark)
-    from json_ld_spark.operators.temporal import sessionize
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sessionize(
-        ev, key="user_id", ts_col="ts", gap_seconds=1800,
-        order_cols=["event_id"],
-    ).select("event_id", "user_id", "session_idx", "session_id")
-
-
-def q_data_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-session rollup (temporal.session_stats) over the
-    sessionized events: count + integer-microsecond start/end/duration
-    — one map-side-combinable aggregation keyed on the session.
-    Oracle: grouped replay of the sessionize windows."""
-    _utc(spark)
-    from json_ld_spark.operators.temporal import session_stats, sessionize
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return session_stats(
-        sessionize(ev, key="user_id", ts_col="ts", gap_seconds=1800,
-                   order_cols=["event_id"]),
-        key="user_id", ts_col="ts",
-    )
-
-
-def q_data_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-safe train/val/test split (sampling.leakage_safe_split):
-    near-dup pairs -> connected components -> hash_split keyed on the
-    component representative, so a duplicate cluster never straddles
-    splits. Oracle: recursive-CTE components + md5-bucket replay on
-    the group id."""
-    from json_ld_spark.operators.sampling import leakage_safe_split
-
-    _utc(spark)
-    docs, sim_pairs = _dup_doc_pairs(spark, sf_dir)
-    out = leakage_safe_split(docs.select("doc_id"), sim_pairs)
-    return out.select("doc_id", F.col("dup_group").cast("long").alias("dup_group"), "split")
-
-
-def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Survivor selection (dedup.select_survivors): one doc kept per
-    duplicate cluster — largest text wins, ties to the smallest id.
-    The step that actually shrinks the corpus after clustering."""
-    _utc(spark)
-    docs, sim_pairs = _dup_doc_pairs(spark, sf_dir)
-    comp = gops.connected_components(sim_pairs, src="doc_a", dst="doc_b")
-    ids = docs.select("doc_id", F.length("text").alias("n"))
-    groups = (
-        ids.join(comp, ids["doc_id"] == comp["node"], "left")
-        .select(
-            ids["doc_id"].alias("doc_id"),
-            F.coalesce(comp["component"], ids["doc_id"]).cast("long").alias("dup_group"),
-        )
-    )
-    out = dd.select_survivors(ids, groups, prefer_col="n")
-    return out.select("doc_id").orderBy("doc_id")
-
-
-def q_dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact repeated-span discovery (dedup.repeated_spans; the
-    candidate stage of substring-level dedup, Lee et al. 2022): word
-    10-grams occurring >= 2 times across the duplicate-heavy corpus,
-    reported as per-gram stats."""
-    _utc(spark)
-    corpus = _docs_with_dups(_read(spark, sf_dir, "documents"))
-    spans = dd.repeated_spans(corpus, n=10, min_count=2)
-    return (
-        spans.select(F.md5("gram").alias("gram_md5"),
-                     "n_occurrences", "n_docs")
-        .dropDuplicates()
-    )
-
-
-def q_data_sft_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transcripts → SFT training pairs (curation.sft_pairs): for each
-    assistant turn, prompt = the previous <=4 turns rendered
-    'role: text' (turn order pinned by array_sort, not collect_list
-    accumulation order), completion = the turn text. One conv-keyed
-    ordered window. Oracle: the same frame replayed with DuckDB's
-    list() window aggregate + list_sort."""
-    _utc(spark)
-    from json_ld_spark.operators.curation import sft_pairs
-
-    return sft_pairs(
-        transcripts_from_documents(spark, sf_dir), n_context=4
-    )
-
-
-def q_data_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DPO preference-pair assembly (curation.preference_pairs): for
-    every assistant turn directly after a user turn, chosen = the real
-    response, rejected = the response the next conversation (cyclic
-    md5-bridge rotation within the turn position) gave at the same
-    position — the standard mismatched-response negative. Two window
-    shuffles, zero joins. Oracle: both windows replayed verbatim
-    (lag + lead/first_value over identical orderings)."""
-    _utc(spark)
-    from json_ld_spark.operators.curation import preference_pairs
-
-    return preference_pairs(transcripts_from_documents(spark, sf_dir))
-
-
-def q_text_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TextRank keyword extraction (retrieval.textrank_keywords,
-    Mihalcea & Tarau EMNLP'04): weighted PageRank over the corpus word
-    co-occurrence graph (window 2, 4 damped iterations), top 50
-    keywords by (6-dp rank, word). Co-occurrence pairs are built with
-    an offset-explode EQUI-join, never a range join; the loop is fully
-    lazy (symmetric graph -> no dangling probe). Oracle: tokenize +
-    pair + 4 unrolled weighted iterations in DuckDB, MATERIALIZED per
-    level."""
-    _utc(spark)
-    from json_ld_spark.operators.retrieval import textrank_keywords
-
-    return textrank_keywords(
-        _read(spark, sf_dir, "documents"), window=2, iters=4, k=50
-    )
-
-
-def q_text_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR data selection (curation.dsir_weights, Xie et al.
-    NeurIPS'23): log importance ratio of add-one-smoothed hashed-
-    bigram multinomials — target = the English documents, raw = the
-    whole corpus — scoring every raw document for target-domain
-    resampling. Model state is two 4096-bucket count tables
-    (broadcast); corpus tokenized once; per-doc sum absorbed by
-    map-side partial agg. Oracle: full DuckDB replay (md5-bridge
-    buckets, ln ratios mirrored association-for-association, 6 dp)."""
-    _utc(spark)
-    from json_ld_spark.operators.curation import dsir_weights
-
-    docs = _read(spark, sf_dir, "documents")
-    return dsir_weights(
-        docs, docs.filter(F.col("lang") == "en"), n=2, buckets=4096, alpha=1.0
-    )
-
-
-def q_data_weighted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-size weighted sample without replacement (sampling.
-    weighted_topk_sample, Efraimidis-Spirakis reservoir keys): 200
-    documents drawn proportional to length — zero shuffle, a pure
-    projection + TakeOrderedAndProject heap. Oracle: the identical
-    bridge-uniform + ln(u)/w expression in DuckDB (6-dp key round
-    absorbs libm ulp differences; id tiebreak pins the set)."""
-    _utc(spark)
-    from json_ld_spark.operators.sampling import weighted_topk_sample
-
-    docs = _read(spark, sf_dir, "documents")
-    out = weighted_topk_sample(docs, k=200, weight_col="n_chars", seed="wtk")
-    return out.select(
-        "doc_id", F.col("n_chars").cast("long").alias("n_chars"), "es_key_r"
-    )
-
-
-def q_data_epoch_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-epoch training shuffle (sampling.epoch_order,
-    epoch=2): every document's position under the (seed, epoch)
-    md5-bridge permutation — the reshuffle-each-epoch loader contract
-    as a pure projection + one uniform-key rank window; resume =
-    WHERE epoch_rank >= k. Oracle: ROW_NUMBER over the identical
-    bridge key in DuckDB."""
-    _utc(spark)
-    from json_ld_spark.operators.sampling import epoch_order
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    return epoch_order(docs, epoch=2, seed="train")
-
-
-def q_rel_funnel_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequential conversion funnel (temporal.funnel): per user the
-    earliest view, the earliest click strictly after it, the earliest
-    purchase strictly after that — integer-microsecond timestamps, one
-    filtered min-agg + uniform-key hash join per step, no windows over
-    the raw stream. The earliest-next-match greedy is exact for funnel
-    reachability. Oracle: the same three-step chain in DuckDB
-    (epoch_us == unix_micros under the UTC session)."""
-    _utc(spark)
-    from json_ld_spark.operators.temporal import funnel
-
-    ev = _read(spark, sf_dir, "events")
-    return funnel(ev, ["view", "click", "purchase"], key="user_id")
-
-
-def q_rel_recursive_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recursive CTE (Spark 4.1 WITH RECURSIVE — the Catalyst-native
-    iterative construct): customers form a decimal-trie forest
-    (parent(c) = floor(c/10), roots < 10); the recursion labels every
-    customer with its root and depth. The IDENTICAL SQL text runs on
-    both engines — the one query in the suite where the oracle is
-    literally the Spark query. floor(x/10.0) (not CAST or //) because
-    DuckDB CAST rounds where Spark cast truncates."""
-    _utc(spark)
-    _read(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(_REL_RECURSIVE_SQL)
-
-
-def q_dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paragraph-level boilerplate REMOVAL (dedup.paragraph_dedup,
-    Dolma/FineWeb-style): fixed 20-word windows as paragraphs on the
-    flat word-stream corpus, keep only the globally first occurrence
-    of each distinct paragraph ((doc_id, idx)-min — deterministic),
-    reassemble documents. On the duplicate-heavy corpus the injected
-    copies empty out completely. Oracle: full SQL replay (window
-    grouping + ROW_NUMBER first-occurrence + ordered string_agg)."""
-    _utc(spark)
-    corpus = _docs_with_dups(_read(spark, sf_dir, "documents"))
-    return dd.paragraph_dedup(corpus, sep=None, words_per_para=20)
-
-
-def q_kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic DeepWalk corpus generation (graphops.random_walks)
-    over the symmetrized part–supplier bipartite graph: 2 walks of
-    length 4 from every 50th part, next hop = md5(seed,walk,step,node)
-    mod out-degree into the dst-sorted neighbor list. Hash-indexed
-    choices make the walk corpus reproducible across runs/cluster
-    sizes AND SQL-replayable: the oracle is a bounded recursive CTE
-    replaying every choice through the md5 bridge."""
-    from json_ld_spark.operators.graphops import random_walks
-
-    _utc(spark)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    e = li.select(
-        F.concat(F.lit("p"), F.col("l_partkey")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
-    ).dropDuplicates()
-    edges = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    starts = (
-        li.filter(F.col("l_partkey") % 50 == 0)
-        .select(F.concat(F.lit("p"), F.col("l_partkey")).alias("node"))
-        .dropDuplicates()
-    )
-    return random_walks(
-        edges, starts=starts, walks_per_node=2, walk_len=4,
-        seed="r3", hash_fn="md5",
-    )
-
-
-def q_kg_lpg_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RDF → labeled-property-graph projection (operators/lpg.py):
-    project the transcript KG (native triples + turn adjacency) into
-    nodes/edges/props tables and summarize per node — sorted label
-    set, out-degree over relationships, property count. Conversation
-    IRIs appear as untyped, property-less nodes (relationship targets
-    only). Oracle: per-turn arithmetic on the deterministic synthesis
-    (out_deg = conversation edge + optional nextTurn; n_props = 4 +
-    optional tool)."""
-    from json_ld_spark.operators.lpg import to_property_graph
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native, transcript_triples_native,
-    )
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    quads = (
-        transcript_triples_native(t, with_doc_id=False)
-        .select(*TRIPLE_COLS)
-        .unionByName(
-            transcript_adjacency_native(t, with_doc_id=False).select(*TRIPLE_COLS)
-        )
-    )
-    nodes, edges, props = to_property_graph(quads)
-    deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
-    np_ = props.groupBy("id").agg(F.count(F.lit(1)).alias("n_props"))
-    return (
-        nodes.join(deg, "id", "left")
-        .join(np_, "id", "left")
-        .select(
-            "id",
-            F.array_join("labels", ",").alias("labels"),
-            F.coalesce("out_deg", F.lit(0)).cast("long").alias("out_deg"),
-            F.coalesce("n_props", F.lit(0)).cast("long").alias("n_props"),
-        )
-    )
-
-
-def q_kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-core peeling (graphops.k_core, k=5) over a heterogeneous
-    union graph: 16-turn conversation chains + their conversation hubs
-    (degree <= 3 / 16 — peels with a 3-round cascade: turns fall first,
-    then the emptied hubs) unioned with the part–supplier co-purchase
-    graph (min degree >= 8 at every sf — the surviving dense core).
-    One degree agg + two semi-joins per round; the survivor count is
-    the round's single job. Oracle: the peel unrolled as CTE rounds."""
-    _utc(spark)
-    from json_ld_spark.operators.graphops import k_core
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native,
-        transcript_triples_native,
-    )
-
-    t = transcripts_from_documents(spark, sf_dir)
-    chain = transcript_adjacency_native(t, with_doc_id=False).select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    conv = (
-        transcript_triples_native(t)
-        .filter(F.col("pred") == "https://example.org/transcript#conversation")
-        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-    )
-    cop = (
-        _read(spark, sf_dir, "lineitem")
-        .select(
-            F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .dropDuplicates()
-    )
-    return k_core(chain.unionByName(conv).unionByName(cop), k=5)
-
-
-def q_kg_transe_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filtered TransE link-prediction ranking (kge.transe_rank,
-    Bordes et al. NeurIPS'13 protocol) over the transcript KG's
-    node-to-node edges (rdf:type + conversation + nextTurn): rank of
-    the true tail among all entities under integer-lattice hash
-    embeddings — integer L1 distances make every rank value-exact.
-    Test set = md5-bridge hash sample of the positive edges; scoring
-    is entities x broadcast(test) absorbed by map-side partial
-    aggregation; filtered correction is a (subj, pred) equi-join, not
-    an anti-join on the cross product. Oracle: full SQL replay
-    (list_transform embeddings + the same two counting aggregations)."""
-    from json_ld_spark.operators.kge import transe_rank
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native,
-        transcript_triples_native,
-    )
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    edges = (
-        transcript_triples_native(t)
-        .filter(F.col("obj_kind") == "iri")
-        .select("subj", "pred", "obj")
-        .unionByName(
-            transcript_adjacency_native(t, with_doc_id=False)
-            .select("subj", "pred", "obj")
-        )
-    )
-    return transe_rank(edges, dim=16, test_mod=97)
-
-
-def q_kg_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic negative sampling for KG-embedding training
-    (sampling.negative_triples, TransE-style filtered corruption):
-    2 corruptions per nextTurn edge, side chosen per-sample by hash,
-    replacement entity = hash mod n into the lexicographically
-    dense-indexed turn dictionary (two-phase distributed rank, no
-    single-task sort), corruptions that are true edges dropped by one
-    anti-join. Oracle: full SQL replay through the md5 bridge +
-    ROW_NUMBER dictionary + NOT EXISTS."""
-    from json_ld_spark.operators.native import transcript_adjacency_native
-    from json_ld_spark.operators.sampling import negative_triples
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    adj = transcript_adjacency_native(t, with_doc_id=False)
-    return negative_triples(
-        adj, k=2, corrupt="both", seed="neg3", hash_fn="md5"
-    )
-
-
-def q_kg_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic node2vec walks (graphops.node2vec_walks) on the
-    symmetrized co-purchase graph: 2nd-order bias with INTEGER weights
-    (return 1 / triangle 4 / out 2 — BFS-leaning), pick = hash mod
-    cumulative weight over id-ordered candidates, so every biased
-    choice is exact and SQL-replayable. Oracle: the 3 steps unrolled
-    as CTEs — adjacency join, previous-edge mark join, integer cumsum
-    window, md5-bridge pick."""
-    from json_ld_spark.operators.graphops import node2vec_walks
-
-    _utc(spark)
-    e = _copurchase_edges(spark, sf_dir)
-    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    sym = sym.select(
-        F.col("u").cast("string").alias("src"),
-        F.col("v").cast("string").alias("dst"),
-    )
-    starts = (
-        sym.select(F.col("src").alias("node")).dropDuplicates()
-        .filter(F.col("node").cast("long") % 97 == 0)
-    )
-    return node2vec_walks(
-        sym, starts=starts, walk_len=3, seed="n2v", hash_fn="md5",
-        w_return=1, w_in=4, w_out=2,
-    )
-
-
-def q_kg_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skip-gram co-occurrence counts (graphops.skipgram_pairs) over
-    the kg_random_walks corpus — the full KG → embedding-training-data
-    pipeline: walks by hash-indexed choice, then one walk-keyed
-    self-join + count agg for the (center, context, n) pairs word2vec
-    consumes. Oracle: the shared walk CTE + the same self-join in
-    SQL."""
-    from json_ld_spark.operators.graphops import skipgram_pairs
-
-    _utc(spark)
-    return skipgram_pairs(q_kg_random_walks(spark, sf_dir), window=2)
-
-
-def q_kg_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted co-occurrence graph construction
-    (graphops.cooccurrence_graph): part–part edges weighted by shared
-    orders, mega-orders (> 5 distinct parts) dropped by the disclosed
-    fan-out cap before the quadratic self-join. Oracle: the same
-    size-filtered self-join + pair count in SQL."""
-    from json_ld_spark.operators.graphops import cooccurrence_graph
-
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    pairs = li.select(F.col("l_orderkey").alias("doc_id"),
-                      F.col("l_partkey").alias("item"))
-    out = cooccurrence_graph(pairs, max_group_size=5)
-    return out.select(
-        F.col("u").cast("long").alias("u"),
-        F.col("v").cast("long").alias("v"),
-        F.col("n_groups").cast("long").alias("n_groups"),
-    )
-
-
-def q_kg_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seeded label propagation (graphops.label_propagation): every
-    250th part seeds one of three classes; two deterministic
-    majority-vote rounds (ties to the smaller label, seeds clamped)
-    spread types across the co-purchase graph — semi-supervised KG
-    type inference. Oracle: both rounds unrolled as
-    join→count→ROW_NUMBER-argmax CTEs."""
-    from json_ld_spark.operators.graphops import label_propagation
-
-    _utc(spark)
-    e = _copurchase_edges(spark, sf_dir)
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .dropDuplicates()
-    )
-    seeds = nodes.filter(F.col("node") % 250 == 0).select(
-        "node",
-        F.concat(F.lit("c"), (F.col("node") % 3).cast("string")).alias("label"),
-    )
-    out = label_propagation(e, seeds, iters=2, src="u", dst="v")
-    return out.select(F.col("node").cast("long").alias("node"), "label")
-
-
-def q_kg_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-prediction features (graphops.link_prediction_features) on
-    the co-purchase graph: common-neighbor count, Jaccard overlap and
-    Adamic–Adar per connected-by-a-wedge pair (n_common >= 2 to bound
-    the output) — the classic KG-completion training-label features.
-    One middle-keyed wedge self-join + one pair agg + two degree
-    joins. Oracle: the same wedge algebra in SQL, floats 6-dp."""
-    from json_ld_spark.operators.graphops import link_prediction_features
-
-    _utc(spark)
-    e = _copurchase_edges(spark, sf_dir)
-    out = link_prediction_features(e, src="u", dst="v")
-    return out.filter(F.col("n_common") >= 2).select(
-        F.col("u").cast("long").alias("u"),
-        F.col("v").cast("long").alias("v"),
-        F.col("n_common").cast("long").alias("n_common"),
-        "jaccard_r", "adamic_adar_r",
-    )
-
-
-def q_kg_linkpred_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact tie-aware ROC-AUC of the Adamic-Adar feature as an edge
-    predictor on the co-purchase graph — the standard link-prediction
-    eval, computed as an INTEGER rank statistic: group wedge pairs by
-    (6-dp) score with their edge/non-edge label counts, take the
-    exclusive ordered prefix sum of negatives via
-    sampling.ordered_cumsum (range partition + local window + broadcast
-    offsets — NO partition-less window), then
-    2U = sum_s n_pos(s) * (2*neg_below(s) + n_neg(s)); AUC = U /
-    (n_pos * n_neg). Every intermediate is an exact long; the only
-    float is the final rounded division. Oracle: the same algebra with
-    a plain SUM OVER (ORDER BY score) in DuckDB."""
-    from json_ld_spark.operators.graphops import link_prediction_features
-    from json_ld_spark.operators.sampling import ordered_cumsum
-
-    _utc(spark)
-    e = _copurchase_edges(spark, sf_dir)
-    feats = link_prediction_features(e, src="u", dst="v").filter(
-        F.col("n_common") >= 2
-    )
-    lab = feats.join(
-        e.withColumn("__is_edge", F.lit(1)), ["u", "v"], "left"
-    ).select(
-        F.col("adamic_adar_r").alias("score"),
-        F.coalesce(F.col("__is_edge"), F.lit(0)).alias("pos"),
-    )
-    per_score = lab.groupBy("score").agg(
-        F.sum("pos").cast("long").alias("n_pos"),
-        F.sum(F.lit(1) - F.col("pos")).cast("long").alias("n_neg"),
-    )
-    cum = ordered_cumsum(
-        per_score, ["score"], "n_neg", out_col="neg_below", inclusive=False
-    )
-    return cum.agg(
-        F.sum("n_pos").cast("long").alias("n_pos"),
-        F.sum("n_neg").cast("long").alias("n_neg"),
-        F.sum(
-            F.col("n_pos") * (F.lit(2) * F.col("neg_below") + F.col("n_neg"))
-        ).cast("long").alias("u2"),
-    ).select(
-        "n_pos", "n_neg", "u2",
-        F.round(
-            F.col("u2") / (F.lit(2.0) * F.col("n_pos") * F.col("n_neg")), 6
-        ).alias("auc_r"),
-    )
-
-
-def q_kg_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle counts on the co-purchase graph via
-    degree-ordered edge orientation (graphops.triangle_count) — wedge
-    fan-out bounded by arboricity, not max degree. The oracle counts
-    each x<y<z triangle once from the canonical u<v edge list (an
-    orientation-independent total, so both formulations must agree
-    exactly)."""
-    _utc(spark)
-    e = _copurchase_edges(spark, sf_dir)
-    out = gops.triangle_count(e, src="u", dst="v")
-    return out.select(
-        F.col("node").cast("long").alias("part_id"),
-        F.col("n_triangles").cast("long").alias("n_triangles"),
-    )
-
-
-def q_kg_khop_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-hop neighborhood materialization (graphops.k_hop): BFS depths
-    <= 3 from seed parts (p_partkey <= 5) over the undirected
-    co-purchase graph — frontier-deduped per hop, so per-hop work is
-    |frontier| x degree. Oracle: bounded recursive CTE + MIN(depth)."""
-    _utc(spark)
-    e = _copurchase_edges(spark, sf_dir)
-    sym = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).dropDuplicates()
-    seeds = (
-        _read(spark, sf_dir, "part")
-        .filter(F.col("p_partkey") <= 5)
-        .select(F.col("p_partkey").alias("node"))
-    )
-    out = gops.k_hop(sym, seeds, k=3, src="u", dst="v")
-    return out.select(
-        F.col("node").cast("long").alias("part_id"),
-        F.col("depth").cast("long").alias("depth"),
-    )
-
-
-def q_kg_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity salience: 5 fixed PageRank power iterations
-    (graphops.pagerank) on the directed supplier -> customer graph
-    (supplier supplied an order of that customer). String node ids
-    ('s<suppkey>' / 'c<custkey>') keep the two key spaces disjoint.
-    Customers are all dangling (no out-edges), so the dangling-mass
-    redistribution path is exercised every iteration. Oracle: the same
-    five iterations unrolled as SQL CTEs with the identical float
-    constants inlined; ranks rounded to 6 dp on both sides (the only
-    cross-engine divergence is summation order, ~1e-16)."""
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
-    e = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("dst"),
-        )
-        .dropDuplicates()
-    )
-    pr = gops.pagerank(e, iters=5, damping=0.85)
-    return pr.select("node", F.round("rank", 6).alias("rank_r"))
-
-
-def q_kg_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank (graphops.personalized_pagerank): 5
-    random-walk-with-restart iterations on the supplier -> customer
-    graph, restarting at every 10th supplier — related-entity salience
-    relative to a seed set (teleport AND dangling mass return to the
-    seeds, not to all nodes). Oracle: the same 5 iterations unrolled
-    as SQL CTEs over the seed restart vector, 6-dp rounded."""
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
-    e = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("dst"),
-        )
-        .dropDuplicates()
-    )
-    seeds = (
-        li.filter(F.col("l_suppkey") % 10 == 0)
-        .select(F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("node"))
-        .dropDuplicates()
-    )
-    pr = gops.personalized_pagerank(e, seeds, damping=0.85, iters=5)
-    return pr.select("node", F.round("rank", 6).alias("rank_r"))
-
-
-def q_kg_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-truss peeling (graphops.k_truss, k=7, 4 synchronous rounds)
-    on the part co-purchase graph: keep edges in >= 5 surviving
-    triangles, re-counting after each peel — the cohesive-subgraph
-    refinement of kg_kcore (truss membership is per-EDGE). Fixed
-    rounds on both engines (the peel is idempotent once the cascade
-    ends; sf0.01/0.1 converge by round 4, the sparser sf0.001 keeps
-    its honest bounded-peel semantics). Oracle: the 4 rounds unrolled
-    as MATERIALIZED CTEs (triangle enumeration + HAVING filter)."""
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    ed = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .dropDuplicates()
-    )
-    kt = gops.k_truss(ed, k=7, rounds=4)
-    return kt.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-        "support",
-    )
-
-
-def q_kg_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sampled hop-bounded betweenness centrality (graphops.
-    betweenness_sampled, Brandes forward/backward from a deterministic
-    seed sample, paths <= 3 hops) on the co-purchase graph — the
-    bridging-entity metric, computed the way it is computed at scale
-    (source sampling; exact all-sources Brandes is O(V*E)). Oracle:
-    the forward sigma levels and backward dependency levels unrolled
-    as MATERIALIZED CTEs, 6-dp rounded."""
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    ed = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .dropDuplicates()
-    )
-    seeds = (
-        _read(spark, sf_dir, "part")
-        .filter(F.col("p_partkey") % 199 == 3)
-        .select(F.col("p_partkey").alias("node"))
-    )
-    out = gops.betweenness_sampled(ed, seeds, max_hops=3)
-    return out.select(F.col("node").cast("long").alias("node"), "betweenness_r")
-
-
-def q_kg_harmonic_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sampled harmonic closeness (graphops.harmonic_closeness_sampled,
-    Boldi-Vigna axiomatics; Eppstein-Wang sampling): sum of 1/d(s, v)
-    from the betweenness seed sample over <= 3-hop shortest paths on
-    the co-purchase graph — the disconnection-robust closeness.
-    Oracle: the forward BFS levels unrolled (the betweenness CTEs
-    minus sigma) with literal 1/d weights."""
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    ed = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .dropDuplicates()
-    )
-    seeds = (
-        _read(spark, sf_dir, "part")
-        .filter(F.col("p_partkey") % 199 == 3)
-        .select(F.col("p_partkey").alias("node"))
-    )
-    out = gops.harmonic_closeness_sampled(ed, seeds, max_hops=3)
-    return out.select(F.col("node").cast("long").alias("node"), "harmonic_r")
-
-
-def q_kg_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperBall neighbourhood function (graphops.hyperball, Boldi &
-    Vigna 2013) over the co-purchase graph: one HLL counter per node
-    (m=64 md5-bridge registers), three merge rounds — N(t) rows for
-    t=0..3, from which effective diameter falls out. The two integer
-    columns (summed scaled harmonic mass + zero-register count) are
-    exact order-independent aggregates; the estimate column is 4-dp
-    rounded. Oracle: registers + 3 merge rounds + per-node estimator
-    unrolled in SQL (integer register math end-to-end)."""
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    ed = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .dropDuplicates()
-    )
-    return gops.hyperball(ed, max_t=3, p=6)
-
-
-def q_kg_graph_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row structural profile (graphops.graph_metrics) of the
-    co-purchase graph: node/edge counts, mean degree, global
-    clustering coefficient (3 x triangles / wedges) and degree
-    assortativity (Newman 2002 Pearson r over endpoint degrees) —
-    every statistic an exact integer sum until the final divisions.
-    Oracle: the same integer aggregates in DuckDB, 6-dp rounded."""
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    ed = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .dropDuplicates()
-    )
-    return gops.graph_metrics(ed)
-
-
-def q_kg_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted PageRank (graphops.weighted_pagerank): supplier ->
-    customer edges weighted by how many lineitems flowed on them —
-    contribution splits proportional to interaction volume instead of
-    uniformly. Customers are all dangling, so the weighted dangling
-    path runs every iteration. Oracle: the 5 iterations unrolled with
-    a w/wdeg fraction table (integer weights -> exact ratios; 6-dp)."""
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
-    e = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy(
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    pr = gops.weighted_pagerank(e, iters=5, damping=0.85)
-    return pr.select("node", F.round("rank", 6).alias("rank_r"))
-
-
-def q_kg_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS hubs & authorities (graphops.hits, Kleinberg 1999): 4
-    L1-normalized update rounds on a two-level entity DAG — supplier
-    -> customer (supplied an order) unioned with customer -> nation
-    (residency). Suppliers score as pure hubs, nations as pure
-    authorities, customers as both, so every coalesce path (no
-    in-edges / no out-edges) is exercised. Oracle: the same 4 rounds
-    unrolled as SQL CTEs; 6-dp round absorbs SUM-order drift (the
-    pagerank recipe)."""
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
-    c = _read(spark, sf_dir, "customer")
-    sc_e = li.join(o, li["l_orderkey"] == o["o_orderkey"]).select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("dst"),
-    )
-    cn_e = c.select(
-        F.concat(F.lit("c"), F.col("c_custkey").cast("string")).alias("src"),
-        F.concat(F.lit("n"), F.col("c_nationkey").cast("string")).alias("dst"),
-    )
-    # no per-side dropDuplicates: hits() canonicalizes with ONE dedup
-    # shuffle over the union — per-side dedups would add two more
-    hv = gops.hits(sc_e.unionByName(cn_e), iters=4)
-    return hv.select(
-        "node", F.round("hub", 6).alias("hub_r"), F.round("auth", 6).alias("auth_r")
-    )
-
-
-def q_kg_weighted_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hop-bounded weighted shortest paths (graphops.shortest_paths):
-    minimum-total-weight distance over paths of <= 3 edges from the
-    seed parts (p_partkey <= 5) on the symmetric co-purchase graph,
-    integer edge weight 1 + (u+v) % 5 — every distance integer-exact.
-    Frontier Bellman-Ford: one frontier-only equi-join + groupBy MIN
-    + full-outer merge per round, lazily checkpointed, the
-    improved-count probe is each round's single job. Oracle: DuckDB
-    recursive CTE with a hop counter, MIN(dist) per node."""
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    ed = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .dropDuplicates()
-    )
-    sym = ed.unionByName(ed.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    wed = sym.select(
-        F.col("u").alias("src"),
-        F.col("v").alias("dst"),
-        (F.lit(1) + (F.col("u") + F.col("v")) % 5).alias("w"),
-    )
-    seeds = (
-        _read(spark, sf_dir, "part")
-        .filter(F.col("p_partkey") <= 5)
-        .select(F.col("p_partkey").alias("node"))
-    )
-    sp = gops.shortest_paths(wed, seeds, max_hops=3)
-    return sp.select(F.col("node").cast("long").alias("node"), "dist")
-
-
-def q_kg_bgp_optional_tool(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BGP with an OPTIONAL group (SPARQL left-join semantics): every
-    assistant turn with its index, plus its tool IF a tool triple
-    exists (tool is emitted only for doc_id % 7 == 3 turns, so the
-    NULL and bound arms are both populated). Oracle: LEFT JOIN."""
-    from json_ld_spark.operators.bgp import bgp_query
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    triples = transcript_triples_native(t)
-    out = bgp_query(
-        triples,
-        [
-            ("?turn", _V + "role", "assistant"),
-            ("?turn", _V + "turnIndex", "?idx"),
-        ],
-        optional=[[("?turn", _V + "tool", "?tool")]],
-    )
-    return out.select("turn", "idx", "tool")
-
-
-def q_kg_bgp_union_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BGP UNION over heterogeneous branches (user turns; tool-using
-    turns binding an extra ?tool var — NULL in the first branch,
-    SPARQL unbound semantics). Oracle: SQL UNION of the two branch
-    selects."""
-    from json_ld_spark.operators.bgp import bgp_union
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    triples = transcript_triples_native(t)
-    out = bgp_union(
-        triples,
-        [
-            [("?turn", _V + "role", "user")],
-            [("?turn", _V + "tool", "?tool")],
-        ],
-    )
-    return out.select("turn", "tool")
-
-
-def q_kg_turn_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-conversation turn-window adjacency quads (north-star
-    '(conv_id, turn_idx) ordering' materialized into the KG): one
-    conv-partitioned lead() window, whole-stage codegen, no Python.
-    Oracle: the same LEAD window in DuckDB."""
-    from json_ld_spark.operators.native import transcript_adjacency_native
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    return transcript_adjacency_native(t, with_doc_id=False).select(*TRIPLE_COLS)
-
-
-def q_kg_turn_chain_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-hop BFS (graphops.k_hop) over the nextTurn chain graph from
-    every conversation's turn 0: depth d must equal turn index d for
-    d <= k — BFS on 16-deep directed chains, the north-star turn-window
-    traversal as a graph query. Oracle: bounded recursive CTE over the
-    SQL-replayed adjacency edges."""
-    from json_ld_spark.operators.graphops import k_hop
-    from json_ld_spark.operators.native import transcript_adjacency_native
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    adj = transcript_adjacency_native(t, with_doc_id=False)
-    seeds = (
-        t.filter(F.col("turn_idx") == 0)
-        .select(
-            F.concat(
-                F.lit("https://example.org/conv/"), F.col("conv_id"), F.lit("/turn/0")
-            ).alias("node")
-        )
-    )
-    out = k_hop(adj, seeds, k=5, src="subj", dst="obj")
-    return out.select("node", F.col("depth").cast("long").alias("depth"))
-
-
-def q_kg_bgp_values_minus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BGP with a VALUES inline-binding block and a MINUS group
-    (SPARQL 1.1 algebra): speaker turns restricted to the roles
-    {user, assistant} via VALUES (broadcast inline table), minus every
-    turn that carries a tool triple (null-unsafe LEFT ANTI join on the
-    shared variable). Oracle: IN-list filter + tool IS NULL over the
-    replayed transcript table."""
-    from json_ld_spark.operators.bgp import bgp_query
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    triples = transcript_triples_native(t)
-    out = bgp_query(
-        triples,
-        [("?turn", _V + "role", "?r")],
-        values={"?r": ["user", "assistant"]},
-        minus=[[("?turn", _V + "tool", "?tl")]],
-    )
-    return out.select("turn", "r")
-
-
-def q_kg_construct_responds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL CONSTRUCT (bgp_construct): derive new KG edges from a
-    binding template — ``?a respondsTo ?u`` wherever a user turn ?u is
-    immediately followed (nextTurn) by an assistant turn ?a. The WHERE
-    block joins the adjacency relation with two role patterns; the
-    template instantiation is a projection and the result is a new
-    (subj, pred, obj) triple table ready to union into the KG. Oracle:
-    the consecutive-turn self-join with role predicates in SQL."""
-    from json_ld_spark.operators.bgp import bgp_construct
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native,
-        transcript_triples_native,
-    )
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    allt = (
-        transcript_triples_native(t, with_doc_id=False)
-        .select("subj", "pred", "obj")
-        .unionByName(
-            transcript_adjacency_native(t, with_doc_id=False).select(
-                "subj", "pred", "obj"
-            )
-        )
-    )
-    out = bgp_construct(
-        allt,
-        [
-            ("?u", _V + "role", "user"),
-            ("?u", _V + "nextTurn", "?a"),
-            ("?a", _V + "role", "assistant"),
-        ],
-        template=[("?a", _V + "respondsTo", "?u")],
-    )
-    return out.select("subj", "pred", "obj")
-
-
-def q_kg_path_turn_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL 1.1 property path ``nextTurn+`` (operators/paths.py):
-    semi-naive transitive closure over the per-conversation turn-chain
-    edges. Turn chains are linear and complete, so the closure equals
-    every ordered (earlier, later) turn pair within a conversation —
-    which is the closed-form SQL oracle (the Spark side still runs the
-    real fixpoint loop; the analytic form just makes it value-exact)."""
-    from json_ld_spark.operators.native import transcript_adjacency_native
-    from json_ld_spark.operators.paths import path_pairs
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    adj = transcript_adjacency_native(t, with_doc_id=False)
-    out = path_pairs(adj, f"<{_V}nextTurn>+")
-    return out.select("s", "o")
-
-
-def q_kg_path_next_speaker(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite property path ``^conversation/nextTurn/(role|tool)``:
-    inverse step (conversation → its turns), sequence joins on the
-    midpoints, and an alternative over two literal-valued predicates —
-    'which speaker roles / tools ever FOLLOW a turn of this
-    conversation'. Exercises inv + seq + alt of the path algebra in one
-    declarative plan (every atomic step is a pushed pred-filter scan).
-    Oracle: the same relation as plain SQL joins over the replayed
-    transcript table."""
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native,
-        transcript_triples_native,
-    )
-    from json_ld_spark.operators.paths import path_pairs
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    triples = transcript_triples_native(t, with_doc_id=False).select(
-        "subj", "pred", "obj"
-    )
-    adj = transcript_adjacency_native(t, with_doc_id=False).select(
-        "subj", "pred", "obj"
-    )
-    allt = triples.unionByName(adj)
-    out = path_pairs(
-        allt,
-        f"^<{_V}conversation>/<{_V}nextTurn>/(<{_V}role>|<{_V}tool>)",
-    )
-    return out.select("s", "o")
-
-
-def q_kg_bgp_assistant_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL-style BGP query over the constructed triple table
-    (operators/bgp.py): assistant turns with their conversation and
-    index — three patterns folded into two subj-keyed equi-joins, most
-    selective scan first. Oracle: the same conjunction as SQL
-    self-joins on the replayed triple table."""
-    from json_ld_spark.operators.bgp import bgp_query
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    triples = transcript_triples_native(t)
-    out = bgp_query(
-        triples,
-        [
-            ("?turn", _V + "role", "assistant"),
-            ("?turn", _V + "conversation", "?conv"),
-            ("?turn", _V + "turnIndex", "?idx"),
-        ],
-    )
-    return out.select("turn", "conv", "idx")
-
-
-def q_kg_bucketed_bgp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BGP star join OVER THE BUCKETED PUBLISHED TABLE: the same
-    three-pattern conjunction as kg_bgp_assistant_turns, but each
-    pattern scan reads the subj-bucketed managed table published by
-    materialize_kg — all three subj-keyed equi-joins plan with ZERO
-    Exchange (HashPartitioning(subj) from every bucketed scan), the
-    join-side complement to kg_bucketed_node_table's aggregation
-    evidence (PLANS.md §25). Oracle: identical to
-    kg_bgp_assistant_turns."""
-    import re as _re
-
-    from json_ld_spark.operators.bgp import bgp_query
-    from json_ld_spark.plans.kg import materialize_kg
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    tag = _re.sub(r"[^A-Za-z0-9]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    out_dir = f"/tmp/json_ld_spark_bucketed/{tag}"
-    table = f"kg_triples_bucketed_{tag}"
-    materialize_kg(t, out_dir, n_buckets=16, bucketed_table=table)
-    triples = spark.table(table)
-    out = bgp_query(
-        triples,
-        [
-            ("?turn", _V + "role", "assistant"),
-            ("?turn", _V + "conversation", "?conv"),
-            ("?turn", _V + "turnIndex", "?idx"),
-        ],
-    )
-    return out.select("turn", "conv", "idx")
-
-
-def q_kg_bgp_dialogue_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BGP with a cross-subject variable join (the join-on-object case
-    that makes BGPs non-trivial): user turn and assistant turn bound to
-    the SAME conversation variable."""
-    from json_ld_spark.operators.bgp import bgp_query
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    triples = transcript_triples_native(t)
-    out = bgp_query(
-        triples,
-        [
-            ("?u", _V + "role", "user"),
-            ("?u", _V + "conversation", "?conv"),
-            ("?a", _V + "role", "assistant"),
-            ("?a", _V + "conversation", "?conv"),
-        ],
-    )
-    return out.select("u", "a", "conv")
-
-
-def q_kg_bgp_agg_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL SELECT aggregation (operators/bgp.py bgp_select): per
-    (conversation, role) turn counts with min/max turn index and a
-    HAVING gate. The aggregation runs as a map-side-partial groupBy on
-    the joined bindings — the shuffle carries one row per group per
-    partition, which is what lets the same query run over a 100 TB
-    triple table. Oracle: identical GROUP BY/HAVING over the replayed
-    triple table."""
-    from json_ld_spark.operators.bgp import bgp_select
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    triples = transcript_triples_native(t)
-    out = bgp_select(
-        triples,
-        [
-            ("?t", _V + "conversation", "?conv"),
-            ("?t", _V + "role", "?role"),
-            ("?t", _V + "turnIndex", "?idx"),
-        ],
-        group_by=["?conv", "?role"],
-        aggregates={
-            "?n": "COUNT(*)",
-            "?min_idx": "min(cast(?idx as int))",
-            "?max_idx": "max(cast(?idx as int))",
-        },
-        having=["?n >= 2"],
-    )
-    return out.select("conv", "role", "n", "min_idx", "max_idx")
-
-
-def q_kg_bgp_topk_convs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL SELECT solution modifiers end-to-end: GROUP BY +
-    deterministic GROUP_CONCAT, ORDER BY (count DESC, conv ASC — a
-    total order, so the page is reproducible), LIMIT 10 OFFSET 5.
-    Catalyst turns the sort+limit into TakeOrderedAndProject
-    (per-partition top-K, single merge) instead of a global sort.
-    Oracle: string_agg(... ORDER BY ...) + the same page in DuckDB."""
-    from json_ld_spark.operators.bgp import bgp_select, group_concat
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    triples = transcript_triples_native(t)
-    out = bgp_select(
-        triples,
-        [
-            ("?t", _V + "conversation", "?conv"),
-            ("?t", _V + "role", "?role"),
-        ],
-        group_by=["?conv"],
-        aggregates={
-            "?n": "COUNT(*)",
-            "?roles": group_concat("?role", ","),
-        },
-        order_by=["DESC(?n)", "?conv"],
-        limit=10,
-        offset=5,
-    )
-    return out.select("conv", "n", "roles")
-
-
-def q_kg_bgp_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL subselect composition: an aggregated inner SELECT
-    (conversations with a full 16 turns) joins back into the outer
-    pattern on the shared variable — spec bottom-up semantics, planned
-    by Catalyst as a broadcast of the tiny aggregate onto the outer
-    join chain. Oracle: the same HAVING-subquery join in SQL."""
-    from json_ld_spark.operators.bgp import bgp_query, bgp_select
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    triples = transcript_triples_native(t)
-    inner = bgp_select(
-        triples,
-        [("?t", _V + "conversation", "?conv")],
-        group_by=["?conv"],
-        aggregates={"?n": "COUNT(*)"},
-        having=["?n >= 16"],
-        select=["?conv"],
-    )
-    out = bgp_query(
-        triples,
-        [
-            ("?turn", _V + "conversation", "?conv"),
-            ("?turn", _V + "role", "?role"),
-        ],
-        subqueries=[inner],
-    )
-    return out.select("turn", "conv", "role")
-
-
-def q_kg_sparql_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL text with a property path (seq + inverse): same-
-    conversation turn pairs via ?a t:conversation/^t:conversation ?b —
-    the parser hands the path to paths.parse_path and the BGP layer
-    evaluates it; filter keeps the pair count bounded and asymmetric."""
-    from json_ld_spark.sparql import sparql
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    tri3 = (
-        transcript_triples_native(t.filter(F.col("turn_idx") < 4))
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-    )
-    return sparql(tri3, """
-        PREFIX t: <https://example.org/transcript#>
-        SELECT ?a ?b
-        WHERE { ?a t:conversation/^t:conversation ?b FILTER (?a < ?b) }
-    """)
-
-
-def q_kg_sparql_negated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL negated property set (SPARQL 1.1 §9.1 NPS): ?a
-    !(role|text|tool|timestamp|turnIndex|a) ?conv matches every
-    predicate EXCEPT the enumerated ones — on the transcript KG that
-    isolates the conversation edge without naming it — joined with a
-    plain pattern on the other side and an ordering FILTER into
-    same-conversation turn pairs. Oracle: analytic pair replay from
-    the base CTE (the NPS leaves exactly the conversation edges, so
-    pairs = ordered turn pairs within each conversation)."""
-    from json_ld_spark.sparql import sparql
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    tri3 = (
-        transcript_triples_native(t.filter(F.col("turn_idx") < 4))
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-    )
-    return sparql(tri3, """
-        PREFIX t: <https://example.org/transcript#>
-        SELECT ?a ?b ?conv
-        WHERE {
-          ?a !(t:role|t:text|t:tool|t:timestamp|t:turnIndex|a) ?conv .
-          ?b t:conversation ?conv .
-          FILTER (?a < ?b)
-        }
-    """)
-
-
-def q_kg_sparql_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL GRAPH clause over per-conversation named graphs: the
-    transcript KG with each conversation's triples in its own named
-    graph (the natural quad layout for a conversation corpus), queried
-    as GRAPH ?g { ... } — the graph variable ranges over named graphs
-    and joins into the aggregation."""
-    from json_ld_spark.sparql import sparql
-
-    _utc(spark)
-    v = "https://example.org/transcript#"
-    t = transcripts_from_documents(spark, sf_dir)
-    quads = (
-        transcript_triples_native(t)
-        .select(
-            F.regexp_extract(F.col("subj"), r"^(.*)/turn/", 1).alias("graph"),
-            "subj", "pred", "obj",
-        )
-        .dropDuplicates()
-    )
-    return sparql(quads, f"""
-        PREFIX t: <{v}>
-        SELECT ?g (COUNT(*) AS ?n)
-        WHERE {{ GRAPH ?g {{ ?turn t:role "assistant" }} }}
-        GROUP BY ?g HAVING (COUNT(*) >= 3) ORDER BY DESC(?n) ?g LIMIT 40
-    """)
-
-
-def q_kg_bgp_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL DESCRIBE (bgp.bgp_describe): the sub-KG of every turn
-    that used the search tool — a left-semi join of the triple table
-    against the matched node set."""
-    from json_ld_spark.operators.bgp import bgp_describe
-
-    _utc(spark)
-    v = "https://example.org/transcript#"
-    t = transcripts_from_documents(spark, sf_dir)
-    tri3 = (
-        transcript_triples_native(t)
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-    )
-    return bgp_describe(tri3, [("?t", v + "tool", "search")], "?t")
-
-
-def q_kg_bgp_ask(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL ASK (bgp.bgp_ask): boolean existence probes — one
-    pattern that matches (search tool) and one that cannot (browser
-    never appears in the synthesized corpus)."""
-    from json_ld_spark.operators.bgp import bgp_ask
-
-    _utc(spark)
-    v = "https://example.org/transcript#"
-    t = transcripts_from_documents(spark, sf_dir)
-    tri3 = (
-        transcript_triples_native(t)
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-    )
-    a1 = bgp_ask(tri3, [("?t", v + "tool", "search")])
-    a2 = bgp_ask(tri3, [("?t", v + "tool", "browser")])
-    return spark.createDataFrame(
-        [(a1, a2)], "ask_search boolean, ask_browser boolean"
-    )
-
-
-def q_rel_rollup_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPING SETS coverage: ROLLUP(l_returnflag, l_linestatus) with
-    grouping_id — subtotal and grand-total rows alongside the detail,
-    integer-cents exact."""
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            (F.sum(_cents("l_extendedprice")) / 100.0).alias("sum_price"),
-            F.count(F.lit(1)).alias("n"),
-            F.grouping_id().cast("long").alias("gid"),
-        )
-    )
-
-
-def q_rel_correlated_max(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar subquery coverage: each customer's most
-    expensive order via an inner per-customer MAX — Catalyst rewrites
-    the correlation into an aggregate + join; MAX is exact on doubles
-    so the comparison is engine-deterministic (an AVG here would be
-    summation-order-sensitive at the boundary)."""
-    _utc(spark)
-    orders = _read(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("__corr_orders")
-    return spark.sql(
-        """
-        SELECT o1.o_orderkey, o1.o_custkey,
-               CAST(round(o1.o_totalprice * 100) AS BIGINT) AS price_cents
-        FROM __corr_orders o1
-        WHERE o1.o_totalprice = (
-          SELECT MAX(o2.o_totalprice) FROM __corr_orders o2
-          WHERE o2.o_custkey = o1.o_custkey
-        )
-        """
-    )
-
-
-def q_rel_cube_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full CUBE grouping sets: every subtotal combination of
-    (returnflag, linestatus) incl. both one-dimension margins —
-    completes the grouping-sets family next to ROLLUP/PIVOT,
-    integer-cents exact with the grouping_id bitmask compared across
-    engines."""
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(
-            (F.sum(_cents("l_extendedprice")) / 100.0).alias("sum_price"),
-            F.count(F.lit(1)).alias("n"),
-            F.grouping_id().cast("long").alias("gid"),
-        )
-    )
-
-
-def q_rel_rank_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full SQL ranking-function family over one deterministic
-    total order (totalprice DESC, orderkey): row_number / rank /
-    dense_rank / percent_rank / ntile(4) / cume_dist per priority
-    partition, top-50 page per partition."""
-    from pyspark.sql.window import Window
-
-    _utc(spark)
-    orders = _read(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.desc("o_totalprice"), "o_orderkey"
-    )
-    out = orders.select(
-        "o_orderpriority", "o_orderkey",
-        F.row_number().over(w).cast("long").alias("rn"),
-        F.rank().over(w).cast("long").alias("rnk"),
-        F.dense_rank().over(w).cast("long").alias("drnk"),
-        F.round(F.percent_rank().over(w), 6).alias("prank_r"),
-        F.ntile(4).over(w).cast("long").alias("tile"),
-        F.round(F.cume_dist().over(w), 6).alias("cume_r"),
-    )
-    return out.filter(F.col("rn") <= 50)
-
-
-def q_rel_pivot_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIVOT coverage: order-status columns per priority (explicit
-    pivot values so the plan is a single pass, no distinct-collect),
-    integer-cents sums."""
-    _utc(spark)
-    orders = _read(spark, sf_dir, "orders")
-    out = (
-        orders.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["O", "F", "P"])
-        .agg(F.sum(_cents("o_totalprice")))
-    )
-    return out.select(
-        "o_orderpriority",
-        F.col("O").alias("cents_o"),
-        F.col("F").alias("cents_f"),
-        F.col("P").alias("cents_p"),
-    )
-
-
-def q_kg_sparql_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL TEXT end-to-end (json_ld_spark/sparql.py): the parser
-    front end over the BGP layer — join chain, FILTER NOT EXISTS,
-    aggregation, HAVING, deterministic ordered page."""
-    from json_ld_spark.sparql import sparql
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    tri3 = (
-        transcript_triples_native(t)
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-    )
-    return sparql(tri3, """
-        PREFIX t: <https://example.org/transcript#>
-        SELECT ?conv (COUNT(*) AS ?n)
-        WHERE {
-            ?turn t:role "assistant" ; t:conversation ?conv .
-            FILTER NOT EXISTS { ?turn t:tool ?x }
-        }
-        GROUP BY ?conv HAVING (COUNT(*) >= 2)
-        ORDER BY DESC(?n) ?conv LIMIT 50
-    """)
-
-
-def q_kg_sparql_graph_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Property path INSIDE GRAPH (round-4 lift): nextTurn+ evaluated
-    within each per-conversation named graph — nodes are struct(graph,
-    term)-encoded so the one distributed closure cannot cross graphs
-    (bgp._graph_path_scan). Oracle: each conversation is a chain, so
-    the within-graph closure has n·(n-1)/2 pairs."""
-    from json_ld_spark.operators.native import transcript_adjacency_native
-    from json_ld_spark.sparql import sparql
-
-    _utc(spark)
-    v = "https://example.org/transcript#"
-    t = transcripts_from_documents(spark, sf_dir)
-    quads = (
-        transcript_adjacency_native(t, with_doc_id=False)
-        .select(
-            F.regexp_extract(F.col("subj"), r"^(.*)/turn/", 1).alias("graph"),
-            "subj", "pred", "obj",
-        )
-        .dropDuplicates()
-    )
-    return sparql(quads, f"""
-        PREFIX t: <{v}>
-        SELECT ?g (COUNT(*) AS ?n_pairs)
-        WHERE {{ GRAPH ?g {{ ?a t:nextTurn+ ?b }} }}
-        GROUP BY ?g ORDER BY ?g
-    """)
-
-
-def q_kg_sparql_named(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL FROM NAMED dataset construction over the per-conversation
-    named-graph corpus (sparql._apply_dataset): the query's dataset is
-    restricted to 12 explicitly named conversation graphs; GRAPH ?g
-    ranges over exactly those, and the per-graph aggregation composes
-    on top. The graph-IRI IN-list pushes to the scan as a filter."""
-    from json_ld_spark.sparql import sparql
-
-    _utc(spark)
-    v = "https://example.org/transcript#"
-    t = transcripts_from_documents(spark, sf_dir)
-    quads = (
-        transcript_triples_native(t)
-        .select(
-            F.regexp_extract(F.col("subj"), r"^(.*)/turn/", 1).alias("graph"),
-            "subj", "pred", "obj",
-        )
-        .dropDuplicates()
-    )
-    named = "\n".join(
-        f"FROM NAMED <https://example.org/conv/conv-{i}>" for i in range(12)
-    )
-    return sparql(quads, f"""
-        PREFIX t: <{v}>
-        SELECT ?g (COUNT(*) AS ?n)
-        {named}
-        WHERE {{ GRAPH ?g {{ ?turn t:role "assistant" }} }}
-        GROUP BY ?g ORDER BY ?g
-    """)
-
-
-def q_kg_sparql_analyst(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The realistic KG-analyst query shape (round-3 advice #8):
-    property path + OPTIONAL + aggregation COMPOSED in one SPARQL text
-    query — from each conversation's opening turn, count the turns
-    reachable via t:nextTurn+ and, via OPTIONAL, how many of those
-    used a tool. Path closure runs as frontier BFS seeded per t0
-    (operators/paths.py), OPTIONAL is a left join, aggregation a
-    map-side-partial hash agg. Oracle: on a per-conversation chain the
-    nextTurn+ closure from turn 0 is analytic — all turns with index
-    >= 1."""
-    from json_ld_spark.operators.native import transcript_adjacency_native
-    from json_ld_spark.sparql import sparql
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    tri = (
-        transcript_triples_native(t)
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-    )
-    adj = (
-        transcript_adjacency_native(t, with_doc_id=False)
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-    )
-    return sparql(tri.unionByName(adj), """
-        PREFIX t: <https://example.org/transcript#>
-        SELECT ?conv (COUNT(?later) AS ?n_reachable) (COUNT(?tool) AS ?n_tooled)
-        WHERE {
-            ?t0 t:conversation ?conv ; t:turnIndex "0" .
-            ?t0 t:nextTurn+ ?later .
-            OPTIONAL { ?later t:tool ?tool }
-        }
-        GROUP BY ?conv ORDER BY DESC(?n_reachable) ?conv LIMIT 60
-    """)
-
-
-def q_rel_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (operators/temporal.py): every event picks the
-    user's latest click at-or-before its timestamp — union-marker +
-    one keyed window, no range predicate in any join condition (the
-    plan is one shuffle + sort, not a theta join). Oracle: DuckDB's
-    native ASOF LEFT JOIN over the identical deduped snapshot stream."""
-    from json_ld_spark.operators.temporal import asof_join
-
-    _utc(spark)
-    ev = _read(spark, sf_dir, "events")
-    snaps = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("snap_value"))
-    )
-    out = asof_join(
-        ev.select("event_id", "user_id", "event_type", "ts"),
-        snaps, on="user_id", right_cols=["snap_value"],
-    )
-    return out.select(
-        "event_id", "user_id", "event_type",
-        F.col("asof_ts"), F.col("asof_snap_value").alias("asof_value"),
-    )
-
-
-def q_rel_interval_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded interval join (operators/temporal.py): views falling in
-    the 10-minute window after each error, joined via fixed-width time
-    buckets (equi-join + containment filter — never a theta join), then
-    aggregated per error window. Oracle: plain BETWEEN join in SQL."""
-    from json_ld_spark.operators.temporal import interval_join
-
-    _utc(spark)
-    ev = _read(spark, sf_dir, "events")
-    errors = ev.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("err_id"), "user_id",
-        F.col("ts").alias("s"),
-        (F.col("ts") + F.expr("INTERVAL 10 MINUTES")).alias("e"),
-    )
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts"
-    )
-    joined = interval_join(
-        views, errors, on="user_id", point_time="ts",
-        start_col="s", end_col="e", bucket_seconds=600,
-    )
-    return joined.groupBy("err_id").agg(F.count(F.lit(1)).alias("n_views"))
-
-
-def q_sketch_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic HLL register table over l_orderkey (operators/
-    sketches.py): md5-bridge hash, integer-only bucket/rank math —
-    every register value replays bit-for-bit in DuckDB. The sketch is
-    the 100 TB distinct-count tool: fixed 2^p-bucket state, mergeable
-    by register-wise max."""
-    from json_ld_spark.operators import sketches as sk
-
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    return sk.hll_registers(li, "l_orderkey", p=10).select(
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("rho").cast("long").alias("rho"),
-    )
-
-
-def q_sketch_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL cardinality estimate over l_orderkey: m / zero-register
-    count / scaled harmonic sum are integer-exact; the estimate (raw
-    harmonic branch at sf>=0.01, linear-counting branch at sf0.001)
-    rounds to 4 dp. Oracle replays the identical estimator with the
-    same repr-inlined alpha*m^2*2^32 constant."""
-    from json_ld_spark.operators import sketches as sk
-
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    return sk.hll_cardinality(li, "l_orderkey", p=10)
-
-
-def q_sketch_cm_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min sketch counters over l_orderkey (4 x 1024 cells):
-    exact integer sums under deterministic md5-salted hashes — the
-    sketch replays cell-for-cell in DuckDB with no rounding anywhere."""
-    from json_ld_spark.operators import sketches as sk
-
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    out = sk.cm_sketch(li, "l_orderkey", d=4, w=1024)
-    return out.select(
-        F.col("row").cast("long").alias("row"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("cnt").cast("long").alias("cnt"),
-    )
-
-
-def q_sketch_cm_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min frequency estimates for a deterministic probe set
-    (every 100th order key): min over the 4 rows' counters — integer
-    exact, never under the true count."""
-    from json_ld_spark.operators import sketches as sk
-
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    sketch = sk.cm_sketch(li, "l_orderkey", d=4, w=1024)
-    items = (
-        li.filter(F.col("l_orderkey") % 100 == 0)
-        .select(F.col("l_orderkey").cast("string").alias("item"))
-        .distinct()
-    )
-    out = sk.cm_estimate(sketch, items, col="item", d=4, w=1024)
-    return out.select("item", F.col("est").cast("long").alias("est"))
-
-
-def q_sketch_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter membership probe: part keys as the dictionary, a
-    probe set of half real keys / half absent keys (+10M offset).
-    maybe_present=false is definitive absence — the broadcastable
-    prefilter for a join whose build side is too big to broadcast.
-    Boolean-exact oracle (same salted bit positions in SQL)."""
-    from json_ld_spark.operators import sketches as sk
-
-    _utc(spark)
-    part = _read(spark, sf_dir, "part")
-    li = _read(spark, sf_dir, "lineitem")
-    bits = sk.bloom_bits(part, "p_partkey", k=4, w=1 << 16)
-    real = (
-        li.filter(F.col("l_partkey") % 7 == 0)
-        .select(F.col("l_partkey").cast("string").alias("item"))
-        .distinct()
-    )
-    absent = (
-        li.filter(F.col("l_partkey") % 7 == 0)
-        .select((F.col("l_partkey") + 10_000_000).cast("string").alias("item"))
-        .distinct()
-    )
-    out = sk.bloom_probe(bits, real.unionByName(absent), col="item", k=4, w=1 << 16)
-    return out.select("item", "maybe_present")
-
-
-# --------------------------------------------------------------------------
-# similarity search (embeddings)
-# --------------------------------------------------------------------------
-
-# Embedding dimensionality of the driver testdata (fixed across all sf
-# dirs — TESTDATA.md). A constant instead of a per-query `.first()`
-# probe: the probe was a driver-side Spark job per query (VERDICT r1 #5).
-EMB_DIM = 64
-
-
-def _emb_double(df: DataFrame) -> DataFrame:
-    return df.select(
-        "vec_id", F.col("embedding").cast(T.ArrayType(T.DoubleType())).alias("embedding")
-    )
-
-
-def q_sketch_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-bin histogram quantile sketch (operators/sketches.py):
-    p50/p90/p99 of l_extendedprice from a 1000-bucket histogram — ONE
-    bounded-state shuffle over the data; the cumulative window runs
-    over the bucket table (<=1000 rows), never the rows. Deterministic
-    integer bucket math → the oracle replays bins, ranks, and edges
-    exactly."""
-    from json_ld_spark.operators import sketches as sk
-
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    return sk.histogram_quantiles(
-        li, "l_extendedprice", lo=0.0, hi=100000.0, bins=1000,
-        qs=(0.5, 0.9, 0.99),
-    ).select("q", "bucket", "rank", "total", "est_r")
-
-
-def q_ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-5 per sampled query (broadcast queries, codegen
-    dot product via zip_with/aggregate)."""
-    _utc(spark)
-    emb = _emb_double(_read(spark, sf_dir, "embeddings"))
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    out = sim.brute_force_topk(queries, emb, k=5)
-    return out.select(
-        "query_id", "cand_id",
-        F.col("rank").cast("long").alias("rank"),
-        F.round("cos", 4).alias("cos_r"),
-    )
-
-
-def q_ann_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic clustering over embeddings: exact-cosine kNN graph
-    (k=4, ROUNDED-cos threshold 0.25 — the rounded values are the
-    hash-verified cross-engine quantity, so edge membership can never
-    straddle an ulp) -> connected components; cluster id = min member.
-    The brute kNN is the documented sampled baseline twin
-    (CARTESIAN_OK family) — at scale the IVF/LSH candidate generators
-    produce the same (src, dst) edge schema and the CC stage is
-    unchanged. Oracle: all-pairs cosine + QUALIFY rank<=4 + the
-    recursive-CTE reach with MIN grouping."""
-    _utc(spark)
-    emb = _emb_double(_read(spark, sf_dir, "embeddings")).filter(
-        F.col("vec_id") % 4 == 0
-    )
-    knn = sim.brute_force_topk(emb, emb, k=4)
-    edges = knn.filter(F.round(F.col("cos"), 4) >= 0.25).select(
-        F.col("query_id").alias("src"), F.col("cand_id").alias("dst")
-    )
-    comp = gops.connected_components(edges)
-    nodes = emb.select(F.col("vec_id").alias("node"))
-    return nodes.join(comp, "node", "left").select(
-        F.col("node").cast("long").alias("node"),
-        F.coalesce(F.col("component"), F.col("node")).cast("long").alias("cluster"),
-    )
-
-
-def q_ann_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Margin-based pair mining (similarity.margin_pairs, the
-    Artetxe-Schwenk bitext scorer) between the even- and odd-id halves
-    of the embedding corpus: best-y-per-x by ratio margin with
-    order-pinned k-NN folds (bit-exact margins), 6-dp threshold 1.2.
-    Brute kNN is the sampled baseline twin; IVF/LSH generators plug
-    into the same algebra at scale. Oracle: both kNN directions, the
-    list_reduce rank-order fold, the identical margin expression."""
-    _utc(spark)
-    emb = _emb_double(_read(spark, sf_dir, "embeddings"))
-    x = emb.filter(F.col("vec_id") % 2 == 0)
-    y = emb.filter(F.col("vec_id") % 2 == 1)
-    out = sim.margin_pairs(x, y, k=4, threshold=1.2)
-    return out.select(
-        F.col("x_id").cast("long").alias("x_id"),
-        F.col("y_id").cast("long").alias("y_id"),
-        "margin_r",
-    )
-
-
-def q_ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded multi-table hyperplane-LSH ANN: equi-join on (band, sig)
-    replaces the cross join; bits-per-band bounds per-bucket fan-in and
-    extra bands restore recall (similarity.py module docstring).
-    Oracle: DuckDB replays the deterministic plane family from inline
-    literals (_ANN_LSH_SQL) — approximate vs true top-k, but exactly
-    reproducible."""
-    _utc(spark)
-    emb = _emb_double(_read(spark, sf_dir, "embeddings"))
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    out = sim.lsh_topk(queries, emb, dim=EMB_DIM, k=5, n_planes=6, n_bands=4)
-    return out.select(
-        "query_id", "cand_id",
-        F.col("rank").cast("long").alias("rank"),
-        F.round("cos", 4).alias("cos_r"),
-    )
-
-
-def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN (inverted-file): hash-seeded codebook refined by Lloyd
-    assignment passes (bounded component-wise means — no vector lists in
-    any aggregation buffer), cell-equi-join candidate search with
-    n_probe cells per query. Recall vs exact top-5 asserted >=0.9 in
-    tests/test_dataops.py.
-
-    VALUE-EXACT oracle (round-3): the whole codebook derivation is
-    replayed in DuckDB — md5-bridge seed sample, two Lloyd rounds with
-    centroid means quantized to 1e-6 between rounds (stops cross-engine
-    summation-order ulps from flipping assignments), then the
-    n_assign/n_probe cell joins and cosine top-5."""
-    _utc(spark)
-    emb = _emb_double(_read(spark, sf_dir, "embeddings"))
-    cents = sim.ivf_centroids(emb, n_cells=16, lloyd_rounds=2)
-    queries_df = emb.filter(F.col("vec_id") % 100 == 0)
-    out = sim.ivf_topk(queries_df, emb, cents, k=5, n_probe=6, n_assign=2)
-    return out.select(
-        "query_id", "cand_id",
-        F.col("rank").cast("long").alias("rank"),
-        F.round("cos", 4).alias("cos_r"),
-    )
-
-
-def q_ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ ANN (similarity.pq_codebooks + ivfpq_topk): coarse IVF
-    codebook, product-quantized residual codes (m=8 subspaces x 32
-    codes — candidates ship m small ints instead of dim doubles, ~16x
-    less candidate shuffle at 100 TB), ADC shortlist (rounded 1e-6,
-    cand_id tiebreak), exact cosine re-rank of the top-80. Recall vs
-    exact top-5 asserted >= 0.9 in tests/test_dataops.py.
-
-    VALUE-EXACT oracle: the ENTIRE derivation replays in DuckDB —
-    md5-bridge seeds for both codebooks, Lloyd with 1e-6-quantized
-    means, L2 code assignment (list_zip p->(p[1]-p[2])^2 summed
-    left-to-right = Spark's zip_with/aggregate fold order), per-cell
-    ADC rounded before the cross-cell MIN, shortlist, exact re-rank."""
-    _utc(spark)
-    emb = _emb_double(_read(spark, sf_dir, "embeddings"))
-    cents = sim.ivf_centroids(emb, n_cells=16, lloyd_rounds=2)
-    books = sim.pq_codebooks(emb, cents, m_subspaces=8, n_codes=32, lloyd_rounds=2)
-    queries_df = emb.filter(F.col("vec_id") % 100 == 0)
-    out = sim.ivfpq_topk(
-        queries_df, emb, cents, books, k=5, n_probe=6, n_assign=2, rerank=80
-    )
-    return out.select(
-        "query_id", "cand_id",
-        F.col("rank").cast("long").alias("rank"),
-        F.round("cos", 4).alias("cos_r"),
-    )
-
-
-def q_jsonld_canonicalize_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed bnode canonicalization (operators/canonical.py:
-    DataFrame-native fixpoint color refinement) over bnode-rooted docs.
-
-    VALUE-EXACT oracle (round-3): the refinement hash chain is
-    agg = sha256(chr(30)-join of sorted quad signatures),
-    h_r = sha256(agg || chr(31) || h_{r-1}) — for single-bnode documents
-    the signatures are round-invariant and the fixpoint always stops
-    after round 2, so DuckDB replays h2 analytically; duplicate-content
-    documents are disambiguated with sha256(h2 || input_label) where the
-    input label '_:g' || sha256(doc_id)[:12] || 'b0' is itself
-    replayable (the BlankGen prefix of operators/jsonld.py triples_stage)."""
-    from json_ld_spark.operators.canonical import canonicalize_bnodes_df
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    anon_struct = F.struct(
-        F.lit("Turn").alias("@type"),
-        F.col("role").alias("role"),
-        F.col("text").alias("text"),
-        F.col("turn_idx").alias("turn"),
-    )
-    docs = t.filter(F.col("turn_idx") % 5 == 0).select(
-        F.concat(F.col("conv_id"), F.lit("#"), F.col("turn_idx").cast("string")).alias("doc_id"),
-        F.to_json(anon_struct, {"ignoreNullFields": "true"}).alias("doc"),
-    )
-    trip = triples_stage(docs, context=TRANSCRIPT_CONTEXT, options=JsonLdOptions())
-    out = canonicalize_bnodes_df(trip)
-    return out.select("doc_id", "subj", "pred", "obj_kind", "obj")
-
-
-def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style cluster-then-prune semantic dedup
-    (dedup.semantic_dedup, Abbas et al. 2023): deterministic IVF
-    codebook → nearest-cell assignment → within-cell lower-id
-    cosine>=0.3 pruning. Pair fan-in is the cell size, never corpus
-    all-pairs. Oracle: shared codebook replay + the same self-join."""
-    _utc(spark)
-    from json_ld_spark.operators.dedup import semantic_dedup
-
-    emb = _emb_double(_read(spark, sf_dir, "embeddings"))
-    cents = sim.ivf_centroids(emb, n_cells=16, lloyd_rounds=2)
-    return semantic_dedup(emb, cents, tau=0.3)
-
-
-def q_ann_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (banded multi-table LSH
-    self-join, pair-dedup before the cosine verify). Oracle: same
-    inline-plane replay as ann_topk_lsh."""
-    _utc(spark)
-    emb = _emb_double(_read(spark, sf_dir, "embeddings"))
-    # synthetic embeddings are near-orthogonal (max pairwise cos ~0.46 at
-    # sf0.01), so 0.3 is the "near-duplicate" band for this corpus
-    out = sim.embedding_near_duplicates(emb, dim=EMB_DIM, threshold=0.3, n_planes=6)
-    return out.select("vec_a", "vec_b", F.round("cos", 4).alias("cos_r"))
-
-
-# --------------------------------------------------------------------------
-# text analysis (training-data ops)
-# --------------------------------------------------------------------------
-
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID, token counts (whitespace + BPE-ish regex), quality
-    score — all JVM column expressions."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    t = F.col("text")
-    return docs.select(
-        "doc_id",
-        tx.lang_id(t).alias("lang_pred"),
-        tx.token_count_whitespace(t).cast("long").alias("n_tokens_ws"),
-        tx.token_count_bpe(t).cast("long").alias("n_tokens_bpe"),
-        F.round(tx.quality_score(t), 6).alias("quality_r"),
-    )
-
-
-def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (operators/curation.py; GPT-3-style
-    exact n-gram overlap): docs with doc_id % 23 = 5 play the held-out
-    benchmark; every corpus doc is flagged if it shares any word
-    6-gram. Benchmark n-grams broadcast; one corpus scan."""
-    from json_ld_spark.operators.curation import decontaminate
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 23 == 5)
-    return decontaminate(docs, bench, n=6).orderBy("doc_id")
-
-
-def q_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style LM quality scoring (operators/curation.py): bigram
-    add-one model trained on the corpus itself, per-doc mean log-prob.
-    One tokenize pass; counts via window functions (no join-back —
-    Spark has no cross-consumer CSE)."""
-    from json_ld_spark.operators.curation import lm_score
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    return lm_score(docs).orderBy("doc_id")
-
-
-def q_data_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAG-style sliding-window chunking (curation.chunk_documents):
-    40-token windows, 8-token overlap — pure JVM transform+slice per
-    doc, one explode, no shuffle."""
-    from json_ld_spark.operators.curation import chunk_documents
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    return chunk_documents(docs, max_tokens=40, overlap=8)
-
-
-def q_text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher quality rules (textops.gopher_quality, Rae et al. 2021
-    A1.1): all six signals + the keep conjunction as one JVM struct
-    projection over the corpus."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    q = tx.gopher_quality(F.col("text"))
-    return docs.select(
-        "doc_id",
-        q["n_words"].alias("n_words"),
-        q["mean_word_len"].alias("mean_word_len"),
-        q["symbol_ratio"].alias("symbol_ratio"),
-        q["bullet_frac"].alias("bullet_frac"),
-        q["alpha_frac"].alias("alpha_frac"),
-        q["n_stopwords"].alias("n_stopwords"),
-        q["keep"].alias("keep"),
-    )
-
-
-def q_data_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-curriculum training order: tier = INTEGER count of
-    Gopher rules passed (0-6, computed from the 6-dp-ROUNDED signals —
-    the hash-verified cross-engine quantities, so tier membership can
-    never straddle an ulp), within-tier order a seeded md5 permutation
-    via ONE tier-partitioned window. Readers ORDER BY (tier DESC,
-    tier_rank): cleanest documents first, shuffled within tier — the
-    standard curriculum/annealing schedule, zero global windows.
-    Oracle: the gopher replay CTE + the same indicator sum + a
-    partitioned ROW_NUMBER."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    q = tx.gopher_quality(F.col("text"))
-    sig = docs.select(
-        "doc_id",
-        q["n_words"].alias("nw"),
-        q["mean_word_len"].alias("mwl"),
-        q["symbol_ratio"].alias("sr"),
-        q["bullet_frac"].alias("bf"),
-        q["alpha_frac"].alias("af"),
-        q["n_stopwords"].alias("ns"),
-    )
-    tier = (
-        ((F.col("nw") >= 50) & (F.col("nw") <= 100000)).cast("int")
-        + ((F.col("mwl") >= 3.0) & (F.col("mwl") <= 10.0)).cast("int")
-        + (F.col("sr") <= 0.1).cast("int")
-        + (F.col("bf") <= 0.9).cast("int")
-        + (F.col("af") >= 0.7).cast("int")
-        + (F.col("ns") >= 2).cast("int")
-    ).cast("long")
-    key = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("cur|"), F.col("doc_id").cast("string"))),
-            1, 15,
-        ),
-        16, 10,
-    ).cast("long")
-    from pyspark.sql import Window as W
-
-    tiered = sig.select("doc_id", tier.alias("tier"), key.alias("__k"))
-    w = W.partitionBy("tier").orderBy(F.col("__k").asc(), F.col("doc_id").asc())
-    return tiered.withColumn(
-        "tier_rank", (F.row_number().over(w) - 1).cast("long")
-    ).select("doc_id", "tier", "tier_rank")
-
-
-def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode/whitespace normalization (textops.normalize_text):
-    deterministic mess injected (decomposed e+combining-acute, control
-    chars, run whitespace), NFC composed in an Arrow UDF only rows
-    with non-ASCII enter, cleanup in JVM regex; DuckDB replays via
-    nfc_normalize (probed byte-identical to Python NFC). The two sides
-    intentionally inject DIFFERENT pre-images (Spark: precomposed é,
-    no control char; SQL: e+combining-acute and a BEL) that must
-    converge to identical normalized bytes — hash equality therefore
-    proves the normalization actually ran on both engines."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    messy = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"), F.lit("  café"),
-            F.when(F.col("doc_id") % 3 == 0, F.lit("\txy"))
-            .otherwise(F.lit(" z")),
-        ).alias("text"),
-    )
-    out = tx.normalize_text(F.col("text"))
-    return messy.select(
-        "doc_id",
-        F.md5(out).alias("norm_md5"),
-        F.length(out).cast("long").alias("n_chars"),
-    )
-
-
-def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing-style rolling-hash document fingerprint, md5-gram
-    variant so DuckDB reproduces it exactly (the xxhash64 variant in
-    textops.fingerprint is the cheap production path — same algorithm,
-    different gram hash)."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", tx.fingerprint_md5(F.col("text")).alias("fingerprint")
-    )
-
-
-def q_text_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII detection + redaction (operators/textops.py): deterministic
-    PII injection (so the corpus actually contains matches), per-
-    category regexp counts, and an md5 over the redacted text — the
-    whole scrub is a JVM projection (regexp_count/regexp_replace), no
-    shuffle. Patterns stay in the Java-regex/RE2 common subset so the
-    DuckDB oracle replays them byte-for-byte."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    injected = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(F.col("doc_id") % 5 == 0,
-                   F.lit(" contact alice@example.com or bob.smith@test.org")
-                   ).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 7 == 0,
-                   F.lit(" call 555-123-4567")).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 11 == 0,
-                   F.lit(" from 192.168.1.77")).otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    counts = tx.pii_counts(F.col("text"))
-    return injected.select(
-        "doc_id",
-        counts["email"].cast("long").alias("n_email"),
-        counts["ip"].cast("long").alias("n_ip"),
-        counts["phone"].cast("long").alias("n_phone"),
-        F.md5(tx.redact_pii(F.col("text"))).alias("redacted_md5"),
-    )
-
-
-def q_text_word_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repetition quality signals (Gopher-rule family): per-doc word
-    totals, distinct words, top-word count, duplicate-word fraction —
-    two partial-agg shuffles, integer-exact except the 6-dp fraction."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    return tx.word_repetition(docs).select(
-        "doc_id", "n_words", "n_distinct", "top_count", "dup_frac"
-    )
-
-
-def q_data_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test split (operators/sampling.py):
-    per-document md5-bridge bucket → 80/10/10 split with NO shuffle and
-    no RNG state — the assignment is a pure projection, invariant to
-    partitioning and cluster size (randomSplit is neither). Returns the
-    per-split doc counts and char volume; the oracle replays the exact
-    bucket math."""
-    from json_ld_spark.operators import sampling as sp
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    out = (
-        sp.hash_split(docs, "doc_id")
-        .groupBy("split")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("chars"),
-        )
-    )
-    return out.select("split", "n_docs", "chars")
-
-
-def q_data_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-stratum sampling by language: down-sample the
-    majority language (en 20%) while keeping more of the tails (de 80%,
-    zh 50%); unlisted strata drop. Hash-threshold selection — the
-    sample is a filter, not an RNG draw, so it is reproducible and
-    monotone in the fraction."""
-    from json_ld_spark.operators import sampling as sp
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    out = sp.stratified_sample(
-        docs, "doc_id", "lang", {"en": 0.2, "de": 0.8, "zh": 0.5}
-    )
-    return out.select("doc_id", "lang", "source")
-
-
-def q_data_sample_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-size deterministic sample per group: 10 docs per language,
-    ranked inside each language by (hash bucket, doc_id) so the pick is
-    input-order-invariant. One shuffle on the group key; rank<=n caps
-    every group. Oracle: the same ROW_NUMBER in DuckDB."""
-    from json_ld_spark.operators import sampling as sp
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    out = sp.sample_per_key(docs, ["lang"], "doc_id", 10)
-    return out.select("doc_id", "lang")
-
-
-def q_data_pack_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing (operators/sampling.pack_documents): assign
-    docs to ~2000-token training packs per language shard via one
-    windowed cumulative sum — contiguous fill, deterministic, packs
-    never split a document. Oracle: the identical SUM OVER window in
-    SQL."""
-    from json_ld_spark.operators import sampling as sp
-    from json_ld_spark.operators.retrieval import doc_lengths
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", "lang").join(
-        doc_lengths(docs).withColumnRenamed("dl", "n_tok"), "doc_id"
-    )
-    out = sp.pack_documents(
-        toks, "n_tok", budget=2000, order_col="doc_id", shard_col="lang"
-    )
-    return out.select(
-        "doc_id", "lang", F.col("n_tok").cast("long").alias("n_tok"),
-        "pack_id",
-    )
-
-
-def q_data_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL BPE tokenization (operators/bpe.py): 30 merges learned
-    from the corpus (distributed pre-token counting -> capped
-    word-frequency table -> deterministic driver merge loop, the
-    FAISS-codebook bounded-state pattern), applied as a pure JVM
-    projection — fold of replace() over ONE literal merge array per
-    pre-token (Sennrich apply-in-learned-order semantics). Output per
-    doc: EXACT token count + md5 of the canonical encoded token
-    stream. Oracle: DuckDB replays BOTH the training (30 unrolled
-    merge-round CTEs over the same capped word table) and the
-    application (list_reduce of replace over the same merge list) —
-    value-exact, no approximation anywhere."""
-    from json_ld_spark.operators import bpe
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    merges = bpe.train_bpe(docs, n_merges=30, max_words=1500)
-    if len(merges) != 30:  # loud contract: short tables break budgets
-        raise ValueError(f"expected 30 merges, learned {len(merges)}")
-    t = F.col("text")
-    return docs.select(
-        "doc_id",
-        bpe.bpe_token_count(t, merges).alias("n_bpe_tokens"),
-        bpe.bpe_stream_md5(t, merges).alias("stream_md5"),
-    )
-
-
-def q_data_pack_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing driven by EXACT BPE token counts (the trainer
-    contract is tokens, not words): bpe.bpe_token_count feeds
-    sampling.pack_documents per language shard at a 2000-token budget.
-    Oracle: the BPE training+application replay CTEs + the identical
-    SUM OVER window."""
-    from json_ld_spark.operators import bpe
-    from json_ld_spark.operators import sampling as sp
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    merges = bpe.train_bpe(docs, n_merges=30, max_words=1500)
-    toks = docs.select(
-        "doc_id", "lang",
-        bpe.bpe_token_count(F.col("text"), merges).alias("n_bpe_tokens"),
-    )
-    out = sp.pack_documents(
-        toks, "n_bpe_tokens", budget=2000, order_col="doc_id",
-        shard_col="lang",
-    )
-    return out.select("doc_id", "lang", "n_bpe_tokens", "pack_id")
-
-
-def q_data_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-robin mixture schedule (sampling.interleave_groups):
-    reading in interleave_pos order rotates through the languages one
-    doc per cycle, each language internally md5-permuted — pure
-    arithmetic (rank * n_groups + group_slot), no global window.
-    Oracle: the same partitioned ROW_NUMBER + DENSE_RANK arithmetic."""
-    from json_ld_spark.operators import sampling as sp
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    out = sp.interleave_groups(docs, "lang", "doc_id", seed="r5")
-    return out.select("doc_id", "lang", "grp_rank", "interleave_pos")
-
-
-def q_data_bpe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language tokenizer fertility profile over the EXACT BPE
-    counts (operators/bpe.py): chars per token and tokens per document
-    by language — the standard multilingual-tokenizer equity metric
-    (a language with high chars/token is under-served by the learned
-    merges). One groupBy(lang) over the zero-shuffle token projection.
-    Oracle: the BPE training+application replay + the same integer
-    aggregates (6-dp rounded ratios)."""
-    from json_ld_spark.operators import bpe
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    merges = bpe.train_bpe(docs, n_merges=30, max_words=1500)
-    t = F.col("text")
-    per = docs.select(
-        "lang",
-        bpe.bpe_token_count(t, merges).alias("n_tok"),
-        F.length(F.concat_ws("", F.regexp_extract_all(t, F.lit(bpe.PRETOKEN_RE), 0))).cast("long").alias("n_chars"),
-    )
-    return (
-        per.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_tok").cast("long").alias("sum_tokens"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-        )
-        .select(
-            "lang", "n_docs", "sum_tokens", "sum_chars",
-            F.round(F.col("sum_chars") / F.col("sum_tokens"), 6).alias("chars_per_token_r"),
-            F.round(F.col("sum_tokens") / F.col("n_docs"), 6).alias("tokens_per_doc_r"),
-        )
-    )
-
-
-def q_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 ranked retrieval (operators/retrieval.py) for a fixed
-    query over the documents corpus: postings pre-filtered to the query
-    terms BEFORE any shuffle, per-doc score sum as one partial agg,
-    top-20 via TakeOrderedAndProject. Scores rounded to 6 dp (absorbs
-    float sum-order divergence, repo oracle convention)."""
-    from json_ld_spark.operators import retrieval as rt
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    out = rt.bm25(docs, ["shuffle", "join", "window"], top_k=20)
-    return out.select("doc_id", "score", "n_hit")
-
-
-# --------------------------------------------------------------------------
-# multimodal plumbing
-# --------------------------------------------------------------------------
-
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary media columns → Arrow-batched feature extraction (decode
-    stubbed deterministically; schema/batch plumbing real). Oracle:
-    DuckDB replays the hash-derived features with float32 truncation."""
-    _utc(spark)
-    media = mm.synthesize_media(spark, n=96)
-    feats = mm.extract_features(media, dim=8)
-    return feats.select(
-        "media_id", "kind", "decode_ok",
-        F.round(F.aggregate("feature", F.lit(0.0), lambda a, v: a + v), 6).alias("feat_sum_r"),
-    )
-
-
-def q_multimodal_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling fan-out (explode over duration). Rows-only."""
-    _utc(spark)
-    media = mm.synthesize_media(spark, n=96)
-    plan = mm.frame_sample_plan(media, every_ms=500)
-    return plan.select("media_id", F.col("sample_ms").cast("long").alias("sample_ms"))
-
-
-def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec path: stdlib-`wave` PCM16 decode inside mapInPandas
-    over real WAV payloads; integer-exact features. Oracle: DuckDB
-    regenerates the deterministic waveform analytically (trunc+sin are
-    bit-identical across both engines on this platform)."""
-    _utc(spark)
-    media = mm.synthesize_wav_media(spark, n=32)
-    return mm.audio_features(media)
-
-
-def q_multimodal_audio_decimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio downsampling (multimodal.decimate_audio): stdlib WAV
-    decode → keep every 4th sample → stdlib WAV re-encode at 2 kHz in
-    one Arrow pass; integer stats of the kept samples are oracled
-    analytically (trunc+sin parity with DuckDB), bytes verified by
-    decode roundtrip in tests."""
-    from json_ld_spark.operators.multimodal import (
-        decimate_audio, synthesize_wav_media,
-    )
-
-    _utc(spark)
-    media = synthesize_wav_media(spark, n=32)
-    return decimate_audio(media, factor=4).select(
-        "media_id", "n_in", "n_out", "out_rate", "sum_abs_out", "max_abs_out"
-    )
-
-
-def q_multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL nearest-neighbor image resize
-    (multimodal.resize_images): stdlib PNG decode → index-sampled
-    6×5 thumbnail → stdlib PNG re-encode in one Arrow mapInPandas
-    pass; the resized image's integer channel sums are oracled
-    analytically from the synthesis formula at the sampled
-    coordinates (the re-encoded bytes are decode-roundtrip-verified
-    in tests — zlib output is not SQL-expressible)."""
-    from json_ld_spark.operators.multimodal import (
-        resize_images, synthesize_png_media,
-    )
-
-    _utc(spark)
-    media = synthesize_png_media(spark, n=48)
-    return resize_images(media, 6, 5).select(
-        "media_id", "width", "height", "out_w", "out_h",
-        "sum_r", "sum_g", "sum_b",
-    )
-
-
-def q_multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image codec path (round-3): pure-stdlib PNG decode (zlib
-    inflate + scanline unfilter) inside mapInPandas over real PNG
-    payloads; integer-exact channel statistics. Oracle: DuckDB
-    regenerates every pixel from the closed-form channel formulas via
-    generate_series."""
-    _utc(spark)
-    media = mm.synthesize_png_media(spark, n=48)
-    return mm.image_features(media)
-
-
-def q_multimodal_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual near-duplicate image detection end to end
-    (multimodal.dhash_images + dhash_near_duplicates): REAL PNG decode
-    -> NN-sampled 9x8 integer grayscale grid -> dHash row-bytes ->
-    block-LSH candidate join (pigeonhole recall exactly 1.0 for
-    hamming <= 6 < 8 blocks) -> exact popcount filter. Corpus = 48
-    closed-form TEXTURED PNGs + 16 first-column brightness-edit
-    variants (15 land within the threshold, every cross-image pair is
-    >= 9 bits away — real separation, unlike the dHash-degenerate
-    linear ramps). Oracle: DuckDB regenerates every sampled gray value
-    from the pixel formulas, builds the 64 bits per image, and
-    computes ALL-pairs hamming (64 images — all-pairs is the oracle's
-    privilege, the Spark side never does it)."""
-    _utc(spark)
-    media = mm.synthesize_png_media_textured(spark, n=48).unionByName(
-        mm.synthesize_png_media_textured(spark, n=16, variant=True)
-    )
-    hashes = mm.dhash_images(media, grid_w=8, grid_h=8)
-    return mm.dhash_near_duplicates(hashes, max_hamming=6, n_blocks=8)
-
-
-def q_multimodal_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video decode (operators/multimodal.py avi_decode —
-    pure-stdlib uncompressed-AVI RIFF parser, no ffmpeg): per-video
-    dimensions, frame count, integer channel sums over all frames, and
-    a motion proxy (Σ|r_t − r_{t−1}|). The synthesized AVIs use an
-    integer-closed-form pixel formula, so the DuckDB oracle regenerates
-    every statistic from generate_series — same pattern as the WAV and
-    PNG codecs."""
-    _utc(spark)
-    media = mm.synthesize_avi_media(spark, n=24)
-    return mm.video_features(media).select(
-        "media_id", "width", "height", "n_frames",
-        "sum_r", "sum_g", "sum_b", "motion",
-    )
-
-
-def q_multimodal_frame_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL frame extraction end to end: AVI decode → keep every 2nd
-    frame → re-encode each as a PNG thumbnail → decode the PNG back and
-    emit per-frame channel sums. Exercises the video→image handoff with
-    both stdlib codecs in one Arrow pass; the oracle regenerates every
-    sampled frame's statistics from the closed-form pixel formula."""
-    _utc(spark)
-    media = mm.synthesize_avi_media(spark, n=24)
-    frames = mm.sample_video_frames(media, every_n=2)
-
-    import pandas as pd_
-
-    def stats(batches):
-        import numpy as np
-
-        for pdf in batches:
-            out = {"media_id": [], "frame_idx": [], "sum_r": [], "sum_g": [],
-                   "sum_b": []}
-            for mid, idx, png in zip(pdf["media_id"], pdf["frame_idx"],
-                                     pdf["png"]):
-                w, h, ch, px = mm.png_decode(bytes(png))
-                a = np.frombuffer(bytes(px), dtype=np.uint8).reshape(-1, ch)
-                a = a.astype(np.int64)
-                out["media_id"].append(int(mid))
-                out["frame_idx"].append(int(idx))
-                out["sum_r"].append(int(a[:, 0].sum()))
-                out["sum_g"].append(int(a[:, 1].sum()))
-                out["sum_b"].append(int(a[:, 2].sum()))
-            yield pd_.DataFrame(out)
-
-    return frames.mapInPandas(
-        stats,
-        schema="media_id long, frame_idx long, sum_r long, sum_g long, sum_b long",
-    )
-
-
-def q_streaming_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming ingest → triple extraction → memory sink,
-    drained over file micro-batches; returns the collected batch result
-    (stream/batch parity asserted in tests/test_streaming.py).
-    Rows-only."""
-    import tempfile
-
-    from json_ld_spark.streaming.stream import run_stream_to_memory
-
-    _utc(spark)
-    d = tempfile.mkdtemp(prefix="stream_q_")
-    transcripts_from_documents(spark, sf_dir).repartition(4).write.mode(
-        "overwrite"
-    ).parquet(d)
-    out = run_stream_to_memory(spark, d, query_name="q_streaming_triples_mem")
-    return out.select("subj", "pred", "obj_kind", "obj")
-
-
-def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming inactivity-gap sessionization (session_window + state
-    merge, streaming/stream.py streaming_sessions): events hash-split
-    into two micro-batch files so most users' sessions are SEVERED
-    across batches and must be re-merged by the merging-window state
-    store. session_window splits at strictly > gap (the exactly-gap
-    event merges — pinned in tests), end = last event + gap — the
-    oracle replays exactly those semantics over integer microseconds."""
-    import tempfile
-
-    from json_ld_spark.streaming.stream import run_stream_sessions
-
-    _utc(spark)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "user_id", "ts"
-    )
-    base = tempfile.mkdtemp(prefix="stream_sess_")
-    ev.filter(F.xxhash64("event_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(f"{base}/in")
-    ev.filter(F.xxhash64("event_id") % 2 != 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(f"{base}/in")
-    schema = spark.read.parquet(f"{base}/in").schema
-    return run_stream_sessions(
-        spark, f"{base}/in", schema=schema, gap_seconds=1800,
-        query_name="q_streaming_sessions_mem",
-    )
-
-
-def q_streaming_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental streaming connected components over the nextTurn
-    adjacency chains, hash-split into two file micro-batches (so most
-    conversations' chains are SEVERED across batches and must be
-    re-merged by the star-edge state updater, streaming/stream.py).
-    Every turn's component must come out as its conversation's turn/0
-    ('0' sorts first in the turn-IRI lexicographic order), which the
-    oracle states analytically — a semantic ground truth rather than an
-    algorithm replay."""
-    import tempfile
-
-    from json_ld_spark.operators.native import transcript_adjacency_native
-    from json_ld_spark.streaming.stream import run_stream_components
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    e = transcript_adjacency_native(t, with_doc_id=False).select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    base = tempfile.mkdtemp(prefix="stream_cc_")
-    e.filter(F.xxhash64("src", "dst") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(f"{base}/in")
-    e.filter(F.xxhash64("src", "dst") % 2 != 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(f"{base}/in")
-    out = run_stream_components(
-        spark, f"{base}/in", f"{base}/state", f"{base}/ckpt",
-        schema="src STRING, dst STRING",
-    )
-    return out.select("node", "component")
-
-
-# --------------------------------------------------------------------------
-# relational operator checklist (SURVEY.md §2-I) over TPC-H-ish tables
-# --------------------------------------------------------------------------
-
-def _cents(col: str) -> F.Column:
-    return F.round(F.col(col) * 100).cast("long")
-
-
-def q_text_ngram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """fastText-style hashed-bigram linear scoring
-    (textops.hashed_ngram_score): model application as one broadcast
-    join against a 4096-bucket weight table + one doc-keyed mean +
-    sigmoid — the trained-classifier plumbing with a deterministic
-    model so DuckDB replays feature hashing, lookup and score
-    end-to-end (6-dp; only summation order differs)."""
-    from json_ld_spark.operators.textops import hashed_ngram_score
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    wts = spark.range(4096).selectExpr(
-        "id AS bucket", "CAST(id % 101 AS DOUBLE)/100 - 0.5 AS weight"
-    )
-    return hashed_ngram_score(docs, wts, buckets=4096)
-
-
-def q_dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined chunking (dedup.cdc_chunks): Rabin-style cuts
-    where the trailing-4-char hash ≡ 0 mod 32 — insertion-robust chunk
-    hashes for splice-tolerant dedup. Pure projection (positions via
-    sequence/transform/filter + one explode, no shuffle, no Python).
-    Oracle: identical boundary math through the md5 bridge with DuckDB
-    list_filter/range."""
-    from json_ld_spark.operators.dedup import cdc_chunks
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    return cdc_chunks(docs, modulus=32)
-
-
-def q_kg_skolemize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RDF 1.1 skolemization (canonical.skolemize): conversations are
-    anonymized to blank nodes (the multi-source ingest case) and then
-    skolemized to /.well-known/genid/ IRIs — a pure projection that
-    makes bnode-bearing graphs joinable across systems. Oracle: the
-    genid IRI is a string rewrite of the deterministic conv id."""
-    from json_ld_spark.operators.canonical import skolemize
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    tri = transcript_triples_native(t, with_doc_id=False).select(*TRIPLE_COLS)
-    is_conv = F.col("pred") == _V + "conversation"
-    anon = tri.withColumn(
-        "obj",
-        F.when(
-            is_conv,
-            F.regexp_replace("obj", "^" + _CB + "conv-", "_:c"),
-        ).otherwise(F.col("obj")),
-    ).withColumn(
-        "obj_kind", F.when(is_conv, F.lit("bnode")).otherwise(F.col("obj_kind"))
-    )
-    return skolemize(anon)
-
-
-def q_kg_context_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Instruction-pair assembly from turn windows
-    (native.transcript_context_windows): per turn, the role-prefixed
-    text of the previous 3 turns of the same conversation as context
-    plus the turn text as target — the (context, target) training-pair
-    shape, one conv-partitioned bounded-frame window, no Python.
-    Oracle: the same frame as a windowed STRING_AGG."""
-    from json_ld_spark.operators.native import transcript_context_windows
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    return transcript_context_windows(t, k=3)
-
-
-def q_kg_void_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VoID-style property partition (profile.void_stats): per-pred
-    triple/subject/object cardinalities of the transcript KG — the
-    statistics the BGP planner's selectivity ordering consumes. One
-    predicate-keyed aggregation; object identity = full value tuple."""
-    from json_ld_spark.operators.profile import void_stats
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    tri = transcript_triples_native(t, with_doc_id=False).select(*TRIPLE_COLS)
-    out = void_stats(tri)
-    return out.select(
-        "pred",
-        F.col("n_triples").cast("long").alias("n_triples"),
-        F.col("n_distinct_subj").cast("long").alias("n_distinct_subj"),
-        F.col("n_distinct_obj").cast("long").alias("n_distinct_obj"),
-    )
-
-
-def q_kg_schema_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Class-level summary graph (profile.schema_summary): the
-    transcript KG quotiented by rdf:type — Turn --conversation-->
-    untyped conversation nodes, Turn --nextTurn--> Turn. Two
-    endpoint-type joins + one count agg; the oracle is analytic on
-    the synthesis (every turn has one conversation edge; every
-    non-final turn one nextTurn edge)."""
-    from json_ld_spark.operators.native import transcript_adjacency_native
-    from json_ld_spark.operators.profile import schema_summary
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    quads = (
-        transcript_triples_native(t, with_doc_id=False)
-        .select(*TRIPLE_COLS)
-        .unionByName(
-            transcript_adjacency_native(t, with_doc_id=False).select(*TRIPLE_COLS)
-        )
-    )
-    out = schema_summary(quads)
-    return out.select(
-        "src_type", "pred", "dst_type",
-        F.col("n_edges").cast("long").alias("n_edges"),
-    )
-
-
-def q_text_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl URL canonicalization (textops.normalize_url): four
-    deterministic messy-URL families (mixed-case host + default port +
-    fragment + tracking params + unsorted query) normalized by a pure
-    JVM column expression. Oracle: the expected canonical form is
-    ANALYTIC per family — this checks the normalizer's semantics, not
-    a replay of its regexes."""
-    from json_ld_spark.operators.textops import normalize_url
-
-    _utc(spark)
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    doc = F.col("doc_id")
-    url = (
-        F.when(doc % 4 == 0,
-               F.lit("HTTP://Example.COM:80/a/b?utm_source=x&b=2&a=1#frag"))
-        .when(doc % 4 == 1,
-              F.concat(F.lit("https://Site-"), (doc % 5).cast("string"),
-                       F.lit(".org:443/p/"), doc.cast("string"),
-                       F.lit("/?z=9&a="), (doc % 3).cast("string"),
-                       F.lit("&utm_campaign=c&fbclid=f")))
-        .when(doc % 4 == 2, F.lit("http://example.org/"))
-        .otherwise(F.concat(F.lit("https://example.org/path?gclid=1&q="),
-                            doc.cast("string")))
-    )
-    return d.select("doc_id", normalize_url(url).alias("url_norm"))
-
-
-def q_data_upsample_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fractional-epoch repetition (sampling.upsample_epochs): the
-    data-recipe primitive — per-source epoch factors (2.5 / 1.25 /
-    0.5 / 1.0 by source suffix % 4); every row appears floor(e) times
-    plus one md5-bridge Bernoulli(frac) pass, with a 0-based epoch
-    index for interleaving. Zero shuffle (one explode projection).
-    Oracle: the identical draw + generate_series replay."""
-    from json_ld_spark.operators.sampling import upsample_epochs
-
-    _utc(spark)
-    d = _read(spark, sf_dir, "documents").select("doc_id", "source")
-    srcnum = F.substring("source", 4, 10).cast("int")
-    e = (
-        F.when(srcnum % 4 == 0, F.lit(2.5))
-        .when(srcnum % 4 == 1, F.lit(1.25))
-        .when(srcnum % 4 == 2, F.lit(0.5))
-        .otherwise(F.lit(1.0))
-    )
-    out = upsample_epochs(d.withColumn("e", e), "e", seed="recipe1")
-    return out.select(
-        "doc_id", "source", F.col("epoch").cast("long").alias("epoch")
-    )
-
-
-def q_data_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus mixing (sampling.weighted_sample): deterministic per-row
-    Bernoulli keep with per-domain rates (1 / 0.5 / 0.25 / 0.05 by
-    doc_id % 4) — u(id) = md5-bridge / 2^32 compared against the rate,
-    zero shuffle, monotone in the rate so mixes retune without
-    churning kept rows. Oracle: the same draw and comparison in SQL."""
-    from json_ld_spark.operators.sampling import weighted_sample
-
-    _utc(spark)
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    doc = F.col("doc_id")
-    rate = (
-        F.when(doc % 4 == 0, F.lit(1.0))
-        .when(doc % 4 == 1, F.lit(0.5))
-        .when(doc % 4 == 2, F.lit(0.25))
-        .otherwise(F.lit(0.05))
-    )
-    out = weighted_sample(d.withColumn("rate", rate), "rate", seed="mix3")
-    return out.select("doc_id", F.round("rate", 6).alias("rate_r"))
-
-
-def q_data_profile_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew diagnostics (profile.heavy_hitters): exact per-column
-    top-3 values over orders — one melt projection + one
-    (column, value) count agg (map-side combine absorbs the hot keys
-    being hunted) + a per-column top-k window over distinct-value
-    counts only. Deterministic tie-break by value. Oracle: the same
-    melt/count/row_number in SQL."""
-    from json_ld_spark.operators.profile import heavy_hitters
-
-    _utc(spark)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return heavy_hitters(
-        orders, ["o_orderstatus", "o_orderpriority", "o_custkey"], k=3
-    )
-
-
-def q_data_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column profiling (profile.column_stats, exact mode): per-column
-    row/null/distinct counts over orders in ONE aggregation pass
-    (approx HLL is the default at corpus scale; exact here so DuckDB
-    COUNT(DISTINCT) can replay it)."""
-    from json_ld_spark.operators.profile import column_stats
-
-    _utc(spark)
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return column_stats(
-        orders, ["o_orderstatus", "o_orderpriority", "o_custkey"], exact=True
-    )
-
-
-def q_rel_agg_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q1-style hash aggregation with exact integer-cents sums."""
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            (F.sum(_cents("l_quantity")) / 100.0).alias("sum_qty"),
-            (F.sum(_cents("l_extendedprice")) / 100.0).alias("sum_base_price"),
-            (F.sum(F.round(F.col("l_discount") * 10000).cast("long")) / 10000.0).alias("sum_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def q_rel_join_topnations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-way join (broadcast dim) + aggregation."""
-    _utc(spark)
-    orders = _read(spark, sf_dir, "orders")
-    customer = _read(spark, sf_dir, "customer")
-    nation = _read(spark, sf_dir, "nation")
-    return (
-        orders.filter(F.col("o_orderstatus") == "O")
-        .join(customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            (F.sum(_cents("o_totalprice")) / 100.0).alias("revenue"),
-        )
-    )
-
-
-def q_rel_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window functions: per-user ordered row_number + lag."""
-    _utc(spark)
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "event_id",
-        F.row_number().over(w).cast("long").alias("rn"),
-        F.round(F.coalesce(F.lag("value").over(w), F.lit(0.0)), 6).alias("prev_value_r"),
-    )
-
-
-def q_rel_setops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set operators: INTERSECT / EXCEPT / UNION on customer key sets."""
-    _utc(spark)
-    c = _read(spark, sf_dir, "customer")
-    rich = c.filter(F.col("c_acctbal") > 5000).select(F.col("c_custkey").alias("k"))
-    seg = c.filter(F.col("c_mktsegment") == "BUILDING").select(F.col("c_custkey").alias("k"))
-    return (
-        rich.intersect(seg).withColumn("tag", F.lit("both"))
-        .unionByName(rich.subtract(seg).withColumn("tag", F.lit("rich_only")))
-        .select("tag", "k")
-    )
-
-
-def q_rel_setops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiset set operators: INTERSECT ALL / EXCEPT ALL (bag
-    semantics with duplicate part keys on both sides — the
-    multiplicity math is the point; the distinct variants are
-    rel_setops_customers)."""
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    a = li.filter(F.col("l_orderkey") % 2 == 0).select(F.col("l_partkey").alias("k"))
-    b = li.filter(F.col("l_suppkey") % 3 == 0).select(F.col("l_partkey").alias("k"))
-    return (
-        a.intersectAll(b).withColumn("tag", F.lit("inter_all"))
-        .unionByName(a.exceptAll(b).withColumn("tag", F.lit("except_all")))
-        .select("tag", "k")
-    )
-
-
-def q_rel_string_array_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String + array functions: split/explode word count over part names."""
-    _utc(spark)
-    part = _read(spark, sf_dir, "part")
-    return (
-        part.select(F.explode(F.split(F.lower(F.col("p_name")), " ")).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-    )
-
-
-def q_rel_json_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON functions: extract props.k, aggregate per event type."""
-    _utc(spark)
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.select(
-            "event_type",
-            F.get_json_object("props", "$.k").cast("long").alias("k_val"),
-        )
-        .groupBy("event_type")
-        .agg(F.sum("k_val").alias("sum_k"), F.count(F.lit(1)).alias("n"))
-    )
-
-
-def q_rel_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization (gaps-and-islands): per-user session ids with a
-    30-minute inactivity gap — the classic stateful-window pattern."""
-    _utc(spark)
-    ev = _read(spark, sf_dir, "events")
-    epoch = F.unix_timestamp(F.col("ts"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = epoch - F.lag(epoch).over(w)
-    new_sess = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    sess = (
-        ev.withColumn("epoch", epoch)
-        .withColumn("new_sess", new_sess)
-        .withColumn("session_no", F.sum("new_sess").over(
-            Window.partitionBy("user_id").orderBy("ts", "event_id")
-            .rowsBetween(Window.unboundedPreceding, 0)))
-    )
-    return (
-        sess.groupBy("user_id", "session_no")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.max("epoch") - F.min("epoch")).alias("duration_s"),
-        )
-        .select(
-            F.col("user_id").cast("long").alias("user_id"),
-            F.col("session_no").cast("long").alias("session_no"),
-            "n_events",
-            F.col("duration_s").cast("long").alias("duration_s"),
-        )
-    )
-
-
-def q_rel_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Value-RANGE window frame coverage (vs the ROWS frames used
-    elsewhere): per event, how many of the same user's events fall in
-    the trailing hour — rangeBetween over unix seconds, the sliding-
-    rate-limit / burst-detection window. Integer counts, engine-
-    deterministic."""
-    from pyspark.sql.window import Window
-
-    _utc(spark)
-    events = _read(spark, sf_dir, "events")
-    sec = F.unix_timestamp("ts")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(sec)
-        .rangeBetween(-3600, 0)
-    )
-    return events.select(
-        "event_id", "user_id",
-        F.count(F.lit(1)).over(w).cast("long").alias("n_last_hour"),
-    )
-
-
-def q_rel_decayed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recency-weighted activity scoring (temporal.decayed_counts):
-    per-user event count + Σ 2^(-age/half-life) against an EXPLICIT
-    reference time (deterministic, not now()) — the freshness feature
-    for entity salience. One projection + one partial-agg shuffle.
-    Oracle: same pow/epoch arithmetic in SQL, 6-dp."""
-    from json_ld_spark.operators.temporal import decayed_counts
-
-    _utc(spark)
-    events = _read(spark, sf_dir, "events")
-    return decayed_counts(
-        events, ["user_id"], "ts", "2026-02-01 00:00:00", 7 * 86400.0
-    ).select("user_id", F.col("n_events").cast("long").alias("n_events"),
-             "decayed_r")
-
-
-def q_rel_semi_anti_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi/anti joins: customers with vs without orders."""
-    _utc(spark)
-    c = _read(spark, sf_dir, "customer")
-    o = _read(spark, sf_dir, "orders")
-    on = F.col("c_custkey") == F.col("o_custkey")
-    with_orders = c.join(o, on, "left_semi").agg(F.count(F.lit(1)).alias("n")).withColumn("tag", F.lit("with_orders"))
-    without = c.join(o, on, "left_anti").agg(F.count(F.lit(1)).alias("n")).withColumn("tag", F.lit("without_orders"))
-    return with_orders.unionByName(without).select("tag", "n")
-
-
-def q_rel_distinct_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sort + limit (top-k) with deterministic tie-break."""
-    _utc(spark)
-    o = _read(spark, sf_dir, "orders")
-    return (
-        o.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(10)
-        .select("o_orderkey", F.round("o_totalprice", 2).alias("price_r"))
-    )
-
-
-# --------------------------------------------------------------------------
-# registry
-# --------------------------------------------------------------------------
-
-def _word_count_col() -> Column:
-    """Whitespace word count matching curation._tokens (lower/trim,
-    empties dropped) — the shared Spark/DuckDB tokenization contract."""
-    return F.size(
-        F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda w: w != "")
-    ).cast("long")
-
-
-def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document n-gram novelty / memorization-risk scoring
-    (curation.ngram_novelty): fraction of each doc's DISTINCT word
-    5-grams that occur in >=2 documents corpus-wide. array_distinct
-    BEFORE the explode, document frequency via ONE gram-keyed window
-    count (rows already distinct per (doc, gram)), then a per-doc agg
-    — two shuffles, no join-back."""
-    from json_ld_spark.operators.curation import ngram_novelty
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    return ngram_novelty(docs, n=5, min_df=2).orderBy("doc_id")
-
-
-def q_data_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language token-budget selection (sampling.token_budget_select):
-    keep a seeded-random prefix of each language until 2000 tokens are
-    reached (straddler kept). NO per-group window — the rows take one
-    GLOBAL (lang, md5-key) total order through ordered_cumsum's
-    range-partitioned two-phase rank, then each lang's start offset is
-    subtracted back (bounded agg, broadcast) — a hot language spreads
-    over many range partitions instead of one task."""
-    from json_ld_spark.operators.sampling import token_budget_select
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    keyed = docs.withColumn("nw", _word_count_col())
-    sel = token_budget_select(keyed, "lang", "nw", budget=2000)
-    return sel.select(
-        "doc_id", "lang", F.col("nw").alias("tokens"), "cum_tokens"
-    ).orderBy("doc_id")
-
-
-def q_data_bt_arena(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bradley-Terry arena ranking (curation.bt_strengths): adjacent
-    documents (doc_id, doc_id+1) play one comparison each between
-    their md5-bucket players (12 buckets); the longer document's
-    player wins (ties to the lower doc_id). The corpus-sized
-    comparison stream collapses through ONE groupBy into a
-    players^2-bounded matrix; 8 MM rounds (Hunter 2004) then run on
-    exact integer fixed-point so the iterative fit replays
-    bit-identically as unrolled DuckDB CTE rounds."""
-    from json_ld_spark.operators.curation import bt_strengths
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    player = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("bt|"), F.col("doc_id").cast("string"))),
-                1, 15,
-            ),
-            16, 10,
-        ).cast("long") % 12
-    )
-    d = docs.select(
-        F.col("doc_id").alias("d"), player.alias("p"), _word_count_col().alias("s")
-    )
-    d2 = d.select(
-        F.col("d").alias("d2"), F.col("p").alias("p2"), F.col("s").alias("s2")
-    )
-    comp = (
-        d.join(d2, F.col("d2") == F.col("d") + 1)
-        .where(F.col("p") != F.col("p2"))
-        .select(
-            F.when(F.col("s") >= F.col("s2"), F.col("p"))
-            .otherwise(F.col("p2"))
-            .alias("winner"),
-            F.when(F.col("s") >= F.col("s2"), F.col("p2"))
-            .otherwise(F.col("p"))
-            .alias("loser"),
-        )
-    )
-    return bt_strengths(comp, rounds=8).orderBy("rank", "player")
-
-
-def q_kg_conv_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-conversation SFT-quality gate (curation.conversation_quality)
-    over the transcripts table: role counts, tool calls, broken-
-    alternation repeats, mean assistant words, wall-clock span, keep
-    flag. One conv-keyed window + one conv-keyed agg — the corpus
-    shuffles once (the window's partitioning satisfies the groupBy)."""
-    from json_ld_spark.operators.curation import conversation_quality
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    return conversation_quality(t).orderBy("conv_id")
-
-
-def q_text_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid sparse+dense retrieval fused by reciprocal-rank fusion
-    (retrieval.rrf_fuse, Cormack 2009): BM25 top-20 for a fixed term
-    query + exact-cosine top-20 for embedding query vec_id=0
-    (vec_id aligns with doc_id), rrf = 1/(60+r_bm25) + 1/(60+r_dense).
-    Both rank lists are top-k BOUNDED by construction, so the fusion
-    join and the sparse list's global rank window run on k rows —
-    never the corpus (documented plan-audit exemption, the
-    sketch_histogram_quantiles argument)."""
-    from json_ld_spark.operators import retrieval as rt
-    from json_ld_spark.operators.retrieval import rrf_fuse
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    emb = _emb_double(_read(spark, sf_dir, "embeddings"))
-    sparse = rt.bm25(docs, ["shuffle", "join", "window"], top_k=20)
-    sw = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    sparse_ranked = sparse.select(
-        "doc_id", F.row_number().over(sw).cast("long").alias("rank")
-    )
-    dense = sim.brute_force_topk(
-        emb.filter(F.col("vec_id") == 0), emb, k=20
-    ).select(F.col("cand_id").alias("doc_id"), "rank")
-    fused = rrf_fuse([("bm25", sparse_ranked), ("dense", dense)], key_col="doc_id")
-    return fused.orderBy(F.desc("rrf_score"), F.asc("doc_id"))
-
-
-def q_ann_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-NN majority-vote classification eval (similarity.knn_classify)
-    over the embeddings table's label column: leave-one-out 5-NN for a
-    hash-sampled query set, deterministic vote resolution (count DESC,
-    best neighbor rank ASC, label ASC). Brute candidate twin in the
-    sampled baseline (CARTESIAN_OK family); ivf/lsh generators drop in
-    via the neighbors parameter at scale."""
-    _utc(spark)
-    emb = _read(spark, sf_dir, "embeddings")
-    embd = _emb_double(emb)
-    q = embd.filter(F.col("vec_id") % 25 == 0)
-    pred = sim.knn_classify(q, embd, emb.select("vec_id", "label"), k=5)
-    truth = emb.select(
-        F.col("vec_id").alias("query_id"), F.col("label").alias("true_label")
-    )
-    return (
-        pred.join(truth, "query_id")
-        .select(
-            "query_id",
-            "true_label",
-            "pred_label",
-            "n_votes",
-            "best_rank",
-            (F.col("true_label") == F.col("pred_label")).alias("correct"),
-        )
-        .orderBy("query_id")
-    )
-
-
-def q_text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet head/middle/tail perplexity bucketing
-    (curation.ccnet_buckets, Wenzek et al. 2020): corpus bigram-LM
-    score -> fixed-bin histogram tercile thresholds -> integer-bucket
-    labels. The tercile cut is integer arithmetic end to end; the
-    oracle reuses the green lm_score SQL verbatim and replays the
-    histogram-quantile algebra."""
-    from json_ld_spark.operators.curation import ccnet_buckets
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    return ccnet_buckets(docs).orderBy("doc_id")
-
-
-def q_streaming_conv_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of kg_conv_quality: the transcript turn stream is
-    split into two ORDERED micro-batch files (early turns strictly
-    older mtime — the FileStreamSource pickup order producers of turn
-    logs get for free) and drained through the per-conv monoid-state
-    updater (streaming/stream.py make_quality_batch_updater): counts
-    and sums merge, the role-repeat count carries slice-boundary
-    (turn_idx, role) state so repeats straddling a micro-batch are
-    found. Shares kg_conv_quality's oracle — streaming == batch is the
-    claim being hash-verified."""
-    import glob
-    import os
-    import tempfile
-    import time
-
-    from json_ld_spark.streaming.stream import run_stream_quality
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="stream_q_")
-    t.filter(F.col("turn_idx") < 8).coalesce(1).write.mode("append").parquet(
-        f"{base}/in"
-    )
-    first = set(glob.glob(f"{base}/in/part-*"))
-    t.filter(F.col("turn_idx") >= 8).coalesce(1).write.mode("append").parquet(
-        f"{base}/in"
-    )
-    now = time.time()
-    for f in glob.glob(f"{base}/in/part-*"):
-        os.utime(f, (now - 120, now - 120) if f in first else (now, now))
-    return run_stream_quality(
-        spark, f"{base}/in", f"{base}/state", f"{base}/ckpt",
-        schema=t.schema,
-    ).orderBy("conv_id")
-
-
-def q_dedup_remove_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Substring-level dedup EXECUTION (dedup.remove_repeated_spans,
-    Lee et al. 2022): over the duplicate-injected corpus, every word
-    10-gram occurring >= 2 times keeps only its global first
-    occurrence; other occurrences merge into maximal intervals and are
-    cut. Injected full-doc copies therefore lose (almost) their whole
-    text; originals keep theirs. Oracle replays windows, the
-    cummax-island interval merge, and the token filter."""
-    _utc(spark)
-    corpus = _docs_with_dups(_read(spark, sf_dir, "documents"))
-    return dd.remove_repeated_spans(corpus, n=10, min_count=2).orderBy("doc_id")
-
-
-def q_kg_topic_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TextTiling-style topic segmentation of conversations
-    (textops.topic_segments, Hearst 1997): adjacent-turn word-set
-    Jaccard, a dip below 0.2 opens a new segment, segment_id = running
-    boundary count. ONE conv-partitioned window shuffle (lag + running
-    sum share the partitioning); word sets are a JVM projection. The
-    oracle replays the same lag/Jaccard/running-sum chain with DuckDB
-    list functions."""
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    return tx.topic_segments(t, min_jaccard=0.2)
-
-
-def q_data_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Learned quality filter (curation.logreg_quality): full-batch
-    gradient-descent logistic regression — 3 rounds, each ONE map-side-
-    combinable aggregation (3 micro-quantized gradient sums + a count);
-    weights are bounded driver state; scoring is a shuffle-free
-    projection. The oracle unrolls the identical rounds as CTEs (exact
-    BIGINT gradient sums, in-engine 6-dp weight rounding)."""
-    from json_ld_spark.operators import curation as cu
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    return cu.logreg_quality(docs, n_rounds=3, lr=1.0)
-
-
-def q_ann_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top principal component of the 64-dim embedding corpus by
-    MATRIX-FREE power iteration (similarity.pca_power_project): each
-    round computes C·v as one aggregation with dim+1 longs of shuffled
-    state (never dim²); the iterate is bounded driver state. Projection
-    scores feed SemDeDup-style clustering. The oracle unrolls means,
-    two C·v rounds, normalization, and the final centered dot product
-    with identical micro-quantization and fold order."""
-    _utc(spark)
-    emb = _read(spark, sf_dir, "embeddings")
-    return sim.pca_power_project(emb, dim=64, rounds=2)
-
-
-def q_kg_disambiguate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-scored entity-sense disambiguation (linking.
-    sense_signatures + disambiguate_entities): the corpus's 50 hottest
-    surfaces each get 2 candidate senses with co-occurrence signatures;
-    every (doc, surface) mention is resolved to the sense whose
-    signature overlaps the doc's word set most. Broadcast dictionary
-    joins + partitioned windows only; integer scores. The oracle
-    replays counts, rank windows, and list intersections."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    sigs = lk.sense_signatures(docs, max_surfaces=50, senses=2, sig_k=5)
-    return lk.disambiguate_entities(docs, sigs)
-
-
-def q_kg_pronoun_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Coreference-lite antecedent linking (linking.pronoun_links):
-    pronoun-bearing turns link to the first entity mention of the most
-    recent prior entity-bearing turn in the same conversation — one
-    broadcast dictionary join + conv-partitioned windows (last_value
-    IGNORE NULLS over the preceding frame). Pronouns are injected
-    deterministically (turn_idx % 3) so the corpus contains matches;
-    the oracle replays injection, dictionary, and windows."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    words = lk._doc_words(docs)
-    hot = (
-        words.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "word")
-        .limit(50)
-        .select(F.col("word").alias("surface"))
-    )
-    t = transcripts_from_documents(spark, sf_dir).withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.when(F.col("turn_idx") % 3 == 0, F.lit(" and it worked")).otherwise(
-                F.lit("")
-            ),
-        ),
-    )
-    return lk.pronoun_links(t, hot)
-
-
-def q_kg_square_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4-cycle census of the co-purchase graph (graphops.square_count):
-    wedge join with a degree-64 middle cap before the quadratic
-    fan-out, then integer C(c,2) aggregation over diagonal pairs — the
-    bipartite-community/link-farm motif one step past triangles. All
-    integer math; the oracle replays the capped wedge join."""
-    _utc(spark)
-    return gops.square_count(
-        _copurchase_edges(spark, sf_dir).select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        ),
-        max_degree=64,
-    )
-
-
-def q_dedup_lsh_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate-quality evaluation of banded MinHash (dedup.
-    lsh_pr_eval): precision/recall of the RAW 8-band × 2-row candidate
-    set (md5 hash family — engine-replayable) against exact 3-gram
-    Jaccard ≥ 0.4 ground truth on the sampled dup-injected corpus —
-    the tuning-loop measurement of every dedup deployment, itself a
-    first-class oracled operator. The corpus injects BOTH exact dups
-    and 45%-prefix truncated NEAR-dups (Jaccard ~0.45, squarely on the
-    8×2 band family's s-curve shoulder) so recall is a real
-    measurement, not a constant. The oracle replays the signatures,
-    banding, truncation, brute-force truth, and both rounded ratios."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    sampled = _docs_with_dups(docs).filter(F.col("doc_id") % 25 == 0)
-    words = F.split(dd.normalize_text(F.col("text")), " ")
-    near = (
-        docs.filter(F.col("doc_id") % 25 == 0)
-        .select(
-            (F.col("doc_id") + 2000000).alias("doc_id"),
-            F.array_join(
-                F.slice(
-                    words,
-                    1,
-                    F.greatest(
-                        F.expr("size(split(regexp_replace(lower(trim(text)), '\\\\s+', ' '), ' ')) * 45 DIV 100"),
-                        F.lit(1),
-                    ),
-                ),
-                " ",
-            ).alias("text"),
-        )
-    )
-    corpus = sampled.unionByName(near)
-    return dd.lsh_pr_eval(corpus, num_hashes=16, bands=8, threshold=0.4)
-
-
-def q_kg_degree_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graph health profile (graphops.degree_distribution): bit-length
-    log-binned degree histogram of the co-purchase graph plus the Hill
-    power-law tail estimate (micro-quantized ln sum). Two map-side
-    aggregations + a broadcast 1-row cross join. Oracle replays bins
-    (length(bin(d))) and the Hill micro-sum."""
-    _utc(spark)
-    return gops.degree_distribution(
-        _copurchase_edges(spark, sf_dir).select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        ),
-        tail_min_degree=4,
-    )
-
-
-def q_text_ttr_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language corpus-health linguistics (textops.ttr_zipf):
-    type-token ratio + Zipf slope of the top-100 word frequencies with
-    the OLS computed in scaled integer micro-units (engine-exact until
-    one final division). One vocab aggregation, one lang-partitioned
-    rank window, one rollup. Oracle replays the micro-int OLS."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    return tx.ttr_zipf(docs, top_k=100)
-
-
-def q_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall-vs-probes curve of the IVF index (the ANN twin of
-    dedup_lsh_pr's tuning-loop measurement): ivf_topk at n_probe ∈
-    {1, 2, 4} against the exact cosine top-5, per-probe recall as ONE
-    integer-counted row each — the curve every IVF deployment tunes
-    nprobe against. Shares one codebook across the three probe levels;
-    hit counting is an integer equi-join. Oracle: the shared-codebook
-    IVF replay at each probe level + brute-force truth."""
-    _utc(spark)
-    emb = _emb_double(_read(spark, sf_dir, "embeddings"))
-    cents = sim.ivf_centroids(emb, n_cells=16, lloyd_rounds=2)
-    queries_df = emb.filter(F.col("vec_id") % 100 == 0)
-    exact = sim.brute_force_topk(queries_df, emb, k=5).select(
-        "query_id", "cand_id"
-    )
-    per = []
-    for p in (1, 2, 4):
-        appx = sim.ivf_topk(
-            queries_df, emb, cents, k=5, n_probe=p, n_assign=2
-        ).select("query_id", "cand_id")
-        hits = exact.join(appx, ["query_id", "cand_id"])
-        per.append(
-            exact.agg(F.count(F.lit(1)).alias("n_exact"))
-            .crossJoin(hits.agg(F.count(F.lit(1)).alias("n_hits")))
-            .select(
-                F.lit(p).cast("int").alias("n_probe"),
-                F.col("n_exact").cast("long").alias("n_exact"),
-                F.col("n_hits").cast("long").alias("n_hits"),
-                F.round(
-                    F.col("n_hits").cast("double")
-                    / F.greatest(F.col("n_exact"), F.lit(1)).cast("double"),
-                    6,
-                ).alias("recall_r"),
-            )
-        )
-    out = per[0]
-    for df in per[1:]:
-        out = out.unionByName(df)
-    return out
-
-
-def q_streaming_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Online-SGD streaming twin of data_logreg_quality (streaming/
-    stream.py make_logreg_batch_updater): the document corpus arrives
-    as two ORDERED micro-batch files (doc_id parity; early file
-    strictly older mtime — the FileStreamSource pickup-order contract
-    all the streams here document), each batch applies ONE
-    engine-rounded SGD step to the persisted weight state, and the
-    final weights score the full corpus. History is never re-read —
-    the arriving-slice maintenance shape at 100 TB. The oracle unrolls
-    the two sequential batch steps as CTEs; hash equality proves the
-    stream landed on bit-identical weights."""
-    import glob
-    import os
-    import tempfile
-    import time
-
-    from json_ld_spark.operators.curation import logreg_features
-    from json_ld_spark.streaming.stream import run_stream_logreg
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "n_chars"
-    )
-    base = tempfile.mkdtemp(prefix="stream_lr_")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(f"{base}/in")
-    first = set(glob.glob(f"{base}/in/part-*"))
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(f"{base}/in")
-    now = time.time()
-    for f in glob.glob(f"{base}/in/part-*"):
-        os.utime(f, (now - 120, now - 120) if f in first else (now, now))
-    w = run_stream_logreg(
-        spark,
-        f"{base}/in",
-        f"{base}/state",
-        f"{base}/ckpt",
-        schema=docs.schema,
-        lr=1.0,
-    )
-    feats = logreg_features(docs)
-    z = F.lit(w[0]) + F.lit(w[1]) * F.col("x1") + F.lit(w[2]) * F.col("x2")
-    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-    return feats.select(
-        "doc_id",
-        F.col("y").cast("int").alias("y"),
-        F.round(p, 6).alias("score_r"),
-        (F.round(p, 6) >= F.lit(0.5)).cast("int").alias("pred"),
-    )
-
-
-def q_kg_entity_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-entity KB rollup (linking.entity_profiles): mention counts,
-    distinct turns/convs, first/last mention timestamps, and the top
-    co-mentioned entity — the entity table a linking pipeline
-    publishes next to its triple table. Broadcast dictionary join, one
-    map-side profile agg, per-turn-set co-mention pairing (fan-out
-    bounded by entities-per-turn²), surface-partitioned argmax. The
-    oracle replays the dictionary, the aggregation, and the co-mention
-    window over the transcript synthesis."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    words = lk._doc_words(docs)
-    hot = (
-        words.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "word")
-        .limit(50)
-        .select(F.col("word").alias("surface"))
-    )
-    t = transcripts_from_documents(spark, sf_dir)
-    return lk.entity_profiles(t, hot)
-
-
-def q_rel_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED variance-reduced experiment readout (temporal.
-    cuped_adjusted, Deng et al. WSDM 2013): per-user pre/post cent
-    sums, pooled θ from the scaled integer-OLS identity, micro-
-    quantized adjusted arm means — the experimentation-platform
-    estimator as a first-class oracled op. One user agg + one 1-row
-    OLS agg + one arm rollup; no windows. Oracle replays the cent
-    sums, θ, and the adjusted means."""
-    from json_ld_spark.operators.temporal import cuped_adjusted
-
-    _utc(spark)
-    ev = _read(spark, sf_dir, "events")
-    return cuped_adjusted(ev, cutoff="2024-01-16 00:00:00")
-
-
-def q_data_pack_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bin-utilization report over the sequence packer
-    (sampling.pack_stats on pack_documents output): per (lang,
-    utilization-decile) pack counts, doc counts, min/max fill — the
-    padding-FLOPs metric of every pretraining batch pipeline. Two
-    integer aggregations. Oracle wraps the pack replay and the same
-    integer decile math."""
-    from json_ld_spark.operators import sampling as sp
-    from json_ld_spark.operators.retrieval import doc_lengths
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", "lang").join(
-        doc_lengths(docs).withColumnRenamed("dl", "n_tok"), "doc_id"
-    )
-    packed = sp.pack_documents(
-        toks, "n_tok", budget=2000, order_col="doc_id", shard_col="lang"
-    )
-    return sp.pack_stats(packed, "n_tok", budget=2000, shard_col="lang")
-
-
-def q_ann_incremental_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental vector-index maintenance (similarity.
-    ivf_incremental_assign): a new embedding shipment (every 3rd
-    vector re-keyed +1,000,000) is assigned to the PERSISTED coarse
-    codebook — no retrain, no touch of existing postings — and the
-    per-cell posting census (the retrain-trigger balance report) is
-    emitted. Completes the incremental family (canonicalize, MinHash,
-    graph state, online SGD) for the ANN index. Oracle replays the
-    codebook + both assignments + the outer-join census."""
-    _utc(spark)
-    emb = _emb_double(_read(spark, sf_dir, "embeddings"))
-    cents = sim.ivf_centroids(emb, n_cells=16, lloyd_rounds=2)
-    new_batch = emb.filter(F.col("vec_id") % 3 == 0).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
-    )
-    return sim.ivf_incremental_assign(emb, new_batch, cents, n_assign=2)
-
-
-def q_kg_mmr_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diverse-exemplar turn selection per conversation (curation.
-    mmr_select_turns, Carbonell & Goldstein MMR in an ALL-INTEGER
-    variant): 3 greedy rounds of conv-partitioned argmax — relevance =
-    overlap with the rest of the conversation, penalty = max overlap
-    with already-picked turns; every score an exact set-cardinality
-    integer. The SFT-subsampling stage as a first-class op. Oracle
-    unrolls the 3 rounds with the same windows and list
-    intersections."""
-    from json_ld_spark.operators.curation import mmr_select_turns
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    return mmr_select_turns(t, k=3)
-
-
-def q_data_source_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source dataset cards — the per-provenance summary a data
-    release publishes: doc/char volumes, exact-dup count and fraction
-    (on the dup-injected corpus so the metric is non-trivial),
-    language cardinality and the dominant language. Two hash
-    aggregations + one source-partitioned argmax window; integer-exact
-    except the single rounded fraction. Oracle replays the injection
-    and every rollup."""
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    corpus = docs.select("doc_id", "source", "lang", "text", "n_chars").unionByName(
-        docs.filter(F.col("doc_id") % 10 == 0).select(
-            (F.col("doc_id") + 1000000).alias("doc_id"),
-            "source", "lang", "text", "n_chars",
-        )
-    )
-    hashed = corpus.withColumn(
-        "content_hash", F.md5(dd.normalize_text(F.col("text")))
-    )
-    dup = (
-        hashed.groupBy("source", "content_hash")
-        .agg(F.count(F.lit(1)).alias("g"))
-        .where(F.col("g") > 1)
-        .groupBy("source")
-        .agg(F.sum("g").alias("n_dup_docs"))
-    )
-    lang_counts = corpus.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    wtop = Window.partitionBy("source").orderBy(F.desc("c"), F.asc("lang"))
-    top_lang = (
-        lang_counts.withColumn("rk", F.row_number().over(wtop))
-        .where(F.col("rk") == 1)
-        .select("source", F.col("lang").alias("top_lang"))
-    )
-    base = corpus.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("n_chars"),
-        F.countDistinct("lang").cast("long").alias("n_langs"),
-    )
-    return (
-        base.join(dup, "source", "left")
-        .join(top_lang, "source")
-        .select(
-            "source",
-            "n_docs",
-            "n_chars",
-            F.coalesce(F.col("n_dup_docs"), F.lit(0)).cast("long").alias(
-                "n_dup_docs"
-            ),
-            F.round(
-                F.coalesce(F.col("n_dup_docs"), F.lit(0)).cast("double")
-                / F.col("n_docs").cast("double"),
-                6,
-            ).alias("dup_frac_r"),
-            "n_langs",
-            "top_lang",
-        )
-    )
-
-
-def q_data_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic Poisson-bootstrap CI (profile.bootstrap_ci,
-    Chamandy et al. 2012) for the per-language mean document length:
-    32 replicates with md5-bridge Poisson(1) weights (coordination-
-    free — the distributed-bootstrap standard), CI from replicate-mean
-    order statistics. One 32× explode + one (lang, rep) integer agg +
-    one lang-partitioned rank window. Oracle replays the uniform →
-    inverse-CDF weights and every aggregate."""
-    from json_ld_spark.operators.profile import bootstrap_ci
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    return bootstrap_ci(docs, "n_chars", group_col="lang", n_reps=32)
-
-
-def q_kg_distmult_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filtered DistMult tail-ranking (kge.distmult_rank, Yang et al.
-    ICLR'15) over the same transcript-KG edges and hash test split as
-    kg_transe_rank — the multiplicative-kernel model twin, directly
-    comparable MRR/Hits@k. All-integer trilinear scores; same
-    broadcast(test) × entities shape with map-side partial counts and
-    equi-join filtered correction. Oracle: full SQL replay with the
-    product kernel."""
-    from json_ld_spark.operators.kge import distmult_rank
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native,
-        transcript_triples_native,
-    )
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    edges = (
-        transcript_triples_native(t)
-        .filter(F.col("obj_kind") == "iri")
-        .select("subj", "pred", "obj")
-        .unionByName(
-            transcript_adjacency_native(t, with_doc_id=False)
-            .select("subj", "pred", "obj")
-        )
-    )
-    return distmult_rank(edges, dim=16, test_mod=97)
-
-
-def q_kg_kge_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KGE model scoreboard: MRR / Hits@{1,10} for TransE AND DistMult
-    on the IDENTICAL deterministic test split — the side-by-side
-    leaderboard an embedding team reads before picking a kernel. One
-    aggregation over each rank table (ranks are exact integers; MRR is
-    a rounded sum of exact reciprocals). Oracle wraps both rank
-    replays in the same aggregation."""
-    from json_ld_spark.operators.kge import distmult_rank, transe_rank
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native,
-        transcript_triples_native,
-    )
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    edges = (
-        transcript_triples_native(t)
-        .filter(F.col("obj_kind") == "iri")
-        .select("subj", "pred", "obj")
-        .unionByName(
-            transcript_adjacency_native(t, with_doc_id=False)
-            .select("subj", "pred", "obj")
-        )
-    )
-
-    def metrics(ranks: DataFrame, model: str) -> DataFrame:
-        return ranks.agg(
-            F.lit(model).alias("model"),
-            F.count(F.lit(1)).cast("long").alias("n_test"),
-            F.round(F.avg(F.lit(1.0) / F.col("rank").cast("double")), 6).alias(
-                "mrr_r"
-            ),
-            F.round(F.avg((F.col("rank") <= 1).cast("double")), 6).alias(
-                "hits1_r"
-            ),
-            F.round(F.avg((F.col("rank") <= 10).cast("double")), 6).alias(
-                "hits10_r"
-            ),
-        )
-
-    return metrics(transe_rank(edges, dim=16, test_mod=97), "transe").unionByName(
-        metrics(distmult_rank(edges, dim=16, test_mod=97), "distmult")
-    )
-
-
-def q_rel_rate_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-rate anomaly detection (temporal.rate_anomalies): per
-    (event_type, day) counts vs the rolling 7-day self-excluding
-    baseline, |z| ≥ 2 flagged — the ops-monitoring staple as an
-    oracled op. One count agg + one type-partitioned bounded-frame
-    window; exact integer window sums feed the only float math.
-    Oracle replays the frame and the z arithmetic."""
-    from json_ld_spark.operators.temporal import rate_anomalies
-
-    _utc(spark)
-    ev = _read(spark, sf_dir, "events")
-    return rate_anomalies(ev, window_days=7, z_threshold=2.0)
-
-
-def q_rel_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt linear-trend smoothing + one-step forecast of per-type
-    daily event rates (temporal.holt_forecast) — the capacity-planning
-    primitive beside rate_anomalies. Distributed count aggregation;
-    the sequential recursion runs over the bounded (type, day)
-    aggregate (codebook-sized driver state). Oracle: recursive CTE
-    executing the identical IEEE sequence."""
-    from json_ld_spark.operators.temporal import holt_forecast
-
-    _utc(spark)
-    ev = _read(spark, sf_dir, "events")
-    return holt_forecast(ev, alpha=0.5, beta=0.3)
-
-
-# Verification-surface ordering for the round-5 driver sample (the driver
-# hash-verifies the FIRST 50 keys of queries() at sf0.01).
-#   Tier 1 (first 24): queries ADDED in round 5 — never verified by any
-#   driver round OR judge selfcheck; highest-value driver coverage.
-#   Tier 2 (next 26+): the r1-r4 never-driver-verified batch — all 50 of
-#   these were judge-selfcheck green in the round-4 review, so the ones
-#   displaced past position 50 already carry independent verification.
-# Pure verification-surface rotation; query bodies are untouched.
-_NEVER_DRIVER_CHECKED = (
-    # --- Tier 0: round-5 session-5/6 additions ---
-    "kg_scc", "rel_retention_cohorts", "data_iqr_outliers", "kg_reify",
-    "kg_topic_segments", "data_logreg_quality", "ann_pca_project",
-    "kg_disambiguate", "kg_pronoun_links", "kg_square_count", "dedup_lsh_pr",
-    "kg_degree_profile", "text_ttr_zipf", "ann_recall_curve",
-    "streaming_logreg", "kg_entity_profiles", "rel_cuped", "data_pack_stats",
-    "ann_incremental_assign", "kg_mmr_exemplars", "data_source_cards",
-    "data_bootstrap_ci", "kg_distmult_rank", "kg_kge_compare",
-    "rel_rate_anomalies", "rel_holt_forecast",
-    # --- Tier 1: round-5 additions (no independent verification yet) ---
-    "kg_wl_colors", "kg_neighbor_sample", "kg_kge_eval",
-    "data_doremi_weights", "data_best_of_n",
-    "kg_time_travel", "kg_local_clustering", "kg_ppmi_edges",
-    "data_label_votes", "data_embed_quantize", "kg_tool_sequences",
-    "kg_snapshot_diff", "ann_classifier_report", "data_calibration_bins",
-    "streaming_graph_state", "data_rank_normalize",
-    "kg_conv_dedup", "kg_linkpred_auc", "kg_hyperball",
-    "ann_semantic_clusters", "ann_margin_pairs", "data_curriculum",
-    "data_bpe_tokens", "data_pack_bpe", "data_bpe_stats",
-    "kg_modularity", "text_kn_bigrams", "dedup_winnowing",
-    "kg_louvain_move", "text_kn_perplexity", "text_ngram_novelty",
-    "data_token_budget", "data_bt_arena", "kg_conv_quality",
-    "text_hybrid_rrf", "ann_knn_classify", "text_ccnet_buckets",
-    "streaming_conv_quality", "dedup_remove_spans", "data_interleave",
-    # --- Tier 2: r1-r4 never-driver-verified (judge-green in r4) ---
-    "text_pii_scan", "text_word_repetition", "data_hash_split",
-    "data_temperature_mix", "streaming_sessions", "data_sessionize",
-    "data_session_stats", "data_cluster_split", "data_chunk_documents",
-    "data_stratified_sample", "data_sample_per_key", "data_pack_documents",
-    "text_bm25_topk", "multimodal_image_features", "multimodal_image_resize",
-    "multimodal_dhash_neardup", "multimodal_audio_decimate",
-    "multimodal_video_features", "multimodal_frame_extract",
-    "text_ngram_score", "dedup_cdc_chunks", "kg_skolemize",
-    "kg_context_windows", "kg_void_stats", "kg_schema_summary",
-    "text_url_normalize", "data_weighted_sample", "data_upsample_epochs",
-    "data_profile_hitters", "data_column_stats", "rel_setops_all",
-    "kg_sparql_select", "kg_sparql_path", "kg_sparql_negated",
-    "kg_sparql_analyst", "ann_topk_ivfpq", "kg_sparql_named",
-    "kg_sparql_graph_path", "kg_sparql_graph", "kg_bgp_describe",
-    "kg_bgp_ask", "rel_rollup_pricing", "rel_cube_pricing",
-    "rel_correlated_max", "rel_rank_functions", "rel_pivot_orders",
-    "rel_asof_snapshot", "rel_interval_windows", "rel_window_range_frame",
-    "rel_decayed_counts",
-)
-
-
-def q_kg_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman-Girvan modularity of the label-propagation communities on
-    the co-purchase graph (graphops.modularity): per community, the
-    in-community edge count, degree mass, and contribution
-    Q_c = m_c/m - (d_c/2m)^2 — the standard objective for judging a
-    community assignment (Newman & Girvan 2004) before partitioning a
-    KG by it. Scale shape: two node-keyed equi-joins of the edge table
-    against the node-sized label table, two map-side-combinable aggs,
-    and a 1-row totals broadcast — no all-pairs, no window; nodes LPA
-    never reached fall into '_unlabeled' so the partition is total.
-    Oracle: the unrolled 2-round LPA CTEs + the same modularity algebra
-    in SQL (every intermediate an exact long; one double expression)."""
-    from json_ld_spark.operators.graphops import label_propagation, modularity
-
-    _utc(spark)
-    e = _copurchase_edges(spark, sf_dir)
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .dropDuplicates()
-    )
-    seeds = nodes.filter(F.col("node") % 250 == 0).select(
-        "node",
-        F.concat(F.lit("c"), (F.col("node") % 3).cast("string")).alias("label"),
-    )
-    labels = label_propagation(e, seeds, iters=2, src="u", dst="v")
-    return modularity(e, labels, src="u", dst="v")
-
-
-def q_text_kn_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpolated Kneser-Ney bigram LM statistics over the documents
-    corpus (textops.kn_bigram_stats): bigram counts, left-context
-    totals, continuation/follower type counts, the absolute discount
-    D = n1/(n1+2*n2) from count-of-counts, and P_KN(w2|w1) — the count
-    tables an n-gram LM trainer collects at corpus scale (Brants et
-    al. 2007). One tokenize+explode projection + four
-    map-side-combinable aggs + a 1-row totals broadcast; output is the
-    deterministic c >= 3 bigram set (vocabulary-bounded, not
-    corpus-bounded). Oracle: the same algebra over DuckDB's zipped
-    parallel unnest of the two shifted word slices."""
-    from json_ld_spark.operators.textops import kn_bigram_stats
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    return kn_bigram_stats(docs.select("text"), min_count=3)
-
-
-def q_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MOSS winnowing partial-overlap detection (Schleimer, Wilkerson
-    & Aiken, SIGMOD 2003; textops.winnow_fingerprints): md5 word-4-gram
-    hashes, min per sliding window of 5, distinct selected fingerprints
-    per doc — any shared run of 8 words guarantees a shared
-    fingerprint, so this catches PARTIAL overlap the single global-min
-    fingerprint cannot. Pairs sharing >= 3 selected fingerprints are
-    reported. Scale shape: fingerprint equi-join (LSH-bucket-like
-    fan-in), with a stop-fingerprint cap (df <= 50) bounding hot-bucket
-    fan-out exactly like the MinHash band cap — never all-pairs.
-    Oracle: the identical selection + join in DuckDB list SQL."""
-    from json_ld_spark.operators.textops import winnow_fingerprints
-
-    _utc(spark)
-    corpus = _docs_with_dups(_read(spark, sf_dir, "documents"))
-    fps = corpus.select(
-        "doc_id",
-        F.explode(
-            winnow_fingerprints(F.col("text"), gram=4, window=5)
-        ).alias("fp"),
-    )
-    rare = (
-        fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= 50)
-        .select("fp")
-    )
-    fps = fps.join(rare, "fp")
-    a, b = fps.alias("a"), fps.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= 3)
-        .select(
-            F.col("doc_a").cast("long").alias("doc_a"),
-            F.col("doc_b").cast("long").alias("doc_b"),
-            F.col("shared").cast("long").alias("shared"),
-        )
-    )
-
-
-def q_kg_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One synchronized Louvain node-move round (graphops.louvain_move,
-    Blondel et al. 2008) refining the label-propagation communities on
-    the co-purchase graph: each node evaluates every NEIGHBOR community
-    by the exact-integer gain 2m*k_ic - k_i*tot'(c) (decimal lattice —
-    no float ordering anywhere) and keeps the argmax, ties preferring
-    to stay, then the smaller label; LPA-unreached nodes start as
-    Louvain singletons. Shapes: neighbor-community count agg +
-    community mass agg + per-NODE argmax window + 1-row m broadcast.
-    Oracle: the unrolled LPA CTEs + the same algebra with HUGEINT
-    gains and the identical ROW_NUMBER ordering."""
-    from json_ld_spark.operators.graphops import label_propagation, louvain_move
-
-    _utc(spark)
-    e = _copurchase_edges(spark, sf_dir)
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .dropDuplicates()
-    )
-    seeds = nodes.filter(F.col("node") % 250 == 0).select(
-        "node",
-        F.concat(F.lit("c"), (F.col("node") % 3).cast("string")).alias("label"),
-    )
-    labels = label_propagation(e, seeds, iters=2, src="u", dst="v")
-    out = louvain_move(e, labels, src="u", dst="v")
-    return out.select(
-        F.col("node").cast("long").alias("node"),
-        "old_label", "new_label", "moved",
-    )
-
-
-def q_text_kn_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document Kneser-Ney bigram LM fluency scores over documents
-    (textops.kn_doc_logprob): the corpus-trained KN table (min_count=1)
-    scores every document's bigrams; per-bigram log terms are micro-nat
-    longs summed exactly (order-free), one float division per doc at
-    the end — CCNet-style LM quality filtering with our own model, a
-    two-pass train+score pipeline. Oracle: the full KN training replay
-    + the same join/agg in SQL (ln over the identical 6-dp pkn_r)."""
-    from json_ld_spark.operators.textops import kn_doc_logprob
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    return kn_doc_logprob(docs.select("doc_id", "text"))
-
-
-def _tt_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic assert/retract changelog over the native triples:
-    assert-all at ts=100; retract the md5-bridge subj|pred % 5 == 0
-    slice at ts=200; re-assert the % 10 == 0 sub-slice at ts=300; a
-    ts=400 retract wave for the % 7 == 0 slice. Shared by
-    kg_time_travel and kg_snapshot_diff."""
-    t = transcript_triples_native(transcripts_from_documents(spark, sf_dir)).select(
-        *TRIPLE_COLS
-    )
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.col("subj"), F.lit("|"), F.col("pred"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
-    base = t.withColumn("__h", h)
-    log = (
-        base.select(
-            *TRIPLE_COLS, F.lit("assert").alias("op"),
-            F.lit(100).cast("long").alias("ts"), F.lit(1).cast("long").alias("seq"),
-        )
-        .unionByName(
-            base.filter(F.col("__h") % 5 == 0).select(
-                *TRIPLE_COLS, F.lit("retract").alias("op"),
-                F.lit(200).cast("long").alias("ts"), F.lit(2).cast("long").alias("seq"),
-            )
-        )
-        .unionByName(
-            base.filter(F.col("__h") % 10 == 0).select(
-                *TRIPLE_COLS, F.lit("assert").alias("op"),
-                F.lit(300).cast("long").alias("ts"), F.lit(3).cast("long").alias("seq"),
-            )
-        )
-        .unionByName(
-            base.filter(F.col("__h") % 7 == 0).select(
-                *TRIPLE_COLS, F.lit("retract").alias("op"),
-                F.lit(400).cast("long").alias("ts"), F.lit(4).cast("long").alias("seq"),
-            )
-        )
-    )
-    return log
-
-
-def q_kg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-travel snapshot of the triple graph (maintenance.as_of):
-    the _tt_changelog assert/retract waves reduced to the graph state
-    at ts=350 (the ts=400 wave must NOT be visible) — Iceberg
-    snapshot-at-T semantics at the TRIPLE grain. Scale shape: ts
-    filter (partition-prunable on a ts-partitioned changelog) + ONE
-    map-side-combinable max_by agg; no window, no self-join. Oracle:
-    the same changelog as UNION ALL CTEs reduced with
-    arg_max(op, seq) in DuckDB."""
-    from json_ld_spark.operators.maintenance import as_of
-
-    _utc(spark)
-    return as_of(_tt_changelog(spark, sf_dir), ts=350)
-
-
-def q_kg_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """What changed between two graph snapshots (maintenance.as_of x2
-    + diff.dataset_diff): the ts=150 state vs the ts=350 state of the
-    _tt_changelog — rows tagged 'removed' (retracted at ts=200, not
-    re-asserted) and 'added' (none in this timeline: ts=300 only
-    re-asserts) — the audit query behind any KG release note. Scale
-    shape: two max_by snapshot aggs + two null-safe anti-joins
-    (hash-joinable; quad keys are the join columns); canonicalization
-    skipped because both snapshots come from the SAME labeled triple
-    table. Oracle: two arg_max snapshot CTEs + anti-join EXCEPT
-    semantics in SQL."""
-    from json_ld_spark.operators.diff import dataset_diff
-    from json_ld_spark.operators.maintenance import as_of
-
-    _utc(spark)
-    log = _tt_changelog(spark, sf_dir).localCheckpoint(eager=False)
-    s1 = as_of(log, ts=150)
-    s2 = as_of(log, ts=350)
-    d = dataset_diff(s1, s2, canonicalize=False)
-    return d["only_left"].select(F.lit("removed").alias("side"), *TRIPLE_COLS).unionByName(
-        d["only_right"].select(F.lit("added").alias("side"), *TRIPLE_COLS)
-    )
-
-
-def q_kg_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node local clustering coefficient (graphops.local_clustering;
-    Watts-Strogatz 1998) over the co-purchase graph — the node-grained
-    spam/hub signature graph_metrics' global transitivity cannot see.
-    Scale shape: degree-oriented triangle enumeration (arboricity-
-    bounded wedge fan-out), one degree agg, one left join; exact longs
-    until the single division. Oracle: the id-ordered triangle
-    enumeration + corner re-attribution in SQL."""
-    _utc(spark)
-    return gops.local_clustering(
-        _copurchase_edges(spark, sf_dir).select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        )
-    )
-
-
-def q_kg_ppmi_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PPMI reweighting of the co-purchase co-occurrence graph
-    (graphops.ppmi_edges; Levy & Goldberg 2014 — the matrix skip-gram
-    factorizes): shared-order pair counts become max(0, ln(n*D /
-    (m_u*m_v))) association weights, the closed-form stand-in for a
-    trained embedding's similarity graph. Scale shape: one pair agg,
-    one node-sized marginal agg, one 1-row totals broadcast, two
-    node-keyed joins — never all-pairs. Oracle: identical integer
-    algebra + one ln, 6-dp rounded."""
-    _utc(spark)
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    cooc = gops.cooccurrence_graph(
-        li.select(F.col("l_orderkey").alias("g"), F.col("l_partkey").alias("i")),
-        group_col="g",
-        item_col="i",
-    )
-    return gops.ppmi_edges(cooc)
-
-
-def q_data_label_votes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-annotator label aggregation with one reliability round
-    (curation.label_votes; Dawid & Skene 1979): five synthetic
-    annotators label every document's language, each wrong on a
-    deterministic md5-keyed slice (annotator j errs when
-    h % (j+3) == 0, so later annotators are more reliable); round 1
-    majority-votes, round 2 reweights annotators by exact-integer
-    majority-agreement counts and revotes. The LLM-judge-ensemble
-    aggregation shape. Scale: three map-side-combinable aggs + one
-    broadcast (workforce-sized) weight join; ties break
-    lexicographically so the result is a pure function of the vote
-    set. Oracle: the same two rounds via windowed argmin in SQL."""
-    from json_ld_spark.operators.curation import label_votes
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "lang")
-    ann = docs.select(
-        "doc_id", "lang", F.explode(F.sequence(F.lit(0), F.lit(4))).alias("j")
-    )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("ann"), F.col("j").cast("string"), F.lit("|"),
-                    F.col("doc_id").cast("string"),
-                )
-            ),
-            1, 8,
-        ),
-        16, 10,
-    ).cast("long")
-    ann = ann.select(
-        F.col("doc_id").alias("item"),
-        F.concat(F.lit("a"), F.col("j").cast("string")).alias("annotator"),
-        F.when(
-            h % (F.col("j") + 3) == 0,
-            F.concat(F.lit("z"), (h % 3).cast("string")),
-        )
-        .otherwise(F.coalesce(F.col("lang"), F.lit("und")))
-        .alias("label"),
-    )
-    return label_votes(ann)
-
-
-def q_data_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Int8 scalar quantization of the embeddings table
-    (similarity.quantize_int8; FAISS SQ8 shape): per-dimension global
-    [min,max] calibration, floor-quantize to 256 levels, report the
-    exact-integer code-vector fingerprint and max reconstruction
-    error per vector — the 4x index-compression step before ANN.
-    Scale: posexplode fan-out (xD, map-side), one dim-keyed agg
-    (d-row calibration table, broadcast back), one vector-keyed agg;
-    max/sum-of-int are order-independent so the hash is partition-
-    stable. Oracle: parallel-unnest replay of the identical IEEE
-    expression in DuckDB."""
-    from json_ld_spark.operators.similarity import quantize_int8
-
-    _utc(spark)
-    embs = _read(spark, sf_dir, "embeddings")
-    return quantize_int8(embs).withColumnRenamed("id", "vec_id")
-
-
-def q_kg_tool_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consecutive tool-call pattern mining over agent transcripts
-    (native.tool_bigrams; the L2 step of Agrawal-Srikant sequential
-    patterns): which tool follows which, with occurrence counts and
-    conversation support. The base synthesis emits one tool, so the
-    query enriches the tool column deterministically from doc_id
-    (doc_id%3==0 turns call tools[(doc_id//3)%4]) before mining —
-    same corruption-family trick as kg_shacl_validate. Scale: one
-    pushed filter + one conversation-partitioned window (conversation-
-    bounded partitions) + one map-side-combinable agg with exact
-    distinct-conv support. Oracle: the same lead() window in SQL."""
-    from json_ld_spark.operators.native import tool_bigrams
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    tools = F.array(F.lit("search"), F.lit("browse"), F.lit("python"), F.lit("sql"))
-    t = docs.select(
-        F.concat(F.lit("conv-"), (F.col("doc_id") / 16).cast("long").cast("string")).alias("conv_id"),
-        (F.col("doc_id") % 16).cast("int").alias("turn_idx"),
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.element_at(tools, ((F.col("doc_id") / 3).cast("long") % 4 + 1).cast("int")),
-        ).alias("tool"),
-    )
-    return tool_bigrams(t)
-
-
-def q_ann_classifier_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-class confusion-matrix evaluation
-    (curation.classification_report) of the k-NN majority-vote
-    classifier: the ann_knn_classify prediction table reduced to
-    (label, support, tp, fp, fn, precision, recall, F1) — F1 as the
-    single-division 2tp/(2tp+fp+fn) form so exact integers carry to
-    the last step; macro/micro averages derive by one agg over the
-    output. Scale: three label-keyed map-side aggs + two outer joins
-    over label-cardinality tables. Oracle: the green knn CTE verbatim
-    + the same confusion algebra."""
-    from json_ld_spark.operators.curation import classification_report
-
-    _utc(spark)
-    preds = q_ann_knn_classify(spark, sf_dir)
-    return classification_report(preds)
-
-
-def q_data_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reliability-diagram bins / ECE inputs (curation.calibration_bins;
-    Guo et al. 2017) over a synthesized scored table: confidence =
-    md5-bridge(doc_id) % 1001 (integer-scaled 0..1000 by the operator
-    contract — the ccnet_buckets trick, so bin ids and mean confidence
-    are exact integer arithmetic) and outcome drawn from a second
-    independent md5 channel with P(y=1) = confidence/1000, making the
-    table well-calibrated in expectation. One map-side agg over <= 10
-    groups. Oracle: identical integer algebra in SQL."""
-    from json_ld_spark.operators.curation import calibration_bins
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    h1 = F.conv(
-        F.substring(F.md5(F.concat(F.lit("conf|"), F.col("doc_id").cast("string"))), 1, 8),
-        16, 10,
-    ).cast("long")
-    h2 = F.conv(
-        F.substring(F.md5(F.concat(F.lit("out|"), F.col("doc_id").cast("string"))), 1, 8),
-        16, 10,
-    ).cast("long")
-    scored = docs.select(
-        (h1 % 1001).alias("conf_scaled"),
-        F.when(h2 % 1000 < h1 % 1001, F.lit(1)).otherwise(F.lit(0)).alias("y"),
-    )
-    return calibration_bins(scored, "conf_scaled", "y", scale=1000, bins=10)
-
-
-def q_streaming_graph_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of kg_time_travel's reduction: the _tt_changelog
-    waves land as four separate micro-batch files and drain through the
-    incremental graph-state updater
-    (streaming/stream.py make_graph_state_batch_updater) — per quad key
-    the latest (op, ts, seq) survives, a commutative idempotent monoid,
-    so batch boundaries and pickup order cannot change the result. The
-    returned table is the current (ts=infinity) asserted set; the
-    hash-verified claim is streaming == batch arg_max over the full
-    changelog."""
-    import tempfile
-
-    from json_ld_spark.streaming.stream import run_stream_graph_state
-
-    _utc(spark)
-    log = _tt_changelog(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="stream_g_")
-    for wave in (1, 2, 3, 4):
-        log.filter(F.col("seq") == wave).coalesce(1).write.mode("append").parquet(
-            f"{base}/in"
-        )
-    return run_stream_graph_state(
-        spark, f"{base}/in", f"{base}/state", f"{base}/ckpt", schema=log.schema
-    )
-
-
-def q_data_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language percentile normalization of document length
-    (sampling.rank_normalize) — the cross-lingual quality-calibration
-    move: thresholds on a raw score don't transfer across languages;
-    thresholds on its within-group percentile do. NO per-group window
-    (hot groups are the partition-less-window hazard in group
-    clothing): global two-phase rank over (lang, n_chars, doc_id) +
-    one broadcast group-offset join, LIMIT-probed group cap. Oracle:
-    PERCENT_RANK() with the unique-id tiebreak, which row_number
-    semantics make exactly equal."""
-    from json_ld_spark.operators.sampling import rank_normalize
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    return rank_normalize(docs, "lang", "n_chars", "doc_id")
-
-
-def q_kg_wl_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-round Weisfeiler-Leman color refinement over the co-purchase
-    graph (graphops.wl_refinement; Shervashidze et al. JMLR'11): the
-    distributed partition-refinement histogram behind WL graph kernels
-    and the exact analogue of URDNA2015's degree-then-neighborhood
-    blank-node partitioning. Neighbor multisets fold through a
-    commutative modular hash SUM (map-side combinable, hub-safe — no
-    sorted collect_list), one equi-join + one agg per round. Oracle:
-    the two rounds unrolled as CTEs with the identical md5 algebra."""
-    _utc(spark)
-    return gops.wl_refinement(
-        _copurchase_edges(spark, sf_dir).select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        ),
-        rounds=2,
-    )
-
-
-def q_kg_neighbor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic GraphSAGE fan-out neighbor sampling
-    (graphops.neighbor_sample; Hamilton et al. NeurIPS'17) on the
-    co-purchase graph: per root (every 10th part id), md5-bridge top-3
-    1-hop neighbors, then top-2 neighbors of each — the GNN minibatch
-    tree-construction primitive, reproducible across reruns/engines so
-    failed epochs rebuild identical minibatches. Per hop: one frontier
-    equi-join + one (root, parent)-PARTITIONED window (group size <=
-    max degree — the audited-safe shape). Oracle: the same two ranked
-    windows in SQL."""
-    _utc(spark)
-    return gops.neighbor_sample(
-        _copurchase_edges(spark, sf_dir).select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        ),
-        fanouts=(3, 2),
-        root_filter=lambda c: c % 10 == 0,
-        seed="ns",
-    )
-
-
-def q_kg_kge_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-relation KGE eval metrics — MRR and Hits@{1,3,10} — over the
-    filtered TransE ranking (kge.transe_rank, Bordes et al. NeurIPS'13
-    protocol) at a denser test sample (mod 29) than kg_transe_rank's:
-    the leaderboard aggregation every embedding trainer reports. Ranks
-    are exact integers (integer-lattice embeddings), so MRR is a sum of
-    exact reciprocals rounded once; Hits@k are integer-count ratios.
-    One extra map-side-combinable groupBy over the rank table. Oracle:
-    the full ranking replay wrapped in the same aggregation."""
-    from json_ld_spark.operators.kge import transe_rank
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native,
-        transcript_triples_native,
-    )
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    edges = (
-        transcript_triples_native(t)
-        .filter(F.col("obj_kind") == "iri")
-        .select("subj", "pred", "obj")
-        .unionByName(
-            transcript_adjacency_native(t, with_doc_id=False)
-            .select("subj", "pred", "obj")
-        )
-    )
-    ranks = transe_rank(edges, dim=16, test_mod=29)
-    return ranks.groupBy("pred").agg(
-        F.count(F.lit(1)).cast("long").alias("n_test"),
-        F.round(F.sum(1.0 / F.col("rank")) / F.count(F.lit(1)), 6).alias("mrr_r"),
-        F.round(
-            F.sum(F.when(F.col("rank") <= 1, 1).otherwise(0))
-            / F.count(F.lit(1)), 6,
-        ).alias("hits1_r"),
-        F.round(
-            F.sum(F.when(F.col("rank") <= 3, 1).otherwise(0))
-            / F.count(F.lit(1)), 6,
-        ).alias("hits3_r"),
-        F.round(
-            F.sum(F.when(F.col("rank") <= 10, 1).otherwise(0))
-            / F.count(F.lit(1)), 6,
-        ).alias("hits10_r"),
-    )
-
-
-def q_data_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DoReMi-style one-step domain-mixture reweighting
-    (curation.doremi_weights; Xie et al. NeurIPS'23) over the documents
-    corpus grouped by `source`: per-domain excess of mean per-doc loss
-    (whitespace token count as the deterministic proxy loss) over the
-    global mean scales the token-share reference mixture by
-    exp(eta*excess), renormalized — the next epoch's sampling recipe
-    for temperature_mix/interleave. ONE corpus groupBy (count + two
-    integer-exact sums) + domain-table algebra; the domain table is
-    LIMIT-probed before any collect. Oracle: same aggregation algebra
-    with the identical 6-dp rounds around the single exp."""
-    from json_ld_spark.operators.curation import _tokens, doremi_weights
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars",
-        F.size(_tokens(F.col("text"))).cast("long").alias("loss"),
-    )
-    return doremi_weights(docs, "source", "loss", "n_chars", eta=1.0)
-
-
-def q_data_best_of_n(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Best-of-n rejection sampling (curation.best_of_n; WebGPT /
-    Llama-2 RFT shape) over the transcripts table: per conversation,
-    among its ASSISTANT turns keep exactly the max-reward candidate
-    (md5-bridge pseudo-reward in [0,1) standing in for a reward-model
-    score; deterministic lowest-turn tiebreak), dropping conversations
-    whose best is under 0.2. ONE map-side-combinable struct-argmax per
-    conversation — no window, no self-join. Oracle: the same packed
-    MAX() in SQL."""
-    from json_ld_spark.operators.curation import best_of_n
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir).where(
-        F.col("role") == "assistant"
-    )
-    reward = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|", F.lit("rm"), F.col("conv_id"),
-                        F.col("turn_idx").cast("string"),
-                    )
-                ),
-                1, 8,
-            ),
-            16, 10,
-        ).cast("long") % 1000
-    ) / 1000.0
-    return best_of_n(
-        t, "conv_id", "turn_idx", score=reward, min_score=F.lit(0.2)
-    )
-
-
-def _scc_testbed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic directed graph over customer keys with a KNOWN SCC
-    profile: 8-node ring per key-octet; octet pairs (4j, 4j+1) are
-    bridged BOTH ways (16-node SCCs); octets g≡3 (mod 4) emit a
-    descending DAG edge into octet g-2. All cross-octet reachability
-    either merges a pair or flows strictly toward smaller keys, so the
-    coloring outer loop settles everything in ONE round while still
-    exercising rings, merged SCCs, and DAG edges. Bounded reach sets
-    (<=32) keep the DuckDB transitive-closure oracle cheap."""
-    c = _read(spark, sf_dir, "customer").select(
-        F.col("c_custkey").cast("long").alias("v0")
-    )
-    # normalize to a 0-based dense-ish index so the octet arithmetic
-    # never goes negative (c_custkey is 0-based here, but this is
-    # convention-immune; DuckDB's // truncates toward zero while
-    # Spark's floor() floors, so negative operands MUST NOT occur)
-    n = c.agg(F.min("v0").alias("vmin"), F.max("v0").alias("vmax"))
-    b = c.crossJoin(F.broadcast(n)).select(
-        (F.col("v0") - F.col("vmin")).alias("v"),
-        (F.col("vmax") - F.col("vmin")).alias("n"),
-    ).select(
-        "v", "n",
-        F.floor(F.col("v") / 8).alias("g"),
-        (F.floor(F.col("v") / 8) * 8).alias("a"),
-        F.least(F.floor(F.col("v") / 8) * 8 + 7, F.col("n")).alias("bmax"),
-    )
-    cycle = b.select(
-        F.col("v").alias("s"),
-        F.when(F.col("v") < F.col("bmax"), F.col("v") + 1)
-        .otherwise(F.col("a"))
-        .alias("d"),
-    )
-    asc = b.where(
-        (F.col("g") % 4 == 0) & (F.col("v") == F.col("a") + 3)
-        & (F.col("a") + 8 <= F.col("n"))
-    ).select(F.col("v").alias("s"), (F.col("a") + 8).alias("d"))
-    desc = b.where(
-        (F.col("g") % 4 == 1) & (F.col("v") == F.col("a") + 2)
-    ).select(F.col("v").alias("s"), (F.col("a") - 8).alias("d"))
-    dag = b.where(
-        (F.col("g") % 4 == 3) & (F.col("v") == F.col("a") + 5)
-    ).select(F.col("v").alias("s"), (F.col("a") - 16).alias("d"))
-    return (
-        cycle.unionByName(asc).unionByName(desc).unionByName(dag)
-        .where(F.col("s") != F.col("d"))
-        .dropDuplicates()
-    )
-
-
-def q_kg_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strongly connected components (graphops.
-    strongly_connected_components; Orzan-coloring + pointer-jumping
-    min-propagation) over the deterministic ring/pair/DAG testbed —
-    the directed-cycle collapse every KG curation pass needs for
-    mutual sameAs/derivedFrom loops. Output (node, scc) with scc =
-    min member id. Oracle: full recursive-CTE transitive closure,
-    scc = min over mutually-reachable nodes — algorithm-independent
-    ground truth."""
-    from json_ld_spark.operators.graphops import strongly_connected_components
-
-    _utc(spark)
-    e = _scc_testbed_edges(spark, sf_dir)
-    return strongly_connected_components(e, src="s", dst="d").select(
-        F.col("node").cast("long").alias("node"),
-        F.col("scc").cast("long").alias("scc"),
-    )
-
-
-def q_rel_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly cohort retention matrix (temporal.retention_cohorts) over
-    the events table — group every user by the 7-day period of their
-    first event, then count per (cohort, offset) how many are still
-    active, with the retention ratio vs cohort size. Periods are
-    integer epoch-day buckets (no calendar semantics to cross-check).
-    Two user-keyed shuffles + one bounded cohort-keyed agg; no
-    windows. Oracle: the identical integer bucket algebra in SQL."""
-    from json_ld_spark.operators.temporal import retention_cohorts
-
-    _utc(spark)
-    ev = _read(spark, sf_dir, "events")
-    out = retention_cohorts(ev, key="user_id", ts_col="ts", unit_days=7)
-    # DATE surfaces as datetime.date from Spark but Timestamp from
-    # DuckDB's pandas bridge — lexical form is the hash-stable choice
-    return out.withColumn(
-        "cohort_start", F.date_format("cohort_start", "yyyy-MM-dd")
-    )
-
-
-def q_data_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language Tukey-fence outlier flags + winsorized lengths
-    (profile.iqr_outliers) over documents — the robust clipping pass
-    run before lengths feed sampling weights. Exact interpolated
-    q1/q3 per group (identical definition to SQL quantile_cont; the
-    interpolation fractions are quarters, so the doubles agree
-    bit-exactly), fences rounded 6 dp, broadcast joined back. Oracle:
-    quantile_cont + the same clamp."""
-    from json_ld_spark.operators.profile import iqr_outliers
-
-    _utc(spark)
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    return iqr_outliers(docs, "lang", "n_chars", k=1.5)
-
-
-def q_kg_reify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RDF reification with per-statement provenance
-    (canonical.reify_statements): every native transcript triple
-    becomes a content-addressed statement node (base + md5 of the
-    quad) carrying rdf:type/subject/predicate/object plus
-    prov:wasDerivedFrom the conversation IRI — the trace-back-to-
-    source layer a trillion-turn KG needs. Pure projection +
-    5-way explode + md5-keyed dedup; zero other shuffles. Oracle: the
-    same md5 statement id + UNNEST in SQL."""
-    from json_ld_spark.operators.canonical import reify_statements
-    from json_ld_spark.operators.native import transcript_triples_native
-
-    _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    tri = (
-        transcript_triples_native(t, with_doc_id=False)
-        .select(*TRIPLE_COLS)
-        .withColumn("src", F.regexp_replace(F.col("subj"), "/turn/[0-9]+$", ""))
-    )
-    return reify_statements(
-        tri, base="https://example.org/stmt/", source_col="src"
-    )
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q = _all_queries()
-    front = set(_NEVER_DRIVER_CHECKED)
-    ordered = {k: q[k] for k in _NEVER_DRIVER_CHECKED if k in q}
-    ordered.update({k: v for k, v in q.items() if k not in front})
-    return ordered
-
-
-def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "kg_triples_native": q_kg_triples_native,
-        "kg_triples_generic": q_kg_triples_generic,
-        "kg_nquads_roundtrip": q_kg_nquads_roundtrip,
-        "kg_rdfs_closure": q_kg_rdfs_closure,
-        "kg_owl_closure": q_kg_owl_closure,
-        "kg_owl_functional": q_kg_owl_functional,
-        "kg_delta_merge": q_kg_delta_merge,
-        "kg_update_where": q_kg_update_where,
-        "kg_sameas_merge": q_kg_sameas_merge,
-        "kg_shacl_validate": q_kg_shacl_validate,
-        "kg_node_table": q_kg_node_table,
-        "kg_bucketed_node_table": q_kg_bucketed_node_table,
-        "kg_bucketed_bgp": q_kg_bucketed_bgp,
-        "kg_fuzzy_links": q_kg_fuzzy_links,
-        "kg_entity_links": q_kg_entity_links,
-        "kg_entity_links_salted": q_kg_entity_links_salted,
-        "kg_triples_interned": q_kg_triples_interned,
-        "kg_pipeline_full": q_kg_pipeline_full,
-        "jsonld_expand_generic": q_jsonld_expand_generic,
-        "jsonld_flatten_generic": q_jsonld_flatten_generic,
-        "jsonld_triples_canonical": q_jsonld_triples_canonical,
-        "jsonld_canonical_degree": q_jsonld_canonical_degree,
-        "kg_canonical_incremental": q_kg_canonical_incremental,
-        "kg_dataset_diff": q_kg_dataset_diff,
-        "jsonld_fromrdf_roundtrip": q_jsonld_fromrdf_roundtrip,
-        "jsonld_compact_generic": q_jsonld_compact_generic,
-        "jsonld_frame_generic": q_jsonld_frame_generic,
-        "kg_frame_conversations": q_kg_frame_conversations,
-        "dedup_exact_groups": q_dedup_exact_groups,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_containment": q_dedup_containment,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_incremental": q_dedup_incremental,
-        "kg_conv_dedup": q_kg_conv_dedup,
-        "dedup_simhash_pairs": q_dedup_simhash_pairs,
-        "dedup_prefix_filter": q_dedup_prefix_filter,
-        "dedup_components": q_dedup_components,
-        "dedup_repeated_spans": q_dedup_repeated_spans,
-        "dedup_paragraphs": q_dedup_paragraphs,
-        "data_sft_pairs": q_data_sft_pairs,
-        "data_preference_pairs": q_data_preference_pairs,
-        "text_dsir_weights": q_text_dsir_weights,
-        "text_textrank": q_text_textrank,
-        "rel_recursive_chain": q_rel_recursive_chain,
-        "rel_funnel_events": q_rel_funnel_events,
-        "data_weighted_topk": q_data_weighted_topk,
-        "data_epoch_order": q_data_epoch_order,
-        "dedup_survivors": q_dedup_survivors,
-        "kg_random_walks": q_kg_random_walks,
-        "kg_kcore": q_kg_kcore,
-        "kg_transe_rank": q_kg_transe_rank,
-        "kg_negative_samples": q_kg_negative_samples,
-        "kg_lpg_project": q_kg_lpg_project,
-        "kg_skipgram_pairs": q_kg_skipgram_pairs,
-        "kg_node2vec_walks": q_kg_node2vec_walks,
-        "kg_copurchase_triangles": q_kg_copurchase_triangles,
-        "kg_link_prediction": q_kg_link_prediction,
-        "kg_linkpred_auc": q_kg_linkpred_auc,
-        "kg_label_propagation": q_kg_label_propagation,
-        "kg_cooccurrence": q_kg_cooccurrence,
-        "kg_khop_parts": q_kg_khop_parts,
-        "kg_pagerank_suppliers": q_kg_pagerank_suppliers,
-        "kg_pagerank_personalized": q_kg_pagerank_personalized,
-        "kg_hits": q_kg_hits,
-        "kg_weighted_pagerank": q_kg_weighted_pagerank,
-        "kg_ktruss": q_kg_ktruss,
-        "kg_graph_metrics": q_kg_graph_metrics,
-        "kg_hyperball": q_kg_hyperball,
-        "kg_betweenness": q_kg_betweenness,
-        "kg_harmonic_closeness": q_kg_harmonic_closeness,
-        "kg_weighted_paths": q_kg_weighted_paths,
-        "kg_bgp_assistant_turns": q_kg_bgp_assistant_turns,
-        "kg_bgp_dialogue_pairs": q_kg_bgp_dialogue_pairs,
-        "kg_bgp_optional_tool": q_kg_bgp_optional_tool,
-        "kg_bgp_union_turns": q_kg_bgp_union_turns,
-        "kg_turn_adjacency": q_kg_turn_adjacency,
-        "kg_turn_chain_khop": q_kg_turn_chain_khop,
-        "kg_bgp_values_minus": q_kg_bgp_values_minus,
-        "kg_bgp_agg_roles": q_kg_bgp_agg_roles,
-        "kg_bgp_topk_convs": q_kg_bgp_topk_convs,
-        "kg_bgp_subquery": q_kg_bgp_subquery,
-        "kg_construct_responds": q_kg_construct_responds,
-        "kg_path_turn_closure": q_kg_path_turn_closure,
-        "kg_path_next_speaker": q_kg_path_next_speaker,
-        "streaming_components": q_streaming_components,
-        "sketch_hll_registers": q_sketch_hll_registers,
-        "sketch_hll_cardinality": q_sketch_hll_cardinality,
-        "sketch_cm_counters": q_sketch_cm_counters,
-        "sketch_cm_estimates": q_sketch_cm_estimates,
-        "sketch_bloom_prefilter": q_sketch_bloom_prefilter,
-        "sketch_histogram_quantiles": q_sketch_histogram_quantiles,
-        "ann_topk_bruteforce": q_ann_topk_bruteforce,
-        "ann_semantic_clusters": q_ann_semantic_clusters,
-        "ann_margin_pairs": q_ann_margin_pairs,
-        "ann_topk_lsh": q_ann_topk_lsh,
-        "ann_topk_ivf": q_ann_topk_ivf,
-        "ann_near_duplicates": q_ann_near_duplicates,
-        "dedup_semantic": q_dedup_semantic,
-        "jsonld_canonicalize_distributed": q_jsonld_canonicalize_distributed,
-        "text_stats": q_text_stats,
-        "text_decontaminate": q_text_decontaminate,
-        "text_normalize": q_text_normalize,
-        "text_gopher_quality": q_text_gopher_quality,
-        "data_curriculum": q_data_curriculum,
-        "text_lm_score": q_text_lm_score,
-        "text_fingerprint": q_text_fingerprint,
-        "text_pii_scan": q_text_pii_scan,
-        "text_word_repetition": q_text_word_repetition,
-        "data_hash_split": q_data_hash_split,
-        "data_temperature_mix": q_data_temperature_mix,
-        "streaming_sessions": q_streaming_sessions,
-        "data_sessionize": q_data_sessionize,
-        "data_session_stats": q_data_session_stats,
-        "data_cluster_split": q_data_cluster_split,
-        "data_chunk_documents": q_data_chunk_documents,
-        "data_stratified_sample": q_data_stratified_sample,
-        "data_sample_per_key": q_data_sample_per_key,
-        "data_pack_documents": q_data_pack_documents,
-        "data_bpe_tokens": q_data_bpe_tokens,
-        "data_pack_bpe": q_data_pack_bpe,
-        "data_bpe_stats": q_data_bpe_stats,
-        "kg_modularity": q_kg_modularity,
-        "kg_time_travel": q_kg_time_travel,
-        "kg_local_clustering": q_kg_local_clustering,
-        "kg_ppmi_edges": q_kg_ppmi_edges,
-        "data_label_votes": q_data_label_votes,
-        "data_embed_quantize": q_data_embed_quantize,
-        "kg_tool_sequences": q_kg_tool_sequences,
-        "kg_snapshot_diff": q_kg_snapshot_diff,
-        "ann_classifier_report": q_ann_classifier_report,
-        "data_calibration_bins": q_data_calibration_bins,
-        "streaming_graph_state": q_streaming_graph_state,
-        "data_rank_normalize": q_data_rank_normalize,
-        "text_kn_bigrams": q_text_kn_bigrams,
-        "dedup_winnowing": q_dedup_winnowing,
-        "kg_louvain_move": q_kg_louvain_move,
-        "text_kn_perplexity": q_text_kn_perplexity,
-        "text_ngram_novelty": q_text_ngram_novelty,
-        "data_token_budget": q_data_token_budget,
-        "data_bt_arena": q_data_bt_arena,
-        "kg_conv_quality": q_kg_conv_quality,
-        "text_hybrid_rrf": q_text_hybrid_rrf,
-        "ann_knn_classify": q_ann_knn_classify,
-        "text_ccnet_buckets": q_text_ccnet_buckets,
-        "streaming_conv_quality": q_streaming_conv_quality,
-        "dedup_remove_spans": q_dedup_remove_spans,
-        "data_interleave": q_data_interleave,
-        "text_bm25_topk": q_text_bm25_topk,
-        "multimodal_features": q_multimodal_features,
-        "multimodal_audio_features": q_multimodal_audio_features,
-        "multimodal_image_features": q_multimodal_image_features,
-        "multimodal_image_resize": q_multimodal_image_resize,
-        "multimodal_dhash_neardup": q_multimodal_dhash_neardup,
-        "multimodal_audio_decimate": q_multimodal_audio_decimate,
-        "multimodal_video_features": q_multimodal_video_features,
-        "multimodal_frame_extract": q_multimodal_frame_extract,
-        "multimodal_frame_plan": q_multimodal_frame_plan,
-        "streaming_triples": q_streaming_triples,
-        "text_ngram_score": q_text_ngram_score,
-        "dedup_cdc_chunks": q_dedup_cdc_chunks,
-        "kg_skolemize": q_kg_skolemize,
-        "kg_context_windows": q_kg_context_windows,
-        "kg_void_stats": q_kg_void_stats,
-        "kg_schema_summary": q_kg_schema_summary,
-        "text_url_normalize": q_text_url_normalize,
-        "data_weighted_sample": q_data_weighted_sample,
-        "data_upsample_epochs": q_data_upsample_epochs,
-        "data_profile_hitters": q_data_profile_hitters,
-        "data_column_stats": q_data_column_stats,
-        "rel_agg_pricing": q_rel_agg_pricing,
-        "rel_join_topnations": q_rel_join_topnations,
-        "rel_window_events": q_rel_window_events,
-        "rel_setops_customers": q_rel_setops_customers,
-        "rel_setops_all": q_rel_setops_all,
-        "rel_string_array_wordcount": q_rel_string_array_wordcount,
-        "rel_json_events": q_rel_json_events,
-        "rel_sessionize_events": q_rel_sessionize_events,
-        "kg_sparql_select": q_kg_sparql_select,
-        "kg_sparql_path": q_kg_sparql_path,
-        "kg_sparql_negated": q_kg_sparql_negated,
-        "kg_sparql_analyst": q_kg_sparql_analyst,
-        "ann_topk_ivfpq": q_ann_topk_ivfpq,
-        "kg_sparql_named": q_kg_sparql_named,
-        "kg_sparql_graph_path": q_kg_sparql_graph_path,
-        "kg_sparql_graph": q_kg_sparql_graph,
-        "kg_bgp_describe": q_kg_bgp_describe,
-        "kg_bgp_ask": q_kg_bgp_ask,
-        "rel_rollup_pricing": q_rel_rollup_pricing,
-        "rel_cube_pricing": q_rel_cube_pricing,
-        "rel_correlated_max": q_rel_correlated_max,
-        "rel_rank_functions": q_rel_rank_functions,
-        "rel_pivot_orders": q_rel_pivot_orders,
-        "rel_asof_snapshot": q_rel_asof_snapshot,
-        "rel_interval_windows": q_rel_interval_windows,
-        "rel_window_range_frame": q_rel_window_range_frame,
-        "rel_decayed_counts": q_rel_decayed_counts,
-        "rel_semi_anti_customers": q_rel_semi_anti_customers,
-        "rel_distinct_topk_orders": q_rel_distinct_topk_orders,
-        "kg_wl_colors": q_kg_wl_colors,
-        "kg_neighbor_sample": q_kg_neighbor_sample,
-        "kg_kge_eval": q_kg_kge_eval,
-        "data_doremi_weights": q_data_doremi_weights,
-        "data_best_of_n": q_data_best_of_n,
-        "kg_scc": q_kg_scc,
-        "rel_retention_cohorts": q_rel_retention_cohorts,
-        "data_iqr_outliers": q_data_iqr_outliers,
-        "kg_reify": q_kg_reify,
-        "kg_topic_segments": q_kg_topic_segments,
-        "data_logreg_quality": q_data_logreg_quality,
-        "ann_pca_project": q_ann_pca_project,
-        "kg_disambiguate": q_kg_disambiguate,
-        "kg_pronoun_links": q_kg_pronoun_links,
-        "kg_square_count": q_kg_square_count,
-        "dedup_lsh_pr": q_dedup_lsh_pr,
-        "kg_degree_profile": q_kg_degree_profile,
-        "text_ttr_zipf": q_text_ttr_zipf,
-        "ann_recall_curve": q_ann_recall_curve,
-        "streaming_logreg": q_streaming_logreg,
-        "kg_entity_profiles": q_kg_entity_profiles,
-        "rel_cuped": q_rel_cuped,
-        "data_pack_stats": q_data_pack_stats,
-        "ann_incremental_assign": q_ann_incremental_assign,
-        "kg_mmr_exemplars": q_kg_mmr_exemplars,
-        "data_source_cards": q_data_source_cards,
-        "data_bootstrap_ci": q_data_bootstrap_ci,
-        "kg_distmult_rank": q_kg_distmult_rank,
-        "kg_kge_compare": q_kg_kge_compare,
-        "rel_rate_anomalies": q_rel_rate_anomalies,
-        "rel_holt_forecast": q_rel_holt_forecast,
-    }
-
-
-# --------------------------------------------------------------------------
-# DuckDB oracles
-# --------------------------------------------------------------------------
-
-_V = "https://example.org/transcript#"
-_CB = "https://example.org/conv/"
-_RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-_XS = "http://www.w3.org/2001/XMLSchema#string"
-_XI = "http://www.w3.org/2001/XMLSchema#integer"
-_XD = "http://www.w3.org/2001/XMLSchema#dateTime"
-
-# transcripts_from_documents reconstructed in SQL (shared by the triple,
-# expand, flatten, fromRdf, and compact oracles)
-_BASE_CTE = """
-WITH base AS (
-  SELECT doc_id,
-         'conv-' || CAST(doc_id // 16 AS VARCHAR) AS conv_id,
-         CAST(doc_id % 16 AS INT) AS turn_idx,
-         (['user','assistant','system','tool'])[CAST(doc_id % 4 AS INT) + 1] AS role,
-         text,
-         CASE WHEN doc_id % 7 = 3 THEN 'search' END AS tool,
-         strftime(TIMESTAMP '2026-01-01 00:00:00' + to_seconds(doc_id),
-                  '%Y-%m-%dT%H:%M:%SZ') AS ts_lex
-  FROM documents
-)
-"""
-
-# + transcript_triples_native, in SQL
-_TRIPLES_CTE = _BASE_CTE + f"""
-, q AS (
-  SELECT conv_id || '#' || CAST(turn_idx AS VARCHAR) AS doc_id,
-         '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS subj,
-         '{_CB}' || conv_id AS conv_iri,
-         turn_idx, role, text, tool, ts_lex
-  FROM base
-), triples AS (
-  SELECT doc_id, CAST(NULL AS VARCHAR) AS graph, subj,
-         e.pred AS pred, e.obj_kind AS obj_kind, e.obj AS obj,
-         e.datatype AS datatype, CAST(NULL AS VARCHAR) AS lang
-  FROM q CROSS JOIN UNNEST([
-    {{'pred': '{_RDF_TYPE}', 'obj_kind': 'iri', 'obj': '{_V}Turn', 'datatype': CAST(NULL AS VARCHAR)}},
-    {{'pred': '{_V}role', 'obj_kind': 'literal', 'obj': role, 'datatype': '{_XS}'}},
-    {{'pred': '{_V}text', 'obj_kind': 'literal', 'obj': text, 'datatype': '{_XS}'}},
-    {{'pred': '{_V}tool', 'obj_kind': 'literal', 'obj': tool, 'datatype': '{_XS}'}},
-    {{'pred': '{_V}timestamp', 'obj_kind': 'literal', 'obj': ts_lex, 'datatype': '{_XD}'}},
-    {{'pred': '{_V}turnIndex', 'obj_kind': 'literal', 'obj': CAST(turn_idx AS VARCHAR), 'datatype': '{_XI}'}},
-    {{'pred': '{_V}conversation', 'obj_kind': 'iri', 'obj': conv_iri, 'datatype': CAST(NULL AS VARCHAR)}}
-  ]) AS u(e)
-  WHERE e.obj IS NOT NULL
-)
-"""
-
-_TRIPLES_SQL = _TRIPLES_CTE + """
-SELECT graph, subj, pred, obj_kind, obj, datatype, lang FROM triples
-"""
-
-# kg_sameas_merge: the alias topology is controlled (A<-B<-C chains per
-# conversation, canonical base lexicographically smallest), so the fused
-# graph replays analytically: base triples + per-conversation the two
-# ingestSource literals, the mirrorOf self-loop, and ONE Conversation
-# type row (the two mirrors' duplicate assertions collapse).
-_OWL_SAMEAS_IRI = "http://www.w3.org/2002/07/owl#sameAs"
-_SAMEAS_MERGE_SQL = _TRIPLES_CTE + f"""
-, convs AS (SELECT DISTINCT conv_id FROM base)
-SELECT graph, subj, pred, obj_kind, obj, datatype, lang FROM triples
-UNION ALL SELECT CAST(NULL AS VARCHAR), '{_CB}' || conv_id,
-  '{_V}ingestSource', 'literal', 'mirror-b', '{_XS}', CAST(NULL AS VARCHAR)
-  FROM convs
-UNION ALL SELECT NULL, '{_CB}' || conv_id, '{_V}ingestSource', 'literal',
-  'mirror-c', '{_XS}', NULL FROM convs
-UNION ALL SELECT NULL, '{_CB}' || conv_id, '{_V}mirrorOf', 'iri',
-  '{_CB}' || conv_id, NULL, NULL FROM convs
-UNION ALL SELECT NULL, '{_CB}' || conv_id, '{_RDF_TYPE}', 'iri',
-  '{_V}Conversation', NULL, NULL FROM convs
-"""
-
-# kg_shacl_validate: corruption families are keyed on turn_idx mod
-# constants, so the violation table replays analytically from base.
-_SHACL_SQL = _BASE_CTE + f"""
-, turns AS (
-  SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS focus,
-         conv_id, turn_idx, ts_lex, text,
-         CAST(doc_id // 16 AS INT) AS conv_num
-  FROM base
-)
-SELECT focus, 's_role' AS shape_id, 'minCount' AS constraint_kind,
-       CAST(NULL AS VARCHAR) AS value, CAST(0 AS BIGINT) AS n
-  FROM turns WHERE turn_idx % 7 = 3
-UNION ALL SELECT focus, 's_conv', 'maxCount', NULL, 2
-  FROM turns WHERE turn_idx % 11 = 5
-UNION ALL SELECT focus, 's_conv', 'nodeKind', '{_CB}' || conv_id, NULL
-  FROM turns WHERE turn_idx % 19 = 11
-UNION ALL SELECT focus, 's_ts', 'datatype', ts_lex, NULL
-  FROM turns WHERE turn_idx % 17 = 9
-UNION ALL SELECT focus, 's_idx', 'pattern', 'x' || CAST(turn_idx AS VARCHAR), NULL
-  FROM turns WHERE turn_idx % 13 = 7
-UNION ALL SELECT focus, 's_idx', 'numeric', 'x' || CAST(turn_idx AS VARCHAR), NULL
-  FROM turns WHERE turn_idx % 13 = 7
-UNION ALL SELECT focus, 's_idx', 'pattern', '-1', NULL
-  FROM turns WHERE turn_idx = 5
-UNION ALL SELECT focus, 's_idx', 'minInclusive', '-1', NULL
-  FROM turns WHERE turn_idx = 5
-UNION ALL SELECT focus, 's_idx', 'maxInclusive', '99', NULL
-  FROM turns WHERE turn_idx = 14
-UNION ALL SELECT focus, 's_role', 'in', 'auditor', NULL
-  FROM turns WHERE turn_idx = 6
-UNION ALL SELECT focus, 's_text', 'minLength',
-       CASE WHEN turn_idx = 13 THEN '' ELSE text END, 0
-  FROM turns WHERE turn_idx = 13 OR length(text) = 0
-UNION ALL SELECT focus, 's_pipe', 'hasValue', 'v2', NULL
-  FROM turns WHERE turn_idx = 12
-UNION ALL SELECT focus, 's_note', 'uniqueLang', 'en', 2
-  FROM turns WHERE turn_idx = 1
-UNION ALL SELECT focus, 's_conv', 'class', '{_CB}' || conv_id, NULL
-  FROM turns WHERE turn_idx % 19 = 11 OR conv_num % 3 = 1
-UNION ALL SELECT focus, 's_conv', 'class', '{_CB}' || conv_id || '/alt', NULL
-  FROM turns WHERE turn_idx % 11 = 5
-"""
-
-# kg_rdfs_closure: the ontology is fixed and 3 levels deep, so the ρdf
-# closure unrolls by hand — rdfs7 (role→attribute), rdfs2/3 (domain/
-# range of conversation), rdfs9/11 (Turn ⊑ Utterance ⊑ Resource,
-# Conversation ⊑ Resource) — and DISTINCT absorbs rederivations.
-_SCO = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
-_SPO = "http://www.w3.org/2000/01/rdf-schema#subPropertyOf"
-_DOM = "http://www.w3.org/2000/01/rdf-schema#domain"
-_RNG = "http://www.w3.org/2000/01/rdf-schema#range"
-_RDFS_CLOSURE_SQL = _TRIPLES_CTE + f"""
-, onto AS (
-  SELECT * FROM (VALUES
-    (CAST(NULL AS VARCHAR), '{_V}Turn', '{_SCO}', 'iri', '{_V}Utterance',
-     CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)),
-    (NULL, '{_V}Utterance', '{_SCO}', 'iri', '{_V}Resource', NULL, NULL),
-    (NULL, '{_V}Conversation', '{_SCO}', 'iri', '{_V}Resource', NULL, NULL),
-    (NULL, '{_V}role', '{_SPO}', 'iri', '{_V}attribute', NULL, NULL),
-    (NULL, '{_V}conversation', '{_DOM}', 'iri', '{_V}Turn', NULL, NULL),
-    (NULL, '{_V}conversation', '{_RNG}', 'iri', '{_V}Conversation', NULL, NULL),
-    (NULL, '{_V}Turn', '{_SCO}', 'iri', '{_V}Resource', NULL, NULL)
-  ) AS t(graph, subj, pred, obj_kind, obj, datatype, lang)
-), turns AS (
-  SELECT DISTINCT subj FROM triples
-  WHERE pred = '{_RDF_TYPE}' AND obj = '{_V}Turn'
-), convs AS (
-  SELECT DISTINCT obj FROM triples WHERE pred = '{_V}conversation'
-)
-SELECT DISTINCT graph, subj, pred, obj_kind, obj, datatype, lang FROM (
-  SELECT graph, subj, pred, obj_kind, obj, datatype, lang FROM triples
-  UNION ALL SELECT * FROM onto
-  UNION ALL SELECT CAST(NULL AS VARCHAR), subj, '{_V}attribute', 'literal',
-    obj, '{_XS}', CAST(NULL AS VARCHAR)
-    FROM triples WHERE pred = '{_V}role'
-  UNION ALL SELECT NULL, subj, '{_RDF_TYPE}', 'iri', '{_V}Utterance',
-    NULL, NULL FROM turns
-  UNION ALL SELECT NULL, subj, '{_RDF_TYPE}', 'iri', '{_V}Resource',
-    NULL, NULL FROM turns
-  UNION ALL SELECT NULL, obj, '{_RDF_TYPE}', 'iri', '{_V}Conversation',
-    NULL, NULL FROM convs
-  UNION ALL SELECT NULL, obj, '{_RDF_TYPE}', 'iri', '{_V}Resource',
-    NULL, NULL FROM convs
-)
-"""
-
-# kg_owl_closure: on per-conversation nextTurn CHAINS the transitive
-# closure is analytic — every ordered turn pair (i < j) within a conv;
-# prevTurn (= nextTurn⁻) is the same pair set reversed. Base adjacency
-# rows are the j = i+1 slice of the closure (identical NULL-graph rows,
-# absorbed by the engine's dedup), so no separate base UNION is needed.
-_OWL_CLOSURE_SQL = _BASE_CTE + f"""
-, turns AS (SELECT DISTINCT conv_id, turn_idx FROM base),
-pairs AS (
-  SELECT a.conv_id,
-         '{_CB}' || a.conv_id || '/turn/' || CAST(a.turn_idx AS VARCHAR) AS lo,
-         '{_CB}' || a.conv_id || '/turn/' || CAST(b.turn_idx AS VARCHAR) AS hi
-  FROM turns a JOIN turns b
-    ON a.conv_id = b.conv_id AND b.turn_idx > a.turn_idx
-)
-SELECT CAST(NULL AS VARCHAR) AS graph, lo AS subj,
-       '{_V}nextTurn' AS pred, 'iri' AS obj_kind, hi AS obj,
-       CAST(NULL AS VARCHAR) AS datatype, CAST(NULL AS VARCHAR) AS lang
-FROM pairs
-UNION ALL
-SELECT CAST(NULL AS VARCHAR), hi, '{_V}prevTurn', 'iri', lo,
-       CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
-FROM pairs
-"""
-
-# kg_owl_functional: the injected 'auditor' role always differs from the
-# synthesized role, so every doc_id % 7 = 0 focus has exactly 2 distinct
-# values for the functional tx:role.
-_OWL_FUNCTIONAL_SQL = _BASE_CTE + f"""
-SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS subj,
-       '{_V}role' AS pred,
-       CAST(2 AS BIGINT) AS n_values
-FROM base WHERE doc_id % 7 = 0
-"""
-
-_STREAM_TRIPLES_SQL = _TRIPLES_CTE + """
-SELECT subj, pred, obj_kind, obj FROM triples
-"""
-
-# jsonld stage oracles: every turn doc expands/flattens/roundtrips to one
-# node with keys {@id, @type, role, text, timestamp, turnIndex,
-# conversation} (+tool when doc_id % 7 = 3) — 7 or 8 keys; values are
-# fully determined by the deterministic transcript synthesis.
-_EXPAND_ORACLE_SQL = _BASE_CTE + f"""
-SELECT conv_id || '#' || CAST(turn_idx AS VARCHAR) AS doc_id,
-       CAST(7 + CASE WHEN tool IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS n_props,
-       '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS subj,
-       role,
-       CAST(turn_idx AS BIGINT) AS turn_val,
-       CAST(0 AS BIGINT) AS n_warnings,
-       false AS failed
-FROM base
-"""
-
-_FLATTEN_ORACLE_SQL = _BASE_CTE + f"""
-SELECT conv_id || '#' || CAST(turn_idx AS VARCHAR) AS doc_id,
-       '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS node_id,
-       CAST(7 + CASE WHEN tool IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS n_keys,
-       role
-FROM base
-"""
-
-_FROMRDF_ORACLE_SQL = _BASE_CTE + f"""
-SELECT conv_id || '#' || CAST(turn_idx AS VARCHAR) AS doc_id,
-       '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS root_id,
-       CAST(7 + CASE WHEN tool IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS n_keys,
-       text
-FROM base
-"""
-
-# diff counts: only_left = dropped turnIndex quads (value%5=0);
-# only_right = injected extras (one per turn_idx==0 subject);
-# common = all remaining quads
-_KG_DIFF_SQL = _TRIPLES_CTE + f"""
-SELECT CAST(SUM(CASE WHEN pred = '{_V}turnIndex' AND TRY_CAST(obj AS BIGINT) % 5 = 0
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_only_left,
-       CAST(SUM(CASE WHEN pred = '{_V}turnIndex' AND obj = '0'
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_only_right,
-       CAST(SUM(CASE WHEN NOT (pred = '{_V}turnIndex' AND coalesce(TRY_CAST(obj AS BIGINT) % 5 = 0, false))
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_common
-FROM triples
-"""
-
-_CANON_DEGREE_SQL = _BASE_CTE + """
-SELECT conv_id || '#' || CAST(turn_idx AS VARCHAR) AS doc_id,
-       CAST(5 AS BIGINT) AS n_triples,
-       (turn_idx % 3 = 0) AS bnode_rooted
-FROM base
-"""
-
-# Canonical-label replay (round-3, VERDICT next-round #2). Both
-# canonicalizers hash chr(30)-joined sorted quad signatures
-# 'graph|subj|pred|kind|obj|dt|lang' (self bnode → '_:self'), chained
-# with chr(31): h_r = sha256(S || chr(31) || h_{r-1}). Single-bnode
-# documents have round-invariant signatures, so refinement provably
-# stabilizes after round 2 in BOTH engines (local: partition check,
-# distributed: countDistinct fixpoint) and the final label is a pure
-# function of the quad multiset — replayed here from the transcript
-# synthesis. Signature sort order is decided at the (pairwise-distinct,
-# ASCII) predicate segment, so DuckDB's binary list_sort matches
-# Spark's array_sort on any document text.
-_CANON_TRIPLES_SQL = _BASE_CTE + f"""
-, sigged AS (
-  SELECT conv_id || '#' || CAST(turn_idx AS VARCHAR) AS doc_id,
-         conv_id, turn_idx, role, text,
-         '{_CB}' || conv_id AS conv_iri,
-         array_to_string(list_sort([
-           '~|_:self|{_RDF_TYPE}|iri|{_V}Turn|~|~',
-           '~|_:self|{_V}conversation|iri|' || '{_CB}' || conv_id || '|~|~',
-           '~|_:self|{_V}role|literal|' || role || '|{_XS}|~',
-           '~|_:self|{_V}text|literal|' || text || '|{_XS}|~',
-           '~|_:self|{_V}turnIndex|literal|' || CAST(turn_idx AS VARCHAR) || '|{_XI}|~'
-         ]), chr(30)) AS s
-  FROM base
-), lab AS (
-  SELECT *,
-         CASE WHEN turn_idx % 3 = 0
-              THEN '_:c' || substr(sha256(s || chr(31) || sha256(s || chr(31))), 1, 16)
-              ELSE '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR)
-         END AS subj
-  FROM sigged
-)
-SELECT doc_id, subj, e.pred AS pred, e.obj_kind AS obj_kind, e.obj AS obj
-FROM lab CROSS JOIN UNNEST([
-  {{'pred': '{_RDF_TYPE}', 'obj_kind': 'iri', 'obj': '{_V}Turn'}},
-  {{'pred': '{_V}conversation', 'obj_kind': 'iri', 'obj': conv_iri}},
-  {{'pred': '{_V}role', 'obj_kind': 'literal', 'obj': role}},
-  {{'pred': '{_V}text', 'obj_kind': 'literal', 'obj': text}},
-  {{'pred': '{_V}turnIndex', 'obj_kind': 'literal', 'obj': CAST(turn_idx AS VARCHAR)}}
-]) AS u(e)
-"""
-
-# kg_canonical_incremental: the splice result equals a full canonical
-# rebuild of the post-delta corpus (per-document content-pure labels),
-# so the oracle is _CANON_TRIPLES_SQL's sha-chain replay over the
-# edited/deleted document set.
-_CANON_INCR_SQL = _BASE_CTE + f"""
-, base2 AS (
-  SELECT conv_id, turn_idx, role,
-         CASE WHEN turn_idx % 4 = 1 THEN text || ' [edited]' ELSE text END AS text
-  FROM base
-  WHERE turn_idx % 16 <> 15
-), sigged AS (
-  SELECT conv_id || '#' || CAST(turn_idx AS VARCHAR) AS doc_id,
-         conv_id, turn_idx, role, text,
-         '{_CB}' || conv_id AS conv_iri,
-         array_to_string(list_sort([
-           '~|_:self|{_RDF_TYPE}|iri|{_V}Turn|~|~',
-           '~|_:self|{_V}conversation|iri|' || '{_CB}' || conv_id || '|~|~',
-           '~|_:self|{_V}role|literal|' || role || '|{_XS}|~',
-           '~|_:self|{_V}text|literal|' || text || '|{_XS}|~',
-           '~|_:self|{_V}turnIndex|literal|' || CAST(turn_idx AS VARCHAR) || '|{_XI}|~'
-         ]), chr(30)) AS s
-  FROM base2
-), lab AS (
-  SELECT *,
-         CASE WHEN turn_idx % 3 = 0
-              THEN '_:c' || substr(sha256(s || chr(31) || sha256(s || chr(31))), 1, 16)
-              ELSE '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR)
-         END AS subj
-  FROM sigged
-)
-SELECT doc_id, subj, e.pred AS pred, e.obj_kind AS obj_kind, e.obj AS obj
-FROM lab CROSS JOIN UNNEST([
-  {{'pred': '{_RDF_TYPE}', 'obj_kind': 'iri', 'obj': '{_V}Turn'}},
-  {{'pred': '{_V}conversation', 'obj_kind': 'iri', 'obj': conv_iri}},
-  {{'pred': '{_V}role', 'obj_kind': 'literal', 'obj': role}},
-  {{'pred': '{_V}text', 'obj_kind': 'literal', 'obj': text}},
-  {{'pred': '{_V}turnIndex', 'obj_kind': 'literal', 'obj': CAST(turn_idx AS VARCHAR)}}
-]) AS u(e)
-"""
-
-# Distributed variant: docs are turn_idx%5==0, anon {{@type, role, text,
-# turn}} (4 quads, no conv). Duplicate-content documents share h2 and
-# are disambiguated with sha256(h2 || input_label); the input label is
-# '_:g' || sha256(doc_id)[:12] || 'b0' (triples_stage's BlankGen prefix).
-_CANON_DIST_SQL = _BASE_CTE + f"""
-, sigged AS (
-  SELECT conv_id || '#' || CAST(turn_idx AS VARCHAR) AS doc_id,
-         turn_idx, role, text,
-         array_to_string(list_sort([
-           '~|_:self|{_RDF_TYPE}|iri|{_V}Turn|~|~',
-           '~|_:self|{_V}role|literal|' || role || '|{_XS}|~',
-           '~|_:self|{_V}text|literal|' || text || '|{_XS}|~',
-           '~|_:self|{_V}turnIndex|literal|' || CAST(turn_idx AS VARCHAR) || '|{_XI}|~'
-         ]), chr(30)) AS s
-  FROM base
-  WHERE turn_idx % 5 = 0
-), hashed AS (
-  -- distributed chain hashes the sig join first (agg = sha256(S)),
-  -- then chains rounds on the agg hex: h_r = sha256(agg||chr(31)||h_{{r-1}})
-  SELECT *, sha256(sha256(s) || chr(31) || sha256(sha256(s) || chr(31))) AS h2
-  FROM sigged
-), lab AS (
-  SELECT *,
-         CASE WHEN COUNT(*) OVER (PARTITION BY h2) > 1
-              THEN '_:c' || substr(sha256(
-                     h2 || '_:g' || substr(sha256(doc_id), 1, 12) || 'b0'), 1, 32)
-              ELSE '_:c' || substr(h2, 1, 16)
-         END AS subj
-  FROM hashed
-)
-SELECT doc_id, subj, e.pred AS pred, e.obj_kind AS obj_kind, e.obj AS obj
-FROM lab CROSS JOIN UNNEST([
-  {{'pred': '{_RDF_TYPE}', 'obj_kind': 'iri', 'obj': '{_V}Turn'}},
-  {{'pred': '{_V}role', 'obj_kind': 'literal', 'obj': role}},
-  {{'pred': '{_V}text', 'obj_kind': 'literal', 'obj': text}},
-  {{'pred': '{_V}turnIndex', 'obj_kind': 'literal', 'obj': CAST(turn_idx AS VARCHAR)}}
-]) AS u(e)
-"""
-
-# Full-pipeline per-predicate counts: extraction counts fall out of the
-# transcript synthesis; the mentions predicate replays dictionary build
-# (top-500 by corpus frequency) + per-(subj,surface) argmax(prior)
-# linking + (subj, entity) pair dedup.
-_KG_PIPELINE_SQL = _BASE_CTE + f"""
-, toks AS (
-  SELECT t.e AS surface FROM documents
-  CROSS JOIN UNNEST(string_split_regex(lower(text), '[^a-z0-9]+')) AS t(e)
-  WHERE length(t.e) >= 3
-), freq AS (
-  SELECT surface, COUNT(*) AS n FROM toks GROUP BY surface
-), dict AS (
-  SELECT 'https://example.org/entity/' || surface AS entity_id, surface, n
-  FROM freq ORDER BY n DESC, surface ASC LIMIT 500
-), mention_rows AS (
-  SELECT DISTINCT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS subj,
-         m.e AS surface
-  FROM base CROSS JOIN UNNEST(string_split_regex(lower(text), '[^a-z0-9]+')) AS m(e)
-  WHERE length(m.e) >= 3
-), linked AS (
-  SELECT mr.subj, d.entity_id
-  FROM mention_rows mr JOIN dict d USING (surface)
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY mr.subj, mr.surface
-                             ORDER BY d.n DESC, d.entity_id ASC) = 1
-), mention_quads AS (
-  SELECT DISTINCT subj, entity_id FROM linked
-), counts AS (
-  SELECT '{_RDF_TYPE}' AS pred, COUNT(*) AS n FROM base
-  UNION ALL SELECT '{_V}role', COUNT(*) FROM base
-  UNION ALL SELECT '{_V}text', COUNT(*) FROM base
-  UNION ALL SELECT '{_V}tool', COUNT(*) FROM base WHERE tool IS NOT NULL
-  UNION ALL SELECT '{_V}timestamp', COUNT(*) FROM base
-  UNION ALL SELECT '{_V}turnIndex', COUNT(*) FROM base
-  UNION ALL SELECT '{_V}conversation', COUNT(*) FROM base
-  UNION ALL SELECT '{_V}mentions', COUNT(*) FROM mention_quads
-)
-SELECT pred, CAST(n AS BIGINT) AS n_triples FROM counts
-"""
-
-# compact roundtrip: @id/conv compact back to @base-relative IRIs, @type
-# to the @vocab term, properties to their context terms
-# corpus-framing oracle: assistant turns per conversation; first_id is
-# the lexicographic-min RELATIVE turn IRI (frame context @base makes
-# compacted @ids relative), matching the framed @graph's sorted order
-_FRAME_CONV_SQL = _BASE_CTE + """
-, convs AS (SELECT DISTINCT conv_id FROM base),
-  assist AS (
-  SELECT conv_id, COUNT(*) AS n,
-         MIN(conv_id || '/turn/' || CAST(turn_idx AS VARCHAR)) AS first_id
-  FROM base WHERE role = 'assistant' GROUP BY conv_id
-)
-SELECT c.conv_id, COALESCE(a.n, 0)::BIGINT AS n_assistant, a.first_id
-FROM convs c LEFT JOIN assist a ON a.conv_id = c.conv_id
-"""
-
-# framing oracle: the transcript synthesis fully determines the framed
-# output — the turn's own fields plus the @embed:@always-ed
-# conversation node (id/type/label)
-_FRAME_ORACLE_SQL = _BASE_CTE + """
-SELECT conv_id || '#' || CAST(turn_idx AS VARCHAR) AS doc_id,
-       conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS f_id,
-       'Turn' AS f_type,
-       role AS f_role,
-       text AS f_text,
-       tool AS f_tool,
-       ts_lex AS f_ts,
-       CAST(turn_idx AS BIGINT) AS f_turn,
-       conv_id AS f_conv_id,
-       'Conversation' AS f_conv_type,
-       'conversation ' || conv_id AS f_conv_label,
-       CAST(NULL AS VARCHAR) AS f_err
-FROM base
-"""
-
-_COMPACT_ORACLE_SQL = _BASE_CTE + """
-SELECT conv_id || '#' || CAST(turn_idx AS VARCHAR) AS doc_id,
-       conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS c_id,
-       'Turn' AS c_type,
-       role AS c_role,
-       text AS c_text,
-       tool AS c_tool,
-       ts_lex AS c_ts,
-       conv_id AS c_conv,
-       CAST(turn_idx AS BIGINT) AS c_turn
-FROM base
-"""
-
-_NODES_SQL = _TRIPLES_CTE + f"""
-SELECT subj AS node_id,
-       array_to_string(list_sort(list_distinct(list(CASE WHEN pred = '{_RDF_TYPE}' THEN obj END))), ',') AS types_csv,
-       array_to_string(list_sort(list_distinct(list(pred))), ',') AS preds_csv,
-       COUNT(*) AS out_degree,
-       COUNT(DISTINCT doc_id) AS n_docs
-FROM triples
-GROUP BY subj
-"""
-
-# kg_delta_merge: merged = (base − base-tool-facts) ∪ new-turn triples
-# = all triples except tool quads of turns < 12; node table recomputed
-# in full (the Spark side splices — equality IS the check).
-_DELTA_NODES_SQL = _TRIPLES_CTE + f"""
-, merged AS (
-  SELECT * FROM triples
-  WHERE NOT (pred = '{_V}tool'
-             AND CAST(split_part(doc_id, '#', 2) AS INT) < 12)
-)
-SELECT subj AS node_id,
-       array_to_string(list_sort(list_distinct(list(CASE WHEN pred = '{_RDF_TYPE}' THEN obj END))), ',') AS types_csv,
-       array_to_string(list_sort(list_distinct(list(pred))), ',') AS preds_csv,
-       COUNT(*) AS out_degree,
-       COUNT(DISTINCT doc_id) AS n_docs
-FROM merged
-GROUP BY subj
-"""
-
-# kg_update_where: predicate rename is the whole effect (role objects
-# move to speakerRole; nothing else matches the WHERE block).
-_UPDATE_WHERE_SQL = _TRIPLES_CTE + f"""
-SELECT DISTINCT subj,
-       CASE WHEN pred = '{_V}role' THEN '{_V}speakerRole' ELSE pred END AS pred,
-       obj
-FROM triples
-"""
-
-_LINKS_SQL = """
-WITH mention_rows AS (
-  SELECT 'doc-' || CAST(doc_id AS VARCHAR) AS subj,
-         e.pos AS pos, e.surface AS surface
-  FROM documents
-  CROSS JOIN UNNEST(list_transform(
-      string_split_regex(lower(text), '[^a-z0-9]+'),
-      (x, i) -> {'pos': i - 1, 'surface': x})) AS m(e)
-  WHERE length(e.surface) >= 3
-), tf AS (
-  SELECT subj, surface, COUNT(*) AS tf, MIN(pos) AS first_pos
-  FROM mention_rows GROUP BY subj, surface
-), toks AS (
-  SELECT t.e AS surface FROM documents
-  CROSS JOIN UNNEST(string_split_regex(lower(text), '[^a-z0-9]+')) AS t(e)
-  WHERE length(t.e) >= 3
-), freq AS (
-  SELECT surface, COUNT(*) AS n FROM toks GROUP BY surface
-), dict AS (
-  SELECT 'https://example.org/entity/' || surface AS entity_id, surface,
-         n / (SELECT CAST(SUM(n) AS DOUBLE) FROM freq) AS prior
-  FROM freq ORDER BY n DESC, surface ASC LIMIT 2000
-)
-SELECT tf.subj AS subj, tf.surface AS surface, dict.entity_id AS entity_id,
-       tf.tf AS tf, CAST(tf.first_pos AS BIGINT) AS first_pos,
-       round(dict.prior, 6) AS prior_r,
-       round(dict.prior * ln(1.0 + tf.tf) / ln(tf.first_pos + 2.0), 6) AS score_r
-FROM tf JOIN dict USING (surface)
-"""
-
-# kg_fuzzy_links: vocabulary-level blocked Levenshtein replay — the
-# mention/dict CTEs are _LINKS_SQL's; blocks via substring (DuckDB
-# negative-start substring counts from the end, like Spark's).
-_FUZZY_LINKS_SQL = """
-WITH mention_rows AS (
-  SELECT 'doc-' || CAST(doc_id AS VARCHAR) AS subj,
-         e.pos AS pos, e.surface AS surface
-  FROM documents
-  CROSS JOIN UNNEST(list_transform(
-      string_split_regex(lower(text), '[^a-z0-9]+'),
-      (x, i) -> {'pos': i - 1, 'surface': x})) AS m(e)
-  WHERE length(e.surface) >= 3
-), tf AS (
-  SELECT subj, surface, COUNT(*) AS tf, MIN(pos) AS first_pos
-  FROM mention_rows GROUP BY subj, surface
-), toks AS (
-  SELECT t.e AS surface FROM documents
-  CROSS JOIN UNNEST(string_split_regex(lower(text), '[^a-z0-9]+')) AS t(e)
-  WHERE length(t.e) >= 3
-), freq AS (
-  SELECT surface, COUNT(*) AS n FROM toks GROUP BY surface
-), dict AS (
-  SELECT 'https://example.org/entity/' || surface AS entity_id, surface,
-         n / (SELECT CAST(SUM(n) AS DOUBLE) FROM freq) AS prior
-  FROM freq ORDER BY n DESC, surface ASC LIMIT 2000
-), surf AS (
-  SELECT DISTINCT surface FROM tf
-), cand AS (
-  SELECT DISTINCT s.surface, d.entity_id, d.surface AS dsurf, d.prior
-  FROM surf s JOIN dict d
-    ON substring(s.surface, 1, 2) = substring(d.surface, 1, 2)
-  UNION
-  SELECT DISTINCT s.surface, d.entity_id, d.surface AS dsurf, d.prior
-  FROM surf s JOIN dict d
-    ON substring(s.surface, -2, 2) = substring(d.surface, -2, 2)
-), matched AS (
-  SELECT surface, entity_id, prior,
-         levenshtein(surface, dsurf) AS dist
-  FROM cand WHERE levenshtein(surface, dsurf) <= 1
-), best AS (
-  SELECT surface, entity_id, dist FROM (
-    SELECT *, ROW_NUMBER() OVER (
-      PARTITION BY surface
-      ORDER BY dist ASC, prior DESC, entity_id ASC) AS rk
-    FROM matched)
-  WHERE rk = 1
-)
-SELECT tf.subj, tf.surface, b.entity_id, CAST(b.dist AS INT) AS dist,
-       tf.tf AS tf, CAST(tf.first_pos AS BIGINT) AS first_pos
-FROM tf JOIN best b USING (surface)
-"""
-
-_DUP_CORPUS = """
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
-)
-"""
-
-# data_sft_pairs: the same conv-keyed ROWS frame replayed with
-# DuckDB's list() window aggregate; both engines sort the collected
-# frame by turn_idx (struct field order) before rendering.
-_SFT_PAIRS_SQL = _BASE_CTE + """
-, ctxed AS (
-  SELECT conv_id, turn_idx, role, text,
-         list({'i': turn_idx, 'r': role, 'x': text}) OVER (
-           PARTITION BY conv_id ORDER BY turn_idx
-           ROWS BETWEEN 4 PRECEDING AND 1 PRECEDING) AS ctx
-  FROM base
-)
-SELECT conv_id, turn_idx,
-       array_to_string(list_transform(list_sort(ctx),
-                                      s -> s.r || ': ' || s.x), chr(10))
-         AS prompt,
-       text AS completion,
-       CAST(len(ctx) AS BIGINT) AS n_context_turns
-FROM ctxed
-WHERE role = 'assistant' AND len(ctx) >= 1
-"""
-
-# preference_pairs: lag prompt window + cyclic partner rotation within
-# each turn position, replayed with the identical window orderings.
-_PREF_PAIRS_SQL = _BASE_CTE + """
-, resp AS (
-  SELECT conv_id, turn_idx, role, text,
-         lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role,
-         lag(text) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_text
-  FROM base
-), r2 AS (
-  SELECT conv_id, turn_idx, prev_text AS prompt, text,
-         ('0x' || substr(md5(conv_id), 1, 8))::BIGINT AS h
-  FROM resp WHERE role = 'assistant' AND prev_role = 'user'
-), rot AS (
-  SELECT conv_id, turn_idx, prompt, text AS chosen,
-         COALESCE(lead(text) OVER w, first_value(text) OVER w2) AS rejected,
-         COALESCE(lead(conv_id) OVER w, first_value(conv_id) OVER w2)
-           AS rejected_conv
-  FROM r2
-  WINDOW w AS (PARTITION BY turn_idx ORDER BY h, conv_id),
-         w2 AS (PARTITION BY turn_idx ORDER BY h, conv_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-)
-SELECT conv_id, turn_idx, prompt, chosen, rejected
-FROM rot WHERE rejected_conv <> conv_id
-"""
-
-# dsir_weights: hashed-bigram buckets + add-one multinomial log ratio,
-# mirrored association-for-association (each term ln(num/denom), then
-# the difference, then the per-doc SUM — only SUM order differs, 6 dp).
-_DSIR_SQL = r"""
-WITH toks AS (
-  SELECT doc_id, lang,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                     x -> x <> '') AS l
-  FROM documents
-), t AS (
-  SELECT doc_id, lang, generate_subscripts(l, 1) AS i, unnest(l) AS w FROM toks
-), g AS (
-  SELECT a.doc_id, a.lang, a.w || ' ' || b.w AS gram
-  FROM t a JOIN t b ON a.doc_id = b.doc_id AND b.i = a.i + 1
-), f AS (
-  SELECT doc_id, lang,
-         ('0x' || substr(md5(gram), 1, 8))::BIGINT % 4096 AS bucket
-  FROM g
-), tc AS (SELECT bucket, COUNT(*) AS tc FROM f WHERE lang = 'en' GROUP BY bucket),
-rc AS (SELECT bucket, COUNT(*) AS rc FROM f GROUP BY bucket),
-tot AS (
-  SELECT (SELECT CAST(COALESCE(SUM(tc), 0) AS DOUBLE) FROM tc) + 4096.0 AS tt,
-         (SELECT CAST(COALESCE(SUM(rc), 0) AS DOUBLE) FROM rc) + 4096.0 AS rt
-), ratio AS (
-  SELECT bucket,
-         ln((COALESCE(tc, 0) + 1.0) / (SELECT tt FROM tot))
-         - ln((COALESCE(rc, 0) + 1.0) / (SELECT rt FROM tot)) AS logratio
-  FROM rc FULL JOIN tc USING (bucket)
-)
-SELECT f.doc_id AS id, CAST(COUNT(*) AS BIGINT) AS n_feats,
-       round(SUM(r.logratio), 6) AS logw_r
-FROM f JOIN ratio r USING (bucket)
-GROUP BY f.doc_id
-"""
-
-def _textrank_sql(iters: int = 4, damping: float = 0.85, k: int = 50) -> str:
-    """Unrolled TextRank mirroring retrieval.textrank_keywords: the
-    stopword literal list, the position-window pair join, the weighted
-    fraction, and each damped iteration are mirrored expression for
-    expression; (1-d) is pre-reduced via repr() like _pagerank_sql."""
-    from json_ld_spark.operators.retrieval import TEXTRANK_STOPWORDS
-
-    stop = ", ".join(f"'{w}'" for w in TEXTRANK_STOPWORDS)
-    d = repr(damping)
-    omd = repr(1.0 - damping)
-    parts = [
-        f"""
-WITH rawtoks AS MATERIALIZED (
-  SELECT doc_id, generate_subscripts(l, 1) AS pos, unnest(l) AS word
-  FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS l
-        FROM documents)
-), toks AS MATERIALIZED (
-  SELECT doc_id, pos, word FROM rawtoks
-  WHERE regexp_full_match(word, '[a-z]+') AND length(word) >= 3
-    AND word NOT IN ({stop})
-), pairs AS MATERIALIZED (
-  SELECT least(a.word, b.word) AS a, greatest(a.word, b.word) AS b,
-         COUNT(*) AS w
-  FROM toks a JOIN toks b
-    ON a.doc_id = b.doc_id AND b.pos - a.pos BETWEEN 1 AND 2
-  WHERE a.word <> b.word
-  GROUP BY 1, 2
-), edges AS MATERIALIZED (
-  SELECT a, b, w FROM pairs UNION ALL SELECT b AS a, a AS b, w FROM pairs
-), wdeg AS MATERIALIZED (SELECT a, SUM(w) AS wd FROM edges GROUP BY a),
-src AS MATERIALIZED (
-  SELECT e.a, e.b, e.w / wd.wd AS frac FROM edges e JOIN wdeg wd ON e.a = wd.a
-), nodes AS MATERIALIZED (SELECT DISTINCT a AS word FROM edges),
-nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-r0 AS MATERIALIZED (SELECT word, 1.0 / (SELECT n FROM nn) AS rank FROM nodes)"""
-    ]
-    for i in range(iters):
-        parts.append(
-            f""",
-i{i} AS MATERIALIZED (
-  SELECT s.b AS word, SUM(r.rank * s.frac) AS inflow
-  FROM r{i} r JOIN src s ON r.word = s.a GROUP BY s.b
-),
-r{i + 1} AS MATERIALIZED (
-  SELECT n.word,
-         {omd} / (SELECT n FROM nn) + {d} * COALESCE(i.inflow, 0.0) AS rank
-  FROM nodes n LEFT JOIN i{i} i ON n.word = i.word
-)"""
-        )
-    parts.append(
-        f"""
-SELECT word, round(rank, 6) AS rank_r FROM r{iters}
-ORDER BY rank_r DESC, word LIMIT {k}"""
-    )
-    return "".join(parts)
-
-
-_TEXTRANK_SQL = _textrank_sql(iters=4, damping=0.85, k=50)
-
-
-# data_weighted_topk: ES reservoir keys replayed expression-for-
-# expression; selection is by the ROUNDED key + id tiebreak on both
-# sides, so the chosen set is engine-stable.
-_WEIGHTED_TOPK_SQL = """
-SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-       round(ln((('0x' || substr(md5('wtk|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT + 0.5)
-                / 4294967296.0) / n_chars, 6) AS es_key_r
-FROM documents
-WHERE n_chars > 0
-ORDER BY es_key_r DESC, doc_id
-LIMIT 200
-"""
-
-_EPOCH_ORDER_SQL = """
-SELECT doc_id,
-       CAST(ROW_NUMBER() OVER (
-         ORDER BY ('0x' || substr(md5('train|2|' || CAST(doc_id AS VARCHAR)),
-                                  1, 15))::BIGINT ASC,
-                  doc_id ASC) - 1 AS BIGINT) AS epoch_rank
-FROM documents
-"""
-
-# rel_funnel_events: per-step min-after-previous chain; CASE-null (not
-# WHERE) keeps partially-converted users with NULL step times.
-_FUNNEL_SQL = """
-WITH ev AS MATERIALIZED (
-  SELECT user_id, epoch_us(ts) AS us, event_type FROM events
-), s1 AS MATERIALIZED (
-  SELECT user_id, MIN(us) AS t1_us FROM ev
-  WHERE event_type = 'view' GROUP BY user_id
-), s2 AS MATERIALIZED (
-  SELECT s1.user_id, s1.t1_us,
-         MIN(CASE WHEN e.us > s1.t1_us THEN e.us END) AS t2_us
-  FROM s1 LEFT JOIN ev e
-    ON e.user_id = s1.user_id AND e.event_type = 'click'
-  GROUP BY s1.user_id, s1.t1_us
-), s3 AS MATERIALIZED (
-  SELECT s2.user_id, s2.t1_us, s2.t2_us,
-         MIN(CASE WHEN e.us > s2.t2_us THEN e.us END) AS t3_us
-  FROM s2 LEFT JOIN ev e
-    ON e.user_id = s2.user_id AND e.event_type = 'purchase'
-  GROUP BY s2.user_id, s2.t1_us, s2.t2_us
-)
-SELECT user_id, t1_us, t2_us, t3_us,
-       CAST((t1_us IS NOT NULL)::INT + (t2_us IS NOT NULL)::INT
-            + (t3_us IS NOT NULL)::INT AS BIGINT) AS steps_completed
-FROM s3
-"""
-
-# rel_recursive_chain: the IDENTICAL SQL text runs on Spark 4.1
-# (WITH RECURSIVE landed in Spark 4.0) and DuckDB. floor(x/10.0), not
-# CAST or //: DuckDB CAST rounds where Spark cast truncates.
-_REL_RECURSIVE_SQL = r"""
-WITH RECURSIVE chain(custkey, root, depth) AS (
-  SELECT c_custkey, c_custkey, 0 FROM customer WHERE c_custkey < 10
-  UNION ALL
-  SELECT c.c_custkey, ch.root, ch.depth + 1
-  FROM customer c JOIN chain ch
-    ON CAST(floor(c.c_custkey / 10.0) AS BIGINT) = ch.custkey
-  WHERE c.c_custkey >= 10
-)
-SELECT CAST(custkey AS BIGINT) AS custkey, CAST(root AS BIGINT) AS root,
-       CAST(depth AS BIGINT) AS depth
-FROM chain
-"""
-
-# dedup_paragraphs: 20-word windows via indexed-word grouping (equal
-# to Spark's slice+array_join segmentation incl. the short tail
-# window), ROW_NUMBER first-occurrence, ordered string_agg reassembly.
-_PARA_DEDUP_SQL = _DUP_CORPUS + """
-, words AS (
-  SELECT doc_id, u.w.i - 1 AS wi, u.w.x AS word
-  FROM corpus CROSS JOIN UNNEST(list_transform(
-      string_split(text, ' '), (x, i) -> {'i': i, 'x': x})) AS u(w)
-), paras AS (
-  SELECT doc_id, CAST(wi // 20 AS INT) AS idx,
-         string_agg(word, ' ' ORDER BY wi) AS p
-  FROM words GROUP BY doc_id, wi // 20
-), kept AS (
-  SELECT doc_id, idx, p FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY p ORDER BY doc_id, idx) AS rk
-    FROM paras)
-  WHERE rk = 1
-), reasm AS (
-  SELECT doc_id, string_agg(p, ' ' ORDER BY idx) AS text,
-         CAST(COUNT(*) AS BIGINT) AS n_kept
-  FROM kept GROUP BY doc_id
-), totals AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_paras FROM paras GROUP BY doc_id
-)
-SELECT t.doc_id, COALESCE(r.text, '') AS text, t.n_paras,
-       COALESCE(r.n_kept, 0) AS n_kept
-FROM totals t LEFT JOIN reasm r USING (doc_id)
-"""
-
-_EXACT_DUP_SQL = _DUP_CORPUS + r"""
-, hashed AS (
-  SELECT doc_id,
-         md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS content_hash
-  FROM corpus
-)
-SELECT doc_id, content_hash,
-       MIN(doc_id) OVER (PARTITION BY content_hash) AS canonical_id,
-       COUNT(*) OVER (PARTITION BY content_hash) AS group_size
-FROM hashed
-QUALIFY group_size > 1
-"""
-
-_JACCARD_SQL = _DUP_CORPUS + r"""
-, sampled AS (
-  SELECT doc_id,
-         regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
-  FROM corpus WHERE doc_id % 25 = 0
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(string_split(norm, ' ')) - 2 <= 0 THEN [norm]
-              ELSE list_distinct(list_transform(
-                     range(0, len(string_split(norm, ' ')) - 2),
-                     i -> array_to_string(list_slice(string_split(norm, ' '), i + 1, i + 3), ' ')))
-         END AS grams
-  FROM sampled
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-             / len(list_distinct(list_concat(a.grams, b.grams))), 6) AS jaccard_r
-FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-      / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.2
-"""
-
-_CONTAINMENT_SQL = r"""
-WITH base AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 25 = 0
-), exc AS (
-  SELECT doc_id + 2000000 AS doc_id,
-         array_to_string(list_slice(
-           regexp_split_to_array(trim(text), '\s+'), 1, 8), ' ') AS text
-  FROM base
-), corpus AS (
-  SELECT * FROM base UNION ALL SELECT * FROM exc
-), normd AS (
-  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
-  FROM corpus
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(string_split(norm, ' ')) - 2 <= 0 THEN [norm]
-              ELSE list_distinct(list_transform(
-                     range(0, len(string_split(norm, ' ')) - 2),
-                     i -> array_to_string(list_slice(string_split(norm, ' '), i + 1, i + 3), ' ')))
-         END AS grams
-  FROM normd
-), scored AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-           / greatest(len(a.grams), 1) AS c_ab,
-         CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-           / greatest(len(b.grams), 1) AS c_ba
-  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-)
-SELECT doc_a, doc_b, round(c_ab, 6) AS c_ab_r, round(c_ba, 6) AS c_ba_r,
-       CASE WHEN c_ab >= 0.9 AND c_ba >= 0.9 THEN 'both'
-            WHEN c_ab >= 0.9 THEN 'a_in_b' ELSE 'b_in_a' END AS direction
-FROM scored WHERE c_ab >= 0.9 OR c_ba >= 0.9
-"""
-
-# Brute-force exact-Jaccard oracle for the MinHash+LSH query: the Spark
-# side verifies candidates with exact Jaccard, and with the 32x2 band
-# family every >=0.7 pair in this corpus collides (lowest non-exact
-# pairs are 0.889/0.9 Jaccard; miss probability there is ~1e-22 per
-# pair, and the fixed hash family is verified empirically at
-# sf0.001/sf0.01/sf0.1). The size prefilter is the necessary condition
-# j >= 0.7 => min(|A|,|B|) >= 0.7*max(|A|,|B|), integer-exact.
-_MINHASH_ORACLE_SQL = _DUP_CORPUS + r"""
-, sh AS (
-  SELECT doc_id,
-         CASE WHEN len(string_split(norm, ' ')) - 2 <= 0 THEN [norm]
-              ELSE list_distinct(list_transform(
-                     range(0, len(string_split(norm, ' ')) - 2),
-                     i -> array_to_string(list_slice(string_split(norm, ' '), i + 1, i + 3), ' ')))
-         END AS grams
-  FROM (SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
-        FROM corpus)
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-             / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))), 6) AS jaccard_r
-FROM sh a JOIN sh b
-  ON a.doc_id < b.doc_id
- AND len(a.grams) * 10 >= len(b.grams) * 7
- AND len(b.grams) * 10 >= len(a.grams) * 7
-WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-      / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))) >= 0.7
-"""
-
-# conversation-level near-dedup: the transcript synthesis + the
-# deterministic dup injection (every 7th conversation minus its last
-# turn) + pinned-order conversation text, then the same brute-force
-# exact-Jaccard form as the document-level oracle
-_CONV_DEDUP_SQL = _BASE_CTE + r"""
-, withdup AS (
-  SELECT conv_id, turn_idx, text FROM base
-  UNION ALL
-  SELECT conv_id || '-dup' AS conv_id, turn_idx, text
-  FROM base
-  WHERE CAST(string_split(conv_id, '-')[2] AS BIGINT) % 7 = 0
-    AND turn_idx < 15
-), conv AS (
-  SELECT conv_id, string_agg(text, ' ' ORDER BY turn_idx) AS text
-  FROM withdup GROUP BY conv_id
-), sh AS (
-  SELECT conv_id,
-         CASE WHEN len(string_split(norm, ' ')) - 2 <= 0 THEN [norm]
-              ELSE list_distinct(list_transform(
-                     range(0, len(string_split(norm, ' ')) - 2),
-                     i -> array_to_string(list_slice(string_split(norm, ' '), i + 1, i + 3), ' ')))
-         END AS grams
-  FROM (SELECT conv_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
-        FROM conv)
-)
-SELECT a.conv_id AS conv_a, b.conv_id AS conv_b,
-       round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-             / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))), 6)
-         AS jaccard_r
-FROM sh a JOIN sh b ON a.conv_id < b.conv_id
-WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-      / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))) >= 0.7
-"""
-
-# dedup_incremental: the brute-force oracle restricted to pairs where
-# at least one side is in the new batch (ids >= 1000000) — exactly the
-# incremental contract (old x old already emitted in prior batches).
-_MINHASH_INCR_SQL = _DUP_CORPUS + r"""
-, sh AS (
-  SELECT doc_id,
-         CASE WHEN len(string_split(norm, ' ')) - 2 <= 0 THEN [norm]
-              ELSE list_distinct(list_transform(
-                     range(0, len(string_split(norm, ' ')) - 2),
-                     i -> array_to_string(list_slice(string_split(norm, ' '), i + 1, i + 3), ' ')))
-         END AS grams
-  FROM (SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
-        FROM corpus)
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-             / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))), 6) AS jaccard_r
-FROM sh a JOIN sh b
-  ON a.doc_id < b.doc_id
- AND len(a.grams) * 10 >= len(b.grams) * 7
- AND len(b.grams) * 10 >= len(a.grams) * 7
-WHERE (a.doc_id >= 1000000 OR b.doc_id >= 1000000)
-  AND CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-      / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))) >= 0.7
-"""
-
-# ---- graph analytics oracles (operators/graphops.py) ----
-
-# Connected components = min reachable id: DuckDB recursive CTE over
-# the same exact-3-gram Jaccard pair set the Spark query feeds to
-# Large-Star/Small-Star (the CTE's reach table is sum(comp_size^2)
-# rows — fine at oracle scale; the star algorithm is the form that
-# scales, the CTE is the spec).
-_REPEATED_SPANS_SQL = r"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
-), toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                     w -> w <> '') AS t
-  FROM corpus
-), grams AS (
-  SELECT doc_id, array_to_string(t[i:i+9], ' ') AS gram
-  FROM toks, UNNEST(generate_series(1, greatest(len(t) - 9, 0))) AS u(i)
-)
-SELECT md5(gram) AS gram_md5,
-       CAST(COUNT(*) AS BIGINT) AS n_occurrences,
-       CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
-FROM grams GROUP BY gram HAVING COUNT(*) >= 2
-"""
-
-_CC_CORE_SQL = r"""
-WITH RECURSIVE corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
-), sampled AS (
-  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
-  FROM corpus WHERE doc_id % 25 = 0
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(string_split(norm, ' ')) - 2 <= 0 THEN [norm]
-              ELSE list_distinct(list_transform(
-                     range(0, len(string_split(norm, ' ')) - 2),
-                     i -> array_to_string(list_slice(string_split(norm, ' '), i + 1, i + 3), ' ')))
-         END AS grams
-  FROM sampled
-), pairs AS (
-  SELECT a.doc_id AS u, b.doc_id AS v
-  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-  WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-        / len(list_distinct(list_concat(a.grams, b.grams))) >= 0.2
-), sym AS (
-  SELECT u, v FROM pairs UNION SELECT v AS u, u AS v FROM pairs
-), reach(a, b) AS (
-  SELECT doc_id, doc_id FROM sampled
-  UNION
-  SELECT r.a, s.v FROM reach r JOIN sym s ON s.u = r.b
-), groups AS (
-  SELECT a AS doc_id, CAST(MIN(b) AS BIGINT) AS dup_group
-  FROM reach GROUP BY a
-)
-"""
-
-_CC_SQL = _CC_CORE_SQL + """
-SELECT doc_id, dup_group FROM groups
-"""
-
-_SURVIVORS_SQL = _CC_CORE_SQL + """
-, cand AS (
-  SELECT g.doc_id, g.dup_group, length(c.text) AS n
-  FROM groups g JOIN corpus c USING (doc_id)
-), best AS (
-  SELECT dup_group, MAX(n) AS bn FROM cand GROUP BY dup_group
-)
-SELECT CAST(MIN(cand.doc_id) AS BIGINT) AS doc_id
-FROM cand JOIN best ON cand.dup_group = best.dup_group AND cand.n = best.bn
-GROUP BY cand.dup_group
-ORDER BY doc_id
-"""
-
-# data_cluster_split: same components, then the md5-bucket split replay
-# keyed on the GROUP representative (hash_split's bucket recipe).
-# data_sessionize / data_session_stats: LAG + cumulative SUM windows
-# over integer microseconds — boundary decisions are exact in both
-# engines; ordering tiebreaks on event_id.
-_EV_SESSIONIZE_CTE = """
-WITH e AS (
-  SELECT event_id, user_id, epoch_us(ts) AS us
-  FROM events WHERE ts IS NOT NULL
-), b AS (
-  SELECT event_id, user_id, us,
-         CASE WHEN LAG(us) OVER w IS NULL
-                OR us - LAG(us) OVER w > 1800000000
-              THEN 1 ELSE 0 END AS boundary
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-), s AS (
-  SELECT event_id, user_id, us,
-         CAST(SUM(boundary) OVER (
-           PARTITION BY user_id ORDER BY us, event_id
-           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
-  FROM b
-)
-"""
-
-# data_temperature_mix: counts → floor(sqrt(n)*1e6) integer weights →
-# one exact double division per group → the upsample_epochs draw
-# (md5-bridge u < frac) → generate_series replication. sqrt is
-# IEEE-exactly-rounded, integer products stay under 2^53, so the rate
-# doubles are bit-identical to the Spark side's driver-computed rates.
-_TEMPERATURE_MIX_SQL = """
-WITH c AS (
-  SELECT source, CAST(COUNT(*) AS BIGINT) AS n FROM documents GROUP BY source
-), p AS (
-  SELECT source, n, CAST(floor(sqrt(n) * 1000000) AS BIGINT) AS pg FROM c
-), t AS (
-  SELECT CAST(SUM(n) AS BIGINT) AS tot, CAST(SUM(pg) AS BIGINT) AS s FROM p
-), r AS (
-  SELECT source, (pg * tot) / (s * n) AS e FROM p CROSS JOIN t
-), d AS (
-  SELECT doc_id, dd.source, r.e,
-         CAST(floor(r.e) AS BIGINT) AS whole, r.e - floor(r.e) AS frac,
-         (('0x' || substr(md5('tm|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT)
-           / 4294967296.0 AS u
-  FROM documents dd JOIN r USING (source)
-)
-SELECT doc_id, source, CAST(g.epoch AS INT) AS epoch
-FROM d CROSS JOIN UNNEST(range(
-  0, whole + CASE WHEN u < frac THEN 1 ELSE 0 END)) AS g(epoch)
-"""
-
-# streaming_sessions: session_window semantics — strictly > gap splits
-# (the exactly-gap event merges; pinned in tests), end = last event +
-# gap; replayed over integer microseconds (no ordering tiebreak needed:
-# equal-ts rows have gap 0 and can never split).
-_STREAM_SESSIONS_SQL = """
-WITH e AS (
-  SELECT user_id, epoch_us(ts) AS us
-  FROM events WHERE ts IS NOT NULL
-), b AS (
-  SELECT user_id, us,
-         CASE WHEN LAG(us) OVER w IS NULL
-                OR us - LAG(us) OVER w > 1800000000
-              THEN 1 ELSE 0 END AS boundary
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us)
-), s AS (
-  SELECT user_id, us,
-         SUM(boundary) OVER (PARTITION BY user_id ORDER BY us
-                             ROWS UNBOUNDED PRECEDING) AS sid
-  FROM b
-)
-SELECT user_id,
-       CAST(MIN(us) AS BIGINT) AS start_us,
-       CAST(MAX(us) + 1800000000 AS BIGINT) AS end_us,
-       CAST(COUNT(*) AS BIGINT) AS n_events
-FROM s GROUP BY user_id, sid
-"""
-
-_EV_SESSIONIZE_SQL = _EV_SESSIONIZE_CTE + """
-SELECT event_id, user_id, session_idx,
-       CAST(user_id AS VARCHAR) || '#' || CAST(session_idx AS VARCHAR)
-         AS session_id
-FROM s
-"""
-
-_EV_SESSION_STATS_SQL = _EV_SESSIONIZE_CTE + """
-SELECT user_id,
-       CAST(user_id AS VARCHAR) || '#' || CAST(session_idx AS VARCHAR)
-         AS session_id,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(MIN(us) AS BIGINT) AS start_us,
-       CAST(MAX(us) AS BIGINT) AS end_us,
-       CAST(MAX(us) - MIN(us) AS BIGINT) AS duration_us
-FROM s GROUP BY 1, 2
-"""
-
-_CLUSTER_SPLIT_SQL = _CC_CORE_SQL + """
-SELECT doc_id, dup_group,
-       CASE WHEN bucket < 8000 THEN 'train'
-            WHEN bucket < 9000 THEN 'val'
-            ELSE 'test' END AS split
-FROM (
-  SELECT doc_id, dup_group,
-         ('0x' || substr(md5('split|' || CAST(dup_group AS VARCHAR)), 1, 8))::BIGINT
-           % 10000 AS bucket
-  FROM groups
-)
-"""
-
-# Each x<y<z triangle counted once off the canonical u<v edge list,
-# then attributed to all three corners — orientation-independent, so it
-# must equal the degree-oriented Spark count exactly.
-# ORDER BY floor(epoch): Spark's unix_timestamp TRUNCATES to whole
-# seconds while DuckDB's epoch() keeps microseconds — un-floored, an
-# event pair whose gap straddles exactly 3600s counts differently
-# (one real row at sf0.1; this round's regenerated events hit it).
-_WINDOW_RANGE_SQL = """
-SELECT event_id, user_id,
-       COUNT(*) OVER (PARTITION BY user_id
-                      ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-                      RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-         AS n_last_hour
-FROM events
-"""
-
-# floor(epoch): Spark unix_timestamp truncates to whole seconds (the
-# rel_window_range_frame lesson) — the 6-dp round hid the fractional
-# drift so far, but mirroring the truncation makes the ages identical
-# integers instead of relying on rounding luck.
-_DECAYED_COUNTS_SQL = """
-SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-       round(SUM(POWER(2.0,
-         -(epoch(TIMESTAMP '2026-02-01 00:00:00')
-           - CAST(floor(epoch(ts)) AS BIGINT))
-          / 604800.0)), 6) AS decayed_r
-FROM events GROUP BY user_id
-"""
-
-_COOCCURRENCE_SQL = """
-WITH p AS (
-  SELECT DISTINCT l_orderkey AS g, l_partkey AS i FROM lineitem
-), ok AS (
-  SELECT g FROM p GROUP BY g HAVING COUNT(*) <= 5
-), pf AS (
-  SELECT p.g, p.i FROM p JOIN ok USING (g)
-)
-SELECT a.i AS u, b.i AS v, CAST(COUNT(*) AS BIGINT) AS n_groups
-FROM pf a JOIN pf b ON a.g = b.g AND a.i < b.i
-GROUP BY a.i, b.i
-"""
-
-
-def _lpa_round(k: int) -> str:
-    return f"""
-, v{k} AS (
-  SELECT e.u, l.label, COUNT(*) AS n
-  FROM lpa_und e JOIN l{k - 1} l ON l.node = e.v
-  GROUP BY e.u, l.label
-), p{k} AS (
-  SELECT u AS node, label FROM (
-    SELECT u, label,
-           ROW_NUMBER() OVER (PARTITION BY u ORDER BY n DESC, label ASC) AS rk
-    FROM v{k}
-  ) WHERE rk = 1
-), l{k} AS (
-  SELECT * FROM lpa_sd
-  UNION ALL
-  SELECT p.node, p.label FROM p{k} p
-  WHERE NOT EXISTS (SELECT 1 FROM lpa_sd s WHERE s.node = p.node)
-)"""
-
-
-_LABEL_PROP_SQL = (
-    """
-WITH lpa_e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), lpa_und AS (
-  SELECT u, v FROM lpa_e UNION SELECT v AS u, u AS v FROM lpa_e
-), lpa_sd AS (
-  SELECT node, 'c' || CAST(node % 3 AS VARCHAR) AS label
-  FROM (SELECT DISTINCT u AS node FROM lpa_und)
-  WHERE node % 250 = 0
-), l0 AS (SELECT * FROM lpa_sd)"""
-    + _lpa_round(1) + _lpa_round(2)
-    + """
-SELECT node, label FROM l2
-"""
-)
-
-_LINK_PREDICTION_SQL = r"""
-WITH ed0 AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), und AS (
-  SELECT u, v FROM ed0 UNION SELECT v AS u, u AS v FROM ed0
-), deg AS (
-  SELECT u, COUNT(*) AS deg FROM und GROUP BY u
-), wed AS (
-  SELECT l.v AS a, r.v AS b, l.u AS w
-  FROM und l JOIN und r ON l.u = r.u AND l.v < r.v
-), pairs AS (
-  SELECT a AS u, b AS v, CAST(COUNT(*) AS BIGINT) AS n_common,
-         SUM(1.0 / ln(d.deg)) AS aa
-  FROM wed JOIN deg d ON d.u = wed.w
-  GROUP BY a, b
-)
-SELECT p.u, p.v, p.n_common,
-       round(p.n_common / CAST(du.deg + dv.deg - p.n_common AS DOUBLE), 6)
-         AS jaccard_r,
-       round(p.aa, 6) AS adamic_adar_r
-FROM pairs p
-JOIN deg du ON du.u = p.u
-JOIN deg dv ON dv.u = p.v
-WHERE p.n_common >= 2
-"""
-
-# tie-aware AUC as an integer rank statistic: the oracle's SUM OVER
-# (ORDER BY score) is exactly what ordered_cumsum computes without the
-# single-partition window on the Spark side
-_LINKPRED_AUC_SQL = r"""
-WITH ed0 AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), und AS (
-  SELECT u, v FROM ed0 UNION SELECT v AS u, u AS v FROM ed0
-), deg AS (
-  SELECT u, COUNT(*) AS deg FROM und GROUP BY u
-), wed AS (
-  SELECT l.v AS a, r.v AS b, l.u AS w
-  FROM und l JOIN und r ON l.u = r.u AND l.v < r.v
-), pairs AS (
-  SELECT a AS u, b AS v, CAST(COUNT(*) AS BIGINT) AS n_common,
-         round(SUM(1.0 / ln(d.deg)), 6) AS score
-  FROM wed JOIN deg d ON d.u = wed.w
-  GROUP BY a, b
-  HAVING COUNT(*) >= 2
-), lab AS (
-  SELECT p.score,
-         CASE WHEN e.u IS NULL THEN 0 ELSE 1 END AS pos
-  FROM pairs p LEFT JOIN ed0 e ON e.u = p.u AND e.v = p.v
-), per_score AS (
-  SELECT score,
-         CAST(SUM(pos) AS BIGINT) AS n_pos,
-         CAST(SUM(1 - pos) AS BIGINT) AS n_neg
-  FROM lab GROUP BY score
-), cum AS (
-  SELECT score, n_pos, n_neg,
-         CAST(COALESCE(SUM(n_neg) OVER (ORDER BY score
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-           AS neg_below
-  FROM per_score
-)
-SELECT CAST(SUM(n_pos) AS BIGINT) AS n_pos,
-       CAST(SUM(n_neg) AS BIGINT) AS n_neg,
-       CAST(SUM(n_pos * (2 * neg_below + n_neg)) AS BIGINT) AS u2,
-       round(CAST(SUM(n_pos * (2 * neg_below + n_neg)) AS BIGINT)
-             / (2.0 * SUM(n_pos) * SUM(n_neg)), 6) AS auc_r
-FROM cum
-"""
-
-_TRIANGLES_SQL = r"""
-WITH ed AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), tri AS (
-  SELECT e1.u AS x, e1.v AS y, e2.v AS z
-  FROM ed e1
-  JOIN ed e2 ON e2.u = e1.v
-  JOIN ed e3 ON e3.u = e1.u AND e3.v = e2.v
-)
-SELECT node AS part_id, CAST(COUNT(*) AS BIGINT) AS n_triangles
-FROM (
-  SELECT x AS node FROM tri
-  UNION ALL SELECT y AS node FROM tri
-  UNION ALL SELECT z AS node FROM tri
-)
-GROUP BY node
-"""
-
-# Depth-bounded reachability: the recursive UNION dedups (node, depth)
-# states, MIN(depth) = shortest distance within the bound — exactly the
-# BFS first-visit depth the Spark frontier loop records.
-_KHOP_SQL = r"""
-WITH RECURSIVE ed AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), sym AS (
-  SELECT u, v FROM ed UNION SELECT v AS u, u AS v FROM ed
-), seeds AS (
-  SELECT p_partkey AS node FROM part WHERE p_partkey <= 5
-), reach(node, depth) AS (
-  SELECT node, 0 FROM seeds
-  UNION
-  SELECT s.v, r.depth + 1 FROM reach r JOIN sym s ON s.u = r.node
-  WHERE r.depth < 3
-)
-SELECT node AS part_id, CAST(MIN(depth) AS BIGINT) AS depth
-FROM reach GROUP BY node
-"""
-
-
-def _pagerank_sql(iters: int = 5, damping: float = 0.85) -> str:
-    """Unrolled power-iteration CTE chain mirroring graphops.pagerank
-    step for step. Float constants are inlined via repr() so both
-    engines evaluate the identical doubles ((1-d) is pre-computed the
-    way the Python side computes it); the only cross-engine divergence
-    is SUM order (~1e-16), absorbed by the 6-dp rounding."""
-    d = repr(damping)
-    omd = repr(1.0 - damping)
-    parts = [
-        r"""
-WITH e AS (
-  SELECT DISTINCT 's' || l_suppkey AS u, 'c' || o_custkey AS v
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-),
-nodes AS (SELECT u AS node FROM e UNION SELECT v AS node FROM e),
-outdeg AS (SELECT u, COUNT(*) AS outd FROM e GROUP BY u),
-nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-r0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS rank FROM nodes)"""
-    ]
-    for i in range(iters):
-        parts.append(
-            f""",
-d{i} AS (SELECT COALESCE(SUM(r.rank), 0.0) AS dang
-         FROM r{i} r LEFT JOIN outdeg od ON r.node = od.u
-         WHERE od.u IS NULL),
-i{i} AS (SELECT e.v AS node, SUM(r.rank / od.outd) AS inflow
-         FROM r{i} r JOIN outdeg od ON r.node = od.u JOIN e ON e.u = od.u
-         GROUP BY e.v),
-r{i + 1} AS (SELECT nodes.node,
-            {omd} / (SELECT n FROM nn)
-            + {d} * (COALESCE(i.inflow, 0.0)
-                     + (SELECT dang FROM d{i}) / (SELECT n FROM nn)) AS rank
-         FROM nodes LEFT JOIN i{i} i ON nodes.node = i.node)"""
-        )
-    parts.append(f"\nSELECT node, round(rank, 6) AS rank_r FROM r{iters}")
-    return "".join(parts)
-
-
-_PAGERANK_SQL = _pagerank_sql(iters=5, damping=0.85)
-
-
-def _ppr_sql(iters: int = 5, damping: float = 0.85) -> str:
-    """Unrolled personalized-PageRank CTE chain mirroring
-    graphops.personalized_pagerank step for step: the restart vector
-    is uniform over the seed set, and both the teleport and the
-    dangling mass are weighted by it."""
-    d = repr(damping)
-    omd = repr(1.0 - damping)
-    parts = [
-        r"""
-WITH e AS (
-  SELECT DISTINCT 's' || l_suppkey AS u, 'c' || o_custkey AS v
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-),
-sd AS (SELECT DISTINCT 's' || l_suppkey AS node FROM lineitem
-       WHERE l_suppkey % 10 = 0),
-nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e
-          UNION SELECT node FROM sd),
-outdeg AS (SELECT u, COUNT(*) AS outd FROM e GROUP BY u),
-kk AS (SELECT CAST(COUNT(*) AS DOUBLE) AS k FROM sd),
-rst AS (SELECT n.node,
-               CASE WHEN s.node IS NOT NULL THEN 1.0 / (SELECT k FROM kk)
-                    ELSE 0.0 END AS restart
-        FROM nodes n LEFT JOIN sd s ON n.node = s.node),
-r0 AS (SELECT node, restart AS rank FROM rst)"""
-    ]
-    for i in range(iters):
-        parts.append(
-            f""",
-d{i} AS (SELECT COALESCE(SUM(r.rank), 0.0) AS dang
-         FROM r{i} r LEFT JOIN outdeg od ON r.node = od.u
-         WHERE od.u IS NULL),
-i{i} AS (SELECT e.v AS node, SUM(r.rank / od.outd) AS inflow
-         FROM r{i} r JOIN outdeg od ON r.node = od.u JOIN e ON e.u = od.u
-         GROUP BY e.v),
-r{i + 1} AS (SELECT rst.node,
-            {omd} * rst.restart
-            + {d} * (COALESCE(i.inflow, 0.0)
-                     + (SELECT dang FROM d{i}) * rst.restart) AS rank
-         FROM rst LEFT JOIN i{i} i ON rst.node = i.node)"""
-        )
-    parts.append(f"\nSELECT node, round(rank, 6) AS rank_r FROM r{iters}")
-    return "".join(parts)
-
-
-_PPR_SQL = _ppr_sql(iters=5, damping=0.85)
-
-
-def _wpagerank_sql(iters: int = 5, damping: float = 0.85) -> str:
-    """Unrolled WEIGHTED power iteration mirroring
-    graphops.weighted_pagerank: contributions rank * (w / wdeg),
-    dangling = nodes with no out-weight; constants via repr() like
-    _pagerank_sql, 6-dp round."""
-    d = repr(damping)
-    omd = repr(1.0 - damping)
-    parts = [
-        r"""
-WITH e AS MATERIALIZED (
-  SELECT 's' || l_suppkey AS u, 'c' || o_custkey AS v, COUNT(*) AS w
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-  GROUP BY 1, 2
-),
-nodes AS MATERIALIZED (SELECT u AS node FROM e UNION SELECT v AS node FROM e),
-wdeg AS MATERIALIZED (SELECT u, SUM(w) AS wd FROM e GROUP BY u),
-frac AS MATERIALIZED (
-  SELECT e.u, e.v, e.w / wd.wd AS frac FROM e JOIN wdeg wd ON e.u = wd.u
-),
-nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-r0 AS MATERIALIZED (SELECT node, 1.0 / (SELECT n FROM nn) AS rank FROM nodes)"""
-    ]
-    for i in range(iters):
-        parts.append(
-            f""",
-d{i} AS MATERIALIZED (SELECT COALESCE(SUM(r.rank), 0.0) AS dang
-         FROM r{i} r LEFT JOIN wdeg od ON r.node = od.u
-         WHERE od.u IS NULL),
-i{i} AS MATERIALIZED (SELECT f.v AS node, SUM(r.rank * f.frac) AS inflow
-         FROM r{i} r JOIN frac f ON r.node = f.u
-         GROUP BY f.v),
-r{i + 1} AS MATERIALIZED (SELECT nodes.node,
-            {omd} / (SELECT n FROM nn)
-            + {d} * (COALESCE(i.inflow, 0.0)
-                     + (SELECT dang FROM d{i}) / (SELECT n FROM nn)) AS rank
-         FROM nodes LEFT JOIN i{i} i ON nodes.node = i.node)"""
-        )
-    parts.append(f"\nSELECT node, round(rank, 6) AS rank_r FROM r{iters}")
-    return "".join(parts)
-
-
-_WPAGERANK_SQL = _wpagerank_sql(iters=5, damping=0.85)
-
-
-def _hits_sql(iters: int = 4) -> str:
-    """Unrolled HITS CTE chain mirroring graphops.hits half-step for
-    half-step (auth update + L1 normalize, then hub update + L1
-    normalize; zero-sum guarded to 1.0 exactly like the Python
-    scalar's `or 1.0`). 6-dp round absorbs SUM-order drift.
-    MATERIALIZED hints are load-bearing: DuckDB inlines multiply-
-    referenced CTEs, and this chain references each level ~4 times —
-    un-hinted, the 4-level unroll expands to 4^4 parquet re-scans and
-    dies on file descriptors."""
-    parts = [
-        r"""
-WITH e AS MATERIALIZED (
-  SELECT DISTINCT 's' || l_suppkey AS u, 'c' || o_custkey AS v
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-  UNION
-  SELECT DISTINCT 'c' || c_custkey AS u, 'n' || c_nationkey AS v FROM customer
-),
-nodes AS MATERIALIZED (SELECT u AS node FROM e UNION SELECT v AS node FROM e),
-v0 AS MATERIALIZED (SELECT node, 1.0 AS hub, 1.0 AS auth FROM nodes)"""
-    ]
-    for i in range(iters):
-        parts.append(
-            f""",
-ar{i} AS MATERIALIZED (SELECT e.v AS node, SUM(h.hub) AS araw
-          FROM v{i} h JOIN e ON e.u = h.node GROUP BY e.v),
-ha{i} AS MATERIALIZED (SELECT n.node, n.hub, COALESCE(a.araw, 0.0) AS araw
-          FROM v{i} n LEFT JOIN ar{i} a ON n.node = a.node),
-sa{i} AS MATERIALIZED (SELECT CASE WHEN COALESCE(SUM(araw), 0.0) = 0.0 THEN 1.0
-                      ELSE SUM(araw) END AS s FROM ha{i}),
-hf{i} AS MATERIALIZED (SELECT node, hub, araw / (SELECT s FROM sa{i}) AS auth
-          FROM ha{i}),
-hr{i} AS MATERIALIZED (SELECT e.u AS node, SUM(h.auth) AS hraw
-          FROM hf{i} h JOIN e ON e.v = h.node GROUP BY e.u),
-hb{i} AS MATERIALIZED (SELECT n.node, COALESCE(r.hraw, 0.0) AS hraw, n.auth
-          FROM hf{i} n LEFT JOIN hr{i} r ON n.node = r.node),
-sh{i} AS MATERIALIZED (SELECT CASE WHEN COALESCE(SUM(hraw), 0.0) = 0.0 THEN 1.0
-                      ELSE SUM(hraw) END AS s FROM hb{i}),
-v{i + 1} AS MATERIALIZED (SELECT node, hraw / (SELECT s FROM sh{i}) AS hub, auth
-          FROM hb{i})"""
-        )
-    parts.append(
-        f"\nSELECT node, round(hub, 6) AS hub_r, round(auth, 6) AS auth_r FROM v{iters}"
-    )
-    return "".join(parts)
-
-
-_HITS_SQL = _hits_sql(iters=4)
-
-
-def _ktruss_sql(k: int = 7, rounds: int = 4) -> str:
-    """Unrolled k-truss peel mirroring graphops.k_truss round for
-    round: id-ordered triangle enumeration (a<b<c via two joins + an
-    EXISTS closing edge), 3-projection support count, HAVING filter.
-    MATERIALIZED everywhere — each level is referenced 4x and DuckDB
-    would otherwise inline the chain exponentially (the _hits_sql
-    lesson)."""
-    parts = [
-        r"""
-WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-)"""
-    ]
-    for i in range(rounds):
-        parts.append(
-            f""",
-tri{i} AS MATERIALIZED (
-  SELECT e1.a, e1.b, e2.c
-  FROM e{i} e1
-  JOIN (SELECT a AS b, b AS c FROM e{i}) e2 USING (b)
-  WHERE EXISTS (SELECT 1 FROM e{i} e3 WHERE e3.a = e1.a AND e3.b = e2.c)
-),
-sup{i} AS MATERIALIZED (
-  SELECT x, y, COUNT(*) AS support FROM (
-    SELECT a AS x, b AS y FROM tri{i}
-    UNION ALL SELECT b AS x, c AS y FROM tri{i}
-    UNION ALL SELECT a AS x, c AS y FROM tri{i}
-  ) GROUP BY x, y HAVING COUNT(*) >= {k - 2}
-),
-e{i + 1} AS MATERIALIZED (SELECT x AS a, y AS b FROM sup{i})"""
-        )
-    parts.append(
-        f"""
-SELECT CAST(x AS BIGINT) AS src, CAST(y AS BIGINT) AS dst,
-       CAST(support AS BIGINT) AS support FROM sup{rounds - 1}"""
-    )
-    return "".join(parts)
-
-
-_KTRUSS_SQL = _ktruss_sql(k=7, rounds=4)
-
-def _betweenness_sql(max_hops: int = 3) -> str:
-    """Unrolled sampled-Brandes: forward sigma levels l0..lk (left-anti
-    == NOT EXISTS against the cumulative assigned set), backward
-    dependency levels dk..d0 mirroring sigma/sw * (1 + delta)
-    association-for-association; 6-dp sum round."""
-    parts = [
-        r"""
-WITH ed AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), sym AS MATERIALIZED (
-  SELECT u, v FROM ed UNION SELECT v AS u, u AS v FROM ed
-), seeds AS MATERIALIZED (
-  SELECT p_partkey AS s FROM part WHERE p_partkey % 199 = 3
-),
-l0 AS MATERIALIZED (SELECT s, s AS v, CAST(1 AS BIGINT) AS sigma FROM seeds),
-a0 AS MATERIALIZED (SELECT s, v FROM l0)"""
-    ]
-    for d in range(1, max_hops + 1):
-        parts.append(
-            f""",
-l{d} AS MATERIALIZED (
-  SELECT p.s, e.v AS v, SUM(p.sigma) AS sigma
-  FROM l{d - 1} p JOIN sym e ON e.u = p.v
-  WHERE NOT EXISTS (SELECT 1 FROM a{d - 1} x WHERE x.s = p.s AND x.v = e.v)
-  GROUP BY p.s, e.v
-),
-a{d} AS MATERIALIZED (SELECT s, v FROM a{d - 1} UNION ALL SELECT s, v FROM l{d})"""
-        )
-    parts.append(
-        f""",
-d{max_hops} AS MATERIALIZED (SELECT s, v, 0.0 AS delta FROM l{max_hops})"""
-    )
-    for d in range(max_hops - 1, -1, -1):
-        parts.append(
-            f""",
-d{d} AS MATERIALIZED (
-  SELECT p.s, p.v, COALESCE(q.delta, 0.0) AS delta
-  FROM l{d} p LEFT JOIN (
-    SELECT p2.s, p2.v,
-           SUM(p2.sigma / c.sigma * (1.0 + c.delta)) AS delta
-    FROM l{d} p2
-    JOIN sym e ON e.u = p2.v
-    JOIN (SELECT l.s, l.v, l.sigma, dd.delta
-          FROM l{d + 1} l JOIN d{d + 1} dd ON l.s = dd.s AND l.v = dd.v) c
-      ON c.s = p2.s AND c.v = e.v
-    GROUP BY p2.s, p2.v
-  ) q ON q.s = p.s AND q.v = p.v
-)"""
-        )
-    union = " UNION ALL ".join(
-        f"SELECT s, v, delta FROM d{d}" for d in range(max_hops + 1)
-    )
-    parts.append(
-        f"""
-SELECT CAST(v AS BIGINT) AS node, round(SUM(delta), 6) AS betweenness_r
-FROM ({union}) WHERE v <> s GROUP BY v"""
-    )
-    return "".join(parts)
-
-
-_BETWEENNESS_SQL = _betweenness_sql(max_hops=3)
-
-
-def _harmonic_sql(max_hops: int = 3) -> str:
-    """Unrolled sampled harmonic closeness: the _betweenness_sql
-    forward levels without sigma; 1/d weights inlined via repr()."""
-    parts = [
-        r"""
-WITH ed AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), sym AS MATERIALIZED (
-  SELECT u, v FROM ed UNION SELECT v AS u, u AS v FROM ed
-), seeds AS MATERIALIZED (
-  SELECT p_partkey AS s FROM part WHERE p_partkey % 199 = 3
-),
-l0 AS MATERIALIZED (SELECT s, s AS v FROM seeds),
-a0 AS MATERIALIZED (SELECT s, v FROM l0)"""
-    ]
-    for d in range(1, max_hops + 1):
-        parts.append(
-            f""",
-l{d} AS MATERIALIZED (
-  SELECT DISTINCT p.s, e.v AS v
-  FROM l{d - 1} p JOIN sym e ON e.u = p.v
-  WHERE NOT EXISTS (SELECT 1 FROM a{d - 1} x WHERE x.s = p.s AND x.v = e.v)
-),
-a{d} AS MATERIALIZED (SELECT s, v FROM a{d - 1} UNION ALL SELECT s, v FROM l{d})"""
-        )
-    union = " UNION ALL ".join(
-        f"SELECT v, {repr(1.0 / d)} AS c FROM l{d}" for d in range(1, max_hops + 1)
-    )
-    parts.append(
-        f"""
-SELECT CAST(v AS BIGINT) AS node, round(SUM(c), 6) AS harmonic_r
-FROM ({union}) GROUP BY v"""
-    )
-    return "".join(parts)
-
-
-_HARMONIC_SQL = _harmonic_sql(max_hops=3)
-
-
-def _hyperball_sql(max_t: int = 3, p: int = 6) -> str:
-    """HyperBall replay: per-node HLL registers (integer md5-bridge
-    math, the sketch_hll recipe at m=2^p), max_t unrolled merge rounds
-    (register-wise MAX over the symmetric edge join), per-node
-    estimator + corpus sums per radius. Every register value is
-    integer; MATERIALIZED hints keep DuckDB from exponentially
-    inlining the multiply-referenced round CTEs."""
-    from json_ld_spark.operators.sketches import _alpha
-
-    m = 1 << p
-    q = 32 - p
-    num = repr(float(_alpha(m)) * float(m * m) * float(1 << 32))
-    parts = [f"""WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), e AS MATERIALIZED (
-  SELECT u, v FROM e0 UNION SELECT v, u FROM e0
-), r0 AS MATERIALIZED (
-  SELECT node, hv // {1 << q} AS bucket,
-         CASE WHEN hv % {1 << q} = 0 THEN {q + 1}
-              ELSE {q + 1} - length(bin(hv % {1 << q})) END AS rho
-  FROM (
-    SELECT node, ('0x' || substr(md5(CAST(node AS VARCHAR)), 1, 8))::BIGINT AS hv
-    FROM (SELECT DISTINCT u AS node FROM e)
-  )
-)"""]
-    for t in range(1, max_t + 1):
-        parts.append(f"""r{t} AS MATERIALIZED (
-  SELECT node, bucket, MAX(rho) AS rho FROM (
-    SELECT node, bucket, rho FROM r{t - 1}
-    UNION ALL
-    SELECT e.v AS node, r.bucket, r.rho FROM e JOIN r{t - 1} r ON e.u = r.node
-  ) GROUP BY node, bucket
-)""")
-    for t in range(max_t + 1):
-        parts.append(f"""nf{t} AS (
-  SELECT CAST({t} AS BIGINT) AS t,
-         CAST(SUM(s_scaled) AS BIGINT) AS sum_s_scaled,
-         CAST(SUM(n_zero) AS BIGINT) AS sum_n_zero,
-         round(SUM(CASE WHEN {num} / s_scaled <= {float(2.5 * m)!r} AND n_zero > 0
-                        THEN {float(m)!r} * ln({float(m)!r} / n_zero)
-                        ELSE {num} / s_scaled END), 4) AS npairs_r
-  FROM (
-    SELECT CAST({m} - COUNT(*) AS BIGINT) AS n_zero,
-           CAST(SUM(1::BIGINT << (32 - rho))
-                + ({m} - COUNT(*)) * 4294967296 AS BIGINT) AS s_scaled
-    FROM r{t} GROUP BY node
-  )
-)""")
-    union = "\nUNION ALL ".join(f"SELECT * FROM nf{t}" for t in range(max_t + 1))
-    return ",\n".join(parts) + "\n" + union
-
-
-_HYPERBALL_SQL = _hyperball_sql()
-
-_GRAPH_METRICS_SQL = r"""
-WITH e AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), deg AS MATERIALIZED (
-  SELECT n, COUNT(*) AS d FROM (
-    SELECT a AS n FROM e UNION ALL SELECT b AS n FROM e) GROUP BY n
-), tri AS MATERIALIZED (
-  SELECT COUNT(*) AS n_tri
-  FROM e e1 JOIN (SELECT a AS b, b AS c FROM e) e2 USING (b)
-  WHERE EXISTS (SELECT 1 FROM e e3 WHERE e3.a = e1.a AND e3.b = e2.c)
-), counts AS MATERIALIZED (
-  SELECT (SELECT COUNT(*) FROM e) AS n_edges,
-         (SELECT COUNT(*) FROM deg) AS n_nodes,
-         (SELECT SUM(d * (d - 1)) FROM deg) AS wedges2,
-         (SELECT n_tri FROM tri) AS n_tri
-), sym AS MATERIALIZED (
-  SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e
-), dd AS MATERIALIZED (
-  SELECT da.d AS dx, db.d AS dy
-  FROM sym JOIN deg da ON sym.a = da.n JOIN deg db ON sym.b = db.n
-), ass AS MATERIALIZED (
-  SELECT COUNT(*) AS m, SUM(dx) AS sx, SUM(dy) AS sy,
-         SUM(dx * dy) AS sxy, SUM(dx * dx) AS sxx, SUM(dy * dy) AS syy
-  FROM dd
-)
-SELECT CAST(n_nodes AS BIGINT) AS n_nodes,
-       CAST(n_edges AS BIGINT) AS n_edges,
-       round(2.0 * n_edges / n_nodes, 6) AS avg_degree_r,
-       round(6.0 * n_tri / wedges2, 6) AS clustering_r,
-       round((m * sxy - sx * sy)
-             / sqrt(CAST(m * sxx - sx * sx AS DOUBLE)
-                    * CAST(m * syy - sy * sy AS DOUBLE)), 6)
-         AS assortativity_r
-FROM counts, ass
-"""
-
-# Hop-bounded Bellman-Ford == depth-bounded recursive relaxation: the
-# recursive UNION dedups (node, dist, hops) states; MIN(dist) per node
-# over <= 3-edge paths is exactly what 3 frontier rounds compute.
-_WPATHS_SQL = r"""
-WITH RECURSIVE ed AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), sym AS (
-  SELECT u, v FROM ed UNION SELECT v AS u, u AS v FROM ed
-), wed AS (
-  SELECT u, v, 1 + (u + v) % 5 AS w FROM sym
-), seeds AS (
-  SELECT p_partkey AS node FROM part WHERE p_partkey <= 5
-), reach(node, dist, hops) AS (
-  SELECT node, 0, 0 FROM seeds
-  UNION
-  SELECT e.v, r.dist + e.w, r.hops + 1 FROM reach r JOIN wed e ON e.u = r.node
-  WHERE r.hops < 3
-)
-SELECT CAST(node AS BIGINT) AS node, CAST(MIN(dist) AS BIGINT) AS dist
-FROM reach GROUP BY node
-"""
-
-# Turn-window adjacency: the same conv-partitioned LEAD window in SQL.
-_ADJACENCY_SQL = _BASE_CTE + f"""
-, adj AS (
-  SELECT conv_id, turn_idx,
-         LEAD(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nxt
-  FROM base
-)
-SELECT CAST(NULL AS VARCHAR) AS graph,
-       '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS subj,
-       '{_V}nextTurn' AS pred,
-       'iri' AS obj_kind,
-       '{_CB}' || conv_id || '/turn/' || CAST(nxt AS VARCHAR) AS obj,
-       CAST(NULL AS VARCHAR) AS datatype,
-       CAST(NULL AS VARCHAR) AS lang
-FROM adj WHERE nxt IS NOT NULL
-"""
-
-# BFS over the chain graph: bounded recursive CTE, min depth per node.
-# kg_lpg_project: the LPG node summary is analytic on the synthesis —
-# every turn node is labeled Turn with out_deg = 1 (conversation edge)
-# + 1 when a next turn exists, n_props = role/text/timestamp/turnIndex
-# + optional tool; conversation nodes are untyped targets.
-_LPG_PROJECT_SQL = _BASE_CTE + f"""
-, adjp AS (
-  SELECT conv_id, turn_idx, tool,
-         LEAD(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nxt
-  FROM base
-)
-SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS id,
-       '{_V}Turn' AS labels,
-       CAST(1 + CASE WHEN nxt IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS out_deg,
-       CAST(4 + CASE WHEN tool IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS n_props
-FROM adjp
-UNION ALL
-SELECT DISTINCT '{_CB}' || conv_id AS id, '' AS labels,
-       CAST(0 AS BIGINT) AS out_deg, CAST(0 AS BIGINT) AS n_props
-FROM base
-"""
-
-# kg_negative_samples: SQL replay of the filtered TransE corruption —
-# md5-bridge side choice + md5-bridge index into the ROW_NUMBER-dense
-# entity dictionary, true-triple corruptions removed by NOT EXISTS.
-# kg_kcore: the k=5 peel unrolled as CTE rounds (3 rounds reach the
-# fixpoint at every sf: turns peel, emptied conversation hubs peel,
-# the co-purchase core is stable; one extra round unrolled as guard).
-_KCORE_SQL = _BASE_CTE + f"""
-, adjp AS (
-  SELECT conv_id, turn_idx,
-         LEAD(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nxt
-  FROM base
-), raw AS (
-  SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS u,
-         '{_CB}' || conv_id || '/turn/' || CAST(nxt AS VARCHAR) AS v
-  FROM adjp WHERE nxt IS NOT NULL
-  UNION ALL
-  SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR),
-         '{_CB}' || conv_id FROM base
-  UNION ALL
-  SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR),
-                  's' || CAST(l_suppkey AS VARCHAR) FROM lineitem
-), e0 AS (
-  SELECT DISTINCT u, v FROM (
-    SELECT u, v FROM raw WHERE u <> v
-    UNION ALL SELECT v AS u, u AS v FROM raw WHERE u <> v)
-), k1 AS (SELECT u FROM e0 GROUP BY u HAVING COUNT(*) >= 5),
-e1 AS (SELECT e0.u, e0.v FROM e0
-       JOIN k1 a ON a.u = e0.u JOIN k1 b ON b.u = e0.v),
-k2 AS (SELECT u FROM e1 GROUP BY u HAVING COUNT(*) >= 5),
-e2 AS (SELECT e1.u, e1.v FROM e1
-       JOIN k2 a ON a.u = e1.u JOIN k2 b ON b.u = e1.v),
-k3 AS (SELECT u FROM e2 GROUP BY u HAVING COUNT(*) >= 5),
-e3 AS (SELECT e2.u, e2.v FROM e2
-       JOIN k3 a ON a.u = e2.u JOIN k3 b ON b.u = e2.v)
-SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS degree
-FROM e3 GROUP BY u
-"""
-
-# kg_transe_rank: SQL replay of the filtered TransE ranking —
-# integer-lattice md5-bridge embeddings (list_transform), exact
-# integer L1 distances, the same better-all minus better-known
-# counting aggregations as kge.transe_rank. Ranks are integers, so
-# the oracle is value-exact with no float rounding.
-_TRANSE_RANK_SQL = _BASE_CTE + f"""
-, adjp AS (
-  SELECT conv_id, turn_idx,
-         LEAD(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nxt
-  FROM base
-), pos AS (
-  SELECT DISTINCT subj, pred, obj FROM (
-    SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS subj,
-           '{_RDF_TYPE}' AS pred, '{_V}Turn' AS obj FROM base
-    UNION ALL
-    SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR),
-           '{_V}conversation', '{_CB}' || conv_id FROM base
-    UNION ALL
-    SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR),
-           '{_V}nextTurn',
-           '{_CB}' || conv_id || '/turn/' || CAST(nxt AS VARCHAR)
-    FROM adjp WHERE nxt IS NOT NULL
-  )
-), kents AS (
-  SELECT DISTINCT entity
-  FROM (SELECT subj AS entity FROM pos UNION SELECT obj FROM pos)
-), evec AS (
-  SELECT entity, list_transform(range(0, 16), i ->
-    (('0x' || substr(md5('kge|E|' || entity || '|' || CAST(i AS VARCHAR)),
-      1, 8))::BIGINT % 2001) - 1000) AS v
-  FROM kents
-), test AS (
-  SELECT subj, pred, obj,
-         list_transform(range(0, 16), i ->
-           (('0x' || substr(md5('kge|E|' || subj || '|' || CAST(i AS VARCHAR)),
-             1, 8))::BIGINT % 2001) - 1000
-           + (('0x' || substr(md5('kge|R|' || pred || '|' || CAST(i AS VARCHAR)),
-               1, 8))::BIGINT % 2001) - 1000) AS qvec
-  FROM pos
-  WHERE ('0x' || substr(md5('kge|test|' || subj || '|' || pred || '|' || obj),
-         1, 8))::BIGINT % 97 = 0
-), td AS (
-  SELECT t.subj, t.pred, t.obj, t.qvec,
-         CAST(list_sum(list_transform(range(1, 17),
-              i -> abs(t.qvec[i] - e.v[i]))) AS BIGINT) AS true_d
-  FROM test t JOIN evec e ON e.entity = t.obj
-), scored AS (
-  SELECT td.subj, td.pred, td.obj, td.true_d, e.entity,
-         CAST(list_sum(list_transform(range(1, 17),
-              i -> abs(td.qvec[i] - e.v[i]))) AS BIGINT) AS dd
-  FROM td CROSS JOIN evec e
-), ball AS (
-  SELECT subj, pred, obj,
-         CAST(SUM(CASE WHEN entity <> obj
-                        AND (dd < true_d OR (dd = true_d AND entity < obj))
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_better
-  FROM scored GROUP BY 1, 2, 3
-), kb AS (
-  SELECT s.subj, s.pred, s.obj,
-         CAST(SUM(CASE WHEN s.dd < s.true_d
-                        OR (s.dd = s.true_d AND s.entity < s.obj)
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_known
-  FROM scored s JOIN pos p
-    ON p.subj = s.subj AND p.pred = s.pred AND p.obj = s.entity
-  WHERE s.entity <> s.obj
-  GROUP BY 1, 2, 3
-)
-SELECT b.subj, b.pred, b.obj,
-       CAST(1 + b.n_better - COALESCE(k.n_known, 0) AS BIGINT) AS rank
-FROM ball b LEFT JOIN kb k USING (subj, pred, obj)
-"""
-
-_NEGATIVE_SAMPLES_SQL = _BASE_CTE + f"""
-, adjp AS (
-  SELECT conv_id, turn_idx,
-         LEAD(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nxt
-  FROM base
-), pos AS (
-  SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS subj,
-         '{_V}nextTurn' AS pred,
-         '{_CB}' || conv_id || '/turn/' || CAST(nxt AS VARCHAR) AS obj
-  FROM adjp WHERE nxt IS NOT NULL
-), ents AS (
-  SELECT entity, ROW_NUMBER() OVER (ORDER BY entity) - 1 AS idx
-  FROM (SELECT subj AS entity FROM pos UNION SELECT obj FROM pos)
-), nn AS (SELECT COUNT(*) AS n FROM ents
-), cand AS (
-  SELECT subj, pred, obj, i AS sample_i,
-         CASE WHEN ('0x' || substr(md5(
-                 'neg3|side:' || subj || ':' || pred || ':' || obj
-                 || ':' || CAST(i AS VARCHAR)), 1, 8))::BIGINT % 2 = 0
-              THEN 'obj' ELSE 'subj' END AS side
-  FROM pos CROSS JOIN (SELECT unnest([0, 1]) AS i)
-), withneg AS (
-  SELECT c.subj, c.pred, c.obj, c.sample_i, c.side, e.entity AS neg
-  FROM cand c CROSS JOIN nn
-  JOIN ents e ON e.idx = ('0x' || substr(md5(
-        'neg3:' || c.subj || ':' || c.pred || ':' || c.obj
-        || ':' || CAST(c.sample_i AS VARCHAR) || ':' || c.side),
-        1, 8))::BIGINT % nn.n
-)
-SELECT subj, pred, obj, CAST(sample_i AS INT) AS sample_i, side, neg
-FROM withneg w
-WHERE NOT EXISTS (
-  SELECT 1 FROM pos p
-  WHERE p.pred = w.pred
-    AND p.subj = CASE WHEN w.side = 'subj' THEN w.neg ELSE w.subj END
-    AND p.obj  = CASE WHEN w.side = 'obj'  THEN w.neg ELSE w.obj END
-)
-"""
-
-# kg_random_walks / kg_skipgram_pairs: replay every hash-mod-degree
-# choice through the md5 bridge ('0x'||substr(md5(x),1,8))::BIGINT ==
-# Spark conv(substring(md5(x),1,8),16,10) — the walk is a bounded
-# recursive CTE over the row_number-indexed adjacency, shared by both
-# oracles.
-_WALK_CTE_SQL = """
-WITH RECURSIVE e AS (
-  SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS u,
-                  's' || CAST(l_suppkey AS VARCHAR) AS v
-  FROM lineitem
-), edges AS (
-  SELECT u, v FROM e UNION SELECT v AS u, u AS v FROM e
-), adj AS (
-  SELECT u, v, ROW_NUMBER() OVER (PARTITION BY u ORDER BY v) - 1 AS nbr_idx
-  FROM edges
-), deg AS (
-  SELECT u, COUNT(*) AS degree FROM edges GROUP BY u
-), starts AS (
-  SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS node
-  FROM lineitem WHERE l_partkey % 50 = 0
-), walk AS (
-  SELECT node || '#' || CAST(wi AS VARCHAR) AS walk_id,
-         0 AS step, node
-  FROM starts CROSS JOIN (SELECT unnest([0, 1]) AS wi)
-  UNION ALL
-  SELECT w.walk_id, w.step + 1 AS step, a.v AS node
-  FROM walk w
-  JOIN deg d ON d.u = w.node
-  JOIN adj a ON a.u = w.node
-   AND a.nbr_idx = ('0x' || substr(md5(
-         'r3:' || w.walk_id || ':' || CAST(w.step + 1 AS VARCHAR)
-         || ':' || w.node), 1, 8))::BIGINT % d.degree
-  WHERE w.step < 4
-)
-"""
-
-_RANDOM_WALKS_SQL = _WALK_CTE_SQL + """
-SELECT walk_id, CAST(step AS INT) AS step, node FROM walk
-"""
-
-_SKIPGRAM_SQL = _WALK_CTE_SQL + """
-SELECT a.node AS center, b.node AS context, CAST(COUNT(*) AS BIGINT) AS n
-FROM walk a JOIN walk b
-  ON a.walk_id = b.walk_id AND a.step <> b.step
- AND abs(b.step - a.step) <= 2
-GROUP BY a.node, b.node
-"""
-
-# kg_node2vec_walks: walk_len is fixed at 3, so the 2nd-order walk
-# unrolls into three identical step CTEs — adjacency join + previous-
-# edge mark (left join) + integer cumulative-weight window + md5-bridge
-# interval pick. Integer weights make the cumsum exact in both engines.
-
-
-def _n2v_step(k: int) -> str:
-    return f"""
-, c{k} AS (
-  SELECT f.walk_id, f.cur, e.v,
-         CASE WHEN f.prev IS NULL THEN 1
-              WHEN e.v = f.prev THEN 1
-              WHEN m.u IS NOT NULL THEN 4
-              ELSE 2 END AS w
-  FROM s{k - 1} f
-  JOIN n2v_ed e ON e.u = f.cur
-  LEFT JOIN n2v_ed m ON m.u = f.prev AND m.v = e.v
-), a{k} AS (
-  SELECT *,
-         SUM(w) OVER (PARTITION BY walk_id ORDER BY v
-                      ROWS UNBOUNDED PRECEDING) AS cum,
-         SUM(w) OVER (PARTITION BY walk_id) AS tot,
-         ('0x' || substr(md5('n2v:' || walk_id || ':{k}:' || cur), 1, 8))::BIGINT AS h
-  FROM c{k}
-), s{k} AS (
-  SELECT walk_id, cur AS prev, v AS cur
-  FROM a{k} WHERE cum > h % tot AND cum - w <= h % tot
-)"""
-
-
-_NODE2VEC_SQL = (
-    """
-WITH n2v_ed AS (
-  SELECT DISTINCT CAST(a.l_partkey AS VARCHAR) AS u,
-                  CAST(b.l_partkey AS VARCHAR) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), starts AS (
-  SELECT DISTINCT u AS node FROM n2v_ed WHERE CAST(u AS BIGINT) % 97 = 0
-), s0 AS (
-  SELECT node || '#0' AS walk_id, CAST(NULL AS VARCHAR) AS prev,
-         node AS cur
-  FROM starts
-)"""
-    + _n2v_step(1) + _n2v_step(2) + _n2v_step(3)
-    + """
-SELECT walk_id, CAST(0 AS INT) AS step, cur AS node FROM s0
-UNION ALL SELECT walk_id, CAST(1 AS INT), cur FROM s1
-UNION ALL SELECT walk_id, CAST(2 AS INT), cur FROM s2
-UNION ALL SELECT walk_id, CAST(3 AS INT), cur FROM s3
-"""
-)
-
-_TURN_KHOP_SQL = "WITH RECURSIVE " + _BASE_CTE.strip()[len("WITH "):] + f"""
-, adj AS (
-  SELECT conv_id, turn_idx,
-         LEAD(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nxt
-  FROM base
-), edges AS (
-  SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS u,
-         '{_CB}' || conv_id || '/turn/' || CAST(nxt AS VARCHAR) AS v
-  FROM adj WHERE nxt IS NOT NULL
-), seeds AS (
-  SELECT DISTINCT '{_CB}' || conv_id || '/turn/0' AS node
-  FROM base WHERE turn_idx = 0
-), reach(node, depth) AS (
-  SELECT node, 0 FROM seeds
-  UNION
-  SELECT e.v, r.depth + 1 FROM reach r JOIN edges e ON e.u = r.node
-  WHERE r.depth < 5
-)
-SELECT node, CAST(MIN(depth) AS BIGINT) AS depth
-FROM reach GROUP BY node
-"""
-
-# VALUES + MINUS: role IN-list (the inline binding table) and
-# tool IS NULL (no tool triple exists for the turn ↔ the MINUS group
-# finds no compatible solution on the shared ?turn variable).
-_BGP_VALUES_MINUS_SQL = _BASE_CTE + f"""
-SELECT DISTINCT
-  '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS turn,
-  role AS r
-FROM base
-WHERE role IN ('user', 'assistant') AND tool IS NULL
-"""
-
-# CONSTRUCT respondsTo: consecutive (user → assistant) turn pairs via
-# the LEAD adjacency, template-instantiated as reversed edges.
-_CONSTRUCT_RESPONDS_SQL = _BASE_CTE + f"""
-, adj AS (
-  SELECT conv_id, turn_idx, role,
-         LEAD(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nxt,
-         LEAD(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nxt_role
-  FROM base
-)
-SELECT DISTINCT
-  '{_CB}' || conv_id || '/turn/' || CAST(nxt AS VARCHAR) AS subj,
-  '{_V}respondsTo' AS pred,
-  '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS obj
-FROM adj
-WHERE role = 'user' AND nxt_role = 'assistant'
-"""
-
-# nextTurn+ closure: the chain edges connect consecutive present turns
-# in (conv_id, turn_idx) order, so the transitive closure is exactly
-# every ordered pair of turns within a conversation — a closed-form
-# self-join, value-exact against the Spark fixpoint loop.
-_PATH_CLOSURE_SQL = _BASE_CTE + f"""
-SELECT DISTINCT
-  '{_CB}' || a.conv_id || '/turn/' || CAST(a.turn_idx AS VARCHAR) AS s,
-  '{_CB}' || b.conv_id || '/turn/' || CAST(b.turn_idx AS VARCHAR) AS o
-FROM base a JOIN base b
-  ON a.conv_id = b.conv_id AND a.turn_idx < b.turn_idx
-"""
-
-# ^conversation/nextTurn/(role|tool): conversation IRI joined through
-# its member turns to the role / tool literal of each turn's successor.
-_PATH_NEXT_SPEAKER_SQL = _BASE_CTE + f"""
-, adj AS (
-  SELECT conv_id, turn_idx,
-         LEAD(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nxt
-  FROM base
-)
-SELECT DISTINCT '{_CB}' || a.conv_id AS s, b.role AS o
-FROM adj a JOIN base b ON b.conv_id = a.conv_id AND b.turn_idx = a.nxt
-UNION
-SELECT DISTINCT '{_CB}' || a.conv_id AS s, b.tool AS o
-FROM adj a JOIN base b ON b.conv_id = a.conv_id AND b.turn_idx = a.nxt
-WHERE b.tool IS NOT NULL
-"""
-
-# HLL sketch oracles: the md5-bridge hash and the bin()-length rank are
-# integer arithmetic in both engines; the harmonic sum stays a scaled
-# integer; alpha*m^2*2^32 is repr-inlined from the SAME Python constant
-# the Spark side uses.
-_HLL_REG_CTE = """
-WITH h AS (
-  SELECT ('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 8))::BIGINT AS hv
-  FROM lineitem
-), br AS (
-  SELECT hv // 4194304 AS bucket, hv % 4194304 AS w FROM h
-), regs AS (
-  SELECT bucket,
-         MAX(CASE WHEN w = 0 THEN 23 ELSE 23 - length(bin(w)) END) AS rho
-  FROM br GROUP BY bucket
-)
-"""
-
-_HLL_REGISTERS_SQL = _HLL_REG_CTE + """
-SELECT CAST(bucket AS BIGINT) AS bucket, CAST(rho AS BIGINT) AS rho FROM regs
-"""
-
-
-def _hll_cardinality_sql() -> str:
-    from json_ld_spark.operators.sketches import _alpha
-
-    m = 1 << 10
-    num = repr(float(_alpha(m)) * float(m * m * (1 << 32)))
-    return _HLL_REG_CTE + f"""
-, agg AS (
-  SELECT COUNT(*) AS n_present,
-         CAST(SUM(1::BIGINT << (32 - rho)) AS BIGINT) AS s_present
-  FROM regs
-), vals AS (
-  SELECT CAST({m} AS BIGINT) AS m,
-         CAST({m} - n_present AS BIGINT) AS n_zero,
-         CAST(s_present + ({m} - n_present) * 4294967296 AS BIGINT) AS s_scaled
-  FROM agg
-)
-SELECT m, n_zero, s_scaled,
-       round(CASE WHEN {num} / s_scaled <= {float(2.5 * m)!r} AND n_zero > 0
-                  THEN {float(m)!r} * ln({float(m)!r} / n_zero)
-                  ELSE {num} / s_scaled END, 4) AS estimate_r
-FROM vals
-"""
-
-
-_HLL_CARDINALITY_SQL = _hll_cardinality_sql()
-
-_CM_CELLS_CTE = """
-WITH cells AS (
-  SELECT r.r AS row,
-         ('0x' || substr(md5('cm' || r.r || '|' || CAST(l_orderkey AS VARCHAR)), 1, 8))::BIGINT % 1024 AS bucket
-  FROM lineitem CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS r) r
-), counters AS (
-  SELECT row, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM cells GROUP BY row, bucket
-)
-"""
-
-_CM_COUNTERS_SQL = _CM_CELLS_CTE + """
-SELECT CAST(row AS BIGINT) AS row, bucket, cnt FROM counters
-"""
-
-_BLOOM_SQL = """
-WITH bits AS (
-  SELECT DISTINCT
-    ('0x' || substr(md5('bf' || r.r || '|' || CAST(p_partkey AS VARCHAR)), 1, 8))::BIGINT % 65536 AS bit
-  FROM part CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS r) r
-), probes AS (
-  SELECT DISTINCT CAST(l_partkey AS VARCHAR) AS item
-  FROM lineitem WHERE l_partkey % 7 = 0
-  UNION
-  SELECT DISTINCT CAST(l_partkey + 10000000 AS VARCHAR) AS item
-  FROM lineitem WHERE l_partkey % 7 = 0
-), pb AS (
-  SELECT item,
-    ('0x' || substr(md5('bf' || r.r || '|' || item), 1, 8))::BIGINT % 65536 AS bit
-  FROM probes CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS r) r
-)
-SELECT pb.item AS item,
-       CAST(MIN(CASE WHEN b.bit IS NULL THEN 0 ELSE 1 END) AS BOOLEAN) AS maybe_present
-FROM pb LEFT JOIN bits b ON b.bit = pb.bit
-GROUP BY pb.item
-"""
-
-_CM_ESTIMATES_SQL = _CM_CELLS_CTE + """
-, probes AS (
-  SELECT DISTINCT CAST(l_orderkey AS VARCHAR) AS item
-  FROM lineitem WHERE l_orderkey % 100 = 0
-), pc AS (
-  SELECT item, r.r AS row,
-         ('0x' || substr(md5('cm' || r.r || '|' || item), 1, 8))::BIGINT % 1024 AS bucket
-  FROM probes CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS r) r
-)
-SELECT pc.item AS item, CAST(MIN(COALESCE(c.cnt, 0)) AS BIGINT) AS est
-FROM pc LEFT JOIN counters c ON c.row = pc.row AND c.bucket = pc.bucket
-GROUP BY pc.item
-"""
-
-# Streaming CC over turn chains: the analytic ground truth — every turn
-# in a conversation's chain has component = that conversation's turn 0
-# (lexicographic min of the chain's IRIs). Turns with no adjacency edge
-# (single-turn conversations) never enter the edge stream, hence the
-# n_turns > 1 guard.
-_STREAM_CC_SQL = _BASE_CTE + f"""
-, conv_sizes AS (
-  SELECT conv_id, COUNT(*) AS n_turns FROM base GROUP BY conv_id
-)
-SELECT '{_CB}' || b.conv_id || '/turn/' || CAST(b.turn_idx AS VARCHAR) AS node,
-       '{_CB}' || b.conv_id || '/turn/0' AS component
-FROM base b JOIN conv_sizes cs ON cs.conv_id = b.conv_id
-WHERE cs.n_turns > 1
-"""
-
-# ---- BGP query oracles (operators/bgp.py): the same conjunctive
-# triple patterns written as SQL self-joins on the replayed triples ----
-
-_BGP_ASSISTANT_SQL = _TRIPLES_CTE + f"""
-SELECT DISTINCT r.subj AS turn, c.obj AS conv, i.obj AS idx
-FROM triples r
-JOIN triples c ON c.subj = r.subj AND c.pred = '{_V}conversation'
-JOIN triples i ON i.subj = r.subj AND i.pred = '{_V}turnIndex'
-WHERE r.pred = '{_V}role' AND r.obj = 'assistant'
-"""
-
-_BGP_OPTIONAL_SQL = _TRIPLES_CTE + f"""
-SELECT DISTINCT r.subj AS turn, i.obj AS idx, tl.obj AS tool
-FROM triples r
-JOIN triples i ON i.subj = r.subj AND i.pred = '{_V}turnIndex'
-LEFT JOIN triples tl ON tl.subj = r.subj AND tl.pred = '{_V}tool'
-WHERE r.pred = '{_V}role' AND r.obj = 'assistant'
-"""
-
-_BGP_UNION_SQL = _TRIPLES_CTE + f"""
-SELECT r.subj AS turn, CAST(NULL AS VARCHAR) AS tool
-FROM triples r WHERE r.pred = '{_V}role' AND r.obj = 'user'
-UNION
-SELECT tl.subj AS turn, tl.obj AS tool
-FROM triples tl WHERE tl.pred = '{_V}tool'
-"""
-
-_BGP_PAIRS_SQL = _TRIPLES_CTE + f"""
-SELECT DISTINCT u.subj AS u, a.subj AS a, uc.obj AS conv
-FROM triples u
-JOIN triples uc ON uc.subj = u.subj AND uc.pred = '{_V}conversation'
-JOIN triples a ON a.pred = '{_V}role' AND a.obj = 'assistant'
-JOIN triples ac ON ac.subj = a.subj AND ac.pred = '{_V}conversation'
-               AND ac.obj = uc.obj
-WHERE u.pred = '{_V}role' AND u.obj = 'user'
-"""
-
-_BGP_AGG_SQL = _TRIPLES_CTE + f"""
-SELECT c.obj AS conv, r.obj AS role, COUNT(*) AS n,
-       MIN(CAST(i.obj AS INT)) AS min_idx,
-       MAX(CAST(i.obj AS INT)) AS max_idx
-FROM triples c
-JOIN triples r ON r.subj = c.subj AND r.pred = '{_V}role'
-JOIN triples i ON i.subj = c.subj AND i.pred = '{_V}turnIndex'
-WHERE c.pred = '{_V}conversation'
-GROUP BY c.obj, r.obj
-HAVING COUNT(*) >= 2
-"""
-
-_BGP_SUBQ_SQL = _TRIPLES_CTE + f"""
-, full_convs AS (
-  SELECT c.obj AS conv FROM triples c
-  WHERE c.pred = '{_V}conversation'
-  GROUP BY c.obj HAVING COUNT(*) >= 16
-)
-SELECT DISTINCT c.subj AS turn, c.obj AS conv, r.obj AS role
-FROM triples c
-JOIN triples r ON r.subj = c.subj AND r.pred = '{_V}role'
-JOIN full_convs f ON f.conv = c.obj
-WHERE c.pred = '{_V}conversation'
-"""
-
-_BGP_TOPK_SQL = _TRIPLES_CTE + f"""
-SELECT c.obj AS conv, COUNT(*) AS n,
-       string_agg(r.obj, ',' ORDER BY r.obj) AS roles
-FROM triples c
-JOIN triples r ON r.subj = c.subj AND r.pred = '{_V}role'
-WHERE c.pred = '{_V}conversation'
-GROUP BY c.obj
-ORDER BY n DESC, conv
-LIMIT 10 OFFSET 5
-"""
-
-# All-pairs simhash oracle (md5 token hash = bit-identical across
-# engines; pigeonhole recall of the Spark block-LSH is exactly 1.0 for
-# hamming < n_blocks, so all-pairs equals the LSH output)
-_SIMHASH_ORACLE_SQL = _DUP_CORPUS + r"""
-, tok AS (
-  SELECT doc_id, t.e AS tok
-  FROM corpus CROSS JOIN UNNEST(
-    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS t(e)
-), h AS (
-  SELECT doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h FROM tok
-), bits AS (
-  SELECT doc_id, b.i AS i,
-         SUM(CASE WHEN (h >> CAST(b.i AS INT)) & 1 = 1 THEN 1 ELSE -1 END) AS vote
-  FROM h CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS i) b
-  GROUP BY doc_id, b.i
-), sim AS (
-  SELECT doc_id,
-         CAST(SUM(CASE WHEN vote > 0 THEN (CAST(1 AS BIGINT) << CAST(i AS INT))
-                       ELSE 0 END) AS BIGINT) AS simhash
-  FROM bits GROUP BY doc_id
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-FROM sim a JOIN sim b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-"""
-
-_FINGERPRINT_SQL = r"""
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS words
-  FROM documents
-)
-SELECT doc_id,
-       list_min(list_transform(
-         generate_series(1, greatest(len(words) - 3, 1)),
-         i -> md5(array_to_string(list_slice(words, i, i + 3), ' ')))) AS fingerprint
-FROM w
-"""
-
-# synthesize_media payloads are deterministic ASCII (hexdigest x4), so
-# DuckDB replays the fake-feature extraction exactly: sha256 of the
-# payload string, 8 x 32-bit windows / 2^32, each truncated to FLOAT to
-# mirror the Arrow float32 feature column, summed in double
-_MM_FEATURES_SQL = (
-    """
-WITH m AS (
-  SELECT i AS media_id,
-         (['image','audio','video'])[CAST(i % 3 AS INT) + 1] AS kind,
-         sha256(repeat(sha256('media' || CAST(i AS VARCHAR)), 4)) AS h
-  FROM generate_series(0, 95) t(i)
-)
-SELECT CAST(media_id AS BIGINT) AS media_id, kind, true AS decode_ok,
-       round("""
-    + " + ".join(
-        f"CAST(CAST(('0x' || substr(h, {8 * i + 1}, 8))::BIGINT / 4294967296.0 AS FLOAT) AS DOUBLE)"
-        for i in range(8)
-    )
-    + """, 6) AS feat_sum_r
-FROM m
-"""
-)
-
-# synthesize_wav_media: real PCM16 WAVs of trunc(6000*sin(2π f k/8000))
-# with f = 220 + 55*(i%16); the decoded features are integer-exact, so
-# this regenerates the waveform analytically (sin/trunc verified
-# bit-identical between Python and DuckDB on this platform)
-# synthesize_png_media(n=48): w=8+i%9, h=8+(3i)%9, per-pixel channels
-# r=(7x+13y+i)%256 g=(3x+5y+2i)%256 b=(11x+y+3i)%256 — the engine
-# decodes the actual PNG bytes; the oracle regenerates the pixels.
-# video oracle: regenerate the closed-form AVI frames analytically
-# (dims w=8+i%5, h=6+i%4, nf=2+i%3; generate_series bounds are the
-# maxima, masked by the per-video dims)
-_VIDEO_FEATURES_SQL = """
-WITH dims AS (
-  SELECT s.i AS i, 8 + s.i % 5 AS w, 6 + s.i % 4 AS h, 2 + s.i % 3 AS nf
-  FROM generate_series(0, 23) s(i)
-), px AS (
-  SELECT d.i, tt.t, yy.y, xx.x,
-         (7*xx.x + 13*yy.y + 17*tt.t + d.i) % 256 AS r,
-         (3*xx.x + 5*yy.y + 23*tt.t + 2*d.i) % 256 AS g,
-         (11*xx.x + yy.y + 29*tt.t + 3*d.i) % 256 AS b
-  FROM dims d
-  CROSS JOIN generate_series(0, 3) tt(t)
-  CROSS JOIN generate_series(0, 8) yy(y)
-  CROSS JOIN generate_series(0, 11) xx(x)
-  WHERE tt.t < d.nf AND yy.y < d.h AND xx.x < d.w
-), sums AS (
-  SELECT i, SUM(r)::BIGINT AS sum_r, SUM(g)::BIGINT AS sum_g,
-         SUM(b)::BIGINT AS sum_b
-  FROM px GROUP BY i
-), mo AS (
-  SELECT d.i,
-         SUM(ABS(((7*xx.x + 13*yy.y + 17*tt.t + d.i) % 256)
-               - ((7*xx.x + 13*yy.y + 17*(tt.t-1) + d.i) % 256)))::BIGINT AS motion
-  FROM dims d
-  CROSS JOIN generate_series(1, 3) tt(t)
-  CROSS JOIN generate_series(0, 8) yy(y)
-  CROSS JOIN generate_series(0, 11) xx(x)
-  WHERE tt.t < d.nf AND yy.y < d.h AND xx.x < d.w
-  GROUP BY d.i
-)
-SELECT d.i AS media_id, d.w::BIGINT AS width, d.h::BIGINT AS height,
-       d.nf::BIGINT AS n_frames, s.sum_r, s.sum_g, s.sum_b,
-       COALESCE(m.motion, 0)::BIGINT AS motion
-FROM dims d JOIN sums s ON s.i = d.i LEFT JOIN mo m ON m.i = d.i
-"""
-
-# frame-extract oracle: sampled frames are t = 0, 2, ... < nf; stats
-# are the same closed-form sums per (i, t)
-_FRAME_EXTRACT_SQL = """
-WITH dims AS (
-  SELECT s.i AS i, 8 + s.i % 5 AS w, 6 + s.i % 4 AS h, 2 + s.i % 3 AS nf
-  FROM generate_series(0, 23) s(i)
-)
-SELECT d.i AS media_id, tt.t AS frame_idx,
-       SUM((7*xx.x + 13*yy.y + 17*tt.t + d.i) % 256)::BIGINT AS sum_r,
-       SUM((3*xx.x + 5*yy.y + 23*tt.t + 2*d.i) % 256)::BIGINT AS sum_g,
-       SUM((11*xx.x + yy.y + 29*tt.t + 3*d.i) % 256)::BIGINT AS sum_b
-FROM dims d
-CROSS JOIN generate_series(0, 3) tt(t)
-CROSS JOIN generate_series(0, 8) yy(y)
-CROSS JOIN generate_series(0, 11) xx(x)
-WHERE tt.t < d.nf AND tt.t % 2 = 0 AND yy.y < d.h AND xx.x < d.w
-GROUP BY d.i, tt.t
-"""
-
-_IMAGE_FEATURES_SQL = """
-WITH px AS (
-  SELECT m.i AS media_id,
-         8 + m.i % 9 AS w, 8 + (3 * m.i) % 9 AS h,
-         x.x AS x, y.y AS y,
-         (7 * x.x + 13 * y.y + m.i) % 256 AS r,
-         (3 * x.x + 5 * y.y + 2 * m.i) % 256 AS g,
-         (11 * x.x + y.y + 3 * m.i) % 256 AS b
-  FROM generate_series(0, 47) m(i)
-  CROSS JOIN generate_series(0, 15) x(x)
-  CROSS JOIN generate_series(0, 15) y(y)
-  WHERE x.x < 8 + m.i % 9 AND y.y < 8 + (3 * m.i) % 9
-)
-SELECT CAST(media_id AS BIGINT) AS media_id,
-       CAST(w AS BIGINT) AS width,
-       CAST(h AS BIGINT) AS height,
-       CAST(3 AS BIGINT) AS channels,
-       CAST(SUM(r) AS BIGINT) AS sum_r,
-       CAST(SUM(g) AS BIGINT) AS sum_g,
-       CAST(SUM(b) AS BIGINT) AS sum_b,
-       CAST(MAX(r + 2 * g + b) AS BIGINT) AS max_luma
-FROM px GROUP BY media_id, w, h
-"""
-
-_AUDIO_DECIMATE_SQL = """
-WITH s AS (
-  SELECT m.i AS media_id,
-         CAST(trunc(6000 * sin(2 * pi() * (220.0 + 55.0 * (m.i % 16))
-                    * (4 * t.k) / 8000.0)) AS BIGINT) AS v
-  FROM generate_series(0, 31) m(i) CROSS JOIN generate_series(0, 399) t(k)
-)
-SELECT CAST(media_id AS BIGINT) AS media_id,
-       CAST(1600 AS BIGINT) AS n_in, CAST(400 AS BIGINT) AS n_out,
-       CAST(2000 AS BIGINT) AS out_rate,
-       CAST(SUM(ABS(v)) AS BIGINT) AS sum_abs_out,
-       CAST(MAX(ABS(v)) AS BIGINT) AS max_abs_out
-FROM s GROUP BY media_id
-"""
-
-_DHASH_NEARDUP_SQL = """
-WITH img AS (
-  SELECT i AS media_id, 16 + i % 9 AS w, 16 + (3 * i) % 9 AS h, 0 AS bump
-  FROM generate_series(0, 47) m(i)
-  UNION ALL
-  SELECT 100 + i, 16 + i % 9, 16 + (3 * i) % 9, 16
-  FROM generate_series(0, 15) m(i)
-), coef AS (
-  SELECT media_id, w, h, bump,
-         3 + ((media_id % 100) * 7) % 11 AS a,
-         1 + ((media_id % 100) * 5) % 13 AS b,
-         1 + (media_id % 100) % 7 AS c,
-         (media_id % 100) * 17 AS d
-  FROM img
-), grid AS (
-  SELECT media_id, gx.x AS gx, gy.y AS gy,
-         (gx.x * w) // 9 AS sx, (gy.y * h) // 8 AS sy, bump, a, b, c, d
-  FROM coef
-  CROSS JOIN generate_series(0, 8) gx(x)
-  CROSS JOIN generate_series(0, 7) gy(y)
-), gray AS (
-  SELECT media_id, gx, gy,
-         ((a * sx * sx + b * sy + d
-           + CASE WHEN sx = 0 THEN bump ELSE 0 END) % 256
-          + 2 * ((b * sx + c * sy * sy + 2 * d) % 256)
-          + (c * sx + a * sy + 3 * d) % 256) // 4 AS g
-  FROM grid
-), bits AS (
-  SELECT a.media_id, a.gy, a.gx AS x,
-         CASE WHEN b.g > a.g THEN 1 ELSE 0 END AS bit
-  FROM gray a JOIN gray b
-    ON a.media_id = b.media_id AND a.gy = b.gy AND b.gx = a.gx + 1
-  WHERE a.gx < 8
-), ham AS (
-  SELECT p.media_id AS id_a, q.media_id AS id_b,
-         SUM(CASE WHEN p.bit <> q.bit THEN 1 ELSE 0 END) AS hamming
-  FROM bits p JOIN bits q
-    ON p.gy = q.gy AND p.x = q.x AND p.media_id < q.media_id
-  GROUP BY p.media_id, q.media_id
-)
-SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-       CAST(hamming AS BIGINT) AS hamming
-FROM ham WHERE hamming <= 6
-"""
-
-_IMAGE_RESIZE_SQL = """
-WITH src AS (
-  SELECT i, 8 + i % 9 AS w, 8 + (3 * i) % 9 AS h
-  FROM generate_series(0, 47) m(i)
-), px AS (
-  SELECT s.i AS media_id, s.w, s.h,
-         (xo.x * s.w) // 6 AS sx, (yo.y * s.h) // 5 AS sy
-  FROM src s
-  CROSS JOIN generate_series(0, 5) xo(x)
-  CROSS JOIN generate_series(0, 4) yo(y)
-)
-SELECT CAST(media_id AS BIGINT) AS media_id,
-       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-       CAST(6 AS BIGINT) AS out_w, CAST(5 AS BIGINT) AS out_h,
-       CAST(SUM((7 * sx + 13 * sy + media_id) % 256) AS BIGINT) AS sum_r,
-       CAST(SUM((3 * sx + 5 * sy + 2 * media_id) % 256) AS BIGINT) AS sum_g,
-       CAST(SUM((11 * sx + sy + 3 * media_id) % 256) AS BIGINT) AS sum_b
-FROM px GROUP BY media_id, w, h
-"""
-
-_AUDIO_FEATURES_SQL = """
-WITH s AS (
-  SELECT m.i AS media_id, t.k AS k,
-         CAST(trunc(6000 * sin(2 * pi() * (220.0 + 55.0 * (m.i % 16)) * t.k / 8000.0)) AS BIGINT) AS v
-  FROM generate_series(0, 31) m(i) CROSS JOIN generate_series(0, 1599) t(k)
-), z AS (
-  SELECT media_id, v,
-         CASE WHEN (v >= 0) <> (LAG(v) OVER (PARTITION BY media_id ORDER BY k) >= 0)
-              THEN 1 ELSE 0 END AS zc
-  FROM s
-)
-SELECT CAST(media_id AS BIGINT) AS media_id,
-       COUNT(*) AS n_samples,
-       CAST(8000 AS BIGINT) AS sample_rate,
-       CAST(MAX(abs(v)) AS BIGINT) AS max_abs,
-       CAST(SUM(abs(v)) AS BIGINT) AS sum_abs,
-       CAST(SUM(zc) AS BIGINT) AS zero_crossings
-FROM z GROUP BY media_id
-"""
-
-# synthesize_media(n=96): video rows are media_id % 3 = 2 with
-# duration_ms = 1000 + 33*media_id; frame plan = 0..duration step 500
-_FRAME_PLAN_SQL = """
-SELECT media_id, CAST(s AS BIGINT) AS sample_ms FROM (
-  SELECT CAST(i AS BIGINT) AS media_id,
-         unnest(generate_series(0, 1000 + CAST(i * 33 AS INT), 500)) AS s
-  FROM generate_series(0, 95) t(i)
-  WHERE i % 3 = 2
-)
-"""
-
-# ANN LSH oracles: the hyperplanes are deterministic constants
-# (similarity._hyperplane), so DuckDB replays the banded signatures from
-# inline plane literals and then runs the same bucket join +
-# exact-cosine ranking. Float caveat: the engine computes signatures
-# with a numpy/BLAS matmul (_band_sigs_udf) whose accumulation order
-# differs from DuckDB's sequential list_dot_product — a dot product
-# epsilon-close to 0 could in principle flip a sign bit between
-# engines. Accepted tolerance: the deterministic plane family is fixed,
-# so any such flip would be stable and surface immediately as a
-# mismatch at sf0.01 (none observed across rounds); margins on unit-ish
-# vectors are ~1e-2, ulp noise is ~1e-16. This upgrades the
-# "approximate" queries to full value oracles: approximate vs the true
-# top-k, but deterministic given the fixed plane family.
-
-def _ann_keys_cte(n_bands: int = 4, band_bits: int = 6) -> str:
-    from json_ld_spark.operators.similarity import _hyperplane
-
-    per_band = []
-    for b in range(n_bands):
-        bits = []
-        for i in range(band_bits):
-            plane = _hyperplane(64, b * band_bits + i)
-            lit = "[" + ", ".join(repr(x) for x in plane) + "]"
-            bits.append(
-                f"(CASE WHEN list_dot_product(v, {lit}) >= 0 THEN {1 << i} ELSE 0 END)"
-            )
-        per_band.append(
-            f"SELECT vec_id, v, {b} AS band, {' + '.join(bits)} AS sig FROM e"
-        )
-    return (
-        "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),\n"
-        "keys AS (\n  " + "\n  UNION ALL ".join(per_band) + "\n)"
-    )
-
-
-_ANN_LSH_SQL = _ann_keys_cte() + """
-, cands AS (
-  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS cand_id
-  FROM keys q JOIN keys c ON q.band = c.band AND q.sig = c.sig
-  WHERE q.vec_id % 100 = 0 AND c.vec_id <> q.vec_id
-), scored AS (
-  SELECT query_id, cand_id, list_cosine_similarity(eq.v, ec.v) AS cos
-  FROM cands
-  JOIN e eq ON eq.vec_id = query_id
-  JOIN e ec ON ec.vec_id = cand_id
-)
-SELECT query_id, cand_id,
-       ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) AS rank,
-       round(cos, 4) AS cos_r
-FROM scored
-QUALIFY rank <= 5
-"""
-
-_ANN_NEAR_DUP_SQL = _ann_keys_cte() + """
-, cands AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-  FROM keys a JOIN keys b ON a.band = b.band AND a.sig = b.sig
-  WHERE a.vec_id < b.vec_id
-)
-SELECT vec_a, vec_b, round(list_cosine_similarity(ea.v, eb.v), 4) AS cos_r
-FROM cands
-JOIN e ea ON ea.vec_id = vec_a
-JOIN e eb ON eb.vec_id = vec_b
-WHERE list_cosine_similarity(ea.v, eb.v) >= 0.3
-"""
-
-def _ann_ivfpq_sql(
-    n_cells: int = 16, lloyd_rounds: int = 2, m: int = 8, n_codes: int = 32,
-    pq_rounds: int = 2, n_probe: int = 6, n_assign: int = 2, rerank: int = 80,
-    k: int = 5, dim: int = 64,
-) -> str:
-    """Full IVF-PQ replay (pq_codebooks + ivfpq_topk, similarity.py).
-    L2 is list_zip p->(p[1]-p[2])^2 summed by list_sum — the same
-    left-to-right order as Spark's zip_with/aggregate fold, so code
-    assignments and ADC values agree bit-for-bit before rounding."""
-    sub_d = dim // m
-    l2 = lambda a, b: (
-        f"list_sum(list_transform(list_zip({a}, {b}), p -> (p[1]-p[2])^2))"
-    )
-    seeds = f"""
-, cents0 AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY h, vec_id) - 1 AS cell, v AS centroid
-  FROM (SELECT vec_id, v,
-               ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT AS h
-        FROM e)
-  ORDER BY h, vec_id
-  LIMIT {n_cells}
-)"""
-    rounds = ""
-    prev = "cents0"
-    for r in range(1, lloyd_rounds + 1):
-        rounds += f"""
-, a{r} AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT e.vec_id, e.v, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.centroid) DESC, c.cell ASC
-           ) AS rk
-    FROM e CROSS JOIN {prev} c)
-  WHERE rk = 1
-), cents{r} AS (
-  SELECT cell, list(m ORDER BY idx) AS centroid FROM (
-    SELECT cell, g.idx, round(AVG(v[g.idx]), 6) AS m
-    FROM a{r} CROSS JOIN generate_series(1, {dim}) AS g(idx)
-    GROUP BY cell, g.idx)
-  GROUP BY cell
-)"""
-        prev = f"cents{r}"
-    # residuals vs PRIMARY cell + long-form subspaces + PQ training
-    pq = f"""
-, prim AS (
-  SELECT vec_id, v, centroid FROM (
-    SELECT e.vec_id, e.v, c.centroid,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.centroid) DESC, c.cell ASC
-           ) AS rk
-    FROM e CROSS JOIN {prev} c)
-  WHERE rk = 1
-), res AS (
-  SELECT vec_id, list_transform(list_zip(v, centroid), p -> p[1]-p[2]) AS r
-  FROM prim
-), sub AS (
-  SELECT vec_id, s.j, (r)[(s.j*{sub_d}+1):((s.j+1)*{sub_d})] AS sv
-  FROM res CROSS JOIN generate_series(0, {m - 1}) AS s(j)
-), pqseeds AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY h, vec_id) - 1 AS code, vec_id
-  FROM (SELECT vec_id,
-               ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT AS h
-        FROM e)
-  ORDER BY h, vec_id
-  LIMIT {n_codes}
-), pcb0 AS (
-  SELECT sub.j, pqseeds.code, sub.sv AS centroid
-  FROM pqseeds JOIN sub USING (vec_id)
-)"""
-    pprev = "pcb0"
-    for r in range(1, pq_rounds + 1):
-        pq += f"""
-, pa{r} AS (
-  SELECT vid, j, code, sv FROM (
-    SELECT s.vec_id AS vid, s.j, c.code, s.sv,
-           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.j
-             ORDER BY {l2("s.sv", "c.centroid")} ASC, c.code ASC) AS rk
-    FROM sub s JOIN {pprev} c ON s.j = c.j)
-  WHERE rk = 1
-), pcb{r} AS (
-  SELECT j, code, list(m ORDER BY idx) AS centroid FROM (
-    SELECT j, code, g.idx, round(AVG(sv[g.idx]), 6) AS m
-    FROM pa{r} CROSS JOIN generate_series(1, {sub_d}) AS g(idx)
-    GROUP BY j, code, g.idx)
-  GROUP BY j, code
-)"""
-        pprev = f"pcb{r}"
-    return f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings){seeds}{rounds}{pq}
-, cassign AS (
-  SELECT vec_id AS cand_id, cell, centroid FROM (
-    SELECT e.vec_id, e.v AS v, c.cell, c.centroid,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.centroid) DESC, c.cell ASC
-           ) AS rk
-    FROM e CROSS JOIN {prev} c)
-  WHERE rk <= {n_assign}
-), csub AS (
-  SELECT ca.cand_id, ca.cell, s.j,
-         (list_transform(list_zip(e.v, ca.centroid), p -> p[1]-p[2]))
-           [(s.j*{sub_d}+1):((s.j+1)*{sub_d})] AS sv
-  FROM cassign ca JOIN e ON e.vec_id = ca.cand_id
-  CROSS JOIN generate_series(0, {m - 1}) AS s(j)
-), ccodes AS (
-  SELECT cand_id, cell, j, code FROM (
-    SELECT cs.cand_id, cs.cell, cs.j, c.code,
-           ROW_NUMBER() OVER (PARTITION BY cs.cand_id, cs.cell, cs.j
-             ORDER BY {l2("cs.sv", "c.centroid")} ASC, c.code ASC) AS rk
-    FROM csub cs JOIN {pprev} c ON cs.j = c.j)
-  WHERE rk = 1
-), qprobe AS (
-  SELECT vec_id AS query_id, cell, centroid FROM (
-    SELECT e.vec_id, c.cell, c.centroid,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.centroid) DESC, c.cell ASC
-           ) AS rk
-    FROM e CROSS JOIN {prev} c
-    WHERE e.vec_id % 100 = 0)
-  WHERE rk <= {n_probe}
-), qsub AS (
-  SELECT qp.query_id, qp.cell, s.j,
-         (list_transform(list_zip(e.v, qp.centroid), p -> p[1]-p[2]))
-           [(s.j*{sub_d}+1):((s.j+1)*{sub_d})] AS sv
-  FROM qprobe qp JOIN e ON e.vec_id = qp.query_id
-  CROSS JOIN generate_series(0, {m - 1}) AS s(j)
-), adc AS (
-  SELECT query_id, cand_id, cell,
-         round(list_sum(list(d2 ORDER BY j)), 6) AS adc
-  FROM (
-    SELECT q.query_id, cc.cand_id, q.cell, q.j,
-           {l2("q.sv", "pc.centroid")} AS d2
-    FROM qsub q
-    JOIN ccodes cc ON cc.cell = q.cell AND cc.j = q.j
-    JOIN {pprev} pc ON pc.j = q.j AND pc.code = cc.code
-    WHERE cc.cand_id <> q.query_id)
-  GROUP BY query_id, cand_id, cell
-), best AS (
-  SELECT query_id, cand_id, MIN(adc) AS adc
-  FROM adc GROUP BY query_id, cand_id
-), shortlist AS (
-  SELECT query_id, cand_id FROM (
-    SELECT query_id, cand_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-             ORDER BY adc ASC, cand_id ASC) AS srk
-    FROM best)
-  WHERE srk <= {rerank}
-), exact AS (
-  SELECT sl.query_id, sl.cand_id,
-         list_cosine_similarity(eq.v, ec.v) AS cos
-  FROM shortlist sl
-  JOIN e eq ON eq.vec_id = sl.query_id
-  JOIN e ec ON ec.vec_id = sl.cand_id
-)
-SELECT query_id, cand_id,
-       ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) AS rank,
-       round(cos, 4) AS cos_r
-FROM exact
-QUALIFY rank <= {k}
-"""
-
-
-_ANN_IVFPQ_SQL = _ann_ivfpq_sql()
-
-
-def _ivf_codebook_prefix(
-    n_cells: int, lloyd_rounds: int, dim: int,
-) -> tuple[str, str]:
-    """Shared codebook-replay CTEs (ivf_centroids, similarity.py):
-    seeds are the n_cells vectors with the smallest md5-bridge hash;
-    each Lloyd round assigns by cosine argmax (tie → cell asc, matching
-    _nearest_cells' array_sort on (neg_cos, cell)) and recomputes
-    component-wise means rounded to 6 decimals (the engine quantizes
-    identically, so the codebooks are bit-comparable). Returns
-    (sql_prefix, final_cents_cte_name)."""
-    seeds = f"""
-, cents0 AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY h, vec_id) - 1 AS cell, v AS centroid
-  FROM (SELECT vec_id, v,
-               ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT AS h
-        FROM e)
-  ORDER BY h, vec_id
-  LIMIT {n_cells}
-)"""
-    rounds = ""
-    prev = "cents0"
-    for r in range(1, lloyd_rounds + 1):
-        rounds += f"""
-, a{r} AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT e.vec_id, e.v, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.centroid) DESC, c.cell ASC
-           ) AS rk
-    FROM e CROSS JOIN {prev} c)
-  WHERE rk = 1
-), cents{r} AS (
-  SELECT cell, list(m ORDER BY idx) AS centroid FROM (
-    SELECT cell, g.idx, round(AVG(v[g.idx]), 6) AS m
-    FROM a{r} CROSS JOIN generate_series(1, {dim}) AS g(idx)
-    GROUP BY cell, g.idx)
-  GROUP BY cell
-)"""
-        prev = f"cents{r}"
-    prefix = (
-        "\nWITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v "
-        f"FROM embeddings){seeds}{rounds}"
-    )
-    return prefix, prev
-
-
-def _ann_ivf_sql(
-    n_cells: int = 16, lloyd_rounds: int = 2, n_probe: int = 6,
-    n_assign: int = 2, k: int = 5, dim: int = 64,
-) -> str:
-    """Full IVF replay (ivf_centroids + ivf_topk, similarity.py) —
-    codebook CTEs shared via _ivf_codebook_prefix."""
-    prefix, prev = _ivf_codebook_prefix(n_cells, lloyd_rounds, dim)
-    return f"""{prefix}
-, idx AS (
-  SELECT cand_id, cell FROM (
-    SELECT e.vec_id AS cand_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.centroid) DESC, c.cell ASC
-           ) AS rk
-    FROM e CROSS JOIN {prev} c)
-  WHERE rk <= {n_assign}
-), probe AS (
-  SELECT query_id, cell FROM (
-    SELECT e.vec_id AS query_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.centroid) DESC, c.cell ASC
-           ) AS rk
-    FROM e CROSS JOIN {prev} c
-    WHERE e.vec_id % 100 = 0)
-  WHERE rk <= {n_probe}
-), cands AS (
-  SELECT DISTINCT query_id, cand_id
-  FROM probe JOIN idx USING (cell)
-  WHERE cand_id <> query_id
-), scored AS (
-  SELECT query_id, cand_id, list_cosine_similarity(eq.v, ec.v) AS cos
-  FROM cands
-  JOIN e eq ON eq.vec_id = query_id
-  JOIN e ec ON ec.vec_id = cand_id
-)
-SELECT query_id, cand_id,
-       ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) AS rank,
-       round(cos, 4) AS cos_r
-FROM scored
-QUALIFY rank <= {k}
-"""
-
-
-_ANN_IVF_SQL = _ann_ivf_sql()
-
-
-def _semantic_dedup_sql(
-    n_cells: int = 16, lloyd_rounds: int = 2, tau: float = 0.3,
-    dim: int = 64,
-) -> str:
-    """dedup_semantic replay: shared IVF codebook CTEs, nearest-cell
-    assignment, within-cell lower-id cosine>=tau pruning. The cosine
-    threshold compares bit-identical doubles (list_cosine_similarity
-    and the zip_with kernel both fold in array order)."""
-    prefix, prev = _ivf_codebook_prefix(n_cells, lloyd_rounds, dim)
-    return f"""{prefix}
-, assigned AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT e.vec_id, e.v, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.centroid) DESC, c.cell ASC
-           ) AS rk
-    FROM e CROSS JOIN {prev} c)
-  WHERE rk = 1
-), dropped AS (
-  SELECT DISTINCT b.vec_id
-  FROM assigned a JOIN assigned b
-    ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE list_cosine_similarity(a.v, b.v) >= {tau!r}
-)
-SELECT s.vec_id, CAST(s.cell AS INT) AS cell,
-       (d.vec_id IS NULL) AS kept
-FROM assigned s LEFT JOIN dropped d ON d.vec_id = s.vec_id
-"""
-
-
-_SEMANTIC_DEDUP_SQL = _semantic_dedup_sql()
-
-_ANN_SQL = """
-WITH q AS (
-  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-  FROM embeddings WHERE vec_id % 100 = 0
-), scored AS (
-  SELECT q.query_id, c.vec_id AS cand_id,
-         list_cosine_similarity(CAST(c.embedding AS DOUBLE[]), q.qv) AS cos
-  FROM embeddings c CROSS JOIN q
-  WHERE c.vec_id <> q.query_id
-)
-SELECT query_id, cand_id,
-       ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id ASC) AS rank,
-       round(cos, 4) AS cos_r
-FROM scored
-QUALIFY rank <= 5
-"""
-
-_ANN_MARGIN_SQL = r"""
-WITH x AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id % 2 = 0
-), y AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id % 2 = 1
-), kxy AS (
-  SELECT x.vec_id AS q, y.vec_id AS c,
-         list_cosine_similarity(x.v, y.v) AS cos,
-         ROW_NUMBER() OVER (PARTITION BY x.vec_id
-                            ORDER BY list_cosine_similarity(x.v, y.v) DESC,
-                                     y.vec_id ASC) AS rk
-  FROM x CROSS JOIN y
-  QUALIFY rk <= 4
-), kyx AS (
-  SELECT y.vec_id AS q, x.vec_id AS c,
-         list_cosine_similarity(y.v, x.v) AS cos,
-         ROW_NUMBER() OVER (PARTITION BY y.vec_id
-                            ORDER BY list_cosine_similarity(y.v, x.v) DESC,
-                                     x.vec_id ASC) AS rk
-  FROM y CROSS JOIN x
-  QUALIFY rk <= 4
-), ax AS (
-  SELECT q, list_reduce(list_prepend(0.0::DOUBLE, list(cos ORDER BY rk)),
-                        (a, b) -> a + b) / COUNT(*) AS ax
-  FROM kxy GROUP BY q
-), ay AS (
-  SELECT q, list_reduce(list_prepend(0.0::DOUBLE, list(cos ORDER BY rk)),
-                        (a, b) -> a + b) / COUNT(*) AS ay
-  FROM kyx GROUP BY q
-), m AS (
-  SELECT k.q, k.c, k.cos / ((ax.ax + ay.ay) / 2.0) AS margin,
-         ROW_NUMBER() OVER (PARTITION BY k.q
-                            ORDER BY k.cos / ((ax.ax + ay.ay) / 2.0) DESC,
-                                     k.c ASC) AS mr
-  FROM kxy k JOIN ax ON ax.q = k.q JOIN ay ON ay.q = k.c
-  QUALIFY mr = 1
-)
-SELECT CAST(q AS BIGINT) AS x_id, CAST(c AS BIGINT) AS y_id,
-       round(margin, 6) AS margin_r
-FROM m WHERE round(margin, 6) >= 1.2
-"""
-
-_ANN_CLUSTERS_SQL = r"""
-WITH RECURSIVE sub AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-  FROM embeddings WHERE vec_id % 4 = 0
-), scored AS (
-  SELECT a.vec_id AS qid, b.vec_id AS cid,
-         list_cosine_similarity(a.v, b.v) AS cos
-  FROM sub a JOIN sub b ON a.vec_id <> b.vec_id
-), knn AS (
-  SELECT qid, cid, cos,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cid ASC) AS rank
-  FROM scored
-  QUALIFY rank <= 4
-), edges AS (
-  SELECT qid AS u, cid AS v FROM knn WHERE round(cos, 4) >= 0.25
-), sym AS (
-  SELECT u, v FROM edges UNION SELECT v AS u, u AS v FROM edges
-), reach(a, b) AS (
-  SELECT vec_id, vec_id FROM sub
-  UNION
-  SELECT r.a, s.v FROM reach r JOIN sym s ON s.u = r.b
-)
-SELECT CAST(a AS BIGINT) AS node, CAST(MIN(b) AS BIGINT) AS cluster
-FROM reach GROUP BY a
-"""
-
-# as-of oracle: DuckDB's native ASOF LEFT JOIN is the ground truth for
-# the union-marker window implementation; the snapshot stream is
-# deduped per (user, ts) on both sides so equal-timestamp picks agree
-_ASOF_SQL = """
-WITH snaps AS (
-  SELECT user_id, ts, MAX(value) AS snap_value
-  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-)
-SELECT e.event_id, e.user_id, e.event_type,
-       s.ts AS asof_ts, s.snap_value AS asof_value
-FROM events e ASOF LEFT JOIN snaps s
-  ON e.user_id = s.user_id AND e.ts >= s.ts
-"""
-
-_INTERVAL_SQL = """
-WITH err AS (
-  SELECT event_id AS err_id, user_id, ts AS s,
-         ts + INTERVAL 10 MINUTE AS e
-  FROM events WHERE event_type = 'error'
-), v AS (
-  SELECT user_id, ts FROM events WHERE event_type = 'view'
-)
-SELECT err_id, COUNT(*) AS n_views
-FROM err JOIN v ON v.user_id = err.user_id AND v.ts BETWEEN err.s AND err.e
-GROUP BY err_id
-"""
-
-# histogram-quantile oracle: integer bucket math + bucket-table window
-# replayed exactly; q values forced DOUBLE to match Spark's schema
-_HISTQ_SQL = r"""
-WITH h AS (
-  SELECT LEAST(999, GREATEST(0,
-           CAST(FLOOR(((CAST(l_extendedprice AS DOUBLE) - 0.0) / 100000.0)
-                      * 1000) AS INT))) AS bucket,
-         COUNT(*) AS c
-  FROM lineitem WHERE l_extendedprice IS NOT NULL
-  GROUP BY 1
-), cum AS (
-  SELECT bucket,
-         SUM(c) OVER (ORDER BY bucket
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(c) OVER () AS total
-  FROM h
-), qs AS (
-  SELECT unnest([0.5::DOUBLE, 0.9::DOUBLE, 0.99::DOUBLE]) AS q
-)
-SELECT q, MIN(bucket) AS bucket,
-       CAST(CEIL(q * MAX(total)) AS BIGINT) AS rank,
-       MAX(total)::BIGINT AS total,
-       ROUND(0.0 + (MIN(bucket) + 1) * 100.0, 6) AS est_r
-FROM cum JOIN qs ON cum.cum >= CEIL(qs.q * cum.total)
-GROUP BY q
-"""
-
-# PII oracle: injection + regex counts + redaction chain replayed in
-# DuckDB (RE2) against Spark (Java regex) — the patterns are written in
-# the common subset of the two engines
-_PII_SQL = r"""
-WITH t AS (
-  SELECT doc_id,
-         text ||
-         CASE WHEN doc_id % 5 = 0
-              THEN ' contact alice@example.com or bob.smith@test.org'
-              ELSE '' END ||
-         CASE WHEN doc_id % 7 = 0 THEN ' call 555-123-4567' ELSE '' END ||
-         CASE WHEN doc_id % 11 = 0 THEN ' from 192.168.1.77' ELSE '' END
-           AS text
-  FROM documents
-)
-SELECT doc_id,
-  len(regexp_extract_all(text,
-      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))::BIGINT AS n_email,
-  len(regexp_extract_all(text,
-      '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))::BIGINT AS n_ip,
-  len(regexp_extract_all(text,
-      '\b\d{3}[-.]\d{3}[-.]\d{4}\b'))::BIGINT AS n_phone,
-  md5(regexp_replace(regexp_replace(regexp_replace(text,
-      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-      '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g'),
-      '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '[PHONE]', 'g')) AS redacted_md5
-FROM t
-"""
-
-_WORD_REP_SQL = r"""
-WITH w AS (
-  SELECT doc_id, t.e AS word
-  FROM documents CROSS JOIN UNNEST(
-    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS t(e)
-  WHERE t.e <> ''
-), c AS (
-  SELECT doc_id, word, COUNT(*) AS c FROM w GROUP BY doc_id, word
-)
-SELECT doc_id,
-       SUM(c)::BIGINT AS n_words,
-       COUNT(*)::BIGINT AS n_distinct,
-       MAX(c)::BIGINT AS top_count,
-       ROUND(1.0 - COUNT(*) / SUM(c)::DOUBLE, 6) AS dup_frac
-FROM c GROUP BY doc_id
-"""
-
-# sampling/split oracles: the md5-bridge bucket replayed exactly
-# (same recipe as the sketch oracles), so split membership is
-# bit-identical across engines
-_SPLIT_SQL = r"""
-WITH b AS (
-  SELECT doc_id, n_chars,
-         ('0x' || substr(md5('split|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-           % 10000 AS bucket
-  FROM documents
-)
-SELECT CASE WHEN bucket < 8000 THEN 'train'
-            WHEN bucket < 9000 THEN 'val'
-            ELSE 'test' END AS split,
-       COUNT(*) AS n_docs, SUM(n_chars)::BIGINT AS chars
-FROM b GROUP BY 1
-"""
-
-_STRAT_SAMPLE_SQL = r"""
-WITH b AS (
-  SELECT doc_id, lang, source,
-         ('0x' || substr(md5('sample|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-           % 10000 AS bucket
-  FROM documents
-)
-SELECT doc_id, lang, source FROM b
-WHERE (lang = 'en' AND bucket < 2000)
-   OR (lang = 'de' AND bucket < 8000)
-   OR (lang = 'zh' AND bucket < 5000)
-"""
-
-_SAMPLE_PER_KEY_SQL = r"""
-WITH rk AS (
-  SELECT doc_id, lang,
-         ROW_NUMBER() OVER (
-           PARTITION BY lang
-           ORDER BY ('0x' || substr(md5('perkey|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-                      % 10000,
-                    doc_id) AS rk
-  FROM documents
-)
-SELECT doc_id, lang FROM rk WHERE rk <= 10
-"""
-
-_PACK_SQL = r"""
-WITH t AS (
-  SELECT doc_id, lang,
-         len(list_filter(
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '),
-           x -> x <> '')) AS n_tok
-  FROM documents
-)
-SELECT doc_id, lang, n_tok::BIGINT AS n_tok,
-       CAST(FLOOR(
-         (SUM(n_tok) OVER (PARTITION BY lang ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          - n_tok) / 2000) AS BIGINT) AS pack_id
-FROM t
-"""
-
-# BPE oracle: DuckDB replays the ENTIRE tokenizer — training and
-# application. Training: the capped word-frequency table (top-1500 by
-# count DESC, token ASC — deterministic total order), then 30 unrolled
-# merge rounds, each one MATERIALIZED CTE pair (argmax pair by count
-# DESC then pair ASC = the Python trainer's tie-break; binary UTF-8
-# collation == Python code-point order). Application: per pre-token,
-# fold replace() over the learned merge list on the chr(31)-interleaved
-# representation — replace() is non-overlapping left-to-right in BOTH
-# engines, which IS Sennrich apply order. AS MATERIALIZED is required:
-# DuckDB inlines multiply-referenced CTEs exponentially (repo rule
-# from the HITS oracle).
-
-def _bpe_prefix_sql(n_merges: int = 30, max_words: int = 1500) -> str:
-    from json_ld_spark.operators.bpe import PRETOKEN_RE
-
-    parts = [f"""WITH v0 AS MATERIALIZED (
-  SELECT regexp_replace(tok, '(.)', chr(31)||'\\1', 'g') AS w,
-         CAST(cnt AS BIGINT) AS cnt
-  FROM (
-    SELECT t.tok AS tok, COUNT(*) AS cnt
-    FROM documents, UNNEST(regexp_extract_all(text, '{PRETOKEN_RE}')) AS t(tok)
-    GROUP BY t.tok ORDER BY cnt DESC, tok ASC LIMIT {max_words}
-  )
-)"""]
-    for k in range(n_merges):
-        parts.append(f"""b{k} AS MATERIALIZED (
-  SELECT a, b FROM (
-    SELECT syms[i] AS a, syms[i+1] AS b, cnt
-    FROM (SELECT string_split(w, chr(31))[2:] AS syms, cnt FROM v{k}) s,
-         UNNEST(range(1, len(s.syms))) AS r(i)
-  ) GROUP BY a, b ORDER BY SUM(cnt) DESC, a ASC, b ASC LIMIT 1
-)""")
-        parts.append(f"""v{k + 1} AS MATERIALIZED (
-  SELECT replace(w, chr(31)||a||chr(31)||b, chr(31)||a||b) AS w, cnt
-  FROM v{k}, b{k}
-)""")
-    mrg = "\n  UNION ALL ".join(
-        f"SELECT {k} AS r, chr(31)||a||chr(31)||b||chr(30)||chr(31)||a||b AS m FROM b{k}"
-        for k in range(n_merges)
-    )
-    parts.append(f"mrg AS ({mrg})")
-    parts.append("ml AS (SELECT list(m ORDER BY r) AS ms FROM mrg)")
-    parts.append(f"""app AS (
-  SELECT doc_id, lang,
-    list_transform(
-      regexp_extract_all(text, '{PRETOKEN_RE}'),
-      tok -> list_reduce(
-        list_prepend(regexp_replace(tok, '(.)', chr(31)||'\\1', 'g'), ms),
-        (acc, m) -> replace(acc, split_part(m, chr(30), 1), split_part(m, chr(30), 2))
-      )
-    ) AS folded
-  FROM documents, ml
-)""")
-    parts.append("""cnts AS (
-  SELECT doc_id, lang,
-         CAST(COALESCE(list_sum(list_transform(folded,
-              s -> length(s) - length(replace(s, chr(31), '')))), 0) AS BIGINT)
-           AS n_bpe_tokens,
-         md5(array_to_string(folded, '')) AS stream_md5
-  FROM app
-)""")
-    return ",\n".join(parts)
-
-
-_BPE_TOKENS_SQL = (
-    _bpe_prefix_sql()
-    + "\nSELECT doc_id, n_bpe_tokens, stream_md5 FROM cnts"
-)
-
-_PACK_BPE_SQL = (
-    _bpe_prefix_sql()
-    + """
-SELECT doc_id, lang, n_bpe_tokens,
-       CAST(FLOOR(
-         (SUM(n_bpe_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          - n_bpe_tokens) / 2000) AS BIGINT) AS pack_id
-FROM cnts
-"""
-)
-
-# per-language fertility: sum_chars counts pre-token characters only
-# (whitespace carries no tokens), mirroring the Spark projection
-from json_ld_spark.operators.bpe import PRETOKEN_RE as _BPE_RE  # noqa: E402
-
-_BPE_STATS_SQL = (
-    _bpe_prefix_sql()
-    + f"""
-, chars AS (
-  SELECT doc_id,
-         CAST(length(array_to_string(regexp_extract_all(text,
-              '{_BPE_RE}'), '')) AS BIGINT) AS n_chars
-  FROM documents
-)"""
-    + """
-SELECT c.lang,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(c.n_bpe_tokens) AS BIGINT) AS sum_tokens,
-       CAST(SUM(ch.n_chars) AS BIGINT) AS sum_chars,
-       round(SUM(ch.n_chars)::DOUBLE / SUM(c.n_bpe_tokens), 6) AS chars_per_token_r,
-       round(SUM(c.n_bpe_tokens)::DOUBLE / COUNT(*), 6) AS tokens_per_doc_r
-FROM cnts c JOIN chars ch USING (doc_id)
-GROUP BY c.lang
-"""
-)
-
-_INTERLEAVE_SQL = r"""
-WITH gi AS (
-  SELECT lang, DENSE_RANK() OVER (ORDER BY lang) - 1 AS g,
-         (SELECT COUNT(DISTINCT lang) FROM documents) AS n
-  FROM (SELECT DISTINCT lang FROM documents)
-), r AS (
-  SELECT doc_id, lang,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY lang
-           ORDER BY ('0x' || substr(md5('ilv|r5|' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT,
-                    doc_id) - 1 AS BIGINT) AS grp_rank
-  FROM documents
-)
-SELECT r.doc_id, r.lang, r.grp_rank,
-       CAST(r.grp_rank * gi.n + gi.g AS BIGINT) AS interleave_pos
-FROM r JOIN gi USING (lang)
-"""
-
-# BM25 oracle: same token normalization as the simhash/fingerprint
-# oracles; expression association mirrors retrieval.bm25 exactly so the
-# only cross-engine divergence is the per-doc SUM order (round 6)
-_BM25_SQL = r"""
-WITH words AS (
-  SELECT doc_id, t.e AS term
-  FROM documents CROSS JOIN UNNEST(
-    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS t(e)
-  WHERE t.e <> ''
-), tf AS (
-  SELECT doc_id, term, COUNT(*) AS tf
-  FROM words WHERE term IN ('shuffle', 'join', 'window')
-  GROUP BY doc_id, term
-), dfq AS (
-  SELECT term, COUNT(*) AS df FROM tf GROUP BY term
-), dl AS (
-  SELECT doc_id,
-         len(list_filter(
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '),
-           x -> x <> '')) AS dl
-  FROM documents
-), consts AS (
-  SELECT (SELECT COUNT(*) FROM documents)::DOUBLE AS n,
-         (SELECT AVG(dl) FROM dl)::DOUBLE AS avgdl
-)
-SELECT doc_id,
-       ROUND(SUM(
-         ln(1 + (n - df + 0.5) / (df + 0.5))
-           * tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))
-       ), 6) AS score,
-       COUNT(*) AS n_hit
-FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN consts
-GROUP BY doc_id
-ORDER BY score DESC, doc_id
-LIMIT 20
-"""
-
-# curation.decontaminate replay: same tokenizer, n-grams as a list
-# comprehension over positions, benchmark = doc_id % 23 = 5, distinct-
-# overlap counts via join + count(DISTINCT g).
-_DECONTAM_SQL = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                     w -> w <> '') AS t
-  FROM documents
-), grams AS (
-  SELECT doc_id,
-         CAST(greatest(len(t) - 5, 0) AS BIGINT) AS n_grams,
-         list_transform(generate_series(1, greatest(len(t) - 5, 0)),
-                        i -> array_to_string(t[i:i+5], ' ')) AS gs
-  FROM toks
-), bench AS (
-  SELECT DISTINCT unnest(gs) AS g FROM grams WHERE doc_id % 23 = 5
-), dg AS (
-  SELECT doc_id, unnest(gs) AS g FROM grams
-), hits AS (
-  SELECT dg.doc_id, count(DISTINCT dg.g) AS n_hits
-  FROM dg JOIN bench USING (g) GROUP BY dg.doc_id
-)
-SELECT g.doc_id, g.n_grams,
-       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-       coalesce(h.n_hits, 0) > 0 AS contaminated
-FROM grams g LEFT JOIN hits h ON g.doc_id = h.doc_id
-ORDER BY g.doc_id
-"""
-
-# curation.chunk_documents replay: stride windows via generate_series +
-# 1-based inclusive list slicing (Spark slice(pos, len) == t[a:b]).
-_CHUNK_SQL = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                     w -> w <> '') AS t
-  FROM documents
-), ch AS (
-  SELECT doc_id, t,
-         greatest(CAST(ceil((len(t) - 8) / 32.0) AS INT), 1) AS n_chunks
-  FROM toks WHERE len(t) > 0
-)
-SELECT doc_id,
-       CAST(i AS BIGINT) AS chunk_idx,
-       CAST(len(t[i*32 + 1 : i*32 + 40]) AS BIGINT) AS n_chunk_tokens,
-       array_to_string(t[i*32 + 1 : i*32 + 40], ' ') AS chunk_text,
-       CAST(i * 32 AS BIGINT) AS tok_start
-FROM ch, UNNEST(generate_series(0, n_chunks - 1)) AS u(i)
-"""
-
-# textops.gopher_quality replay: same tokenizer, list math for every
-# signal; int/int division is DOUBLE in both engines, 6-dp rounds.
-_GOPHER_SQL = r"""
-WITH w AS (
-  SELECT doc_id, text,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                     x -> x <> '') AS words,
-         string_split(text, chr(10)) AS lines
-  FROM documents
-), sig AS (
-  SELECT doc_id,
-    len(words) AS n_words,
-    list_sum(list_transform(words, x -> length(x)))::DOUBLE / len(words)
-      AS mean_wl,
-    (length(text) - length(regexp_replace(text, '[#…]', '', 'g'))
-     + len(list_filter(words, x -> ends_with(x, '...'))))::DOUBLE
-      / len(words) AS sym_ratio,
-    len(list_filter(lines, l -> regexp_matches(trim(l), '^[-*•]')))::DOUBLE
-      / len(lines) AS bullet_frac,
-    len(list_filter(words, x -> regexp_matches(x, '[a-z]')))::DOUBLE
-      / len(words) AS alpha_frac,
-    len(list_intersect(list_distinct(words),
-        ['the','be','to','of','and','that','have','with'])) AS n_stop
-  FROM w
-)
-SELECT doc_id,
-  CAST(n_words AS BIGINT) AS n_words,
-  round(mean_wl, 6) AS mean_word_len,
-  round(sym_ratio, 6) AS symbol_ratio,
-  round(bullet_frac, 6) AS bullet_frac,
-  round(alpha_frac, 6) AS alpha_frac,
-  CAST(n_stop AS BIGINT) AS n_stopwords,
-  (n_words >= 50 AND n_words <= 100000
-   AND mean_wl >= 3 AND mean_wl <= 10
-   AND sym_ratio <= 0.1 AND bullet_frac <= 0.9
-   AND alpha_frac >= 0.7 AND n_stop >= 2) AS keep
-FROM sig
-"""
-
-# curriculum tier from the ROUNDED gopher signals (the hash-verified
-# quantities), within-tier md5 permutation via partitioned ROW_NUMBER
-_CURRICULUM_SQL = r"""
-WITH w AS (
-  SELECT doc_id, text,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                     x -> x <> '') AS words,
-         string_split(text, chr(10)) AS lines
-  FROM documents
-), sig AS (
-  SELECT doc_id,
-    len(words) AS n_words,
-    round(list_sum(list_transform(words, x -> length(x)))::DOUBLE / len(words), 6)
-      AS mwl,
-    round((length(text) - length(regexp_replace(text, '[#…]', '', 'g'))
-     + len(list_filter(words, x -> ends_with(x, '...'))))::DOUBLE
-      / len(words), 6) AS sr,
-    round(len(list_filter(lines, l -> regexp_matches(trim(l), '^[-*•]')))::DOUBLE
-      / len(lines), 6) AS bf,
-    round(len(list_filter(words, x -> regexp_matches(x, '[a-z]')))::DOUBLE
-      / len(words), 6) AS af,
-    len(list_intersect(list_distinct(words),
-        ['the','be','to','of','and','that','have','with'])) AS ns
-  FROM w
-), tiered AS (
-  SELECT doc_id,
-    CAST((CASE WHEN n_words >= 50 AND n_words <= 100000 THEN 1 ELSE 0 END)
-       + (CASE WHEN mwl >= 3.0 AND mwl <= 10.0 THEN 1 ELSE 0 END)
-       + (CASE WHEN sr <= 0.1 THEN 1 ELSE 0 END)
-       + (CASE WHEN bf <= 0.9 THEN 1 ELSE 0 END)
-       + (CASE WHEN af >= 0.7 THEN 1 ELSE 0 END)
-       + (CASE WHEN ns >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS tier,
-    ('0x' || substr(md5('cur|' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS k
-  FROM sig
-)
-SELECT doc_id, tier,
-       CAST(ROW_NUMBER() OVER (PARTITION BY tier ORDER BY k ASC, doc_id ASC) - 1
-            AS BIGINT) AS tier_rank
-FROM tiered
-"""
-
-# textops.normalize_text replay: nfc_normalize (probed == Python NFC),
-# then the same RE2/Java-common control-strip + whitespace collapse.
-_TEXT_NORMALIZE_SQL = r"""
-WITH messy AS (
-  SELECT doc_id,
-         text || '  cafe' || chr(769) ||
-         CASE WHEN doc_id % 3 = 0 THEN chr(9) || 'x' || chr(7) || 'y'
-              ELSE ' z' END AS text
-  FROM documents
-), norm AS (
-  SELECT doc_id,
-         trim(regexp_replace(
-           regexp_replace(nfc_normalize(text),
-                          '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-           '\s+', ' ', 'g')) AS out
-  FROM messy
-)
-SELECT doc_id, md5(out) AS norm_md5,
-       CAST(length(out) AS BIGINT) AS n_chars
-FROM norm
-"""
-
-# curation.lm_score replay: bigram add-one LM; window counts mirror the
-# Spark plan, BIGINT/BIGINT division is DOUBLE in both engines, ln is
-# libm on both, round(6) absorbs per-group float-sum order.
-_LM_SCORE_SQL = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                     w -> w <> '') AS t
-  FROM documents
-), v AS (
-  SELECT count(DISTINCT w) AS v FROM (SELECT unnest(t) AS w FROM toks)
-), bg AS (
-  SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-  FROM toks, UNNEST(generate_series(1, greatest(len(t) - 1, 0))) AS u(i)
-), cnt AS (
-  SELECT doc_id,
-         COUNT(*) OVER (PARTITION BY w1, w2) AS c2,
-         COUNT(*) OVER (PARTITION BY w1) AS c1
-  FROM bg
-), sc AS (
-  SELECT doc_id,
-         round(avg(ln((c2 + 1) / (c1 + (SELECT v FROM v)))), 6) AS avg_logprob,
-         CAST(count(*) AS BIGINT) AS n_bigrams
-  FROM cnt GROUP BY doc_id
-)
-SELECT d.doc_id, sc.avg_logprob,
-       CAST(coalesce(sc.n_bigrams, 0) AS BIGINT) AS n_bigrams
-FROM (SELECT DISTINCT doc_id FROM documents) d LEFT JOIN sc USING (doc_id)
-ORDER BY doc_id
-"""
-
-_TEXT_STATS_SQL = r"""
-WITH w AS (
-  SELECT doc_id, text,
-         string_split_regex(lower(trim(text)), '\s+') AS words,
-         length(text) AS len,
-         length(regexp_replace(text, '[^!-/:-@\[-`{-~]', '', 'g')) AS punct
-  FROM documents
-), scores AS (
-  SELECT doc_id, text, words, len, punct,
-         len(list_filter(words, x -> x = 'the')) + len(list_filter(words, x -> x = 'and'))
-           + len(list_filter(words, x -> x = 'of')) + len(list_filter(words, x -> x = 'to'))
-           + len(list_filter(words, x -> x = 'in')) AS s_en,
-         len(list_filter(words, x -> x = 'el')) + len(list_filter(words, x -> x = 'la'))
-           + len(list_filter(words, x -> x = 'de')) + len(list_filter(words, x -> x = 'que'))
-           + len(list_filter(words, x -> x = 'los')) AS s_es,
-         len(list_filter(words, x -> x = 'der')) + len(list_filter(words, x -> x = 'die'))
-           + len(list_filter(words, x -> x = 'und')) + len(list_filter(words, x -> x = 'das'))
-           + len(list_filter(words, x -> x = 'ist')) AS s_de,
-         len(list_filter(words, x -> x = 'le')) + len(list_filter(words, x -> x = 'la'))
-           + len(list_filter(words, x -> x = 'et')) + len(list_filter(words, x -> x = 'les'))
-           + len(list_filter(words, x -> x = 'des')) AS s_fr
-  FROM w
-), lang AS (
-  SELECT *,
-         list_max([{'score': s_en, 'lang': 'en'}, {'score': s_es, 'lang': 'es'},
-                   {'score': s_de, 'lang': 'de'}, {'score': s_fr, 'lang': 'fr'}]) AS best
-  FROM scores
-)
-SELECT doc_id,
-       CASE WHEN best.score > 0 THEN best.lang ELSE 'und' END AS lang_pred,
-       CAST(len(words) AS BIGINT) AS n_tokens_ws,
-       CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+')) AS BIGINT) AS n_tokens_bpe,
-       round(
-         least(len / 500.0, 1.0) * 0.3
-         + (1.0 - least(punct / greatest(len, 1) * 4, 1.0)) * 0.3
-         + least(s_en / greatest(len(words), 1) * 5, 1.0) * 0.2
-         + (CASE WHEN len / greatest(len(words), 1) >= 3
-                  AND len / greatest(len(words), 1) <= 10
-                 THEN 1.0 ELSE 0.5 END) * 0.2, 6) AS quality_r
-FROM lang
-"""
-
-_SPARQL_SELECT_SQL = _TRIPLES_CTE + f"""
-SELECT conv, n FROM (
-  SELECT c.obj AS conv, COUNT(*) AS n
-  FROM triples r
-  JOIN triples c ON r.subj = c.subj AND c.pred = '{_V}conversation'
-  WHERE r.pred = '{_V}role' AND r.obj = 'assistant'
-    AND NOT EXISTS (SELECT 1 FROM triples x
-                    WHERE x.subj = r.subj AND x.pred = '{_V}tool')
-  GROUP BY c.obj HAVING COUNT(*) >= 2
-) ORDER BY n DESC, conv LIMIT 50
-"""
-
-_SPARQL_GRAPH_PATH_SQL = _BASE_CTE.rstrip() + """
-, conv AS (SELECT conv_id, COUNT(*) AS n FROM base GROUP BY conv_id)
-SELECT 'https://example.org/conv/' || conv_id AS g,
-       CAST(n * (n - 1) / 2 AS BIGINT) AS n_pairs
-FROM conv
-WHERE n > 1
-ORDER BY g
-"""
-
-_SPARQL_NAMED_SQL = _BASE_CTE.rstrip() + """
-SELECT 'https://example.org/conv/' || conv_id AS g,
-       CAST(COUNT(*) AS BIGINT) AS n
-FROM base
-WHERE role = 'assistant'
-  AND conv_id IN (SELECT 'conv-' || CAST(i AS VARCHAR) FROM range(12) r(i))
-GROUP BY conv_id
-ORDER BY g
-"""
-
-_SPARQL_ANALYST_SQL = _BASE_CTE.rstrip() + """
-, conv AS (
-  SELECT conv_id,
-         COUNT(*) AS n_turns,
-         COUNT(CASE WHEN turn_idx >= 1 THEN tool END) AS n_tooled
-  FROM base GROUP BY conv_id
-)
-SELECT 'https://example.org/conv/' || conv_id AS conv,
-       CAST(n_turns - 1 AS BIGINT) AS n_reachable,
-       CAST(n_tooled AS BIGINT) AS n_tooled
-FROM conv
-WHERE n_turns > 1
-ORDER BY n_reachable DESC, conv
-LIMIT 60
-"""
-
-_SPARQL_PATH_SQL = _TRIPLES_CTE + f"""
-, conv AS (
-  SELECT subj, obj AS c FROM triples
-  WHERE pred = '{_V}conversation'
-    AND CAST(split_part(subj, '/turn/', 2) AS INT) < 4
-)
-SELECT DISTINCT a.subj AS a, b.subj AS b
-FROM conv a JOIN conv b ON a.c = b.c
-WHERE a.subj < b.subj
-"""
-
-# kg_sparql_negated: the NPS excludes every predicate except
-# t:conversation, so the match set IS the conversation edge table.
-_SPARQL_NEGATED_SQL = _TRIPLES_CTE + f"""
-, conv AS (
-  SELECT subj, obj AS c FROM triples
-  WHERE pred = '{_V}conversation'
-    AND CAST(split_part(subj, '/turn/', 2) AS INT) < 4
-)
-SELECT DISTINCT a.subj AS a, b.subj AS b, a.c AS conv
-FROM conv a JOIN conv b ON a.c = b.c
-WHERE a.subj < b.subj
-"""
-
-_SPARQL_GRAPH_SQL = _TRIPLES_CTE + f"""
-SELECT g, n FROM (
-  SELECT regexp_extract(subj, '^(.*)/turn/', 1) AS g, COUNT(*) AS n
-  FROM (SELECT DISTINCT regexp_extract(subj, '^(.*)/turn/', 1) AS gg,
-               subj, pred, obj FROM triples) q
-  WHERE pred = '{_V}role' AND obj = 'assistant'
-  GROUP BY 1 HAVING COUNT(*) >= 3
-) ORDER BY n DESC, g LIMIT 40
-"""
-
-_BGP_DESCRIBE_SQL = _TRIPLES_CTE + f"""
-SELECT DISTINCT subj, pred, obj FROM triples
-WHERE subj IN (SELECT subj FROM triples
-               WHERE pred = '{_V}tool' AND obj = 'search')
-"""
-
-_BGP_ASK_SQL = _TRIPLES_CTE + f"""
-SELECT EXISTS(SELECT 1 FROM triples
-              WHERE pred = '{_V}tool' AND obj = 'search') AS ask_search,
-       EXISTS(SELECT 1 FROM triples
-              WHERE pred = '{_V}tool' AND obj = 'browser') AS ask_browser
-"""
-
-# GROUPING(c1, c2) bitmask convention verified identical to Spark's
-# grouping_id() (first grouping column = MSB) on this engine pair.
-_ROLLUP_SQL = """
-SELECT l_returnflag, l_linestatus,
-       SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 AS sum_price,
-       COUNT(*) AS n,
-       CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
-FROM lineitem
-GROUP BY ROLLUP(l_returnflag, l_linestatus)
-"""
-
-_CORRELATED_MAX_SQL = """
-SELECT o1.o_orderkey, o1.o_custkey,
-       CAST(round(o1.o_totalprice * 100) AS BIGINT) AS price_cents
-FROM orders o1
-WHERE o1.o_totalprice = (
-  SELECT MAX(o2.o_totalprice) FROM orders o2
-  WHERE o2.o_custkey = o1.o_custkey
-)
-"""
-
-_CUBE_SQL = """
-SELECT l_returnflag, l_linestatus,
-       SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 AS sum_price,
-       COUNT(*) AS n,
-       CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
-FROM lineitem
-GROUP BY CUBE(l_returnflag, l_linestatus)
-"""
-
-_RANK_FUNCTIONS_SQL = """
-SELECT * FROM (
-  SELECT o_orderpriority, o_orderkey,
-         ROW_NUMBER() OVER w AS rn,
-         RANK() OVER w AS rnk,
-         DENSE_RANK() OVER w AS drnk,
-         round(PERCENT_RANK() OVER w, 6) AS prank_r,
-         CAST(NTILE(4) OVER w AS BIGINT) AS tile,
-         round(CUME_DIST() OVER w, 6) AS cume_r
-  FROM orders
-  WINDOW w AS (PARTITION BY o_orderpriority
-               ORDER BY o_totalprice DESC, o_orderkey)
-)
-WHERE rn <= 50
-"""
-
-_PIVOT_SQL = """
-SELECT o_orderpriority,
-       CAST(SUM(CASE WHEN o_orderstatus = 'O'
-                     THEN CAST(round(o_totalprice * 100) AS BIGINT) END) AS BIGINT) AS cents_o,
-       CAST(SUM(CASE WHEN o_orderstatus = 'F'
-                     THEN CAST(round(o_totalprice * 100) AS BIGINT) END) AS BIGINT) AS cents_f,
-       CAST(SUM(CASE WHEN o_orderstatus = 'P'
-                     THEN CAST(round(o_totalprice * 100) AS BIGINT) END) AS BIGINT) AS cents_p
-FROM orders
-GROUP BY o_orderpriority
-"""
-
-_NGRAM_SCORE_SQL = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                     x -> x <> '') AS l
-  FROM documents
-), t AS (
-  SELECT doc_id, generate_subscripts(l, 1) AS i, unnest(l) AS w FROM toks
-), g AS (
-  SELECT a.doc_id, a.w || ' ' || b.w AS gram
-  FROM t a JOIN t b ON a.doc_id = b.doc_id AND b.i = a.i + 1
-), f AS (
-  SELECT doc_id,
-         ('0x' || substr(md5(gram), 1, 8))::BIGINT % 4096 AS bucket
-  FROM g
-), wts AS (
-  SELECT b AS bucket, CAST(b % 101 AS DOUBLE) / 100 - 0.5 AS weight
-  FROM range(4096) r(b)
-)
-SELECT f.doc_id AS id, CAST(COUNT(*) AS BIGINT) AS n_feats,
-       round(1.0 / (1.0 + exp(-(0.0 + AVG(w2.weight)))), 6) AS score_r
-FROM f JOIN wts w2 USING (bucket)
-GROUP BY f.doc_id
-"""
-
-_CDC_CHUNKS_SQL = """
-WITH d AS (SELECT doc_id, text, length(text) AS n FROM documents),
-c AS (
-  SELECT doc_id, text, n,
-    list_concat(list_concat([0],
-      list_filter(range(4, n + 1),
-        p -> ('0x' || substr(md5(substr(text, p - 3, 4)), 1, 8))::BIGINT
-             % 32 = 0)),
-      [n]) AS cuts
-  FROM d
-), jj AS (
-  SELECT doc_id, text, cuts, unnest(range(1, len(cuts))) AS j FROM c
-)
-SELECT doc_id AS id, CAST(j - 1 AS INT) AS chunk_idx,
-       CAST(cuts[j] AS INT) AS start,
-       CAST(cuts[j + 1] - cuts[j] AS INT) AS chunk_len,
-       md5(substr(text, cuts[j] + 1, cuts[j + 1] - cuts[j])) AS chunk_md5
-FROM jj WHERE cuts[j + 1] - cuts[j] > 0
-"""
-
-_SKOLEMIZE_SQL = _TRIPLES_CTE + f"""
-SELECT graph, subj, pred, obj_kind,
-       CASE WHEN pred = '{_V}conversation'
-            THEN replace(obj, '{_CB}conv-',
-                         'https://example.org/.well-known/genid/c')
-            ELSE obj END AS obj,
-       datatype, lang
-FROM triples
-"""
-
-_CONTEXT_WINDOWS_SQL = _BASE_CTE + """
-SELECT conv_id, turn_idx,
-       CAST(COUNT(*) OVER w AS INT) AS n_context_turns,
-       COALESCE(STRING_AGG(role || ': ' || text, chr(10)) OVER w, '')
-         AS context,
-       text AS target
-FROM base
-WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx
-             ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING)
-"""
-
-_VOID_STATS_SQL = _TRIPLES_CTE + """
-SELECT pred, CAST(COUNT(*) AS BIGINT) AS n_triples,
-       CAST(COUNT(DISTINCT subj) AS BIGINT) AS n_distinct_subj,
-       CAST(COUNT(DISTINCT (obj_kind, obj, datatype, lang)) AS BIGINT)
-         AS n_distinct_obj
-FROM triples GROUP BY pred
-"""
-
-_SCHEMA_SUMMARY_SQL = _BASE_CTE + f"""
-, adjn AS (
-  SELECT conv_id, turn_idx,
-         LEAD(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nxt
-  FROM base
-)
-SELECT '{_V}Turn' AS src_type, '{_V}conversation' AS pred,
-       'untyped' AS dst_type, CAST(COUNT(*) AS BIGINT) AS n_edges
-FROM base
-UNION ALL
-SELECT '{_V}Turn', '{_V}nextTurn', '{_V}Turn', CAST(COUNT(*) AS BIGINT)
-FROM adjn WHERE nxt IS NOT NULL
-"""
-
-_URL_NORMALIZE_SQL = """
-SELECT doc_id,
-  CASE WHEN doc_id % 4 = 0 THEN 'http://example.com/a/b?a=1&b=2'
-       WHEN doc_id % 4 = 1 THEN 'https://site-' || CAST(doc_id % 5 AS VARCHAR)
-            || '.org/p/' || CAST(doc_id AS VARCHAR) || '/?a='
-            || CAST(doc_id % 3 AS VARCHAR) || '&z=9'
-       WHEN doc_id % 4 = 2 THEN 'http://example.org'
-       ELSE 'https://example.org/path?q=' || CAST(doc_id AS VARCHAR)
-  END AS url_norm
-FROM documents
-"""
-
-_UPSAMPLE_EPOCHS_SQL = """
-WITH d AS (
-  SELECT doc_id, source,
-         CAST(CASE CAST(substr(source, 4) AS INT) % 4
-              WHEN 0 THEN 2.5 WHEN 1 THEN 1.25 WHEN 2 THEN 0.5
-              ELSE 1.0 END AS DOUBLE) AS e,
-         ('0x' || substr(md5('recipe1|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-           / 4294967296.0 AS u
-  FROM documents
-), n AS (
-  SELECT doc_id, source,
-         CAST(floor(e) AS INT)
-           + CASE WHEN u < e - floor(e) THEN 1 ELSE 0 END AS n_copies
-  FROM d
-)
-SELECT doc_id, source, CAST(g.i AS BIGINT) AS epoch
-FROM n CROSS JOIN generate_series(0, 9) AS g(i)
-WHERE n_copies > 0 AND g.i < n_copies
-"""
-
-_WEIGHTED_SAMPLE_SQL = """
-SELECT doc_id,
-       round(CAST(CASE doc_id % 4 WHEN 0 THEN 1.0 WHEN 1 THEN 0.5
-                  WHEN 2 THEN 0.25 ELSE 0.05 END AS DOUBLE), 6) AS rate_r
-FROM documents
-WHERE ('0x' || substr(md5('mix3|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-      / 4294967296.0
-      < CAST(CASE doc_id % 4 WHEN 0 THEN 1.0 WHEN 1 THEN 0.5
-             WHEN 2 THEN 0.25 ELSE 0.05 END AS DOUBLE)
-"""
-
-_PROFILE_HITTERS_SQL = """
-WITH m AS (
-  SELECT 'o_orderstatus' AS "column", CAST(o_orderstatus AS VARCHAR) AS value FROM orders
-  UNION ALL SELECT 'o_orderpriority', CAST(o_orderpriority AS VARCHAR) FROM orders
-  UNION ALL SELECT 'o_custkey', CAST(o_custkey AS VARCHAR) FROM orders
-), c AS (
-  SELECT "column", value, CAST(COUNT(*) AS BIGINT) AS n
-  FROM m GROUP BY 1, 2
-)
-SELECT "column", value, n,
-       CAST(ROW_NUMBER() OVER (
-         PARTITION BY "column" ORDER BY n DESC, value ASC NULLS FIRST
-       ) AS INT) AS rank
-FROM c QUALIFY rank <= 3
-"""
-
-_COLUMN_STATS_SQL = """
-SELECT 'o_orderstatus' AS "column", CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-       CAST(COUNT(DISTINCT o_orderstatus) AS BIGINT) AS n_distinct
-FROM orders
-UNION ALL
-SELECT 'o_orderpriority', CAST(COUNT(*) AS BIGINT),
-       CAST(SUM(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(COUNT(DISTINCT o_orderpriority) AS BIGINT)
-FROM orders
-UNION ALL
-SELECT 'o_custkey', CAST(COUNT(*) AS BIGINT),
-       CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(COUNT(DISTINCT o_custkey) AS BIGINT)
-FROM orders
-"""
-
-_AGG_PRICING_SQL = """
-SELECT l_returnflag, l_linestatus,
-       SUM(CAST(round(l_quantity * 100) AS BIGINT)) / 100.0 AS sum_qty,
-       SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 AS sum_base_price,
-       SUM(CAST(round(l_discount * 10000) AS BIGINT)) / 10000.0 AS sum_disc,
-       COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-_TOPNATIONS_SQL = """
-SELECT n_name, COUNT(*) AS n_orders,
-       SUM(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0 AS revenue
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE o_orderstatus = 'O'
-GROUP BY n_name
-"""
-
-_WINDOW_SQL = """
-SELECT event_id,
-       ROW_NUMBER() OVER w AS rn,
-       round(coalesce(LAG(value) OVER w, 0.0), 6) AS prev_value_r
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-"""
-
-_SETOPS_SQL = """
-WITH rich AS (SELECT c_custkey AS k FROM customer WHERE c_acctbal > 5000),
-     seg AS (SELECT c_custkey AS k FROM customer WHERE c_mktsegment = 'BUILDING')
-SELECT 'both' AS tag, k FROM (SELECT k FROM rich INTERSECT SELECT k FROM seg)
-UNION ALL
-SELECT 'rich_only' AS tag, k FROM (SELECT k FROM rich EXCEPT SELECT k FROM seg)
-"""
-
-_SETOPS_ALL_SQL = """
-WITH a AS (SELECT l_partkey AS k FROM lineitem WHERE l_orderkey % 2 = 0),
-     b AS (SELECT l_partkey AS k FROM lineitem WHERE l_suppkey % 3 = 0)
-SELECT 'inter_all' AS tag, k FROM (SELECT k FROM a INTERSECT ALL SELECT k FROM b)
-UNION ALL
-SELECT 'except_all' AS tag, k FROM (SELECT k FROM a EXCEPT ALL SELECT k FROM b)
-"""
-
-_WORDCOUNT_SQL = """
-SELECT w.e AS word, COUNT(*) AS n
-FROM part CROSS JOIN UNNEST(string_split(lower(p_name), ' ')) AS w(e)
-GROUP BY w.e
-HAVING COUNT(*) > 1
-"""
-
-_JSON_EVENTS_SQL = """
-SELECT event_type,
-       CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-       COUNT(*) AS n
-FROM events
-GROUP BY event_type
-"""
-
-
-_SESSIONIZE_SQL = """
-WITH e AS (
-  SELECT user_id, event_id, ts,
-         CAST(floor(epoch(ts)) AS BIGINT) AS ep
-  FROM events
-), g AS (
-  SELECT user_id, event_id, ts, ep,
-         CASE WHEN ep - LAG(ep) OVER w IS NULL
-                OR ep - LAG(ep) OVER w > 1800
-              THEN 1 ELSE 0 END AS new_sess
-  FROM e
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), s AS (
-  SELECT user_id, ts, ep,
-         CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
-  FROM g
-)
-SELECT user_id, session_no, COUNT(*) AS n_events,
-       MAX(ep) - MIN(ep) AS duration_s
-FROM s GROUP BY user_id, session_no
-"""
-
-_SEMI_ANTI_SQL = """
-SELECT 'with_orders' AS tag, COUNT(*) AS n FROM customer
-WHERE c_custkey IN (SELECT o_custkey FROM orders)
-UNION ALL
-SELECT 'without_orders' AS tag, COUNT(*) AS n FROM customer
-WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-"""
-
-_TOPK_SQL = """
-SELECT o_orderkey, round(o_totalprice, 2) AS price_r
-FROM orders
-ORDER BY o_totalprice DESC, o_orderkey ASC
-LIMIT 10
-"""
-
-
-# curation.ngram_novelty replay: same tokenize, DuckDB inclusive list
-# slice t[i:i+4] = the 5-gram, DISTINCT (doc, gram) before the
-# gram-partition COUNT(*) (the document frequency), left join keeps
-# short docs with zero grams (NULL dup_frac, zero counts).
-_NGRAM_NOVELTY_SQL = r"""
-WITH w AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                     x -> x <> '') AS t
-  FROM documents
-), g AS (
-  SELECT DISTINCT doc_id, array_to_string(t[i:i+4], ' ') AS g
-  FROM w, UNNEST(generate_series(1, greatest(len(t) - 4, 0))) AS u(i)
-), dfq AS (
-  SELECT doc_id, COUNT(*) OVER (PARTITION BY g) AS df
-  FROM g
-), per AS (
-  SELECT doc_id, COUNT(*) AS n_grams,
-         SUM(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS n_dup
-  FROM dfq GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(COALESCE(p.n_grams, 0) AS BIGINT) AS n_grams,
-       CAST(COALESCE(p.n_dup, 0) AS BIGINT) AS n_dup,
-       round(p.n_dup::DOUBLE / p.n_grams, 6) AS dup_frac
-FROM documents d LEFT JOIN per p USING (doc_id)
-"""
-
-# sampling.token_budget_select replay: the scale-safe global-order
-# two-phase cumsum reduces to a plain per-lang ordered SUM at oracle
-# scale; selection = exclusive prefix < budget (straddler kept).
-_TOKEN_BUDGET_SQL = r"""
-WITH w AS (
-  SELECT doc_id, lang,
-         CAST(len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                              x -> x <> '')) AS BIGINT) AS nw,
-         ('0x' || substr(md5('tb|' || lang || '|' || CAST(doc_id AS VARCHAR)),
-                         1, 15))::BIGINT AS k
-  FROM documents
-), c AS (
-  SELECT doc_id, lang, nw,
-         SUM(nw) OVER (PARTITION BY lang ORDER BY k ASC, doc_id ASC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-  FROM w
-)
-SELECT doc_id, lang, nw AS tokens, CAST(cum AS BIGINT) AS cum_tokens
-FROM c WHERE cum - nw < 2000
-"""
-
-# curation.bt_strengths replay: comparisons + matrix + 8 unrolled MM
-# rounds on the SAME integer fixed-point lattice (// floor division,
-# integer sums — order-free, so no rounding is ever needed). Each
-# round's strengths are referenced twice (pi, pj) -> AS MATERIALIZED,
-# or DuckDB inlines the CTE chain exponentially (the HITS lesson).
-_BT_ARENA_SQL = r"""
-WITH w AS (
-  SELECT doc_id,
-         ('0x' || substr(md5('bt|' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-           % 12 AS p,
-         CAST(len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                              x -> x <> '')) AS BIGINT) AS s
-  FROM documents
-), comp AS (
-  SELECT CASE WHEN a.s >= b.s THEN a.p ELSE b.p END AS winner,
-         CASE WHEN a.s >= b.s THEN b.p ELSE a.p END AS loser
-  FROM w a JOIN w b ON b.doc_id = a.doc_id + 1
-  WHERE a.p <> b.p
-), mat AS (
-  SELECT LEAST(winner, loser) AS a, GREATEST(winner, loser) AS b,
-         COUNT(*) AS n,
-         SUM(CASE WHEN winner < loser THEN 1 ELSE 0 END) AS wa
-  FROM comp GROUP BY 1, 2
-), dir AS (
-  SELECT a AS i, b AS j, n, wa AS w FROM mat
-  UNION ALL
-  SELECT b AS i, a AS j, n, n - wa AS w FROM mat
-), stat AS MATERIALIZED (
-  SELECT i, CAST(SUM(w) AS BIGINT) AS wins, CAST(SUM(n) AS BIGINT) AS n_comp
-  FROM dir GROUP BY i
-), p0 AS MATERIALIZED (
-  SELECT i, CAST(1000000 AS BIGINT) AS p FROM stat
-),
-__BT_ROUNDS__
-SELECT s.i AS player, s.wins, s.n_comp, f.p AS strength,
-       CAST(ROW_NUMBER() OVER (ORDER BY f.p DESC, s.i ASC) AS BIGINT) AS rank
-FROM stat s JOIN p8 f ON f.i = s.i
-"""
-_BT_ARENA_SQL = _BT_ARENA_SQL.replace("__BT_ROUNDS__", """p1 AS MATERIALIZED (
-  SELECT s.i,
-         GREATEST(CAST((s.wins + 1) * 1000000000000 // d.den AS BIGINT), 1) AS p
-  FROM stat s JOIN (
-    SELECT d.i,
-           CAST(SUM(d.n * 1000000000000 // (pi.p + pj.p)) AS BIGINT) AS den
-    FROM dir d
-    JOIN p0 pi ON pi.i = d.i
-    JOIN p0 pj ON pj.i = d.j
-    GROUP BY d.i
-  ) d ON d.i = s.i
-),
-p2 AS MATERIALIZED (
-  SELECT s.i,
-         GREATEST(CAST((s.wins + 1) * 1000000000000 // d.den AS BIGINT), 1) AS p
-  FROM stat s JOIN (
-    SELECT d.i,
-           CAST(SUM(d.n * 1000000000000 // (pi.p + pj.p)) AS BIGINT) AS den
-    FROM dir d
-    JOIN p1 pi ON pi.i = d.i
-    JOIN p1 pj ON pj.i = d.j
-    GROUP BY d.i
-  ) d ON d.i = s.i
-),
-p3 AS MATERIALIZED (
-  SELECT s.i,
-         GREATEST(CAST((s.wins + 1) * 1000000000000 // d.den AS BIGINT), 1) AS p
-  FROM stat s JOIN (
-    SELECT d.i,
-           CAST(SUM(d.n * 1000000000000 // (pi.p + pj.p)) AS BIGINT) AS den
-    FROM dir d
-    JOIN p2 pi ON pi.i = d.i
-    JOIN p2 pj ON pj.i = d.j
-    GROUP BY d.i
-  ) d ON d.i = s.i
-),
-p4 AS MATERIALIZED (
-  SELECT s.i,
-         GREATEST(CAST((s.wins + 1) * 1000000000000 // d.den AS BIGINT), 1) AS p
-  FROM stat s JOIN (
-    SELECT d.i,
-           CAST(SUM(d.n * 1000000000000 // (pi.p + pj.p)) AS BIGINT) AS den
-    FROM dir d
-    JOIN p3 pi ON pi.i = d.i
-    JOIN p3 pj ON pj.i = d.j
-    GROUP BY d.i
-  ) d ON d.i = s.i
-),
-p5 AS MATERIALIZED (
-  SELECT s.i,
-         GREATEST(CAST((s.wins + 1) * 1000000000000 // d.den AS BIGINT), 1) AS p
-  FROM stat s JOIN (
-    SELECT d.i,
-           CAST(SUM(d.n * 1000000000000 // (pi.p + pj.p)) AS BIGINT) AS den
-    FROM dir d
-    JOIN p4 pi ON pi.i = d.i
-    JOIN p4 pj ON pj.i = d.j
-    GROUP BY d.i
-  ) d ON d.i = s.i
-),
-p6 AS MATERIALIZED (
-  SELECT s.i,
-         GREATEST(CAST((s.wins + 1) * 1000000000000 // d.den AS BIGINT), 1) AS p
-  FROM stat s JOIN (
-    SELECT d.i,
-           CAST(SUM(d.n * 1000000000000 // (pi.p + pj.p)) AS BIGINT) AS den
-    FROM dir d
-    JOIN p5 pi ON pi.i = d.i
-    JOIN p5 pj ON pj.i = d.j
-    GROUP BY d.i
-  ) d ON d.i = s.i
-),
-p7 AS MATERIALIZED (
-  SELECT s.i,
-         GREATEST(CAST((s.wins + 1) * 1000000000000 // d.den AS BIGINT), 1) AS p
-  FROM stat s JOIN (
-    SELECT d.i,
-           CAST(SUM(d.n * 1000000000000 // (pi.p + pj.p)) AS BIGINT) AS den
-    FROM dir d
-    JOIN p6 pi ON pi.i = d.i
-    JOIN p6 pj ON pj.i = d.j
-    GROUP BY d.i
-  ) d ON d.i = s.i
-),
-p8 AS MATERIALIZED (
-  SELECT s.i,
-         GREATEST(CAST((s.wins + 1) * 1000000000000 // d.den AS BIGINT), 1) AS p
-  FROM stat s JOIN (
-    SELECT d.i,
-           CAST(SUM(d.n * 1000000000000 // (pi.p + pj.p)) AS BIGINT) AS den
-    FROM dir d
-    JOIN p7 pi ON pi.i = d.i
-    JOIN p7 pj ON pj.i = d.j
-    GROUP BY d.i
-  ) d ON d.i = s.i
-)""")
-
-
-
-# curation.conversation_quality replay: the transcripts base CTE +
-# one conv-keyed lag window + one conv-keyed agg. span_us derives
-# from doc_id (ts = 2026-01-01 + doc_id seconds by construction);
-# assistant mean = exact integer sum / count, one division, 6-dp.
-_CONV_QUALITY_SQL = _BASE_CTE + r"""
-, lagged AS (
-  SELECT conv_id, role, tool, doc_id,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                         x -> x <> '')) AS wc,
-         CASE WHEN lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-                   = role THEN 1 ELSE 0 END AS rep
-  FROM base
-)
-SELECT conv_id,
-       CAST(COUNT(*) AS BIGINT) AS n_turns,
-       CAST(SUM(CASE WHEN role = 'user' THEN 1 ELSE 0 END) AS BIGINT) AS n_user,
-       CAST(SUM(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_assistant,
-       CAST(SUM(CASE WHEN tool IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_tool,
-       CAST(SUM(rep) AS BIGINT) AS n_role_repeats,
-       round(AVG(CASE WHEN role = 'assistant' THEN wc END), 6)
-         AS mean_assistant_words,
-       CAST((MAX(doc_id) - MIN(doc_id)) * 1000000 AS BIGINT) AS span_us,
-       (COUNT(*) >= 2
-        AND SUM(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END) >= 1
-        AND SUM(rep) = 0) AS keep
-FROM lagged
-GROUP BY conv_id
-"""
-
-# retrieval.rrf_fuse replay: the green BM25 oracle verbatim as the
-# sparse list (6-dp-rounded scores rank deterministically), the
-# ann_topk_bruteforce cosine convention as the dense list, fusion =
-# one exact division per source + a pinned two-term add before the
-# 6-dp round.
-_HYBRID_RRF_SQL = """
-WITH bm AS (
-  SELECT doc_id,
-         ROW_NUMBER() OVER (ORDER BY score DESC, doc_id ASC) AS r
-  FROM (""" + _BM25_SQL + """) bs
-), dn AS (
-  SELECT c.vec_id AS doc_id,
-         ROW_NUMBER() OVER (
-           ORDER BY list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
-                                           q.qv) DESC,
-                    c.vec_id ASC) AS r
-  FROM embeddings c CROSS JOIN (
-    SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
-  ) q
-  WHERE c.vec_id <> 0
-  QUALIFY r <= 20
-)
-SELECT COALESCE(bm.doc_id, dn.doc_id) AS doc_id,
-       bm.r AS rank_bm25,
-       dn.r AS rank_dense,
-       round(COALESCE(1.0 / (60 + bm.r), 0.0)
-             + COALESCE(1.0 / (60 + dn.r), 0.0), 6) AS rrf_score
-FROM bm FULL JOIN dn ON bm.doc_id = dn.doc_id
-"""
-
-
-
-# similarity.knn_classify replay: the ann_topk_bruteforce cosine
-# convention (leave-one-out, rank on raw cos with cand tiebreak) +
-# the identical deterministic vote window.
-_KNN_CLASSIFY_SQL = """
-WITH q AS (
-  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv, label AS t
-  FROM embeddings WHERE vec_id % 25 = 0
-), nn AS (
-  SELECT q.query_id, c.label AS lab,
-         ROW_NUMBER() OVER (
-           PARTITION BY q.query_id
-           ORDER BY list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
-                                           q.qv) DESC,
-                    c.vec_id ASC) AS rank
-  FROM embeddings c CROSS JOIN q
-  WHERE c.vec_id <> q.query_id
-  QUALIFY rank <= 5
-), votes AS (
-  SELECT query_id, lab,
-         CAST(COUNT(*) AS BIGINT) AS n_votes,
-         CAST(MIN(rank) AS BIGINT) AS best_rank
-  FROM nn GROUP BY query_id, lab
-), pred AS (
-  SELECT query_id, lab, n_votes, best_rank,
-         ROW_NUMBER() OVER (
-           PARTITION BY query_id
-           ORDER BY n_votes DESC, best_rank ASC, lab ASC) AS rn
-  FROM votes QUALIFY rn = 1
-)
-SELECT p.query_id, q.t AS true_label, p.lab AS pred_label,
-       p.n_votes, p.best_rank, (q.t = p.lab) AS correct
-FROM pred p JOIN q ON q.query_id = p.query_id
-"""
-
-
-
-# curation.ccnet_buckets replay: the green lm_score SQL verbatim as
-# the scorer, then the _HISTQ_SQL quantile algebra over avg_logprob
-# (integer bucket formula, smallest bucket with cum >= ceil(q*total)),
-# CASE on integer buckets — no float comparison anywhere.
-_CCNET_SQL = """
-WITH sc AS (
-  SELECT * FROM (""" + _LM_SCORE_SQL + """) s
-), h AS (
-  SELECT LEAST(999, GREATEST(0,
-           CAST(FLOOR(((CAST(avg_logprob AS DOUBLE) - (-16.0)) / 16.0)
-                      * 1000) AS INT))) AS bucket,
-         COUNT(*) AS c
-  FROM sc WHERE avg_logprob IS NOT NULL
-  GROUP BY 1
-), cum AS (
-  SELECT bucket,
-         SUM(c) OVER (ORDER BY bucket
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(c) OVER () AS total
-  FROM h
-), cuts AS (
-  SELECT qs.q, MIN(cum.bucket) AS b
-  FROM cum JOIN (SELECT unnest([0.33::DOUBLE, 0.67::DOUBLE]) AS q) qs
-    ON cum.cum >= CEIL(qs.q * cum.total)
-  GROUP BY qs.q
-), th AS (
-  SELECT MIN(CASE WHEN q = 0.33 THEN b END) AS b_lo,
-         MIN(CASE WHEN q = 0.67 THEN b END) AS b_hi
-  FROM cuts
-)
-SELECT sc.doc_id, sc.avg_logprob,
-       CASE WHEN sc.avg_logprob IS NULL THEN NULL
-            ELSE LEAST(999, GREATEST(0,
-                   CAST(FLOOR(((CAST(sc.avg_logprob AS DOUBLE) - (-16.0))
-                               / 16.0) * 1000) AS INT))) END AS score_bucket,
-       CASE WHEN sc.avg_logprob IS NULL THEN NULL
-            WHEN LEAST(999, GREATEST(0,
-                   CAST(FLOOR(((CAST(sc.avg_logprob AS DOUBLE) - (-16.0))
-                               / 16.0) * 1000) AS INT))) <= th.b_lo
-              THEN 'tail'
-            WHEN LEAST(999, GREATEST(0,
-                   CAST(FLOOR(((CAST(sc.avg_logprob AS DOUBLE) - (-16.0))
-                               / 16.0) * 1000) AS INT))) <= th.b_hi
-              THEN 'middle'
-            ELSE 'head' END AS ccnet_bucket
-FROM sc CROSS JOIN th
-"""
-
-
-
-# dedup.remove_repeated_spans replay: dup-injected corpus, 10-gram
-# relation with the two gram windows, keep-first by (doc_id, pos),
-# cut-interval merge as a cummax gaps-and-islands, token filter by
-# NOT EXISTS over the merged intervals, md5 of the single-space
-# reassembly (string_agg ORDER BY position == array_join order).
-_REMOVE_SPANS_SQL = r"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
-), w AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                     x -> x <> '') AS t
-  FROM corpus
-), g AS (
-  SELECT doc_id, i - 1 AS pos, array_to_string(t[i:i+9], ' ') AS gram
-  FROM w, UNNEST(generate_series(1, greatest(len(t) - 9, 0))) AS u(i)
-), occ AS (
-  SELECT doc_id, pos,
-         COUNT(*) OVER (PARTITION BY gram) AS c,
-         ROW_NUMBER() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-  FROM g
-), cut AS (
-  SELECT doc_id, pos FROM occ WHERE c >= 2 AND rn > 1
-), isl AS (
-  SELECT doc_id, pos,
-         CASE WHEN pos <= MAX(pos + 10) OVER (
-                PARTITION BY doc_id ORDER BY pos
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-              THEN 0 ELSE 1 END AS flag
-  FROM cut
-), num AS (
-  SELECT doc_id, pos,
-         SUM(flag) OVER (PARTITION BY doc_id ORDER BY pos
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS iid
-  FROM isl
-), ivs AS (
-  SELECT doc_id, iid, MIN(pos) AS s, MAX(pos) + 10 AS e
-  FROM num GROUP BY doc_id, iid
-), toks AS (
-  SELECT doc_id, t[i] AS tok, i - 1 AS ti
-  FROM w, UNNEST(generate_series(1, len(t))) AS u(i)
-), kept AS (
-  SELECT k.doc_id, k.tok, k.ti FROM toks k
-  WHERE NOT EXISTS (
-    SELECT 1 FROM ivs
-    WHERE ivs.doc_id = k.doc_id AND k.ti >= ivs.s AND k.ti < ivs.e
-  )
-), ka AS (
-  SELECT doc_id, COUNT(*) AS n_kept,
-         string_agg(tok, ' ' ORDER BY ti) AS out_text
-  FROM kept GROUP BY doc_id
-), ni AS (
-  SELECT doc_id, COUNT(*) AS n_intervals FROM ivs GROUP BY doc_id
-)
-SELECT w.doc_id,
-       CAST(len(w.t) AS BIGINT) AS n_tokens,
-       CAST(COALESCE(ka.n_kept, 0) AS BIGINT) AS n_kept,
-       CAST(len(w.t) - COALESCE(ka.n_kept, 0) AS BIGINT) AS n_cut_tokens,
-       CAST(COALESCE(ni.n_intervals, 0) AS BIGINT) AS n_intervals,
-       md5(COALESCE(ka.out_text, '')) AS dedup_md5
-FROM w LEFT JOIN ka USING (doc_id) LEFT JOIN ni USING (doc_id)
-"""
-
-
-
-# kg_modularity: the unrolled 2-round LPA CTEs feed the Newman-Girvan
-# per-community algebra; every intermediate is an exact long and the
-# single double expression mirrors the Spark column order exactly
-_MODULARITY_SQL = (
-    """
-WITH lpa_e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), lpa_und AS (
-  SELECT u, v FROM lpa_e UNION SELECT v AS u, u AS v FROM lpa_e
-), lpa_sd AS (
-  SELECT node, 'c' || CAST(node % 3 AS VARCHAR) AS label
-  FROM (SELECT DISTINCT u AS node FROM lpa_und)
-  WHERE node % 250 = 0
-), l0 AS (SELECT * FROM lpa_sd)"""
-    + _lpa_round(1)
-    + _lpa_round(2)
-    + """
-, mdeg AS (
-  SELECT u AS node, COUNT(*) AS deg FROM lpa_und GROUP BY u
-), comm AS (
-  SELECT d.node, COALESCE(l.label, '_unlabeled') AS community, d.deg
-  FROM mdeg d LEFT JOIN l2 l ON l.node = d.node
-), mtot AS (SELECT COUNT(*) AS m FROM lpa_e)
-, minc AS (
-  SELECT cu.community, COUNT(*) AS in_edges
-  FROM lpa_e e
-  JOIN comm cu ON cu.node = e.u
-  JOIN comm cv ON cv.node = e.v
-  WHERE cu.community = cv.community
-  GROUP BY cu.community
-), mdsum AS (
-  SELECT community, COUNT(*) AS n_nodes, SUM(deg) AS degree_sum
-  FROM comm GROUP BY community
-)
-SELECT d.community,
-       CAST(d.n_nodes AS BIGINT) AS n_nodes,
-       CAST(COALESCE(i.in_edges, 0) AS BIGINT) AS in_edges,
-       CAST(d.degree_sum AS BIGINT) AS degree_sum,
-       round(COALESCE(i.in_edges, 0) / CAST(m.m AS DOUBLE)
-             - POWER(d.degree_sum / (2.0 * m.m), 2), 6) AS q_contrib_r
-FROM mdsum d
-LEFT JOIN minc i ON i.community = d.community
-CROSS JOIN mtot m
-"""
-)
-
-# text_kn_bigrams: DuckDB's parallel unnest of the two shifted word
-# slices zips adjacent pairs; count-of-counts discount and P_KN use
-# the exact expression shapes of textops.kn_bigram_stats
-_KN_BIGRAMS_SQL = r"""
-WITH w AS (
-  SELECT regexp_split_to_array(lower(trim(text)), '\s+') AS words FROM documents
-  WHERE len(regexp_split_to_array(lower(trim(text)), '\s+')) >= 2
-), bg0 AS (
-  SELECT unnest(list_slice(words, 1, len(words) - 1)) AS w1,
-         unnest(list_slice(words, 2, len(words))) AS w2
-  FROM w
-), bc AS (
-  SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c FROM bg0 GROUP BY w1, w2
-), lft AS (
-  SELECT w1, CAST(SUM(c) AS BIGINT) AS cw1,
-         CAST(COUNT(*) AS BIGINT) AS nfollow_w1
-  FROM bc GROUP BY w1
-), rgt AS (
-  SELECT w2, CAST(COUNT(*) AS BIGINT) AS ncont_w2 FROM bc GROUP BY w2
-), tot AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS btypes,
-         CAST(COALESCE(SUM(CASE WHEN c = 1 THEN 1 END), 0) AS BIGINT) AS n1,
-         CAST(COALESCE(SUM(CASE WHEN c = 2 THEN 1 END), 0) AS BIGINT) AS n2
-  FROM bc
-)
-SELECT bc.w1, bc.w2, bc.c, lft.cw1, lft.nfollow_w1, rgt.ncont_w2,
-       round(tot.n1 / greatest(tot.n1 + 2 * tot.n2, 1), 6) AS d_r,
-       round(
-         greatest(bc.c - tot.n1 / greatest(tot.n1 + 2 * tot.n2, 1), 0.0)
-           / CAST(lft.cw1 AS DOUBLE)
-         + (tot.n1 / greatest(tot.n1 + 2 * tot.n2, 1))
-           * (lft.nfollow_w1 / CAST(lft.cw1 AS DOUBLE))
-           * (rgt.ncont_w2 / CAST(tot.btypes AS DOUBLE)), 6) AS pkn_r
-FROM bc JOIN lft USING (w1) JOIN rgt USING (w2) CROSS JOIN tot
-WHERE bc.c >= 3
-"""
-
-# dedup_winnowing: identical gram hashing, window-min selection (list
-# slices clamp at the tail in both engines), stop-fingerprint cap, and
-# shared-fingerprint pair join over the dup-injected corpus
-_WINNOWING_SQL = _DUP_CORPUS + r"""
-, ww AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS words
-  FROM corpus
-), wg AS (
-  SELECT doc_id,
-         list_transform(generate_series(1, greatest(len(words) - 3, 1)),
-                        i -> md5(array_to_string(list_slice(words, i, i + 3), ' '))) AS grams
-  FROM ww
-), ws AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           generate_series(1, greatest(len(grams) - 4, 1)),
-           j -> list_min(list_slice(grams, j, j + 4))))) AS fp
-  FROM wg
-), wrare AS (
-  SELECT fp FROM ws GROUP BY fp HAVING COUNT(*) <= 50
-), wsc AS (
-  SELECT ws.doc_id, ws.fp FROM ws JOIN wrare USING (fp)
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS shared
-FROM wsc a JOIN wsc b ON a.fp = b.fp AND a.doc_id < b.doc_id
-GROUP BY 1, 2
-HAVING COUNT(*) >= 3
-"""
-
-
-
-# kg_louvain_move: LPA communities feed one synchronized Louvain round;
-# gains are HUGEINT-exact so the argmax ordering is identical to the
-# Spark decimal lattice
-_LOUVAIN_MOVE_SQL = (
-    """
-WITH lpa_e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), lpa_und AS (
-  SELECT u, v FROM lpa_e UNION SELECT v AS u, u AS v FROM lpa_e
-), lpa_sd AS (
-  SELECT node, 'c' || CAST(node % 3 AS VARCHAR) AS label
-  FROM (SELECT DISTINCT u AS node FROM lpa_und)
-  WHERE node % 250 = 0
-), l0 AS (SELECT * FROM lpa_sd)"""
-    + _lpa_round(1)
-    + _lpa_round(2)
-    + """
-, ldeg AS (
-  SELECT u AS node, COUNT(*) AS k FROM lpa_und GROUP BY u
-), lcomm AS (
-  SELECT d.node,
-         COALESCE(l.label, '_n' || CAST(d.node AS VARCHAR)) AS community,
-         d.k
-  FROM ldeg d LEFT JOIN l2 l ON l.node = d.node
-), ltot AS (
-  SELECT community, SUM(k) AS tot FROM lcomm GROUP BY community
-), lnbr AS (
-  SELECT e.u AS node, cv.community AS c, CAST(COUNT(*) AS BIGINT) AS k_ic
-  FROM lpa_und e JOIN lcomm cv ON cv.node = e.v
-  GROUP BY e.u, cv.community
-), lcand AS (
-  SELECT node, c, SUM(k_ic) AS k_ic FROM (
-    SELECT node, c, k_ic FROM lnbr
-    UNION ALL
-    SELECT node, community AS c, 0 AS k_ic FROM lcomm
-  ) GROUP BY node, c
-), lm AS (SELECT COUNT(*) AS m FROM lpa_e)
-, lscored AS (
-  SELECT cd.node, cd.c, cm.community AS cur,
-         2 * CAST(m.m AS HUGEINT) * CAST(cd.k_ic AS HUGEINT)
-           - CAST(cm.k AS HUGEINT)
-             * CAST(ct.tot - CASE WHEN cd.c = cm.community THEN cm.k
-                                  ELSE 0 END AS HUGEINT) AS gain
-  FROM lcand cd
-  JOIN lcomm cm ON cm.node = cd.node
-  JOIN ltot ct ON ct.community = cd.c
-  CROSS JOIN lm m
-)
-SELECT CAST(node AS BIGINT) AS node, cur AS old_label, c AS new_label,
-       (c <> cur) AS moved
-FROM (
-  SELECT *, ROW_NUMBER() OVER (
-    PARTITION BY node ORDER BY gain DESC, (c = cur) DESC, c ASC
-  ) AS rk FROM lscored
-) WHERE rk = 1
-"""
-)
-
-# text_kn_perplexity: full KN training replay (min_count=1) + per-doc
-# micro-nat scoring; ln runs over the identical 6-dp-rounded pkn_r
-_KN_PERPLEXITY_SQL = r"""
-WITH w AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS words FROM documents
-  WHERE len(regexp_split_to_array(lower(trim(text)), '\s+')) >= 2
-), bg0 AS (
-  SELECT doc_id, unnest(list_slice(words, 1, len(words) - 1)) AS w1,
-         unnest(list_slice(words, 2, len(words))) AS w2
-  FROM w
-), bc AS (
-  SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c FROM bg0 GROUP BY w1, w2
-), lft AS (
-  SELECT w1, CAST(SUM(c) AS BIGINT) AS cw1,
-         CAST(COUNT(*) AS BIGINT) AS nfollow_w1
-  FROM bc GROUP BY w1
-), rgt AS (
-  SELECT w2, CAST(COUNT(*) AS BIGINT) AS ncont_w2 FROM bc GROUP BY w2
-), tot AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS btypes,
-         CAST(COALESCE(SUM(CASE WHEN c = 1 THEN 1 END), 0) AS BIGINT) AS n1,
-         CAST(COALESCE(SUM(CASE WHEN c = 2 THEN 1 END), 0) AS BIGINT) AS n2
-  FROM bc
-), kn AS (
-  SELECT bc.w1, bc.w2,
-       round(
-         greatest(bc.c - tot.n1 / greatest(tot.n1 + 2 * tot.n2, 1), 0.0)
-           / CAST(lft.cw1 AS DOUBLE)
-         + (tot.n1 / greatest(tot.n1 + 2 * tot.n2, 1))
-           * (lft.nfollow_w1 / CAST(lft.cw1 AS DOUBLE))
-           * (rgt.ncont_w2 / CAST(tot.btypes AS DOUBLE)), 6) AS pkn_r
-  FROM bc JOIN lft USING (w1) JOIN rgt USING (w2) CROSS JOIN tot
-), sc AS (
-  SELECT b.doc_id,
-         CAST(round(ln(greatest(k.pkn_r, 1e-6)) * 1000000.0, 0) AS BIGINT) AS micro
-  FROM bg0 b JOIN kn k ON k.w1 = b.w1 AND k.w2 = b.w2
-)
-SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-       CAST(SUM(micro) AS BIGINT) AS logp_micro,
-       round(SUM(micro) / 1000000.0 / COUNT(*), 6) AS avg_logp_r
-FROM sc GROUP BY doc_id
-"""
-
-
-
-# kg_time_travel / kg_snapshot_diff: the same synthesized changelog as
-# UNION ALL waves over the native triples, reduced with arg_max(op, seq)
-# per quad key — DuckDB's arg_max == Spark's max_by
-_TT_LOG_CTE = _TRIPLES_CTE + """
-, h AS (
-  SELECT graph, subj, pred, obj_kind, obj, datatype, lang,
-         ('0x' || substr(md5(subj || '|' || pred), 1, 8))::BIGINT AS hh
-  FROM triples
-), changelog AS (
-  SELECT graph, subj, pred, obj_kind, obj, datatype, lang,
-         'assert' AS op, 100 AS ts, 1 AS seq FROM h
-  UNION ALL
-  SELECT graph, subj, pred, obj_kind, obj, datatype, lang,
-         'retract', 200, 2 FROM h WHERE hh % 5 = 0
-  UNION ALL
-  SELECT graph, subj, pred, obj_kind, obj, datatype, lang,
-         'assert', 300, 3 FROM h WHERE hh % 10 = 0
-  UNION ALL
-  SELECT graph, subj, pred, obj_kind, obj, datatype, lang,
-         'retract', 400, 4 FROM h WHERE hh % 7 = 0
-)
-"""
-
-_TIME_TRAVEL_SQL = _TT_LOG_CTE + """
-SELECT graph, subj, pred, obj_kind, obj, datatype, lang
-FROM changelog
-WHERE ts <= 350
-GROUP BY graph, subj, pred, obj_kind, obj, datatype, lang
-HAVING arg_max(op, seq) = 'assert'
-"""
-
-# kg_snapshot_diff: two arg_max snapshots + EXCEPT both ways (EXCEPT's
-# NULL-equality == the Spark side's eqNullSafe anti-joins)
-_SNAPSHOT_DIFF_SQL = _TT_LOG_CTE + """
-, s1 AS (
-  SELECT graph, subj, pred, obj_kind, obj, datatype, lang
-  FROM changelog WHERE ts <= 150
-  GROUP BY graph, subj, pred, obj_kind, obj, datatype, lang
-  HAVING arg_max(op, seq) = 'assert'
-), s2 AS (
-  SELECT graph, subj, pred, obj_kind, obj, datatype, lang
-  FROM changelog WHERE ts <= 350
-  GROUP BY graph, subj, pred, obj_kind, obj, datatype, lang
-  HAVING arg_max(op, seq) = 'assert'
-)
-SELECT 'removed' AS side, * FROM (SELECT * FROM s1 EXCEPT SELECT * FROM s2)
-UNION ALL
-SELECT 'added' AS side, * FROM (SELECT * FROM s2 EXCEPT SELECT * FROM s1)
-"""
-
-# streaming_graph_state: the batch arg_max over the FULL changelog (no
-# ts filter — current state); streaming == batch is the verified claim
-_GRAPH_STATE_SQL = _TT_LOG_CTE + """
-SELECT graph, subj, pred, obj_kind, obj, datatype, lang
-FROM changelog
-GROUP BY graph, subj, pred, obj_kind, obj, datatype, lang
-HAVING arg_max(op, seq) = 'assert'
-"""
-
-# data_rank_normalize: with the unique doc_id tiebreak there are no rank
-# peers, so PERCENT_RANK == (row_number-1)/(n-1) == the two-phase rank
-_RANK_NORM_SQL = r"""
-SELECT doc_id, lang, n_chars,
-       round(PERCENT_RANK() OVER (
-         PARTITION BY lang ORDER BY n_chars ASC, doc_id ASC), 6) AS pct_r
-FROM documents
-"""
-
-# ann_classifier_report: the green knn prediction CTE verbatim feeds the
-# confusion algebra; F1 = 2tp/(2tp+fp+fn) keeps one exact-int division
-_CLS_REPORT_SQL = (
-    """
-WITH preds AS (
-""" + _KNN_CLASSIFY_SQL + """
-), m AS (
-  SELECT true_label AS t, pred_label AS p FROM preds
-), tp AS (
-  SELECT t AS label, COUNT(*) AS tp FROM m WHERE t = p GROUP BY t
-), sup AS (
-  SELECT t AS label, COUNT(*) AS support FROM m GROUP BY t
-), pc AS (
-  SELECT p AS label, COUNT(*) AS pred_n FROM m GROUP BY p
-), base AS (
-  SELECT label,
-         CAST(COALESCE(support, 0) AS BIGINT) AS support,
-         CAST(COALESCE(tp, 0) AS BIGINT) AS tp,
-         CAST(COALESCE(pred_n, 0) - COALESCE(tp, 0) AS BIGINT) AS fp,
-         CAST(COALESCE(support, 0) - COALESCE(tp, 0) AS BIGINT) AS fn
-  FROM sup FULL OUTER JOIN pc USING (label) LEFT JOIN tp USING (label)
-)
-SELECT label, support, tp, fp, fn,
-       CASE WHEN tp + fp > 0
-            THEN round(tp / CAST(tp + fp AS DOUBLE), 6) ELSE 0.0 END
-         AS precision_r,
-       CASE WHEN tp + fn > 0
-            THEN round(tp / CAST(tp + fn AS DOUBLE), 6) ELSE 0.0 END
-         AS recall_r,
-       CASE WHEN 2 * tp + fp + fn > 0
-            THEN round(2 * tp / CAST(2 * tp + fp + fn AS DOUBLE), 6)
-            ELSE 0.0 END AS f1_r
-FROM base
-"""
-)
-
-# data_calibration_bins: integer-scaled confidences and a second md5
-# channel for outcomes; bin ids and mean confidence are exact integers
-_CALIB_SQL = r"""
-WITH sc AS (
-  SELECT ('0x' || substr(md5('conf|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-           % 1001 AS s,
-         CASE WHEN ('0x' || substr(md5('out|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-                   % 1000
-                 < ('0x' || substr(md5('conf|' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-                   % 1001
-              THEN 1 ELSE 0 END AS y
-  FROM documents
-)
-SELECT LEAST(9, GREATEST(0, CAST(FLOOR((s * 10) / 1000.0) AS BIGINT))) AS bin,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(y) AS BIGINT) AS n_pos,
-       round(SUM(y) / CAST(COUNT(*) AS DOUBLE), 6) AS acc_r,
-       round(SUM(s) / CAST(COUNT(*) * 1000 AS DOUBLE), 6) AS conf_r,
-       round(abs(SUM(y) / CAST(COUNT(*) AS DOUBLE)
-                 - SUM(s) / CAST(COUNT(*) * 1000 AS DOUBLE)), 6) AS gap_r
-FROM sc GROUP BY 1
-"""
-
-# kg_local_clustering: id-ordered triangle enumeration (a<b via the edge
-# canon, b<c via the join) + corner re-attribution; same algebra, 6 dp
-_LCC_SQL = r"""
-WITH e AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), deg AS (
-  SELECT n AS node, COUNT(*) AS deg FROM (
-    SELECT a AS n FROM e UNION ALL SELECT b AS n FROM e) GROUP BY n
-), tri AS (
-  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-  FROM e e1 JOIN e e2 ON e2.a = e1.b
-  WHERE EXISTS (SELECT 1 FROM e e3 WHERE e3.a = e1.a AND e3.b = e2.b)
-), pcnt AS (
-  SELECT node, COUNT(*) AS n_tri FROM (
-    SELECT x AS node FROM tri UNION ALL SELECT y FROM tri
-    UNION ALL SELECT z FROM tri
-  ) GROUP BY node
-)
-SELECT d.node, CAST(d.deg AS BIGINT) AS deg,
-       CAST(COALESCE(p.n_tri, 0) AS BIGINT) AS n_triangles,
-       CASE WHEN d.deg >= 2
-            THEN round(2.0 * COALESCE(p.n_tri, 0)
-                       / (CAST(d.deg AS DOUBLE) * (d.deg - 1)), 6)
-            ELSE 0.0 END AS lcc_r
-FROM deg d LEFT JOIN pcnt p USING (node)
-"""
-
-# kg_ppmi_edges: pair counts over distinct (order, part) membership, node
-# marginals, 2*total directed events, one ln — all exact longs before it
-_PPMI_SQL = r"""
-WITH m AS (
-  SELECT DISTINCT l_orderkey AS g, l_partkey AS i
-  FROM lineitem WHERE l_orderkey % 5 = 0
-), e AS (
-  SELECT a.i AS u, b.i AS v, CAST(COUNT(*) AS BIGINT) AS n
-  FROM m a JOIN m b USING (g)
-  WHERE a.i < b.i
-  GROUP BY a.i, b.i
-), marg AS (
-  SELECT node, CAST(SUM(n) AS BIGINT) AS mg FROM (
-    SELECT u AS node, n FROM e UNION ALL SELECT v, n FROM e
-  ) GROUP BY node
-), tot AS (SELECT CAST(2 * SUM(n) AS BIGINT) AS d_total FROM e)
-SELECT e.u, e.v, e.n,
-       round(greatest(0.0,
-             ln(CAST(e.n AS DOUBLE) * t.d_total
-                / (CAST(mu.mg AS DOUBLE) * mv.mg))), 6) AS ppmi_r
-FROM e
-JOIN marg mu ON mu.node = e.u
-JOIN marg mv ON mv.node = e.v
-CROSS JOIN tot t
-"""
-
-# data_label_votes: five md5-keyed noisy annotators, round-1 majority via
-# windowed argmin (count desc, label asc), exact-integer agreement
-# weights, round-2 weighted revote — the deterministic Dawid-Skene round
-_LABEL_VOTES_SQL = r"""
-WITH ann AS (
-  SELECT d.doc_id AS item, 'a' || CAST(j AS VARCHAR) AS annotator,
-         CASE WHEN ('0x' || substr(md5('ann' || CAST(j AS VARCHAR) || '|'
-                        || CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT
-                   % (j + 3) = 0
-              THEN 'z' || CAST(
-                   ('0x' || substr(md5('ann' || CAST(j AS VARCHAR) || '|'
-                        || CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT % 3
-                   AS VARCHAR)
-              ELSE COALESCE(d.lang, 'und') END AS label
-  FROM documents d CROSS JOIN (SELECT unnest([0, 1, 2, 3, 4]) AS j)
-), votes AS (
-  SELECT DISTINCT item, annotator, label FROM ann
-), counts AS (
-  SELECT item, label, CAST(COUNT(*) AS BIGINT) AS c
-  FROM votes GROUP BY item, label
-), mv AS (
-  SELECT item, label AS label_mv FROM counts
-  QUALIFY row_number() OVER (PARTITION BY item ORDER BY c DESC, label ASC) = 1
-), agree AS (
-  SELECT v.annotator,
-         CAST(SUM(CASE WHEN v.label = m.label_mv THEN 1 ELSE 0 END)
-              AS BIGINT) AS w
-  FROM votes v JOIN mv m USING (item) GROUP BY v.annotator
-), wc AS (
-  SELECT v.item, v.label, CAST(SUM(a.w) AS BIGINT) AS wcnt
-  FROM votes v JOIN agree a USING (annotator) GROUP BY v.item, v.label
-), ww AS (
-  SELECT item, label AS label_weighted, wcnt FROM wc
-  QUALIFY row_number() OVER (PARTITION BY item ORDER BY wcnt DESC, label ASC) = 1
-), nv AS (
-  SELECT item, CAST(COUNT(*) AS BIGINT) AS n_votes FROM votes GROUP BY item
-)
-SELECT nv.item, nv.n_votes, mv.label_mv, ww.label_weighted,
-       ww.wcnt AS top_weight
-FROM nv JOIN mv USING (item) JOIN ww USING (item)
-"""
-
-# data_embed_quantize: parallel unnest zips (value, position); the code
-# and reconstruction-error expressions mirror quantize_int8's IEEE
-# expression shapes exactly; per-vector max/sum-of-int are order-free
-_QUANTIZE_SQL = r"""
-WITH ex AS (
-  SELECT vec_id AS id,
-         CAST(unnest(embedding) AS DOUBLE) AS x,
-         unnest(generate_series(1, len(embedding))) AS pos
-  FROM embeddings
-), stats AS (
-  SELECT pos, MIN(x) AS mn, MAX(x) AS mx FROM ex GROUP BY pos
-), q AS (
-  SELECT ex.id, s.mn, s.mx, ex.x,
-         CASE WHEN s.mx > s.mn
-              THEN least(255, greatest(0,
-                   CAST(floor((ex.x - s.mn) * 255.0 / (s.mx - s.mn)) AS INT)))
-              ELSE 0 END AS code
-  FROM ex JOIN stats s USING (pos)
-)
-SELECT id AS vec_id, CAST(COUNT(*) AS BIGINT) AS n_dims,
-       CAST(SUM(code) AS BIGINT) AS code_sum,
-       round(MAX(abs(x - (mn + code * (mx - mn) / 255.0))), 6) AS max_abs_err_r
-FROM q GROUP BY id
-"""
-
-# kg_tool_sequences: the same deterministic tool enrichment, one lead()
-# window per conversation, pattern counts + exact distinct-conv support
-_TOOL_SEQ_SQL = r"""
-WITH t AS (
-  SELECT 'conv-' || CAST(doc_id // 16 AS VARCHAR) AS conv_id,
-         CAST(doc_id % 16 AS INT) AS turn_idx,
-         CASE WHEN doc_id % 3 = 0
-              THEN (['search', 'browse', 'python', 'sql'])
-                   [CAST((doc_id // 3) % 4 AS INT) + 1]
-         END AS tool
-  FROM documents
-), p AS (
-  SELECT conv_id, tool,
-         lead(tool) OVER (PARTITION BY conv_id ORDER BY turn_idx ASC)
-           AS tool_next
-  FROM t WHERE tool IS NOT NULL
-)
-SELECT tool AS tool_a, tool_next AS tool_b,
-       CAST(COUNT(*) AS BIGINT) AS n_occurrences,
-       CAST(COUNT(DISTINCT conv_id) AS BIGINT) AS n_convs
-FROM p WHERE tool_next IS NOT NULL
-GROUP BY tool, tool_next
-"""
-
-# shared copurchase-graph CTE prefix for the WL / neighbor-sample
-# oracles: the same sampled co-purchase edge set as _LCC_SQL, plus the
-# symmetrized (both-orientations) view graphops._symmetrize produces
-_COPURCHASE_SYM_CTE = r"""
-WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), e AS MATERIALIZED (
-  SELECT a AS u, b AS v FROM e0 UNION ALL SELECT b, a FROM e0
-)
-"""
-
-# kg_wl_colors: the two WL rounds unrolled — degree color, then per
-# round the commutative modular hash-sum of neighbor colors feeding the
-# next md5; identical string algebra on both engines (md5 lowercase
-# hex, CAST of exact integer sums to VARCHAR)
-_WL_COLORS_SQL = _COPURCHASE_SYM_CTE + r"""
-, c0 AS (
-  SELECT u AS node,
-         substr(md5('wl0|' || CAST(COUNT(*) AS VARCHAR)), 1, 16) AS c
-  FROM e GROUP BY u
-), n1 AS (
-  SELECT e.u AS node,
-         SUM(('0x' || substr(md5('wlh|' || c0.c), 1, 12))::BIGINT
-             % 1000000007) AS sig
-  FROM e JOIN c0 ON c0.node = e.v GROUP BY e.u
-), c1 AS (
-  SELECT c0.node,
-         substr(md5('wl1|' || c0.c || '|'
-                    || CAST(COALESCE(n1.sig, 0) AS VARCHAR)), 1, 16) AS c
-  FROM c0 LEFT JOIN n1 USING (node)
-), n2 AS (
-  SELECT e.u AS node,
-         SUM(('0x' || substr(md5('wlh|' || c1.c), 1, 12))::BIGINT
-             % 1000000007) AS sig
-  FROM e JOIN c1 ON c1.node = e.v GROUP BY e.u
-), c2 AS (
-  SELECT c1.node,
-         substr(md5('wl2|' || c1.c || '|'
-                    || CAST(COALESCE(n2.sig, 0) AS VARCHAR)), 1, 16) AS c
-  FROM c1 LEFT JOIN n2 USING (node)
-), sz AS (SELECT c, COUNT(*) AS class_size FROM c2 GROUP BY c)
-SELECT c2.node, c2.c AS wl_color, CAST(sz.class_size AS BIGINT) AS class_size
-FROM c2 JOIN sz USING (c)
-"""
-
-# kg_neighbor_sample: the two md5-ranked fan-out hops replayed as
-# partitioned ROW_NUMBER windows (ties broken by child id, as in the
-# operator)
-_NEIGHBOR_SAMPLE_SQL = _COPURCHASE_SYM_CTE + r"""
-, roots AS (SELECT DISTINCT u AS root FROM e WHERE u % 10 = 0),
-h1 AS (
-  SELECT r.root, r.root AS parent, e.v AS child,
-         ROW_NUMBER() OVER (
-           PARTITION BY r.root
-           ORDER BY md5('ns|1|' || CAST(r.root AS VARCHAR) || '|'
-                        || CAST(r.root AS VARCHAR) || '|'
-                        || CAST(e.v AS VARCHAR)) ASC, e.v ASC) AS rn
-  FROM roots r JOIN e ON e.u = r.root
-), p1 AS (SELECT root, parent, child FROM h1 WHERE rn <= 3),
-f2 AS (SELECT DISTINCT root, child AS node FROM p1),
-h2 AS (
-  SELECT f2.root, f2.node AS parent, e.v AS child,
-         ROW_NUMBER() OVER (
-           PARTITION BY f2.root, f2.node
-           ORDER BY md5('ns|2|' || CAST(f2.root AS VARCHAR) || '|'
-                        || CAST(f2.node AS VARCHAR) || '|'
-                        || CAST(e.v AS VARCHAR)) ASC, e.v ASC) AS rn
-  FROM f2 JOIN e ON e.u = f2.node
-), p2 AS (SELECT root, parent, child FROM h2 WHERE rn <= 2)
-SELECT root, CAST(1 AS INT) AS hop, parent, child FROM p1
-UNION ALL
-SELECT root, CAST(2 AS INT) AS hop, parent, child FROM p2
-"""
-
-# kg_kge_eval: the full filtered-TransE ranking replay (same CTEs as
-# kg_transe_rank, at the denser mod-29 test sample) wrapped in the
-# per-relation MRR / Hits@k aggregation; ranks are exact integers so
-# only the final reciprocal sum is float (rounded once, like ppmi's ln)
-_KGE_EVAL_SQL = (
-    "SELECT pred, CAST(COUNT(*) AS BIGINT) AS n_test,\n"
-    "       round(SUM(1.0::DOUBLE / rank) / COUNT(*), 6) AS mrr_r,\n"
-    "       round(SUM(CASE WHEN rank <= 1 THEN 1 ELSE 0 END)\n"
-    "             / CAST(COUNT(*) AS DOUBLE), 6) AS hits1_r,\n"
-    "       round(SUM(CASE WHEN rank <= 3 THEN 1 ELSE 0 END)\n"
-    "             / CAST(COUNT(*) AS DOUBLE), 6) AS hits3_r,\n"
-    "       round(SUM(CASE WHEN rank <= 10 THEN 1 ELSE 0 END)\n"
-    "             / CAST(COUNT(*) AS DOUBLE), 6) AS hits10_r\n"
-    "FROM (\n"
-    # the % 97 test-sample literal appears exactly once in the rank SQL
-    + _TRANSE_RANK_SQL.replace("% 97 = 0", "% 29 = 0")
-    + "\n) ranks GROUP BY pred"
-)
-
-# data_doremi_weights: per-domain count + two integer-exact sums, a
-# 1-row totals CTE, then the mirror-descent algebra with the identical
-# 6-dp rounds around the single exp
-_DOREMI_SQL = r"""
-WITH per AS (
-  SELECT source AS domain,
-         CAST(COUNT(*) AS BIGINT) AS n_docs,
-         SUM(CAST(len(list_filter(
-               regexp_split_to_array(lower(trim(text)), '\s+'),
-               w -> w <> '')) AS BIGINT)) AS loss_sum,
-         SUM(CAST(n_chars AS BIGINT)) AS size_sum
-  FROM documents GROUP BY source
-), tot AS (
-  SELECT SUM(loss_sum) AS g_loss, SUM(n_docs) AS g_n,
-         SUM(size_sum) AS g_size
-  FROM per
-), ex AS (
-  SELECT domain, n_docs,
-         round(size_sum / CAST(g_size AS DOUBLE), 6) AS base_share_r,
-         round(loss_sum / CAST(n_docs AS DOUBLE)
-               - g_loss / CAST(g_n AS DOUBLE), 6) AS excess_r
-  FROM per CROSS JOIN tot
-), scored AS (
-  SELECT domain, n_docs, base_share_r, excess_r,
-         round(base_share_r * round(exp(excess_r), 6), 12) AS unnorm
-  FROM ex
-), z AS (SELECT SUM(unnorm) AS z FROM scored)
-SELECT domain, n_docs, base_share_r, excess_r,
-       round(unnorm / z, 6) AS weight_r
-FROM scored CROSS JOIN z
-"""
-
-# data_best_of_n: md5-bridge pseudo-reward per assistant turn, then the
-# per-conversation argmax (score DESC, turn ASC) with the 0.2 floor
-_BEST_OF_N_SQL = _BASE_CTE + r"""
-, sc AS (
-  SELECT conv_id, turn_idx,
-         round(CAST(('0x' || substr(md5('rm|' || conv_id || '|'
-                 || CAST(turn_idx AS VARCHAR)), 1, 8))::BIGINT % 1000
-               AS DOUBLE) / 1000.0, 6) AS s
-  FROM base WHERE role = 'assistant'
-), pick AS (
-  SELECT conv_id, turn_idx, s,
-         ROW_NUMBER() OVER (
-           PARTITION BY conv_id ORDER BY s DESC, turn_idx ASC) AS rn
-  FROM sc
-)
-SELECT conv_id, CAST(turn_idx AS BIGINT) AS best_turn_idx,
-       s AS best_score_r
-FROM pick WHERE rn = 1 AND s >= 0.2
-"""
-
-
-# rel_retention_cohorts: identical integer epoch-day bucket algebra —
-# day = epoch_us // 86.4e9, period = day // 7 (positive operands, so
-# DuckDB's truncating // equals Spark's floor()).
-_RETENTION_SQL = r"""
-WITH p AS (
-  SELECT user_id,
-         (epoch_us(ts) // 86400000000) // 7 AS period
-  FROM events
-),
-firsts AS (SELECT user_id, MIN(period) AS cohort_p FROM p GROUP BY user_id),
-active AS (SELECT DISTINCT user_id, period FROM p),
-cells AS (
-  SELECT f.cohort_p, a.period - f.cohort_p AS "offset",
-         CAST(COUNT(*) AS BIGINT) AS n_active
-  FROM active a JOIN firsts f USING (user_id)
-  GROUP BY f.cohort_p, a.period - f.cohort_p
-),
-sizes AS (SELECT cohort_p, n_active AS n_cohort FROM cells WHERE "offset" = 0)
-SELECT strftime(DATE '1970-01-01' + CAST(c.cohort_p * 7 AS INT), '%Y-%m-%d')
-         AS cohort_start,
-       CAST(c."offset" AS BIGINT) AS "offset",
-       c.n_active,
-       s.n_cohort,
-       ROUND(c.n_active / CAST(s.n_cohort AS DOUBLE), 6) AS retention_r
-FROM cells c JOIN sizes s USING (cohort_p)
-"""
-
-# data_iqr_outliers: quantile_cont(0.25/0.75) interpolates at quarter
-# fractions — bit-exact vs Spark's percentile() on integer inputs.
-_IQR_SQL = r"""
-WITH f AS (
-  SELECT lang,
-         ROUND(q1 - 1.5 * (q3 - q1), 6) AS lo,
-         ROUND(q3 + 1.5 * (q3 - q1), 6) AS hi
-  FROM (
-    SELECT lang,
-           quantile_cont(CAST(n_chars AS DOUBLE), 0.25) AS q1,
-           quantile_cont(CAST(n_chars AS DOUBLE), 0.75) AS q3
-    FROM documents GROUP BY lang
-  )
-)
-SELECT d.doc_id, d.lang, d.n_chars, f.lo, f.hi,
-       (CAST(d.n_chars AS DOUBLE) < f.lo
-        OR CAST(d.n_chars AS DOUBLE) > f.hi) AS is_outlier,
-       ROUND(LEAST(GREATEST(CAST(d.n_chars AS DOUBLE), f.lo), f.hi), 6)
-         AS winsorized
-FROM documents d JOIN f USING (lang)
-"""
-
-# kg_reify: the same content-addressed statement id (md5 over the
-# chr(31)-joined quad) + a 5-way UNNEST mirroring reify_statements.
-_RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-_PROV_DF = "http://www.w3.org/ns/prov#wasDerivedFrom"
-_KG_REIFY_SQL = _TRIPLES_CTE + f"""
-, rt AS (
-  SELECT triples.*,
-         'https://example.org/stmt/' || md5(
-           obj_kind || chr(31) || subj || chr(31) || pred || chr(31)
-           || obj || chr(31) || COALESCE(datatype, '') || chr(31)
-           || COALESCE(lang, '')) AS stmt,
-         regexp_replace(subj, '/turn/[0-9]+$', '') AS src
-  FROM triples
-)
-SELECT DISTINCT stmt AS subj, e.pred AS pred, e.obj_kind AS obj_kind,
-       e.obj AS obj, e.datatype AS datatype, e.lang AS lang
-FROM rt CROSS JOIN UNNEST([
-  {{'pred': '{_RDF_NS}type', 'obj_kind': 'iri', 'obj': '{_RDF_NS}Statement',
-    'datatype': CAST(NULL AS VARCHAR), 'lang': CAST(NULL AS VARCHAR)}},
-  {{'pred': '{_RDF_NS}subject', 'obj_kind': 'iri', 'obj': subj,
-    'datatype': CAST(NULL AS VARCHAR), 'lang': CAST(NULL AS VARCHAR)}},
-  {{'pred': '{_RDF_NS}predicate', 'obj_kind': 'iri', 'obj': pred,
-    'datatype': CAST(NULL AS VARCHAR), 'lang': CAST(NULL AS VARCHAR)}},
-  {{'pred': '{_RDF_NS}object', 'obj_kind': obj_kind, 'obj': obj,
-    'datatype': datatype, 'lang': lang}},
-  {{'pred': '{_PROV_DF}', 'obj_kind': 'iri', 'obj': src,
-    'datatype': CAST(NULL AS VARCHAR), 'lang': CAST(NULL AS VARCHAR)}}
-]) AS u(e)
-"""
-
-
-# kg_scc: algorithm-independent ground truth — full transitive closure
-# by recursive CTE (reach sets bounded <=32 by the testbed design),
-# scc(v) = min over {v} ∪ {w : v→*w and w→*v}.
-_KG_SCC_SQL = r"""
-WITH RECURSIVE ck0 AS (
-  SELECT CAST(c_custkey AS BIGINT) AS v0 FROM customer
-),
-mm AS (SELECT MIN(v0) AS vmin, MAX(v0) AS vmax FROM ck0),
-ck AS (
-  -- 0-based normalized index: octet arithmetic never goes negative
-  -- (DuckDB's // truncates toward zero; Spark's floor() floors)
-  SELECT v0 - (SELECT vmin FROM mm) AS v FROM ck0
-),
-mx AS (SELECT (SELECT vmax FROM mm) - (SELECT vmin FROM mm) AS n),
-b AS (
-  SELECT v,
-         (v // 8) AS g,
-         (v // 8) * 8 AS a,
-         LEAST((v // 8) * 8 + 7, (SELECT n FROM mx)) AS bmax
-  FROM ck
-),
-edges0 AS (
-  SELECT v AS s, CASE WHEN v < bmax THEN v + 1 ELSE a END AS d FROM b
-  UNION ALL
-  SELECT v, a + 8 FROM b
-  WHERE g % 4 = 0 AND v = a + 3 AND a + 8 <= (SELECT n FROM mx)
-  UNION ALL
-  SELECT v, a - 8 FROM b WHERE g % 4 = 1 AND v = a + 2
-  UNION ALL
-  SELECT v, a - 16 FROM b WHERE g % 4 = 3 AND v = a + 5
-),
-edges AS (SELECT DISTINCT s, d FROM edges0 WHERE s <> d),
-nodes AS (SELECT s AS v FROM edges UNION SELECT d FROM edges),
-reach AS (
-  SELECT s, d FROM edges
-  UNION
-  SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
-)
-SELECT nd.v AS node,
-       LEAST(nd.v,
-             COALESCE(MIN(CASE WHEN r2.s IS NOT NULL THEN r1.d END), nd.v)
-       ) AS scc
-FROM nodes nd
-LEFT JOIN reach r1 ON r1.s = nd.v
-LEFT JOIN reach r2 ON r2.s = r1.d AND r2.d = nd.v
-GROUP BY nd.v
-"""
-
-
-# TextTiling topic segmentation: lag/Jaccard/running-sum chain over the
-# transcript replay (DuckDB list functions mirror Spark's array ops
-# set-wise: sizes of distinct intersections/unions are engine-agnostic)
-_TOPIC_SEGMENTS_SQL = _BASE_CTE + """
-, seg0 AS (
-  SELECT conv_id, turn_idx,
-         list_distinct(list_filter(
-           string_split_regex(lower(trim(text)), '\\s+'), x -> x <> ''
-         )) AS wset
-  FROM base
-), seg1 AS (
-  SELECT conv_id, turn_idx, wset,
-         lag(wset) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS pset
-  FROM seg0
-), seg2 AS (
-  SELECT conv_id, turn_idx,
-         CASE WHEN pset IS NULL THEN NULL
-              ELSE round(
-                CAST(len(list_intersect(wset, pset)) AS DOUBLE)
-                / CAST(NULLIF(len(list_distinct(list_concat(wset, pset))), 0)
-                       AS DOUBLE), 6)
-         END AS jaccard_prev
-  FROM seg1
-), seg3 AS (
-  SELECT conv_id, turn_idx, jaccard_prev,
-         CASE WHEN jaccard_prev IS NULL OR jaccard_prev < 0.2
-              THEN 1 ELSE 0 END AS is_boundary
-  FROM seg2
-)
-SELECT conv_id, turn_idx, jaccard_prev, is_boundary,
-       CAST(SUM(is_boundary) OVER (
-              PARTITION BY conv_id ORDER BY turn_idx
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1
-            AS BIGINT) AS segment_id
-FROM seg3
-"""
-
-
-def _logreg_sql(n_rounds: int = 3, lr: float = 1.0) -> str:
-    """Unrolled GD rounds mirroring curation.logreg_quality: per-row
-    gradient contributions quantized to BIGINT micros (order-free exact
-    sums), weight updates 6-dp-rounded in-engine, identical expression
-    order throughout."""
-    xs = ["1e6", "x1 * 1e6", "x2 * 1e6"]  # err * x_j * 1e6 with x0 = 1.0
-    sql = """
-WITH feats AS (
-  SELECT doc_id,
-         CAST(LEAST(n_chars, 2000) AS DOUBLE) / 1000.0 AS x1,
-         CAST(len(regexp_extract_all(text, '\\d')) AS DOUBLE)
-           / CAST(GREATEST(n_chars, 1) AS DOUBLE) AS x2,
-         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-  FROM documents
-), r0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2)
-"""
-    for k in range(1, n_rounds + 1):
-        z = "(w.w0 + w.w1 * x1 + w.w2 * x2)"
-        p = f"(1.0 / (1.0 + exp(-{z})))"
-        err = f"({p} - CAST(y AS DOUBLE))"
-        grads = ", ".join(
-            f"round(w.w{j} - {lr!r} * (CAST(SUM(CAST(round({err} * {xs[j]}, 0) "
-            f"AS BIGINT)) AS DOUBLE) / 1e6) / CAST(COUNT(*) AS DOUBLE), 6) AS w{j}"
-            for j in range(3)
-        )
-        sql += (
-            f", r{k} AS (\n  SELECT {grads}\n"
-            f"  FROM feats CROSS JOIN r{k - 1} w GROUP BY w.w0, w.w1, w.w2\n)\n"
-        )
-    z = "(w.w0 + w.w1 * x1 + w.w2 * x2)"
-    p = f"(1.0 / (1.0 + exp(-{z})))"
-    sql += f"""
-SELECT doc_id, y, round({p}, 6) AS score_r,
-       CASE WHEN round({p}, 6) >= 0.5 THEN 1 ELSE 0 END AS pred
-FROM feats CROSS JOIN r{n_rounds} w
-"""
-    return sql
-
-
-_LOGREG_SQL = _logreg_sql()
-
-
-def _streaming_logreg_sql(lr: float = 1.0) -> str:
-    """Two sequential per-batch SGD steps (doc_id parity split, early
-    file first) unrolled as CTEs, then full-corpus scoring — mirrors
-    q_streaming_logreg / make_logreg_batch_updater exactly."""
-    xs = ["1e6", "x1 * 1e6", "x2 * 1e6"]
-    sql = """
-WITH feats AS (
-  SELECT doc_id,
-         CAST(LEAST(n_chars, 2000) AS DOUBLE) / 1000.0 AS x1,
-         CAST(len(regexp_extract_all(text, '\\d')) AS DOUBLE)
-           / CAST(GREATEST(n_chars, 1) AS DOUBLE) AS x2,
-         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-  FROM documents
-), r0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2)
-"""
-    for k, par in ((1, 0), (2, 1)):
-        z = "(w.w0 + w.w1 * x1 + w.w2 * x2)"
-        p = f"(1.0 / (1.0 + exp(-{z})))"
-        err = f"({p} - CAST(y AS DOUBLE))"
-        grads = ", ".join(
-            f"round(w.w{j} - {lr!r} * (CAST(SUM(CAST(round({err} * {xs[j]}, 0) "
-            f"AS BIGINT)) AS DOUBLE) / 1e6) / CAST(COUNT(*) AS DOUBLE), 6) AS w{j}"
-            for j in range(3)
-        )
-        sql += (
-            f", r{k} AS (\n  SELECT {grads}\n"
-            f"  FROM (SELECT * FROM feats WHERE doc_id % 2 = {par}) f\n"
-            f"  CROSS JOIN r{k - 1} w GROUP BY w.w0, w.w1, w.w2\n)\n"
-        )
-    z = "(w.w0 + w.w1 * x1 + w.w2 * x2)"
-    p = f"(1.0 / (1.0 + exp(-{z})))"
-    sql += f"""
-SELECT doc_id, y, round({p}, 6) AS score_r,
-       CASE WHEN round({p}, 6) >= 0.5 THEN 1 ELSE 0 END AS pred
-FROM feats CROSS JOIN r2 w
-"""
-    return sql
-
-
-_STREAMING_LOGREG_SQL = _streaming_logreg_sql()
-
-# pack bin-utilization: wrap the pack replay, integer decile rollup
-_PACK_STATS_SQL = """
-WITH packed AS (
-""" + _PACK_SQL.replace("WITH t AS", "  WITH t AS") + """
-), per AS (
-  SELECT lang AS shard, pack_id, SUM(n_tok) AS fill, COUNT(*) AS n_docs
-  FROM packed GROUP BY lang, pack_id
-)
-SELECT shard, CAST(LEAST(fill * 10 // 2000, 10) AS INT) AS util_decile,
-       CAST(COUNT(*) AS BIGINT) AS n_packs,
-       CAST(SUM(n_docs) AS BIGINT) AS n_docs,
-       CAST(MIN(fill) AS BIGINT) AS min_fill,
-       CAST(MAX(fill) AS BIGINT) AS max_fill
-FROM per GROUP BY 1, 2
-"""
-
-# kg_distmult_rank: the multiplicative-kernel twin of the TransE
-# replay — qvec_i = E_i·R_i, score = Σ qvec_i·t_i, HIGHER better,
-# same integer lattice, same filtered counting aggregations.
-_DISTMULT_RANK_SQL = _BASE_CTE + f"""
-, adjp AS (
-  SELECT conv_id, turn_idx,
-         LEAD(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nxt
-  FROM base
-), pos AS (
-  SELECT DISTINCT subj, pred, obj FROM (
-    SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS subj,
-           '{_RDF_TYPE}' AS pred, '{_V}Turn' AS obj FROM base
-    UNION ALL
-    SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR),
-           '{_V}conversation', '{_CB}' || conv_id FROM base
-    UNION ALL
-    SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR),
-           '{_V}nextTurn',
-           '{_CB}' || conv_id || '/turn/' || CAST(nxt AS VARCHAR)
-    FROM adjp WHERE nxt IS NOT NULL
-  )
-), kents AS (
-  SELECT DISTINCT entity
-  FROM (SELECT subj AS entity FROM pos UNION SELECT obj FROM pos)
-), evec AS (
-  SELECT entity, list_transform(range(0, 16), i ->
-    (('0x' || substr(md5('kge|E|' || entity || '|' || CAST(i AS VARCHAR)),
-      1, 8))::BIGINT % 2001) - 1000) AS v
-  FROM kents
-), test AS (
-  SELECT subj, pred, obj,
-         list_transform(range(0, 16), i ->
-           ((('0x' || substr(md5('kge|E|' || subj || '|' || CAST(i AS VARCHAR)),
-             1, 8))::BIGINT % 2001) - 1000)
-           * ((('0x' || substr(md5('kge|R|' || pred || '|' || CAST(i AS VARCHAR)),
-               1, 8))::BIGINT % 2001) - 1000)) AS qvec
-  FROM pos
-  WHERE ('0x' || substr(md5('kge|test|' || subj || '|' || pred || '|' || obj),
-         1, 8))::BIGINT % 97 = 0
-), td AS (
-  SELECT t.subj, t.pred, t.obj, t.qvec,
-         CAST(list_sum(list_transform(range(1, 17),
-              i -> t.qvec[i] * e.v[i])) AS BIGINT) AS true_s
-  FROM test t JOIN evec e ON e.entity = t.obj
-), scored AS (
-  SELECT td.subj, td.pred, td.obj, td.true_s, e.entity,
-         CAST(list_sum(list_transform(range(1, 17),
-              i -> td.qvec[i] * e.v[i])) AS BIGINT) AS ss
-  FROM td CROSS JOIN evec e
-), ball AS (
-  SELECT subj, pred, obj,
-         CAST(SUM(CASE WHEN entity <> obj
-                        AND (ss > true_s OR (ss = true_s AND entity < obj))
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_better
-  FROM scored GROUP BY 1, 2, 3
-), kb AS (
-  SELECT s.subj, s.pred, s.obj,
-         CAST(SUM(CASE WHEN s.ss > s.true_s
-                        OR (s.ss = s.true_s AND s.entity < s.obj)
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_known
-  FROM scored s JOIN pos p
-    ON p.subj = s.subj AND p.pred = s.pred AND p.obj = s.entity
-  WHERE s.entity <> s.obj
-  GROUP BY 1, 2, 3
-)
-SELECT b.subj, b.pred, b.obj,
-       CAST(1 + b.n_better - COALESCE(k.n_known, 0) AS BIGINT) AS rank
-FROM ball b LEFT JOIN kb k USING (subj, pred, obj)
-"""
-
-
-# kg_kge_compare: both rank replays wrapped in the scoreboard agg
-_KGE_COMPARE_SQL = (
-    """
-SELECT 'transe' AS model, CAST(COUNT(*) AS BIGINT) AS n_test,
-       round(AVG(1.0 / CAST(rank AS DOUBLE)), 6) AS mrr_r,
-       round(AVG(CASE WHEN rank <= 1 THEN 1.0 ELSE 0.0 END), 6) AS hits1_r,
-       round(AVG(CASE WHEN rank <= 10 THEN 1.0 ELSE 0.0 END), 6) AS hits10_r
-FROM (__TRANSE__) t
-UNION ALL
-SELECT 'distmult', CAST(COUNT(*) AS BIGINT),
-       round(AVG(1.0 / CAST(rank AS DOUBLE)), 6),
-       round(AVG(CASE WHEN rank <= 1 THEN 1.0 ELSE 0.0 END), 6),
-       round(AVG(CASE WHEN rank <= 10 THEN 1.0 ELSE 0.0 END), 6)
-FROM (__DISTMULT__) d
-"""
-    .replace("__TRANSE__", _TRANSE_RANK_SQL)
-    .replace("__DISTMULT__", _DISTMULT_RANK_SQL)
-)
-
-
-# Holt smoothing: the identical IEEE recursion as a recursive CTE
-_HOLT_SQL = """
-WITH RECURSIVE daily AS (
-  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-), idx AS (
-  SELECT event_type, n,
-         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS k,
-         COUNT(*) OVER (PARTITION BY event_type) AS kmax
-  FROM daily
-), rec AS (
-  SELECT event_type, 1 AS k, kmax, CAST(n AS DOUBLE) AS level,
-         CAST(0.0 AS DOUBLE) AS trend
-  FROM idx WHERE k = 1
-  UNION ALL
-  SELECT r.event_type, r.k + 1, r.kmax,
-         0.5 * CAST(i.n AS DOUBLE) + (1.0 - 0.5) * (r.level + r.trend)
-           AS level,
-         0.3 * ((0.5 * CAST(i.n AS DOUBLE)
-                 + (1.0 - 0.5) * (r.level + r.trend)) - r.level)
-           + (1.0 - 0.3) * r.trend AS trend
-  FROM rec r JOIN idx i ON i.event_type = r.event_type AND i.k = r.k + 1
-)
-SELECT event_type, CAST(kmax AS BIGINT) AS n_days,
-       round(level, 4) AS level_r, round(trend, 4) AS trend_r,
-       round(level + trend, 4) AS forecast_r
-FROM rec WHERE k = kmax
-"""
-
-# rolling z-score rate anomalies: integer window sums feed the z math
-_RATE_ANOMALIES_SQL = """
-WITH daily AS (
-  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-), rolled AS (
-  SELECT event_type, day, n,
-         SUM(n) OVER w AS s1,
-         SUM(n * n) OVER w AS s2,
-         COUNT(n) OVER w AS cnt
-  FROM daily
-  WINDOW w AS (PARTITION BY event_type ORDER BY day
-               ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
-), scored AS (
-  SELECT event_type, day, n, s1, cnt,
-         (CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-          / CAST(cnt AS DOUBLE)) / (CAST(cnt AS DOUBLE) - 1.0) AS var,
-         CASE WHEN cnt >= 2
-               AND (CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-                    / CAST(cnt AS DOUBLE)) / (CAST(cnt AS DOUBLE) - 1.0) > 0
-              THEN round(
-                (CAST(n AS DOUBLE) - CAST(s1 AS DOUBLE) / CAST(cnt AS DOUBLE))
-                / sqrt((CAST(s2 AS DOUBLE)
-                        - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-                          / CAST(cnt AS DOUBLE))
-                       / (CAST(cnt AS DOUBLE) - 1.0)), 4)
-         END AS z_r
-  FROM rolled
-)
-SELECT event_type, day, n, z_r,
-       CASE WHEN cnt >= 2 AND var <= 0 AND n * cnt <> s1 THEN 1
-            WHEN z_r IS NULL THEN 0
-            WHEN abs(z_r) >= 2.0 THEN 1 ELSE 0 END AS is_anomaly
-FROM scored
-"""
-
-
-def _bootstrap_ci_sql(n_reps: int = 32, seed: str = "boot") -> str:
-    """Poisson-bootstrap replay: the CASE chain uses the SAME float
-    literals as profile.POISSON1_CDF (imported, repr-rendered) so the
-    weights are bit-identical."""
-    from json_ld_spark.operators.profile import POISSON1_CDF
-
-    case = "CASE " + " ".join(
-        f"WHEN u < {POISSON1_CDF[i]!r} THEN {i}" for i in range(len(POISSON1_CDF))
-    ) + f" ELSE {len(POISSON1_CDF)} END"
-    return f"""
-WITH rows0 AS (
-  SELECT lang AS grp, CAST(n_chars AS BIGINT) AS x,
-         CAST(doc_id AS VARCHAR) AS rid, b
-  FROM documents CROSS JOIN UNNEST(range(0, {n_reps})) AS t(b)
-), weighted AS (
-  SELECT grp, x, b,
-         {case} AS k
-  FROM (
-    SELECT grp, x, b,
-           (CAST(('0x' || substr(md5('{seed}|' || CAST(b AS VARCHAR) || '|' || rid), 1, 8))::BIGINT AS DOUBLE) + 0.5)
-             / 4294967296.0 AS u
-    FROM rows0)
-), reps AS (
-  SELECT grp,
-         round(CAST(SUM(k * x) AS DOUBLE) / CAST(SUM(k) AS DOUBLE), 6) AS mean_b
-  FROM weighted GROUP BY grp, b
-  HAVING SUM(k) > 0
-), stats AS (
-  SELECT grp, MIN(mean_b) AS ci_lo_r, MAX(mean_b) AS ci_hi_r FROM (
-    SELECT grp, mean_b,
-           ROW_NUMBER() OVER (PARTITION BY grp ORDER BY mean_b ASC) AS rk,
-           COUNT(*) OVER (PARTITION BY grp) AS nb
-    FROM reps)
-  WHERE rk = 2 OR rk = nb - 1
-  GROUP BY grp
-), point AS (
-  SELECT lang AS grp, CAST(COUNT(*) AS BIGINT) AS n,
-         round(CAST(SUM(CAST(n_chars AS BIGINT)) AS DOUBLE)
-               / CAST(COUNT(*) AS DOUBLE), 6) AS mean_r
-  FROM documents GROUP BY lang
-)
-SELECT p.grp AS lang, p.n, p.mean_r, s.ci_lo_r, s.ci_hi_r
-FROM point p JOIN stats s ON p.grp = s.grp
-"""
-
-
-_BOOTSTRAP_CI_SQL = _bootstrap_ci_sql()
-
-# per-source dataset cards: dup injection + rollups + top-lang argmax
-_SOURCE_CARDS_SQL = """
-WITH corpus AS (
-  SELECT doc_id, source, lang, text, n_chars FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, source, lang, text, n_chars
-  FROM documents WHERE doc_id % 10 = 0
-), hashed AS (
-  SELECT source,
-         md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS content_hash
-  FROM corpus
-), dup AS (
-  SELECT source, CAST(SUM(g) AS BIGINT) AS n_dup_docs FROM (
-    SELECT source, content_hash, COUNT(*) AS g
-    FROM hashed GROUP BY 1, 2)
-  WHERE g > 1 GROUP BY source
-), lang_counts AS (
-  SELECT source, lang, COUNT(*) AS c FROM corpus GROUP BY 1, 2
-), top_lang AS (
-  SELECT source, lang AS top_lang FROM (
-    SELECT source, lang,
-           ROW_NUMBER() OVER (PARTITION BY source
-                              ORDER BY c DESC, lang ASC) AS rk
-    FROM lang_counts)
-  WHERE rk = 1
-), base AS (
-  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(n_chars) AS BIGINT) AS n_chars,
-         CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs
-  FROM corpus GROUP BY source
-)
-SELECT b.source, b.n_docs, b.n_chars,
-       CAST(COALESCE(d.n_dup_docs, 0) AS BIGINT) AS n_dup_docs,
-       round(CAST(COALESCE(d.n_dup_docs, 0) AS DOUBLE)
-             / CAST(b.n_docs AS DOUBLE), 6) AS dup_frac_r,
-       b.n_langs, t.top_lang
-FROM base b LEFT JOIN dup d ON b.source = d.source
-JOIN top_lang t ON b.source = t.source
-"""
-
-# integer-MMR exemplar selection: 3 unrolled greedy rounds
-_MMR_SQL = _BASE_CTE + """
-, wsets AS (
-  SELECT conv_id, turn_idx,
-         list_distinct(list_filter(
-           string_split_regex(lower(trim(text)), '\\s+'), x -> x <> ''
-         )) AS w
-  FROM base
-), cw AS (
-  SELECT conv_id, turn_idx, unnest(w) AS word FROM wsets
-), other AS (
-  SELECT conv_id, word, COUNT(*) AS n_turns_with FROM cw GROUP BY 1, 2
-), rel AS (
-  SELECT c.conv_id, c.turn_idx, COUNT(*) AS rel
-  FROM cw c JOIN other o ON c.conv_id = o.conv_id AND c.word = o.word
-  WHERE o.n_turns_with >= 2
-  GROUP BY 1, 2
-), cand AS (
-  SELECT s.conv_id, s.turn_idx, s.w,
-         CAST(COALESCE(r.rel, 0) AS BIGINT) AS rel
-  FROM wsets s LEFT JOIN rel r
-    ON s.conv_id = r.conv_id AND s.turn_idx = r.turn_idx
-), p1 AS (
-  SELECT conv_id, turn_idx, w, rel AS score FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id
-                                 ORDER BY rel DESC, turn_idx) AS rk
-    FROM cand)
-  WHERE rk = 1
-), rem1 AS (
-  SELECT c.* FROM cand c JOIN p1 ON c.conv_id = p1.conv_id
-  WHERE c.turn_idx <> p1.turn_idx
-), pen2 AS (
-  SELECT r.conv_id, r.turn_idx,
-         MAX(len(list_intersect(r.w, p.w))) AS pen
-  FROM rem1 r JOIN p1 p ON r.conv_id = p.conv_id
-  GROUP BY 1, 2
-), p2 AS (
-  SELECT conv_id, turn_idx, w, score FROM (
-    SELECT r.conv_id, r.turn_idx, r.w,
-           r.rel - CAST(COALESCE(n.pen, 0) AS BIGINT) AS score,
-           ROW_NUMBER() OVER (PARTITION BY r.conv_id
-             ORDER BY r.rel - CAST(COALESCE(n.pen, 0) AS BIGINT) DESC,
-                      r.turn_idx) AS rk
-    FROM rem1 r LEFT JOIN pen2 n
-      ON r.conv_id = n.conv_id AND r.turn_idx = n.turn_idx)
-  WHERE rk = 1
-), rem2 AS (
-  SELECT r.* FROM rem1 r JOIN p2 ON r.conv_id = p2.conv_id
-  WHERE r.turn_idx <> p2.turn_idx
-), picked2 AS (
-  SELECT conv_id, w FROM p1 UNION ALL SELECT conv_id, w FROM p2
-), pen3 AS (
-  SELECT r.conv_id, r.turn_idx,
-         MAX(len(list_intersect(r.w, p.w))) AS pen
-  FROM rem2 r JOIN picked2 p ON r.conv_id = p.conv_id
-  GROUP BY 1, 2
-), p3 AS (
-  SELECT conv_id, turn_idx, w, score FROM (
-    SELECT r.conv_id, r.turn_idx, r.w,
-           r.rel - CAST(COALESCE(n.pen, 0) AS BIGINT) AS score,
-           ROW_NUMBER() OVER (PARTITION BY r.conv_id
-             ORDER BY r.rel - CAST(COALESCE(n.pen, 0) AS BIGINT) DESC,
-                      r.turn_idx) AS rk
-    FROM rem2 r LEFT JOIN pen3 n
-      ON r.conv_id = n.conv_id AND r.turn_idx = n.turn_idx)
-  WHERE rk = 1
-)
-SELECT conv_id, turn_idx, CAST(score AS BIGINT) AS score,
-       CAST(1 AS INT) AS pick_rank FROM p1
-UNION ALL
-SELECT conv_id, turn_idx, CAST(score AS BIGINT) AS score,
-       CAST(2 AS INT) AS pick_rank FROM p2
-UNION ALL
-SELECT conv_id, turn_idx, CAST(score AS BIGINT) AS score,
-       CAST(3 AS INT) AS pick_rank FROM p3
-"""
-
-# CUPED: cent sums -> integer-OLS theta -> micro-quantized adjusted means
-_CUPED_SQL = """
-WITH per_user AS (
-  SELECT user_id,
-         SUM(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-                  THEN CAST(round(value * 100.0, 0) AS BIGINT) ELSE 0 END) AS pre_c,
-         SUM(CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
-                  THEN CAST(round(value * 100.0, 0) AS BIGINT) ELSE 0 END) AS post_c
-  FROM events GROUP BY user_id
-), ols AS (
-  SELECT CASE WHEN (n * sxx - sx * sx) <> 0
-              THEN round(CAST(n * sxy - sx * sy AS DOUBLE)
-                         / CAST(n * sxx - sx * sx AS DOUBLE), 6)
-              ELSE 0.0 END AS theta,
-         round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_pre
-  FROM (
-    SELECT CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(pre_c) AS BIGINT) AS sx, CAST(SUM(post_c) AS BIGINT) AS sy,
-           CAST(SUM(pre_c * post_c) AS BIGINT) AS sxy,
-           CAST(SUM(pre_c * pre_c) AS BIGINT) AS sxx
-    FROM per_user)
-), keyed AS (
-  SELECT CAST(user_id % 2 AS INT) AS arm, post_c,
-         CAST(round((CAST(post_c AS DOUBLE)
-                     - o.theta * (CAST(pre_c AS DOUBLE) - o.mean_pre)) * 1e4, 0)
-              AS BIGINT) AS adj_micro,
-         o.theta
-  FROM per_user CROSS JOIN ols o
-)
-SELECT arm, CAST(COUNT(*) AS BIGINT) AS n_users,
-       round(CAST(SUM(post_c) AS DOUBLE) / 100.0
-             / CAST(COUNT(*) AS DOUBLE), 6) AS mean_post_r,
-       round(CAST(SUM(adj_micro) AS DOUBLE) / 1e4 / 100.0
-             / CAST(COUNT(*) AS DOUBLE), 6) AS mean_adj_r,
-       ANY_VALUE(theta) AS theta_r
-FROM keyed GROUP BY arm
-"""
-
-# per-entity KB rollup: dictionary join + profile agg + co-mention argmax
-_ENTITY_PROFILES_SQL = _BASE_CTE + """
-, dwords AS (
-  SELECT DISTINCT doc_id, word FROM (
-    SELECT doc_id,
-           unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS word
-    FROM documents)
-  WHERE length(word) >= 3
-), hot AS (
-  SELECT word AS surface FROM (
-    SELECT word, COUNT(*) AS n FROM dwords GROUP BY word)
-  ORDER BY n DESC, word LIMIT 50
-), ment AS (
-  SELECT t.word AS surface, t.conv_id, t.turn_idx, t.ts_lex,
-         t.conv_id || '#' || CAST(t.turn_idx AS VARCHAR) AS turn_key
-  FROM (
-    SELECT conv_id, turn_idx, ts_lex,
-           unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS word
-    FROM base) t
-  JOIN hot h ON t.word = h.surface
-  WHERE length(t.word) >= 3
-), prof AS (
-  SELECT surface,
-         CAST(COUNT(*) AS BIGINT) AS n_mentions,
-         CAST(COUNT(DISTINCT turn_key) AS BIGINT) AS n_turns,
-         CAST(COUNT(DISTINCT conv_id) AS BIGINT) AS n_convs,
-         MIN(ts_lex) AS first_ts,
-         MAX(ts_lex) AS last_ts
-  FROM ment GROUP BY surface
-), tset AS (
-  SELECT DISTINCT turn_key, surface FROM ment
-), co AS (
-  SELECT a.surface AS surface, b.surface AS co_surface, COUNT(*) AS c
-  FROM tset a JOIN tset b ON a.turn_key = b.turn_key
-  WHERE a.surface <> b.surface
-  GROUP BY 1, 2
-), top_co AS (
-  SELECT surface, co_surface, CAST(c AS BIGINT) AS co_count FROM (
-    SELECT surface, co_surface, c,
-           ROW_NUMBER() OVER (PARTITION BY surface
-                              ORDER BY c DESC, co_surface ASC) AS rk
-    FROM co)
-  WHERE rk = 1
-)
-SELECT 'https://example.org/entity/' || p.surface AS entity_id,
-       p.surface, p.n_mentions, p.n_turns, p.n_convs, p.first_ts, p.last_ts,
-       t.co_surface,
-       CAST(COALESCE(t.co_count, 0) AS BIGINT) AS co_count
-FROM prof p LEFT JOIN top_co t ON p.surface = t.surface
-"""
-
-
-def _pca_sql(dim: int = 64, rounds: int = 2) -> str:
-    """Unrolled matrix-free power iteration mirroring
-    similarity.pca_power_project: micro-exact sums, in-engine 6-dp
-    rounding of means / C·v / iterates, left-to-right dimension-order
-    folds for every dot product, v0 = e_0."""
-    e = [f"CAST(embedding[{j + 1}] AS DOUBLE)" for j in range(dim)]
-    msums = ",\n         ".join(
-        f"SUM(CAST(round({e[j]} * 1e6, 0) AS BIGINT)) AS s{j}" for j in range(dim)
-    )
-    means = ",\n         ".join(
-        f"round(CAST(s{j} AS DOUBLE) / 1e6 / CAST(n AS DOUBLE), 6) AS m{j}"
-        for j in range(dim)
-    )
-    sql = f"""
-WITH msum AS (
-  SELECT {msums},
-         COUNT(*) AS n
-  FROM embeddings
-), m AS (
-  SELECT {means},
-         CAST(n AS DOUBLE) AS nd
-  FROM msum
-), v0 AS (SELECT 1.0 AS v0, {", ".join(f"0.0 AS v{j}" for j in range(1, dim))})
-"""
-    for k in range(1, rounds + 1):
-        d = " + ".join(f"{e[j]} * v.v{j}" for j in range(dim))
-        tsums = ",\n         ".join(
-            f"SUM(CAST(round({e[j]} * d * 1e6, 0) AS BIGINT)) AS t{j}"
-            for j in range(dim)
-        )
-        mv = " + ".join(f"m.m{j} * v.v{j}" for j in range(dim))
-        cvs = ",\n         ".join(
-            f"round(CAST(t{j} AS DOUBLE) / 1e6 / m.nd - m.m{j} * mvd, 6) AS c{j}"
-            for j in range(dim)
-        )
-        nrm = " + ".join(f"c{j} * c{j}" for j in range(dim))
-        vs = ",\n         ".join(
-            f"round(c{j} / GREATEST(nrm, 1e-12), 6) AS v{j}" for j in range(dim)
-        )
-        sql += f""", rowd{k} AS (
-  SELECT embedding, ({d}) AS d
-  FROM embeddings CROSS JOIN v{k - 1} v
-), tsum{k} AS (
-  SELECT {tsums}
-  FROM rowd{k}
-), mv{k} AS (
-  SELECT ({mv}) AS mvd FROM m CROSS JOIN v{k - 1} v
-), cv{k} AS (
-  SELECT {cvs}
-  FROM tsum{k} CROSS JOIN m CROSS JOIN mv{k}
-), nv{k} AS (
-  SELECT *, sqrt({nrm}) AS nrm FROM cv{k}
-), v{k} AS (
-  SELECT {vs}
-  FROM nv{k}
-)
-"""
-    score = " + ".join(f"({e[j]} - m.m{j}) * v.v{j}" for j in range(dim))
-    sql += f"""
-SELECT vec_id, round({score}, 4) AS pc1_score_r
-FROM embeddings CROSS JOIN m CROSS JOIN v{rounds} v
-"""
-    return sql
-
-
-_PCA_SQL = _pca_sql()
-
-
-# Context-scored sense disambiguation: co-occurrence signatures + list
-# intersection, all integer counts/ranks (no float parity risk)
-_DISAMBIGUATE_SQL = """
-WITH words AS (
-  SELECT DISTINCT doc_id, word FROM (
-    SELECT doc_id,
-           unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS word
-    FROM documents)
-  WHERE length(word) >= 3
-), freq AS (
-  SELECT word, COUNT(*) AS n FROM words GROUP BY word
-), hot AS (
-  SELECT word AS surface FROM freq ORDER BY n DESC, word LIMIT 50
-), present AS (
-  SELECT w.doc_id, h.surface FROM words w JOIN hot h ON w.word = h.surface
-), cooc AS (
-  SELECT p.surface, CAST(p.doc_id % 2 AS INT) AS sense, w.word, COUNT(*) AS c
-  FROM present p JOIN words w ON p.doc_id = w.doc_id
-  WHERE w.word <> p.surface
-  GROUP BY 1, 2, 3
-), sig AS (
-  SELECT surface, sense, list_sort(list(word)) AS signature FROM (
-    SELECT surface, sense, word,
-           ROW_NUMBER() OVER (PARTITION BY surface, sense
-                              ORDER BY c DESC, word) AS r
-    FROM cooc)
-  WHERE r <= 5
-  GROUP BY surface, sense
-), docsets AS (
-  SELECT doc_id, list_sort(list(word)) AS doc_words FROM words GROUP BY doc_id
-), m AS (
-  SELECT w.doc_id, s.surface
-  FROM words w JOIN (SELECT DISTINCT surface FROM sig) s ON w.word = s.surface
-), cand AS (
-  SELECT m.doc_id, m.surface, sig.sense,
-         CAST(len(list_intersect(d.doc_words, sig.signature)) AS INT) AS score
-  FROM m
-  JOIN sig ON m.surface = sig.surface
-  JOIN docsets d ON m.doc_id = d.doc_id
-)
-SELECT doc_id, surface, sense, score,
-       'https://example.org/entity/' || surface || '#'
-         || CAST(sense AS VARCHAR) AS entity_id
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id, surface
-                               ORDER BY score DESC, sense) AS rk
-  FROM cand)
-WHERE rk = 1
-"""
-
-# Coreference-lite pronoun antecedents: injection + dictionary join +
-# conv-windows replayed exactly
-_PRONOUN_LINKS_SQL = _BASE_CTE + """
-, t2 AS (
-  SELECT conv_id, turn_idx,
-         text || CASE WHEN turn_idx % 3 = 0 THEN ' and it worked'
-                      ELSE '' END AS text
-  FROM base
-), dwords AS (
-  SELECT DISTINCT doc_id, word FROM (
-    SELECT doc_id,
-           unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS word
-    FROM documents)
-  WHERE length(word) >= 3
-), hot AS (
-  SELECT word AS surface FROM (
-    SELECT word, COUNT(*) AS n FROM dwords GROUP BY word)
-  ORDER BY n DESC, word LIMIT 50
-), toks AS (
-  SELECT conv_id, turn_idx,
-         string_split_regex(lower(text), '[^a-z0-9]+') AS l
-  FROM t2
-), ment AS (
-  SELECT t.conv_id, t.turn_idx, t.pos, t.word
-  FROM (
-    SELECT conv_id, turn_idx,
-           generate_subscripts(l, 1) AS pos, unnest(l) AS word
-    FROM toks) t
-  JOIN hot h ON t.word = h.surface
-  WHERE length(t.word) >= 3
-), first AS (
-  SELECT conv_id, turn_idx, word AS turn_entity FROM (
-    SELECT conv_id, turn_idx, word,
-           ROW_NUMBER() OVER (PARTITION BY conv_id, turn_idx
-                              ORDER BY pos, word) AS rk
-    FROM ment)
-  WHERE rk = 1
-), keyed AS (
-  SELECT t2.conv_id, t2.turn_idx, f.turn_entity,
-         CASE WHEN regexp_matches(lower(t2.text), '\\b(it|they|this)\\b')
-              THEN 1 ELSE 0 END AS has_pronoun
-  FROM t2 LEFT JOIN first f
-    ON t2.conv_id = f.conv_id AND t2.turn_idx = f.turn_idx
-)
-SELECT conv_id, turn_idx,
-       'https://example.org/entity/' || antecedent AS entity_id
-FROM (
-  SELECT conv_id, turn_idx, has_pronoun,
-         last_value(turn_entity IGNORE NULLS) OVER (
-           PARTITION BY conv_id ORDER BY turn_idx
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS antecedent
-  FROM keyed)
-WHERE has_pronoun = 1 AND antecedent IS NOT NULL
-"""
-
-
-# 4-cycle census: capped wedge join + integer C(c,2) — all exact longs
-_SQUARE_COUNT_SQL = _COPURCHASE_SYM_CTE + """
-, deg AS (
-  SELECT u AS node, COUNT(*) AS d FROM e GROUP BY u
-), wed AS (
-  SELECT e1.v AS x, e2.v AS y
-  FROM e e1
-  JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
-  JOIN deg ON deg.node = e1.u
-  WHERE deg.d <= 64
-), diag AS (
-  SELECT x, y, COUNT(*) AS c FROM wed GROUP BY x, y
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_diagonal_pairs,
-       CAST(COALESCE(SUM(c), 0) AS BIGINT) AS n_wedges,
-       CAST(COALESCE(SUM(c * (c - 1) // 2), 0) AS BIGINT) AS n_square_incidences
-FROM diag
-"""
-
-
-def _lsh_pr_sql(num_hashes: int = 16, bands: int = 8) -> str:
-    """Unrolled md5-family MinHash banding + brute-force truth + P/R,
-    mirroring dedup.minhash_md5_candidates / lsh_pr_eval exactly."""
-    r = num_hashes // bands
-    lanes = ",\n         ".join(
-        "list_min(list_transform(grams, g -> "
-        f"('0x' || substr(md5('mh{i}|' || g), 1, 8))::BIGINT)) AS s{i}"
-        for i in range(num_hashes)
-    )
-    keys = ", ".join(
-        "'" + str(b) + "|' || "
-        + " || '|' || ".join(f"CAST(s{b * r + j} AS VARCHAR)" for j in range(r))
-        for b in range(bands)
-    )
-    return (
-        _DUP_CORPUS
-        + f"""
-, near AS (
-  SELECT doc_id + 2000000 AS doc_id,
-         array_to_string(list_slice(
-           string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
-           1,
-           GREATEST(len(string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ')) * 45 // 100, 1)
-         ), ' ') AS text
-  FROM documents WHERE doc_id % 25 = 0
-), corpus2 AS (
-  SELECT doc_id, text FROM corpus WHERE doc_id % 25 = 0
-  UNION ALL
-  SELECT doc_id, text FROM near
-), sampled AS (
-  SELECT doc_id, regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS norm
-  FROM corpus2
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(string_split(norm, ' ')) - 2 <= 0 THEN [norm]
-              ELSE list_distinct(list_transform(
-                     range(0, len(string_split(norm, ' ')) - 2),
-                     i -> array_to_string(list_slice(string_split(norm, ' '), i + 1, i + 3), ' ')))
-         END AS grams
-  FROM sampled
-), sigs AS (
-  SELECT doc_id,
-         {lanes}
-  FROM sh
-), bk AS (
-  SELECT doc_id, unnest([{keys}]) AS bk FROM sigs
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bk a JOIN bk b ON a.bk = b.bk AND a.doc_id < b.doc_id
-), truth AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-  WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-        / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams)))
-        >= 0.4
-), hits AS (
-  SELECT t.doc_a, t.doc_b FROM truth t JOIN cand c
-    ON t.doc_a = c.doc_a AND t.doc_b = c.doc_b
-)
-SELECT CAST(t.n AS BIGINT) AS n_truth,
-       CAST(c.n AS BIGINT) AS n_candidates,
-       CAST(h.n AS BIGINT) AS n_hits,
-       round(CAST(h.n AS DOUBLE) / CAST(GREATEST(c.n, 1) AS DOUBLE), 6)
-         AS precision_r,
-       round(CAST(h.n AS DOUBLE) / CAST(GREATEST(t.n, 1) AS DOUBLE), 6)
-         AS recall_r
-FROM (SELECT COUNT(*) AS n FROM truth) t,
-     (SELECT COUNT(*) AS n FROM cand) c,
-     (SELECT COUNT(*) AS n FROM hits) h
-"""
-    )
-
-
-_LSH_PR_SQL = _lsh_pr_sql()
-
-
-# degree histogram (integer bit-length bins) + Hill tail alpha
-_DEGREE_PROFILE_SQL = _COPURCHASE_SYM_CTE + """
-, deg AS (
-  SELECT u AS node, COUNT(*) AS d FROM e GROUP BY u
-), hist AS (
-  SELECT CAST(length(bin(d)) AS INT) AS bin_id,
-         CAST(COUNT(*) AS BIGINT) AS n_nodes,
-         CAST(MIN(d) AS BIGINT) AS d_min,
-         CAST(MAX(d) AS BIGINT) AS d_max
-  FROM deg GROUP BY 1
-), tail AS (
-  SELECT COUNT(*) AS n_tail,
-         SUM(CAST(round(ln(CAST(d AS DOUBLE) / 4.0) * 1e6, 0) AS BIGINT))
-           AS lsum_micro
-  FROM deg WHERE d >= 4
-), alpha AS (
-  SELECT CASE WHEN lsum_micro > 0
-              THEN round(1.0 + CAST(n_tail AS DOUBLE)
-                         / (CAST(lsum_micro AS DOUBLE) / 1e6), 6)
-         END AS hill_alpha_r
-  FROM tail
-)
-SELECT bin_id, n_nodes, d_min, d_max, hill_alpha_r
-FROM hist CROSS JOIN alpha
-"""
-
-# per-lang TTR + micro-int OLS Zipf slope
-_TTR_ZIPF_SQL = """
-WITH words AS (
-  SELECT lang, word FROM (
-    SELECT lang,
-           unnest(string_split_regex(lower(trim(text)), '\\s+')) AS word
-    FROM documents)
-  WHERE word <> ''
-), freq AS (
-  SELECT lang, word, COUNT(*) AS n FROM words GROUP BY lang, word
-), base AS (
-  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_types,
-         CAST(SUM(n) AS BIGINT) AS n_tokens
-  FROM freq GROUP BY lang
-), top AS (
-  SELECT lang,
-         CAST(round(ln(CAST(rank AS DOUBLE)) * 1e6, 0) AS BIGINT) AS x,
-         CAST(round(ln(CAST(n AS DOUBLE)) * 1e6, 0) AS BIGINT) AS y
-  FROM (
-    SELECT lang, n,
-           ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n DESC, word) AS rank
-    FROM freq)
-  WHERE rank <= 100
-), ols AS (
-  SELECT lang, CAST(COUNT(*) AS BIGINT) AS k,
-         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-         CAST(SUM(x * y) AS BIGINT) AS sxy, CAST(SUM(x * x) AS BIGINT) AS sxx
-  FROM top GROUP BY lang
-)
-SELECT b.lang, b.n_types, b.n_tokens,
-       round(CAST(b.n_types AS DOUBLE) / CAST(b.n_tokens AS DOUBLE), 6) AS ttr_r,
-       CASE WHEN (o.k * o.sxx - o.sx * o.sx) <> 0
-            THEN round(CAST(o.k * o.sxy - o.sx * o.sy AS DOUBLE)
-                       / CAST(o.k * o.sxx - o.sx * o.sx AS DOUBLE), 6)
-       END AS zipf_slope_r
-FROM base b JOIN ols o ON b.lang = o.lang
-"""
-
-
-def _ann_recall_curve_sql(
-    n_cells: int = 16, lloyd_rounds: int = 2, n_assign: int = 2,
-    k: int = 5, dim: int = 64, probes: tuple = (1, 2, 4),
-) -> str:
-    """Shared-codebook IVF replay at each probe level + brute-force
-    truth + per-probe recall (mirrors q_ann_recall_curve)."""
-    prefix, prev = _ivf_codebook_prefix(n_cells, lloyd_rounds, dim)
-    sql = f"""{prefix}
-, idx AS (
-  SELECT cand_id, cell FROM (
-    SELECT e.vec_id AS cand_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.centroid) DESC, c.cell ASC
-           ) AS rk
-    FROM e CROSS JOIN {prev} c)
-  WHERE rk <= {n_assign}
-), pr AS (
-  SELECT e.vec_id AS query_id, c.cell,
-         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-           ORDER BY list_cosine_similarity(e.v, c.centroid) DESC, c.cell ASC
-         ) AS rk
-  FROM e CROSS JOIN {prev} c
-  WHERE e.vec_id % 100 = 0
-), exact AS (
-  SELECT query_id, cand_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-             ORDER BY list_cosine_similarity(c.v, q.v) DESC, c.vec_id ASC
-           ) AS rank
-    FROM e c CROSS JOIN e q
-    WHERE q.vec_id % 100 = 0 AND c.vec_id <> q.vec_id)
-  WHERE rank <= {k}
-), nex AS (SELECT COUNT(*) AS n_exact FROM exact)
-"""
-    selects = []
-    for p in probes:
-        sql += f""", top{p} AS (
-  SELECT query_id, cand_id FROM (
-    SELECT s.query_id, s.cand_id,
-           ROW_NUMBER() OVER (PARTITION BY s.query_id
-             ORDER BY s.cos DESC, s.cand_id ASC) AS rank
-    FROM (
-      SELECT cd.query_id, cd.cand_id,
-             list_cosine_similarity(eq.v, ec.v) AS cos
-      FROM (
-        SELECT DISTINCT pb.query_id, idx.cand_id
-        FROM (SELECT query_id, cell FROM pr WHERE rk <= {p}) pb
-        JOIN idx USING (cell)
-        WHERE idx.cand_id <> pb.query_id) cd
-      JOIN e eq ON eq.vec_id = cd.query_id
-      JOIN e ec ON ec.vec_id = cd.cand_id) s)
-  WHERE rank <= {k}
-), hit{p} AS (
-  SELECT COUNT(*) AS n FROM exact JOIN top{p} USING (query_id, cand_id)
-)
-"""
-        selects.append(
-            f"SELECT CAST({p} AS INT) AS n_probe, "
-            f"CAST(nex.n_exact AS BIGINT) AS n_exact, "
-            f"CAST(hit{p}.n AS BIGINT) AS n_hits, "
-            f"round(CAST(hit{p}.n AS DOUBLE) "
-            f"/ CAST(GREATEST(nex.n_exact, 1) AS DOUBLE), 6) AS recall_r "
-            f"FROM nex, hit{p}"
-        )
-    sql += "\n" + "\nUNION ALL\n".join(selects)
-    return sql
-
-
-_ANN_RECALL_CURVE_SQL = _ann_recall_curve_sql()
-
-
-def _ann_incremental_sql(
-    n_cells: int = 16, lloyd_rounds: int = 2, n_assign: int = 2, dim: int = 64,
-) -> str:
-    """Codebook replay + base/new assignment + outer-join census
-    (mirrors q_ann_incremental_assign)."""
-    prefix, prev = _ivf_codebook_prefix(n_cells, lloyd_rounds, dim)
-    return f"""{prefix}
-, nb AS (
-  SELECT cell, CAST(COUNT(*) AS BIGINT) AS n_base FROM (
-    SELECT e.vec_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.centroid) DESC, c.cell ASC
-           ) AS rk
-    FROM e CROSS JOIN {prev} c)
-  WHERE rk <= {n_assign} GROUP BY cell
-), nn AS (
-  SELECT cell, CAST(COUNT(*) AS BIGINT) AS n_new FROM (
-    SELECT e.vec_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.centroid) DESC, c.cell ASC
-           ) AS rk
-    FROM e CROSS JOIN {prev} c
-    WHERE e.vec_id % 3 = 0)
-  WHERE rk <= {n_assign} GROUP BY cell
-)
-SELECT CAST(COALESCE(nb.cell, nn.cell) AS INT) AS cell,
-       CAST(COALESCE(n_base, 0) AS BIGINT) AS n_base,
-       CAST(COALESCE(n_new, 0) AS BIGINT) AS n_new,
-       CAST(COALESCE(n_base, 0) + COALESCE(n_new, 0) AS BIGINT) AS n_total
-FROM nb FULL OUTER JOIN nn ON nb.cell = nn.cell
-"""
-
-
-_ANN_INCREMENTAL_SQL = _ann_incremental_sql()
+def _last_checked_round() -> dict[str, int]:
+    """Latest ``CORRECTNESS_r<N>.json`` round that checked each query."""
+    last: dict[str, int] = {}
+    for path in Path(__file__).parent.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name in json.loads(path.read_text()):
+            last[name] = max(last.get(name, 0), rnd)
+    return last
+
+
+def queries() -> dict[str, QueryFn]:
+    """Every registered query, least recently checked first: the
+    correctness gate hash-verifies the first 50 keys, so queries no round
+    has checked (round 0) lead. Ties keep registration order (the sort
+    is stable)."""
+    last = _last_checked_round()
+    names = sorted(REGISTRY, key=lambda name: last.get(name, 0))
+    return {name: REGISTRY[name].fn for name in names}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "kg_triples_native": _TRIPLES_SQL,
-        "kg_triples_generic": _TRIPLES_SQL,
-        "kg_nquads_roundtrip": _TRIPLES_SQL,
-        "kg_rdfs_closure": _RDFS_CLOSURE_SQL,
-        "kg_owl_closure": _OWL_CLOSURE_SQL,
-        "kg_owl_functional": _OWL_FUNCTIONAL_SQL,
-        "kg_delta_merge": _DELTA_NODES_SQL,
-        "kg_update_where": _UPDATE_WHERE_SQL,
-        "kg_sameas_merge": _SAMEAS_MERGE_SQL,
-        "kg_shacl_validate": _SHACL_SQL,
-        "streaming_triples": _STREAM_TRIPLES_SQL,
-        "kg_triples_interned": _TRIPLES_SQL,
-        "kg_node_table": _NODES_SQL,
-        "kg_bucketed_node_table": _NODES_SQL,
-        "kg_fuzzy_links": _FUZZY_LINKS_SQL,
-        "kg_entity_links": _LINKS_SQL,
-        "kg_entity_links_salted": _LINKS_SQL,
-        "kg_pipeline_full": _KG_PIPELINE_SQL,
-        "jsonld_canonical_degree": _CANON_DEGREE_SQL,
-        "jsonld_triples_canonical": _CANON_TRIPLES_SQL,
-        "jsonld_canonicalize_distributed": _CANON_DIST_SQL,
-        "kg_canonical_incremental": _CANON_INCR_SQL,
-        "kg_dataset_diff": _KG_DIFF_SQL,
-        "jsonld_expand_generic": _EXPAND_ORACLE_SQL,
-        "jsonld_flatten_generic": _FLATTEN_ORACLE_SQL,
-        "jsonld_fromrdf_roundtrip": _FROMRDF_ORACLE_SQL,
-        "jsonld_compact_generic": _COMPACT_ORACLE_SQL,
-        "jsonld_frame_generic": _FRAME_ORACLE_SQL,
-        "kg_frame_conversations": _FRAME_CONV_SQL,
-        "dedup_exact_groups": _EXACT_DUP_SQL,
-        "dedup_ngram_jaccard": _JACCARD_SQL,
-        "dedup_containment": _CONTAINMENT_SQL,
-        "dedup_minhash_lsh": _MINHASH_ORACLE_SQL,
-        "dedup_incremental": _MINHASH_INCR_SQL,
-        "kg_conv_dedup": _CONV_DEDUP_SQL,
-        "dedup_simhash_pairs": _SIMHASH_ORACLE_SQL,
-        "dedup_prefix_filter": _MINHASH_ORACLE_SQL,
-        "dedup_components": _CC_SQL,
-        "dedup_repeated_spans": _REPEATED_SPANS_SQL,
-        "dedup_paragraphs": _PARA_DEDUP_SQL,
-        "data_sft_pairs": _SFT_PAIRS_SQL,
-        "data_preference_pairs": _PREF_PAIRS_SQL,
-        "text_dsir_weights": _DSIR_SQL,
-        "text_textrank": _TEXTRANK_SQL,
-        "rel_recursive_chain": _REL_RECURSIVE_SQL,
-        "rel_funnel_events": _FUNNEL_SQL,
-        "data_weighted_topk": _WEIGHTED_TOPK_SQL,
-        "data_epoch_order": _EPOCH_ORDER_SQL,
-        "dedup_survivors": _SURVIVORS_SQL,
-        "dedup_semantic": _SEMANTIC_DEDUP_SQL,
-        "kg_random_walks": _RANDOM_WALKS_SQL,
-        "kg_kcore": _KCORE_SQL,
-        "kg_transe_rank": _TRANSE_RANK_SQL,
-        "kg_negative_samples": _NEGATIVE_SAMPLES_SQL,
-        "kg_lpg_project": _LPG_PROJECT_SQL,
-        "kg_skipgram_pairs": _SKIPGRAM_SQL,
-        "kg_node2vec_walks": _NODE2VEC_SQL,
-        "kg_copurchase_triangles": _TRIANGLES_SQL,
-        "kg_link_prediction": _LINK_PREDICTION_SQL,
-        "kg_linkpred_auc": _LINKPRED_AUC_SQL,
-        "kg_label_propagation": _LABEL_PROP_SQL,
-        "kg_cooccurrence": _COOCCURRENCE_SQL,
-        "kg_khop_parts": _KHOP_SQL,
-        "kg_pagerank_suppliers": _PAGERANK_SQL,
-        "kg_pagerank_personalized": _PPR_SQL,
-        "kg_hits": _HITS_SQL,
-        "kg_weighted_pagerank": _WPAGERANK_SQL,
-        "kg_ktruss": _KTRUSS_SQL,
-        "kg_graph_metrics": _GRAPH_METRICS_SQL,
-        "kg_hyperball": _HYPERBALL_SQL,
-        "kg_betweenness": _BETWEENNESS_SQL,
-        "kg_harmonic_closeness": _HARMONIC_SQL,
-        "kg_weighted_paths": _WPATHS_SQL,
-        "kg_bgp_assistant_turns": _BGP_ASSISTANT_SQL,
-        "kg_bucketed_bgp": _BGP_ASSISTANT_SQL,
-        "kg_bgp_agg_roles": _BGP_AGG_SQL,
-        "kg_bgp_topk_convs": _BGP_TOPK_SQL,
-        "kg_bgp_subquery": _BGP_SUBQ_SQL,
-        "kg_bgp_dialogue_pairs": _BGP_PAIRS_SQL,
-        "kg_bgp_optional_tool": _BGP_OPTIONAL_SQL,
-        "kg_bgp_union_turns": _BGP_UNION_SQL,
-        "kg_turn_adjacency": _ADJACENCY_SQL,
-        "kg_turn_chain_khop": _TURN_KHOP_SQL,
-        "kg_bgp_values_minus": _BGP_VALUES_MINUS_SQL,
-        "kg_construct_responds": _CONSTRUCT_RESPONDS_SQL,
-        "kg_path_turn_closure": _PATH_CLOSURE_SQL,
-        "kg_path_next_speaker": _PATH_NEXT_SPEAKER_SQL,
-        "streaming_components": _STREAM_CC_SQL,
-        "sketch_hll_registers": _HLL_REGISTERS_SQL,
-        "sketch_hll_cardinality": _HLL_CARDINALITY_SQL,
-        "sketch_cm_counters": _CM_COUNTERS_SQL,
-        "sketch_cm_estimates": _CM_ESTIMATES_SQL,
-        "sketch_bloom_prefilter": _BLOOM_SQL,
-        "sketch_histogram_quantiles": _HISTQ_SQL,
-        "ann_topk_bruteforce": _ANN_SQL,
-        "ann_semantic_clusters": _ANN_CLUSTERS_SQL,
-        "ann_margin_pairs": _ANN_MARGIN_SQL,
-        "ann_topk_lsh": _ANN_LSH_SQL,
-        "ann_topk_ivf": _ANN_IVF_SQL,
-        "ann_topk_ivfpq": _ANN_IVFPQ_SQL,
-        "ann_near_duplicates": _ANN_NEAR_DUP_SQL,
-        "text_stats": _TEXT_STATS_SQL,
-        "text_decontaminate": _DECONTAM_SQL,
-        "text_normalize": _TEXT_NORMALIZE_SQL,
-        "text_gopher_quality": _GOPHER_SQL,
-        "data_curriculum": _CURRICULUM_SQL,
-        "text_ngram_novelty": _NGRAM_NOVELTY_SQL,
-        "data_token_budget": _TOKEN_BUDGET_SQL,
-        "data_bt_arena": _BT_ARENA_SQL,
-        "kg_conv_quality": _CONV_QUALITY_SQL,
-        "text_hybrid_rrf": _HYBRID_RRF_SQL,
-        "ann_knn_classify": _KNN_CLASSIFY_SQL,
-        "text_ccnet_buckets": _CCNET_SQL,
-        "streaming_conv_quality": _CONV_QUALITY_SQL,
-        "dedup_remove_spans": _REMOVE_SPANS_SQL,
-        "text_lm_score": _LM_SCORE_SQL,
-        "text_fingerprint": _FINGERPRINT_SQL,
-        "text_pii_scan": _PII_SQL,
-        "text_word_repetition": _WORD_REP_SQL,
-        "data_hash_split": _SPLIT_SQL,
-        "data_temperature_mix": _TEMPERATURE_MIX_SQL,
-        "streaming_sessions": _STREAM_SESSIONS_SQL,
-        "data_sessionize": _EV_SESSIONIZE_SQL,
-        "data_session_stats": _EV_SESSION_STATS_SQL,
-        "data_cluster_split": _CLUSTER_SPLIT_SQL,
-        "data_chunk_documents": _CHUNK_SQL,
-        "data_stratified_sample": _STRAT_SAMPLE_SQL,
-        "data_sample_per_key": _SAMPLE_PER_KEY_SQL,
-        "data_pack_documents": _PACK_SQL,
-        "data_bpe_tokens": _BPE_TOKENS_SQL,
-        "data_pack_bpe": _PACK_BPE_SQL,
-        "data_bpe_stats": _BPE_STATS_SQL,
-        "kg_modularity": _MODULARITY_SQL,
-        "kg_time_travel": _TIME_TRAVEL_SQL,
-        "kg_local_clustering": _LCC_SQL,
-        "kg_ppmi_edges": _PPMI_SQL,
-        "data_label_votes": _LABEL_VOTES_SQL,
-        "data_embed_quantize": _QUANTIZE_SQL,
-        "kg_tool_sequences": _TOOL_SEQ_SQL,
-        "kg_snapshot_diff": _SNAPSHOT_DIFF_SQL,
-        "ann_classifier_report": _CLS_REPORT_SQL,
-        "data_calibration_bins": _CALIB_SQL,
-        "streaming_graph_state": _GRAPH_STATE_SQL,
-        "data_rank_normalize": _RANK_NORM_SQL,
-        "text_kn_bigrams": _KN_BIGRAMS_SQL,
-        "dedup_winnowing": _WINNOWING_SQL,
-        "kg_louvain_move": _LOUVAIN_MOVE_SQL,
-        "text_kn_perplexity": _KN_PERPLEXITY_SQL,
-        "data_interleave": _INTERLEAVE_SQL,
-        "text_bm25_topk": _BM25_SQL,
-        "multimodal_features": _MM_FEATURES_SQL,
-        "multimodal_audio_features": _AUDIO_FEATURES_SQL,
-        "multimodal_image_features": _IMAGE_FEATURES_SQL,
-        "multimodal_image_resize": _IMAGE_RESIZE_SQL,
-        "multimodal_dhash_neardup": _DHASH_NEARDUP_SQL,
-        "multimodal_audio_decimate": _AUDIO_DECIMATE_SQL,
-        "multimodal_video_features": _VIDEO_FEATURES_SQL,
-        "multimodal_frame_extract": _FRAME_EXTRACT_SQL,
-        "multimodal_frame_plan": _FRAME_PLAN_SQL,
-        "kg_sparql_select": _SPARQL_SELECT_SQL,
-        "kg_sparql_path": _SPARQL_PATH_SQL,
-        "kg_sparql_negated": _SPARQL_NEGATED_SQL,
-        "kg_sparql_analyst": _SPARQL_ANALYST_SQL,
-        "kg_sparql_named": _SPARQL_NAMED_SQL,
-        "kg_sparql_graph_path": _SPARQL_GRAPH_PATH_SQL,
-        "kg_sparql_graph": _SPARQL_GRAPH_SQL,
-        "kg_bgp_describe": _BGP_DESCRIBE_SQL,
-        "kg_bgp_ask": _BGP_ASK_SQL,
-        "rel_rollup_pricing": _ROLLUP_SQL,
-        "rel_cube_pricing": _CUBE_SQL,
-        "rel_correlated_max": _CORRELATED_MAX_SQL,
-        "rel_rank_functions": _RANK_FUNCTIONS_SQL,
-        "rel_pivot_orders": _PIVOT_SQL,
-        "text_ngram_score": _NGRAM_SCORE_SQL,
-        "dedup_cdc_chunks": _CDC_CHUNKS_SQL,
-        "kg_skolemize": _SKOLEMIZE_SQL,
-        "kg_context_windows": _CONTEXT_WINDOWS_SQL,
-        "kg_void_stats": _VOID_STATS_SQL,
-        "kg_schema_summary": _SCHEMA_SUMMARY_SQL,
-        "text_url_normalize": _URL_NORMALIZE_SQL,
-        "data_weighted_sample": _WEIGHTED_SAMPLE_SQL,
-        "data_upsample_epochs": _UPSAMPLE_EPOCHS_SQL,
-        "data_profile_hitters": _PROFILE_HITTERS_SQL,
-        "data_column_stats": _COLUMN_STATS_SQL,
-        "rel_agg_pricing": _AGG_PRICING_SQL,
-        "rel_join_topnations": _TOPNATIONS_SQL,
-        "rel_window_events": _WINDOW_SQL,
-        "rel_setops_customers": _SETOPS_SQL,
-        "rel_setops_all": _SETOPS_ALL_SQL,
-        "rel_string_array_wordcount": _WORDCOUNT_SQL,
-        "rel_json_events": _JSON_EVENTS_SQL,
-        "rel_sessionize_events": _SESSIONIZE_SQL,
-        "rel_asof_snapshot": _ASOF_SQL,
-        "rel_interval_windows": _INTERVAL_SQL,
-        "rel_window_range_frame": _WINDOW_RANGE_SQL,
-        "rel_decayed_counts": _DECAYED_COUNTS_SQL,
-        "rel_semi_anti_customers": _SEMI_ANTI_SQL,
-        "rel_distinct_topk_orders": _TOPK_SQL,
-        "kg_wl_colors": _WL_COLORS_SQL,
-        "kg_neighbor_sample": _NEIGHBOR_SAMPLE_SQL,
-        "kg_kge_eval": _KGE_EVAL_SQL,
-        "data_doremi_weights": _DOREMI_SQL,
-        "data_best_of_n": _BEST_OF_N_SQL,
-        "kg_scc": _KG_SCC_SQL,
-        "rel_retention_cohorts": _RETENTION_SQL,
-        "data_iqr_outliers": _IQR_SQL,
-        "kg_reify": _KG_REIFY_SQL,
-        "kg_topic_segments": _TOPIC_SEGMENTS_SQL,
-        "data_logreg_quality": _LOGREG_SQL,
-        "ann_pca_project": _PCA_SQL,
-        "kg_disambiguate": _DISAMBIGUATE_SQL,
-        "kg_pronoun_links": _PRONOUN_LINKS_SQL,
-        "kg_square_count": _SQUARE_COUNT_SQL,
-        "dedup_lsh_pr": _LSH_PR_SQL,
-        "kg_degree_profile": _DEGREE_PROFILE_SQL,
-        "text_ttr_zipf": _TTR_ZIPF_SQL,
-        "ann_recall_curve": _ANN_RECALL_CURVE_SQL,
-        "streaming_logreg": _STREAMING_LOGREG_SQL,
-        "kg_entity_profiles": _ENTITY_PROFILES_SQL,
-        "rel_cuped": _CUPED_SQL,
-        "data_pack_stats": _PACK_STATS_SQL,
-        "ann_incremental_assign": _ANN_INCREMENTAL_SQL,
-        "kg_mmr_exemplars": _MMR_SQL,
-        "data_source_cards": _SOURCE_CARDS_SQL,
-        "data_bootstrap_ci": _BOOTSTRAP_CI_SQL,
-        "kg_distmult_rank": _DISTMULT_RANK_SQL,
-        "kg_kge_compare": _KGE_COMPARE_SQL,
-        "rel_rate_anomalies": _RATE_ANOMALIES_SQL,
-        "rel_holt_forecast": _HOLT_SQL,
-    }
+    return {name: q.oracle for name, q in REGISTRY.items()}

@@ -10,6 +10,8 @@ Layout:
   operators/  — Spark DataFrame stages (triples, linking, dedup, ANN, ...)
   sources/    — transcripts synthesizer, context registry loaders
   streaming/  — structured-streaming ingest variant
+  queries/    — oracle-checked queries, each registered with its DuckDB oracle
+                (not imported by this package; ``__spark_entry__`` loads it)
 """
 
 from .api import compact, compare, expand, flatten, to_rdf  # noqa: F401

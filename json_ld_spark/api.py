@@ -112,16 +112,6 @@ def expand_url(
     return expanded
 
 
-def expand_with_warnings(
-    document: Any,
-    options: JsonLdOptions | None = None,
-    base_url: str | None = None,
-) -> tuple[list, list[str]]:
-    options = options or JsonLdOptions()
-    active = _initial_context(options, base_url)
-    return expand_document(document, active, options, base_url or options.base)
-
-
 def flatten(
     document: Any,
     options: JsonLdOptions | None = None,

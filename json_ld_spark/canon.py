@@ -158,19 +158,6 @@ def content_hash(value: Any) -> str:
     return hashlib.sha256(canonical_json(value).encode("utf-8")).hexdigest()
 
 
-def hash_bnode_label(*parts: str) -> str:
-    """Deterministic distributed blank-node label from stable parts
-    (e.g. doc_id + document-local label). 16 hex chars of sha256.
-
-    Replaces the reference's sequential Generator for cross-document
-    uniqueness; within a document the sequential labels ("b0", "b1", ...)
-    are kept so per-document output matches the reference, then prefixed
-    through this hash when documents merge into one corpus graph.
-    """
-    h = hashlib.sha256("\x1f".join(parts).encode("utf-8")).hexdigest()[:16]
-    return f"_:h{h}"
-
-
 def sort_key_json(value: Any) -> str:
     """Stable sort key for set-semantics array normalization."""
     return canonical_json(value)

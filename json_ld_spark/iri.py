@@ -41,22 +41,9 @@ def is_blank_node_id(value: str) -> bool:
     return isinstance(value, str) and value.startswith("_:")
 
 
-def is_iri_or_blank(value: str) -> bool:
-    return is_blank_node_id(value) or is_absolute_iri(value)
-
-
 def looks_like_keyword(value: str) -> bool:
     """'@'-prefixed alpha token (treated as unknown keyword → dropped)."""
     return bool(_KEYWORD_SHAPE_RE.match(value))
-
-
-def is_relative_iri(value: str) -> bool:
-    """A relative IRI reference: not absolute, not blank, no bad chars."""
-    if not isinstance(value, str):
-        return False
-    if is_absolute_iri(value) or is_blank_node_id(value):
-        return False
-    return not _BAD_CHARS_RE.search(value)
 
 
 # --------------------------------------------------------------------------

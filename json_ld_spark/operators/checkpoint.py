@@ -240,24 +240,6 @@ def write_iceberg(
     return run_entry
 
 
-def run_resumable(
-    input_df: DataFrame,
-    transform,
-    out_dir: str,
-    n_buckets: int = 32,
-    key_col: str = "conv_id",
-) -> dict:
-    """One resumable pipeline step: filter to remaining buckets, apply
-    `transform(bucketed_df) -> DataFrame` (must preserve BUCKET_COL),
-    write-audit-publish. Idempotent: re-running after success is a no-op.
-    """
-    todo = remaining_buckets(input_df, out_dir, n_buckets, key_col)
-    if not todo.take(1):
-        return {"run_id": None, "published_buckets": [], "total_rows": 0}
-    out = transform(todo)
-    return write_audit_publish(out, out_dir, n_buckets, key_col)
-
-
 def write_bucketed_table(
     df: DataFrame,
     table: str,

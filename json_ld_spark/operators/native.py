@@ -23,21 +23,6 @@ from ..sources.transcripts import CONV_BASE, TRANSCRIPT_VOCAB
 XSD_DATETIME = XSD + "dateTime"
 
 
-def _quad(
-    subj: Column, pred: str, obj_kind: str, obj: Column,
-    datatype: str | None, lang: str | None,
-) -> list[Column]:
-    return [
-        F.lit(None).cast("string").alias("graph"),
-        subj.alias("subj"),
-        F.lit(pred).alias("pred"),
-        F.lit(obj_kind).alias("obj_kind"),
-        obj.alias("obj"),
-        (F.lit(datatype) if datatype else F.lit(None)).cast("string").alias("datatype"),
-        (F.lit(lang) if lang else F.lit(None)).cast("string").alias("lang"),
-    ]
-
-
 def transcript_triples_native(transcripts: DataFrame, with_doc_id: bool = True) -> DataFrame:
     """(conv_id, turn_idx, role, text, tool, ts) → triple table, matching
     triples_stage(turns_to_jsonld(df), TRANSCRIPT_CONTEXT) exactly.

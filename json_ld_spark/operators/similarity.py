@@ -99,17 +99,6 @@ def _hyperplane(dim: int, plane_no: int) -> list[float]:
     return [v / n for v in vals]
 
 
-def lsh_bucket(vec_col: Column, dim: int, n_planes: int = 8) -> Column:
-    """Single-table random-hyperplane signature: n_planes sign bits →
-    int bucket. Kept for diagnostics; production paths use the banded
-    multi-table keys (`lsh_band_keys`) whose fan-in is tunable."""
-    bits = []
-    for p in range(n_planes):
-        plane = F.array(*[F.lit(v) for v in _hyperplane(dim, p)])
-        bits.append(F.when(_dot(vec_col, plane) >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    return sum(bits).cast("int")
-
-
 def lsh_band_keys(
     vec_col: Column, dim: int, n_bands: int = 4, band_bits: int = 8
 ) -> Column:

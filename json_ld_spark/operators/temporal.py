@@ -25,6 +25,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+# holt_forecast collects its (type, day) table to the driver; past this
+# many rows the input is corpus-shaped, not a daily aggregate, and it fails
+_MAX_HOLT_ROWS = 100_000
+
 
 def asof_join(
     left: DataFrame,
@@ -527,7 +531,8 @@ def holt_forecast(
     count aggregation underneath stays fully distributed. Both engines
     execute the identical IEEE sequence (integers in, fixed literal
     α/β, same association), so the 4-dp outputs replay exactly via a
-    recursive CTE.
+    recursive CTE. More than ``_MAX_HOLT_ROWS`` (type, day) rows raise
+    ValueError instead of being collected.
 
     Output: (event_type, n_days, level_r, trend_r, forecast_r).
     """
@@ -538,8 +543,14 @@ def holt_forecast(
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .orderBy("event_type", "day")
+        .limit(_MAX_HOLT_ROWS + 1)
         .collect()
     )
+    if len(daily) > _MAX_HOLT_ROWS:
+        raise ValueError(
+            f"holt_forecast: more than {_MAX_HOLT_ROWS} (type, day) rows to "
+            "collect; the daily table is not a bounded aggregate"
+        )
     series: dict = {}
     for r in daily:
         series.setdefault(r["event_type"], []).append(int(r["n"]))

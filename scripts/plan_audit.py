@@ -15,8 +15,9 @@ from __future__ import annotations
 import importlib.util
 import re
 import sys
+from pathlib import Path
 
-REPO = "/root/repo"
+REPO = str(Path(__file__).resolve().parent.parent)
 sys.path.insert(0, REPO)
 
 MARKERS = [

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from json_ld_spark.operators import curation as cu
@@ -478,3 +479,17 @@ def test_holt_forecast_linear_trend(spark):
     assert out.trend_r > 5             # upward trend detected
     assert out.forecast_r > out.level_r
     assert 80 < out.level_r < 110      # level near the last rate
+
+
+def test_holt_forecast_fails_past_row_bound(spark, monkeypatch):
+    from datetime import datetime
+
+    from json_ld_spark.operators import temporal
+
+    rows = [(datetime(2024, 1, d, 8), "grow") for d in range(1, 5)]
+    ev = spark.createDataFrame(rows, "ts timestamp, event_type string")
+    monkeypatch.setattr(temporal, "_MAX_HOLT_ROWS", 3)
+    with pytest.raises(ValueError, match="more than 3 "):
+        temporal.holt_forecast(ev)
+    monkeypatch.setattr(temporal, "_MAX_HOLT_ROWS", 4)
+    assert temporal.holt_forecast(ev).collect()[0].n_days == 4
