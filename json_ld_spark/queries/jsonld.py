@@ -186,7 +186,9 @@ FROM base
 @query(oracle=_FROMRDF_ORACLE_SQL)
 def q_jsonld_fromrdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverse direction (SURVEY.md §2 G1): triples → from_rdf_stage →
-    expanded docs; reports per-doc reconstruction size. Rows-only."""
+    expanded docs; reports per-doc reconstruction size. The oracle
+    hashes each doc's root @id, its key count (7, or 8 with a tool) and
+    its text value, rebuilt from the transcripts."""
     from json_ld_spark.operators.jsonld import from_rdf_stage
 
     _utc(spark)

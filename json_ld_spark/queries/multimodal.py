@@ -64,7 +64,9 @@ SELECT media_id, CAST(s AS BIGINT) AS sample_ms FROM (
 
 @query(oracle=_FRAME_PLAN_SQL)
 def q_multimodal_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling fan-out (explode over duration). Rows-only."""
+    """Video frame-sampling fan-out (explode over duration). The oracle
+    regenerates each video's duration (1000 + 33 * media_id ms) and
+    hashes every (media_id, sample_ms) pair."""
     _utc(spark)
     media = mm.synthesize_media(spark, n=96)
     plan = mm.frame_sample_plan(media, every_ms=500)

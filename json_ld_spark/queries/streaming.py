@@ -24,8 +24,9 @@ SELECT subj, pred, obj_kind, obj FROM triples
 def q_streaming_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming ingest → triple extraction → memory sink,
     drained over file micro-batches; returns the collected batch result
-    (stream/batch parity asserted in tests/test_streaming.py).
-    Rows-only."""
+    (stream/batch parity asserted in tests/test_streaming.py). The
+    oracle rebuilds every (subj, pred, obj_kind, obj) triple from the
+    transcripts in SQL, and the value hash compares them all."""
     import tempfile
 
     from json_ld_spark.streaming.stream import run_stream_to_memory

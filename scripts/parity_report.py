@@ -64,6 +64,8 @@ def main() -> None:
     lines = [
         "# PARITY — triple P/R vs golden suite",
         "",
+        "Generated by `python scripts/parity_report.py`; rerun it to refresh.",
+        "",
         "Gate (BASELINE.json): triple P/R >= 0.95 vs the reference's",
         "expand/flatten/toRdf suite. The official W3C json-ld-api fixtures",
         "are a git submodule NOT vendored in the read-only reference",

@@ -25,40 +25,12 @@ import argparse
 import json
 import sys
 import time
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-
-def _dump_stage_metrics(spark, path: str) -> None:
-    """Per-stage input/shuffle/output bytes from the driver's REST API
-    (the artifact a capacity review starts from; VERDICT round-2 #8)."""
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
-        ) as r:
-            stages = json.loads(r.read())
-    except Exception as ex:  # UI disabled or port firewalled: degrade, don't die
-        stages = [{"error": f"{type(ex).__name__}: {ex}"}]
-    keep = [
-        {
-            "stage_id": st.get("stageId"),
-            "name": (st.get("name") or "")[:80],
-            "num_tasks": st.get("numCompleteTasks"),
-            "input_bytes": st.get("inputBytes"),
-            "output_bytes": st.get("outputBytes"),
-            "shuffle_read_bytes": st.get("shuffleReadBytes"),
-            "shuffle_write_bytes": st.get("shuffleWriteBytes"),
-            "executor_run_time_ms": st.get("executorRunTime"),
-        }
-        for st in stages
-    ]
-    with open(path, "w") as f:
-        json.dump({"app_id": app_id, "master": spark.sparkContext.master,
-                   "stages": keep}, f, indent=1)
+# run from a checkout without --py-files: the package sits next to scripts/
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def main() -> None:
@@ -71,9 +43,6 @@ def main() -> None:
     ap.add_argument("--partitions", type=int, default=128)
     ap.add_argument("--timed-runs", type=int, default=2)
     ap.add_argument("--out", default="/tmp/kg_out")
-    ap.add_argument("--stage-metrics", default=None,
-                    help="dump per-stage input/shuffle/output bytes (Spark "
-                         "REST API) to this JSON path before exiting")
     args = ap.parse_args()
 
     # master/executor conf come from spark-submit; only job-level conf here
@@ -148,8 +117,6 @@ def main() -> None:
         t0 = time.time()
         res = materialize_kg(inp, args.out)
         sec = round(time.time() - t0, 3)
-        if args.stage_metrics:
-            _dump_stage_metrics(spark, args.stage_metrics)
         print(json.dumps({"job": "materialize", "n_docs": n_docs, "sec": sec, **{
             k: v for k, v in res.items() if k != "manifests"}}))
         spark.stop()
@@ -172,8 +139,6 @@ def main() -> None:
         "sec": best,
         "triples_per_sec": round(n_out / best, 1),
     }))
-    if args.stage_metrics:
-        _dump_stage_metrics(spark, args.stage_metrics)
     spark.stop()
 
 

@@ -282,6 +282,29 @@ def test_distributed_canonicalization_isomorphism(spark):
     assert all(r["subj"].startswith("_:c") for r in ca)
 
 
+def test_distributed_canonicalization_labels_depend_on_other_components(spark):
+    """Labels are not component-local: the round count comes from the
+    distinct-hash count over ALL components, so a class that A shares
+    with B and that splits only in B moves A's labels too. A component
+    -local canonicalizer has to find the global round from such
+    cross-component splits, not take the max of per-component rounds."""
+    p = "http://ex/p"
+    a = [(None, "_:a1", p, "bnode", "_:a2", None, None)]
+    b = [
+        (None, "_:b1", p, "bnode", "_:b2", None, None),
+        (None, "_:b2", p, "bnode", "_:b3", None, None),
+    ]
+    schema = "graph string, subj string, pred string, obj_kind string, obj string, datatype string, lang string"
+
+    def labels(rows):
+        out = canonicalize_bnodes_df(spark.createDataFrame(rows, schema)).collect()
+        return {v for r in out for v in (r["subj"], r["obj"]) if v.startswith("_:")}
+
+    alone = labels(a)
+    assert alone == {"_:c571b381bcaf31100", "_:c9c98b12acf1dfc6d"}
+    assert not alone & labels(a + b)
+
+
 def test_distributed_canonicalization_matches_local_partition(spark):
     """Distributed refinement must distinguish structurally different
     bnodes exactly like the in-UDF version."""
