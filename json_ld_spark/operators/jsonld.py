@@ -322,10 +322,10 @@ def node_table(triples: DataFrame) -> DataFrame:
     Plan note: n_docs uses size(collect_set(...)) instead of
     count_distinct — count_distinct expands to a second aggregate keyed
     by (graph, subj, doc_id) and costs an extra Exchange; collect_set
-    fuses into the same ObjectHashAggregate. Callers that pre-partition
-    by subj (build_kg) get dedup + merge with a single shuffle total:
-    HashPartitioning(subj) satisfies the ClusteredDistribution of both
-    the 7-column dedup keys and the (graph, subj) merge keys.
+    fuses into the same ObjectHashAggregate. HashPartitioning(subj)
+    satisfies the (graph, subj) merge keys, so input that is all
+    subj-partitioned — build_kg's union of deduped quads and mention
+    quads — merges with no Exchange of its own.
     """
     return (
         triples.groupBy("graph", "subj")

@@ -371,7 +371,7 @@ def cuped_adjusted(
 
     with arms assigned deterministically (user_id parity stands in for
     the assignment column). All money math is integer CENTS; θ and the
-    pre-mean are computed from exact BIGINT sums via the same scaled
+    pre-mean are computed from exact DECIMAL(38,0) sums via the same scaled
     integer-OLS identity as ttr_zipf (the scale cancels in the ratio)
     and rounded 6 dp IN-ENGINE, so a DuckDB replay lands on identical
     doubles; per-user adjusted values are re-quantized to micros before
@@ -391,12 +391,15 @@ def cuped_adjusted(
     per_user = events.groupBy(F.col(user_col).alias("user_id")).agg(
         F.sum(pre).alias("pre_c"), F.sum(post).alias("post_c")
     )
+    # cent products overflow BIGINT from ~$30M per user: exact decimals
+    pre_d = F.col("pre_c").cast("decimal(38,0)")
+    post_d = F.col("post_c").cast("decimal(38,0)")
     ols = per_user.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum("pre_c").alias("sx"),
-        F.sum("post_c").alias("sy"),
-        F.sum(F.col("pre_c") * F.col("post_c")).alias("sxy"),
-        F.sum(F.col("pre_c") * F.col("pre_c")).alias("sxx"),
+        F.sum(pre_d).alias("sx"),
+        F.sum(post_d).alias("sy"),
+        F.sum(pre_d * post_d).alias("sxy"),
+        F.sum(pre_d * pre_d).alias("sxx"),
     ).select(
         F.when(
             (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")) != 0,

@@ -3,10 +3,9 @@
 transcripts → per-turn JSON-LD → triple extraction → entity linking →
 dedup/merge → triple + node tables → write-audit-publish materialize.
 
-Stage boundaries and shuffle plan (SURVEY.md §3.3):
-  scan (pruned columns) → triple emission (codegen or Arrow UDF; NO
-  shuffle) → mention/link broadcast join (NO shuffle) → dedup + node
-  merge (the two key'd shuffles) → bucketed WAP write.
+Shuffle plan: scan → triple emission (codegen or Arrow UDF) → ONE
+repartition by subj → quad dedup, mention linking (broadcast joins) and
+node merge, all on that subj partitioning → bucketed WAP write.
 """
 
 from __future__ import annotations
@@ -47,34 +46,28 @@ def build_kg(
 ) -> dict[str, DataFrame]:
     """Compose the full pipeline; returns {'triples', 'nodes', 'links'}.
 
-    Shuffle plan: ONE repartition by subj right after extraction — the
-    subj hash-partitioning satisfies the clustering requirements of both
-    the quad dedup (subset of its 7 keys) and the node merge
-    ((graph, subj) keys), so neither adds an Exchange. Verified:
-    3 shuffles → 1 for the extract→dedup→merge path.
+    Shuffle plan: ONE repartition by subj right after extraction. Every
+    later key contains subj — the 7 quad-dedup keys, (subj, text),
+    (subj, surface), (graph, subj) — so with the default broadcast
+    linking no other step adds an Exchange. The text branch is filtered
+    below the repartition by Catalyst and gets its own small subj
+    Exchange, so the extraction runs twice (the generic engine's Python
+    stage too).
     """
-    raw = transcript_triples(transcripts, engine=engine)
-    triples = raw.repartition("subj")
-    # dedup BEFORE the mention union: runs exchange-free on the subj
-    # partitioning; the mention side is deduped separately (it is tiny
-    # and its predicate — transcript#mentions — is disjoint from the
-    # extraction predicates, so no cross-side duplicates exist and
-    # dedup(a ∪ b) = dedup(a) ∪ dedup(b)). Saves re-shuffling the whole
-    # corpus after the union (measured 27.6s → ~3s at 5.7M quads).
-    triples = dedup_triples(triples)
+    parted = transcript_triples(transcripts, engine=engine).repartition("subj")
+    # dedup BEFORE the mention union: the mention predicate
+    # (transcript#mentions) is disjoint from the extraction predicates,
+    # so dedup(a ∪ b) = dedup(a) ∪ dedup(b), and neither side re-shuffles
+    triples = dedup_triples(parted)
 
     links = None
     if entity_dictionary is not None:
-        # mention source branches off the PRE-shuffle extraction, not the
-        # deduped table: text rows are 1/7 of the quads and one-per-turn,
-        # so a dropDuplicates on (subj, text) gives the same rows the
-        # deduped table would — without making the mention path a second
-        # consumer of the corpus-wide repartition+dedup agg (measured
-        # 8.9s → 6.0s at 1.2M quads; at scale the branch is a
-        # column-pruned scan + a 1/7-size shuffle instead of a second
-        # full-corpus aggregation)
+        # text rows come from the subj-partitioned extraction: the
+        # (subj, text) dedup, the (subj, surface) link aggregates and the
+        # mention dedup all cluster on subj, so none adds an Exchange
+        # (final AQE plan of the nodes on 6000 turns: 5 shuffle stages → 2)
         text_rows = (
-            raw.filter(F.col("pred") == TEXT_PRED)
+            parted.filter(F.col("pred") == TEXT_PRED)
             .select("subj", F.col("obj").alias("text"))
             .dropDuplicates(["subj", "text"])
         )

@@ -225,3 +225,50 @@ def test_temperature_mix_guard_probes_before_collect(spark):
     )
     with pytest.raises(ValueError, match="corpus-shaped"):
         temperature_mix(corpus, "source", max_groups=8)
+
+
+def _shuffle_keys(plan) -> list[list[str]]:
+    """Keys of every hash-partitioning shuffle in an executed plan, with
+    expression ids stripped. Descends into AQE query stages; stops at
+    cached-relation scans, whose subplans ran when they were cached."""
+    import re
+
+    name = plan.nodeName()
+    if name.startswith("InMemoryTableScan"):
+        return []
+    if name == "AdaptiveSparkPlan":
+        return _shuffle_keys(plan.executedPlan())
+    if "QueryStage" in name:
+        return _shuffle_keys(plan.plan())
+    keys = []
+    if name == "Exchange":
+        part = plan.outputPartitioning()
+        if part.getClass().getSimpleName() == "HashPartitioning":
+            exprs = part.expressions()
+            keys.append(
+                [re.sub(r"#\d+$", "", exprs.apply(i).toString()) for i in range(exprs.size())]
+            )
+    children = plan.children()
+    for i in range(children.size()):
+        keys += _shuffle_keys(children.apply(i))
+    return keys
+
+
+def test_build_kg_nodes_shuffle_only_on_subj(spark):
+    """build_kg repartitions the extraction by subj once; text-row dedup,
+    link aggregates, mention dedup and node merge all cluster on subj, so
+    every hash shuffle in the executed node-table plan is keyed on subj."""
+    from json_ld_spark.plans.kg import build_kg
+    from json_ld_spark.sources.transcripts import synthesize_transcripts
+
+    transcripts = synthesize_transcripts(spark, n_convs=20, avg_turns=5).cache()
+    dictionary = spark.createDataFrame(
+        [("https://e/entity/test", "test", 0.4), ("https://e/entity/data", "data", 0.3)],
+        "entity_id string, surface string, prior double",
+    ).cache()
+    nodes = build_kg(transcripts, dictionary, engine="native")["nodes"]
+    assert nodes.collect()  # runs the plan, so AQE settles its final shape
+    keys = _shuffle_keys(nodes._jdf.queryExecution().executedPlan())
+    transcripts.unpersist()
+    dictionary.unpersist()
+    assert keys and all(k == ["subj"] for k in keys), keys

@@ -493,3 +493,35 @@ def test_holt_forecast_fails_past_row_bound(spark, monkeypatch):
         temporal.holt_forecast(ev)
     monkeypatch.setattr(temporal, "_MAX_HOLT_ROWS", 4)
     assert temporal.holt_forecast(ev).collect()[0].n_days == 4
+
+
+def test_cuped_exact_past_bigint_cent_products(spark):
+    """Cent sums of $20M-$65M per user make pre·post and pre² products
+    past BIGINT's 9.2e18: theta and the arm means must still equal the
+    exact integer OLS, not overflow (ANSI) or wrap."""
+    from datetime import datetime
+
+    from json_ld_spark.operators.temporal import cuped_adjusted
+
+    pre_t, post_t = datetime(2024, 1, 10), datetime(2024, 1, 20)
+    dollars = {1: (4e7, 5e7), 2: (3e7, 3.5e7), 3: (5e7, 6.5e7), 4: (2e7, 2e7)}
+    rows = [(u, t, v) for u, (a, b) in dollars.items() for t, v in ((pre_t, a), (post_t, b))]
+    ev = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
+    out = {r.arm: r for r in cuped_adjusted(ev, cutoff="2024-01-16 00:00:00").collect()}
+
+    pre = {u: round(a * 100) for u, (a, _) in dollars.items()}
+    post = {u: round(b * 100) for u, (_, b) in dollars.items()}
+    assert pre[1] * post[1] > 2**63  # the products really leave BIGINT
+    n, sx, sy = len(pre), sum(pre.values()), sum(post.values())
+    sxy = sum(pre[u] * post[u] for u in pre)
+    sxx = sum(x * x for x in pre.values())
+    theta = round(float(n * sxy - sx * sy) / float(n * sxx - sx * sx), 6)
+    mean_pre = round(sx / n, 6)
+    assert out[0].theta_r == pytest.approx(theta, abs=1e-9)
+    for arm in (0, 1):
+        users = [u for u in pre if u % 2 == arm]
+        adj = sum(round((post[u] - theta * (pre[u] - mean_pre)) * 1e4) for u in users)
+        assert out[arm].mean_adj_r == pytest.approx(adj / 1e4 / 100 / len(users), abs=1e-6)
+        assert out[arm].mean_post_r == pytest.approx(
+            sum(post[u] for u in users) / 100 / len(users), abs=1e-6
+        )

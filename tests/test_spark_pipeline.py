@@ -622,8 +622,8 @@ def test_dataset_diff_matches_python_sets(spark):
 def test_build_kg_with_linking_engine_parity(spark, transcripts):
     """Full build_kg (extraction + mention linking + dedup) must emit
     the identical KG from the native and generic engines — including
-    the mention path, which branches off the pre-shuffle RAW extraction
-    of whichever engine is active."""
+    the mention path, which reads the subj-partitioned extraction of
+    whichever engine is active."""
     from json_ld_spark.plans.kg import build_kg
 
     dictionary = spark.createDataFrame(
@@ -650,6 +650,78 @@ def test_build_kg_with_linking_engine_parity(spark, transcripts):
     assert a == b and len(a) > 0
     # the mention predicate must actually be present in the output
     assert any(t[2].endswith("#mentions") for t in a)
+
+
+def _fingerprint(df):
+    """(rows, xxhash64 sum over every column as an exact decimal)."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("h"),
+    ).collect()[0]
+    return row["n"], row["h"]
+
+
+def _kg_text_rows_from_raw(transcripts, dictionary, engine, link_strategy):
+    """build_kg as composed before text rows read the subj-partitioned
+    extraction: they came from the unpartitioned extraction, deduped on
+    (subj, text) by a shuffle of their own."""
+    from json_ld_spark.operators.linking import mention_triples
+    from json_ld_spark.plans.kg import transcript_triples
+
+    raw = transcript_triples(transcripts, engine=engine)
+    deduped = dedup_triples(raw.repartition("subj"))
+    text_rows = (
+        raw.filter(F.col("pred") == TEXT_PRED)
+        .select("subj", F.col("obj").alias("text"))
+        .dropDuplicates(["subj", "text"])
+    )
+    mentions = extract_mentions(text_rows, text_col="text", subject_col="subj")
+    links = link_entities(mentions, dictionary, strategy=link_strategy)
+    mention_tr = dedup_triples(
+        mention_triples(links).withColumn("doc_id", F.col("subj"))
+    )
+    cols = QUAD_COLS + ["doc_id"]
+    triples = deduped.select(cols).unionByName(mention_tr.select(cols))
+    return {"triples": triples, "nodes": node_table(triples), "links": links}
+
+
+@pytest.mark.parametrize("link_strategy", ["broadcast", "salted"])
+@pytest.mark.parametrize("engine", ["native", "generic"])
+def test_build_kg_matches_text_rows_from_raw(spark, engine, link_strategy):
+    """Reading text rows from the subj-partitioned extraction changes no
+    output: triples, nodes and links equal the old composition's. Texts
+    repeat across turns, one turn is duplicated (so the (subj, text)
+    dedup drops a row), and "alpha" has two entities of equal prior (so
+    the min_by tie on entity_id decides the link)."""
+    from datetime import datetime
+
+    texts = ["Alpha beta gamma", "beta delta alpha", "Alpha beta gamma"]
+    rows = [
+        (f"c{c}", i, "user", texts[(c + i) % 3], None, datetime(2026, 1, 1, 0, c, i))
+        for c in range(4)
+        for i in range(3)
+    ]
+    transcripts = spark.createDataFrame(
+        rows + rows[:1],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    dictionary = spark.createDataFrame(
+        [
+            ("https://e/entity/alpha-2", "alpha", 0.5),
+            ("https://e/entity/alpha-1", "alpha", 0.5),
+            ("https://e/entity/beta", "beta", 0.2),
+            ("https://e/entity/delta", "delta", 0.3),
+        ],
+        "entity_id string, surface string, prior double",
+    )
+    got = build_kg(transcripts, dictionary, engine=engine, link_strategy=link_strategy)
+    ref = _kg_text_rows_from_raw(transcripts, dictionary, engine, link_strategy)
+    for part in ("triples", "nodes", "links"):
+        assert _fingerprint(got[part]) == _fingerprint(ref[part]), part
+    alpha = {r["entity_id"] for r in got["links"].filter("surface = 'alpha'").collect()}
+    assert alpha == {"https://e/entity/alpha-1"}
+    # alpha and beta in each of the 12 turns, delta in the 4 "beta delta alpha" turns
+    assert got["links"].count() == 12 * 2 + 4
 
 
 def test_stage_threads_new_option_fields(spark):
