@@ -8,7 +8,7 @@ both quad sets are relabeled through this function, isomorphism reduces
 to exact (s,p,o,g) set equality — the P/R join of BASELINE.md.
 
 The same signature-iteration runs distributed in
-json_ld_spark.operators.canonicalize as DataFrame joins + groupBy; this
+json_ld_spark.operators.canonical as DataFrame joins + groupBy; this
 module is the per-document (in-UDF) version.
 """
 

@@ -6,7 +6,11 @@ Model: the pipeline's unit of work is a conversation bucket
 (pmod(xxhash64(conv_id), n_buckets) — deterministic co-partitioning of
 every stage). Each run:
 
-  1. WRITE   bucket outputs to <out>/_staging/<run_id>/bucket=<b>/
+  1. WRITE   bucket outputs to <out>/_staging/<run_id>/bucket=<b>/,
+             rebalanced by bucket first: one file per bucket, and a
+             bucket bigger than AQE's advisory partition size
+             (spark.sql.adaptive.advisoryPartitionSizeInBytes) is split
+             into several files of about that size
   2. AUDIT   re-read staging, per-bucket row counts + content fingerprint
   3. PUBLISH move bucket dirs into <out>/data/bucket=<b>/ and append the
              bucket entries to <out>/_manifest/manifest.json atomically
@@ -89,8 +93,12 @@ def write_audit_publish(
     data_dir = os.path.join(out_dir, "data")
     os.makedirs(data_dir, exist_ok=True)
 
-    # WRITE: one directory per bucket (partition pruning on read)
-    df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
+    # WRITE: one directory per bucket (partition pruning on read). The
+    # rebalance hint sends each bucket to one task, so a bucket is
+    # written as one file, not one per input partition holding its rows
+    df.hint("rebalance", BUCKET_COL).write.mode("overwrite").partitionBy(
+        BUCKET_COL
+    ).parquet(staging)
 
     # AUDIT: per-bucket row counts + value fingerprint from the staged
     # files themselves (what will be published, not what we meant to write)

@@ -92,6 +92,12 @@ def link_entities(
     strategy='salted':    deterministic salt on the probe side +
                           dictionary replicated ×n_salts (hot-key spread
                           for dictionaries beyond broadcast size).
+
+    ``score`` comes from the ``link_score`` pandas UDF. A caller that
+    drops it runs no Python: ``mention_triples`` keeps only subj and
+    entity_id, so Catalyst prunes the UDF, and the native ``build_kg``
+    triples and nodes plans hold no Python node
+    (tests/test_plan_shapes.py::test_build_kg_native_plans_run_no_python).
     """
     # tf/first_pos are aggregated on MENTIONS, before the dictionary
     # join, on BOTH paths: joining first would multiply the count by the

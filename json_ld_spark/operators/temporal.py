@@ -464,8 +464,12 @@ def rate_anomalies(
 ) -> DataFrame:
     """Event-rate anomaly detection — the ops-monitoring staple: per
     (event_type, day) counts compared against the ROLLING baseline of
-    the preceding `window_days` days (frame excludes the current day,
-    so a spike can't mask itself), flagged when |z| ≥ z_threshold.
+    the preceding `window_days` ROWS of that event type, flagged when
+    |z| ≥ z_threshold. The frame is rowsBetween(-window_days, -1): the
+    `window_days` latest earlier days that HAVE events of the type,
+    however far back they lie (a day without events has no row, so it
+    neither counts as a zero nor shortens the reach). The current day
+    is excluded, so a spike can't mask itself.
 
     Determinism: daily counts are exact integers; the rolling mean and
     sample variance derive from window SUM/SUMSQ/COUNT over those

@@ -4,8 +4,11 @@ transcripts → per-turn JSON-LD → triple extraction → entity linking →
 dedup/merge → triple + node tables → write-audit-publish materialize.
 
 Shuffle plan: scan → triple emission (codegen or Arrow UDF) → ONE
-repartition by subj → quad dedup, mention linking (broadcast joins) and
-node merge, all on that subj partitioning → bucketed WAP write.
+repartition by subj, into a fixed spark.sql.shuffle.partitions count →
+quad dedup, mention linking (broadcast joins) and node merge, all on
+that subj partitioning → WAP write rebalanced by bucket. The count is
+fixed because the text rows' bytes understate the ~52× mention work
+after them (see build_kg).
 """
 
 from __future__ import annotations
@@ -53,8 +56,21 @@ def build_kg(
     below the repartition by Catalyst and gets its own small subj
     Exchange, so the extraction runs twice (the generic engine's Python
     stage too).
+
+    The repartition has a fixed count, the session's
+    spark.sql.shuffle.partitions, because AQE never coalesces a numbered
+    repartition. A plain one is sized by its bytes, and the text
+    Exchange's bytes understate the work after it: 6000 turns are ~1 MB
+    of text, which AQE would merge into ONE partition, while each turn
+    explodes into ~52 mentions that are linked and written as quads, so
+    one task would run all of the linking. With the fixed count every
+    task links its own share of the turns, and both union inputs stay
+    on the same subj partitions.
     """
-    parted = transcript_triples(transcripts, engine=engine).repartition("subj")
+    n_parts = int(transcripts.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    parted = transcript_triples(transcripts, engine=engine).repartition(
+        n_parts, "subj"
+    )
     # dedup BEFORE the mention union: the mention predicate
     # (transcript#mentions) is disjoint from the extraction predicates,
     # so dedup(a ∪ b) = dedup(a) ∪ dedup(b), and neither side re-shuffles

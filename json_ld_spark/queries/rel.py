@@ -698,10 +698,10 @@ WITH per_user AS (
               ELSE 0.0 END AS theta,
          round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_pre
   FROM (
-    SELECT CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(pre_c) AS BIGINT) AS sx, CAST(SUM(post_c) AS BIGINT) AS sy,
-           CAST(SUM(pre_c * post_c) AS BIGINT) AS sxy,
-           CAST(SUM(pre_c * pre_c) AS BIGINT) AS sxx
+    SELECT CAST(COUNT(*) AS HUGEINT) AS n,
+           CAST(SUM(pre_c) AS HUGEINT) AS sx, CAST(SUM(post_c) AS HUGEINT) AS sy,
+           SUM(CAST(pre_c AS HUGEINT) * CAST(post_c AS HUGEINT)) AS sxy,
+           SUM(CAST(pre_c AS HUGEINT) * CAST(pre_c AS HUGEINT)) AS sxx
     FROM per_user)
 ), keyed AS (
   SELECT CAST(user_id % 2 AS INT) AS arm, post_c,

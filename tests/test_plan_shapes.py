@@ -272,3 +272,68 @@ def test_build_kg_nodes_shuffle_only_on_subj(spark):
     transcripts.unpersist()
     dictionary.unpersist()
     assert keys and all(k == ["subj"] for k in keys), keys
+
+
+def _kg_inputs(spark):
+    from json_ld_spark.sources.transcripts import synthesize_transcripts
+
+    transcripts = synthesize_transcripts(spark, n_convs=20, avg_turns=5).cache()
+    dictionary = spark.createDataFrame(
+        [("https://e/entity/test", "test", 0.4), ("https://e/entity/data", "data", 0.3)],
+        "entity_id string, surface string, prior double",
+    ).cache()
+    return transcripts, dictionary
+
+
+def _coalesced_shuffle_keys(plan) -> list[list[str]]:
+    """Keys of every hash shuffle that a final AQE plan reads through a
+    partition-coalescing AQEShuffleRead."""
+    name = plan.nodeName()
+    if name.startswith("InMemoryTableScan"):
+        return []
+    if name == "AdaptiveSparkPlan":
+        return _coalesced_shuffle_keys(plan.executedPlan())
+    if name == "AQEShuffleRead" and plan.hasCoalescedPartition():
+        return _shuffle_keys(plan.child())
+    if "QueryStage" in name:
+        return _coalesced_shuffle_keys(plan.plan())
+    keys = []
+    children = plan.children()
+    for i in range(children.size()):
+        keys += _coalesced_shuffle_keys(children.apply(i))
+    return keys
+
+
+def test_build_kg_subj_exchanges_not_coalesced(spark):
+    """The subj repartition has a fixed partition count, so AQE keeps
+    every subj partition: the tiny text Exchange is not merged into one
+    task that would then link every turn's mentions alone."""
+    from json_ld_spark.plans.kg import build_kg
+
+    transcripts, dictionary = _kg_inputs(spark)
+    triples = build_kg(transcripts, dictionary, engine="native")["triples"]
+    assert triples.collect()  # runs the plan, so AQE settles its final shape
+    plan = triples._jdf.queryExecution().executedPlan()
+    all_keys = _shuffle_keys(plan)
+    coalesced = _coalesced_shuffle_keys(plan)
+    transcripts.unpersist()
+    dictionary.unpersist()
+    assert all_keys.count(["subj"]) == 2, all_keys
+    assert ["subj"] not in coalesced, coalesced
+
+
+def test_build_kg_native_plans_run_no_python(spark):
+    """The native path runs no Python: mention_triples drops the link
+    score, so Catalyst prunes the link_score pandas UDF from both plans."""
+    from json_ld_spark.plans.kg import build_kg
+
+    transcripts, dictionary = _kg_inputs(spark)
+    parts = build_kg(transcripts, dictionary, engine="native")
+    plans = {k: _plan(parts[k]) for k in ("triples", "nodes")}
+    transcripts.unpersist()
+    dictionary.unpersist()
+    for k, plan in plans.items():
+        for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+            assert node not in plan, (k, node)
+    # the same check sees the UDF where the score is kept
+    assert "ArrowEvalPython" in _plan(parts["links"])

@@ -495,20 +495,20 @@ def test_holt_forecast_fails_past_row_bound(spark, monkeypatch):
     assert temporal.holt_forecast(ev).collect()[0].n_days == 4
 
 
-def test_cuped_exact_past_bigint_cent_products(spark):
-    """Cent sums of $20M-$65M per user make pre·post and pre² products
-    past BIGINT's 9.2e18: theta and the arm means must still equal the
-    exact integer OLS, not overflow (ANSI) or wrap."""
+# $20M-$65M per user: the cent products pre·post and pre² pass BIGINT
+_BIG_DOLLARS = {1: (4e7, 5e7), 2: (3e7, 3.5e7), 3: (5e7, 6.5e7), 4: (2e7, 2e7)}
+
+
+def _cuped_rows(dollars):
     from datetime import datetime
 
-    from json_ld_spark.operators.temporal import cuped_adjusted
-
     pre_t, post_t = datetime(2024, 1, 10), datetime(2024, 1, 20)
-    dollars = {1: (4e7, 5e7), 2: (3e7, 3.5e7), 3: (5e7, 6.5e7), 4: (2e7, 2e7)}
-    rows = [(u, t, v) for u, (a, b) in dollars.items() for t, v in ((pre_t, a), (post_t, b))]
-    ev = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-    out = {r.arm: r for r in cuped_adjusted(ev, cutoff="2024-01-16 00:00:00").collect()}
+    return [(u, t, v) for u, (a, b) in dollars.items() for t, v in ((pre_t, a), (post_t, b))]
 
+
+def _assert_cuped_exact(dollars, out):
+    """`out` maps arm → row of (theta_r, mean_post_r, mean_adj_r); they
+    must equal the exact integer OLS over the per-user cent sums."""
     pre = {u: round(a * 100) for u, (a, _) in dollars.items()}
     post = {u: round(b * 100) for u, (_, b) in dollars.items()}
     assert pre[1] * post[1] > 2**63  # the products really leave BIGINT
@@ -517,11 +517,39 @@ def test_cuped_exact_past_bigint_cent_products(spark):
     sxx = sum(x * x for x in pre.values())
     theta = round(float(n * sxy - sx * sy) / float(n * sxx - sx * sx), 6)
     mean_pre = round(sx / n, 6)
-    assert out[0].theta_r == pytest.approx(theta, abs=1e-9)
+    assert out[0]["theta_r"] == pytest.approx(theta, abs=1e-9)
     for arm in (0, 1):
         users = [u for u in pre if u % 2 == arm]
         adj = sum(round((post[u] - theta * (pre[u] - mean_pre)) * 1e4) for u in users)
-        assert out[arm].mean_adj_r == pytest.approx(adj / 1e4 / 100 / len(users), abs=1e-6)
-        assert out[arm].mean_post_r == pytest.approx(
+        assert out[arm]["mean_adj_r"] == pytest.approx(adj / 1e4 / 100 / len(users), abs=1e-6)
+        assert out[arm]["mean_post_r"] == pytest.approx(
             sum(post[u] for u in users) / 100 / len(users), abs=1e-6
         )
+
+
+def test_cuped_exact_past_bigint_cent_products(spark):
+    """Cent sums of $20M-$65M per user make pre·post and pre² products
+    past BIGINT's 9.2e18: theta and the arm means must still equal the
+    exact integer OLS, not overflow (ANSI) or wrap."""
+    from json_ld_spark.operators.temporal import cuped_adjusted
+
+    ev = spark.createDataFrame(
+        _cuped_rows(_BIG_DOLLARS), "user_id long, ts timestamp, value double"
+    )
+    out = {r.arm: r.asDict() for r in cuped_adjusted(ev, cutoff="2024-01-16 00:00:00").collect()}
+    _assert_cuped_exact(_BIG_DOLLARS, out)
+
+
+def test_cuped_oracle_exact_past_bigint_cent_products():
+    """The DuckDB oracle of rel_cuped on the same $20M-$65M users sums
+    the cent products as HUGEINT, so it agrees with the exact OLS too."""
+    duckdb = pytest.importorskip("duckdb")
+    from json_ld_spark.queries.rel import _CUPED_SQL
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE events (user_id BIGINT, ts TIMESTAMP, value DOUBLE)")
+    con.executemany("INSERT INTO events VALUES (?, ?, ?)", _cuped_rows(_BIG_DOLLARS))
+    cur = con.execute(_CUPED_SQL)
+    cols = [d[0] for d in cur.description]
+    out = {r[0]: dict(zip(cols, r)) for r in cur.fetchall()}
+    _assert_cuped_exact(_BIG_DOLLARS, out)

@@ -505,6 +505,26 @@ def test_checkpoint_resume_exactness(spark, transcripts, tmp_path):
     assert r3["published_buckets"] == []
 
 
+def test_write_audit_publish_one_file_per_bucket(spark, tmp_path):
+    """The WAP write is rebalanced by bucket, so rows of one bucket spread
+    over several input partitions still land in a single staged file."""
+    df = spark.range(400).repartition(4).select(
+        F.concat(F.lit("conv-"), (F.col("id") % 40).cast("string")).alias("conv_id"),
+        F.col("id"),
+    )
+    assert df.rdd.getNumPartitions() == 4
+    out = str(tmp_path / "wap")
+    res = cp.write_audit_publish(df, out, n_buckets=4)
+    assert res["total_rows"] == 400
+    assert sorted(res["published_buckets"]) == [0, 1, 2, 3]
+    for b in res["published_buckets"]:
+        files = [
+            f for f in os.listdir(os.path.join(out, "data", f"bucket={b}"))
+            if f.endswith(".parquet")
+        ]
+        assert len(files) == 1, (b, files)
+
+
 def test_write_iceberg_gate(spark, transcripts, tmp_path):
     """Iceberg sink is classpath-gated: without the runtime jars it must
     refuse with a clear error (never silently fall back); with jars the
