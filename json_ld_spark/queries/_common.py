@@ -3,6 +3,12 @@
 ``_utc``/``_read`` set up every query; ``_BASE_CTE`` and ``_TRIPLES_CTE``
 replay ``transcripts_from_documents`` and the native triple extraction in
 DuckDB SQL for the KG oracles.
+
+Sharing rule: this module holds only what two or more families use. A
+helper that one family uses stays in that family's module, next to the
+queries that call it (``kg.py`` keeps its co-purchase, KGE and linking
+inputs). SQL fragments are shared only with other SQL, and are never
+generated from the Spark code an oracle checks.
 """
 
 from __future__ import annotations

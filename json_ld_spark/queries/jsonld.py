@@ -68,15 +68,14 @@ def q_jsonld_expand_generic(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = turns_to_jsonld(transcripts_from_documents(spark, sf_dir))
     out = expand_stage(docs, context=TRANSCRIPT_CONTEXT, options=JsonLdOptions())
     root = F.get_json_object("expanded", "$[0]")
-    v = "https://example.org/transcript#"
     return out.select(
         "doc_id",
         F.size(F.json_object_keys(root)).cast("long").alias("n_props"),
         F.get_json_object("expanded", "$[0].@id").alias("subj"),
         F.get_json_object(
-            "expanded", f"$[0]['{v}role'][0]['@value']"
+            "expanded", f"$[0]['{_V}role'][0]['@value']"
         ).alias("role"),
-        F.get_json_object("expanded", f"$[0]['{v}turnIndex'][0]['@value']")
+        F.get_json_object("expanded", f"$[0]['{_V}turnIndex'][0]['@value']")
         .cast("long")
         .alias("turn_val"),
         F.col("n_warnings").cast("long").alias("n_warnings"),
@@ -102,12 +101,11 @@ def q_jsonld_flatten_generic(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     docs = turns_to_jsonld(transcripts_from_documents(spark, sf_dir))
     out = flatten_stage(docs, context=TRANSCRIPT_CONTEXT, options=JsonLdOptions())
-    v = "https://example.org/transcript#"
     return out.select(
         "doc_id",
         "node_id",
         F.size(F.json_object_keys("node_json")).cast("long").alias("n_keys"),
-        F.get_json_object("node_json", f"$['{v}role'][0]['@value']").alias("role"),
+        F.get_json_object("node_json", f"$['{_V}role'][0]['@value']").alias("role"),
     )
 
 
@@ -195,14 +193,13 @@ def q_jsonld_fromrdf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = turns_to_jsonld(transcripts_from_documents(spark, sf_dir))
     trip = triples_stage(docs, context=TRANSCRIPT_CONTEXT, options=JsonLdOptions())
     back = from_rdf_stage(trip)
-    v = "https://example.org/transcript#"
     return back.select(
         "doc_id",
         F.get_json_object("expanded", "$[0].@id").alias("root_id"),
         F.size(F.json_object_keys(F.get_json_object("expanded", "$[0]")))
         .cast("long")
         .alias("n_keys"),
-        F.get_json_object("expanded", f"$[0]['{v}text'][0]['@value']").alias("text"),
+        F.get_json_object("expanded", f"$[0]['{_V}text'][0]['@value']").alias("text"),
     )
 
 

@@ -1,22 +1,34 @@
 """``kg_*`` queries: triple extraction, entailment, node tables, entity
 linking, BGP/SPARQL, graph analytics, embeddings and time travel over the
 transcript knowledge graph, each registered with its DuckDB oracle.
+
+The inputs that several queries read (the part co-purchase graph, the
+supplier -> customer graph, the KGE edge set, the document mentions and
+hot surfaces, the triple and node projections) are built once: one Spark
+builder each, and one SQL fragment each for the oracles. The SQL is
+written apart from the Spark code, so no oracle derives from the code it
+checks; each oracle keeps its own CTE wrapper around a shared fragment.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import re
+
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from json_ld_spark.operators import dedup as dd
 from json_ld_spark.operators import graphops as gops
 from json_ld_spark.operators import linking as lk
 from json_ld_spark.operators import textops as tx
+from json_ld_spark.operators.bgp import bgp_query
 from json_ld_spark.operators.jsonld import (
     dedup_triples, node_table, triples_stage,
 )
-from json_ld_spark.operators.native import transcript_triples_native
+from json_ld_spark.operators.native import (
+    transcript_adjacency_native, transcript_triples_native,
+)
 from json_ld_spark.options import JsonLdOptions
-from json_ld_spark.plans.kg import build_kg
+from json_ld_spark.plans.kg import build_kg, materialize_kg
 from json_ld_spark.queries import query
 from json_ld_spark.queries._common import (
     TRIPLE_COLS, _utc, _read, _canon_docs, _tt_changelog, _V, _CB, _RDF_TYPE,
@@ -24,6 +36,319 @@ from json_ld_spark.queries._common import (
 )
 from json_ld_spark.sources.transcripts import (
     TRANSCRIPT_CONTEXT, transcripts_from_documents, turns_to_jsonld,
+)
+
+
+# ---------------------------------------------------------------------------
+# Shared inputs, Spark side
+# ---------------------------------------------------------------------------
+
+
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Part co-purchase graph: undirected edge {u, v} when two parts
+    share an order (orders sampled by key % 5 to bound the oracle's
+    all-pairs replay; the Spark side scales to the full table — the
+    per-order fan-out is C(lines_per_order, 2), bounded by order size,
+    not corpus size)."""
+    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
+    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
+    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
+    return (
+        a.join(b, "ok")
+        .filter(F.col("u") < F.col("v"))
+        .select("u", "v")
+        .dropDuplicates()
+    )
+
+
+def _copurchase_src_dst(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_copurchase_edges`` under graphops' default ``src``/``dst`` names."""
+    return _copurchase_edges(spark, sf_dir).select(
+        F.col("u").alias("src"), F.col("v").alias("dst")
+    )
+
+
+def _lpa_labels(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The co-purchase edges and their communities: every 250th part
+    seeds class ``c<node % 3>``, then two label-propagation rounds."""
+    e = _copurchase_edges(spark, sf_dir)
+    nodes = (
+        e.select(F.col("u").alias("node"))
+        .unionByName(e.select(F.col("v").alias("node")))
+        .dropDuplicates()
+    )
+    seeds = nodes.filter(F.col("node") % 250 == 0).select(
+        "node",
+        F.concat(F.lit("c"), (F.col("node") % 3).cast("string")).alias("label"),
+    )
+    return e, gops.label_propagation(e, seeds, iters=2, src="u", dst="v")
+
+
+def _seed_parts(spark: SparkSession, sf_dir: str, keep: Column) -> DataFrame:
+    """The ``part`` keys that satisfy ``keep``, as graph seeds ``node``."""
+    return (
+        _read(spark, sf_dir, "part")
+        .filter(keep)
+        .select(F.col("p_partkey").alias("node"))
+    )
+
+
+def _part_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct part -> supplier edges ``p<partkey>`` -> ``s<suppkey>``."""
+    return (
+        _read(spark, sf_dir, "lineitem")
+        .select(
+            F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("src"),
+            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
+        )
+        .dropDuplicates()
+    )
+
+
+def _supplier_customer_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One supplier -> customer edge per lineitem (``s<suppkey>``
+    supplied an order of ``c<custkey>``); duplicates are kept, so callers
+    either dedup or count them as weights."""
+    li = _read(spark, sf_dir, "lineitem")
+    o = _read(spark, sf_dir, "orders")
+    return li.join(o, li["l_orderkey"] == o["o_orderkey"]).select(
+        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
+        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("dst"),
+    )
+
+
+def _kge_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The node-to-node edges the KGE queries embed and rank: the
+    IRI-object native triples plus the nextTurn adjacency."""
+    t = transcripts_from_documents(spark, sf_dir)
+    return (
+        transcript_triples_native(t)
+        .filter(F.col("obj_kind") == "iri")
+        .select("subj", "pred", "obj")
+        .unionByName(
+            transcript_adjacency_native(t, with_doc_id=False)
+            .select("subj", "pred", "obj")
+        )
+    )
+
+
+def _mrr_r() -> Column:
+    """Mean reciprocal rank of the ``rank`` column, 6 dp: reciprocals
+    are summed as integer micros (an exact long whatever the
+    partitioning), then divided and rounded once."""
+    micros = F.sum(F.expr("1000000 div rank")).cast("double")
+    return F.round(micros / (F.lit(1e6) * F.count(F.lit(1))), 6)
+
+
+def _turn_graph(t: DataFrame, cols: list[str] = TRIPLE_COLS) -> DataFrame:
+    """The native triples of ``t`` plus its nextTurn adjacency, as ``cols``."""
+    return (
+        transcript_triples_native(t, with_doc_id=False)
+        .select(*cols)
+        .unionByName(transcript_adjacency_native(t, with_doc_id=False).select(*cols))
+    )
+
+
+def _spo(t: DataFrame) -> DataFrame:
+    """The distinct (subj, pred, obj) of the native triples of ``t``."""
+    return (
+        transcript_triples_native(t)
+        .select("subj", "pred", "obj")
+        .dropDuplicates()
+    )
+
+
+def _conv_graphs(quads: DataFrame) -> DataFrame:
+    """Distinct (graph, subj, pred, obj), each turn's quads in its
+    conversation's named graph."""
+    return quads.select(
+        F.regexp_extract(F.col("subj"), r"^(.*)/turn/", 1).alias("graph"),
+        "subj", "pred", "obj",
+    ).dropDuplicates()
+
+
+def _node_rows(nodes: DataFrame) -> DataFrame:
+    """A node table in the oracle's columns: types and preds
+    comma-joined, counts as longs."""
+    return nodes.select(
+        "node_id",
+        F.array_join("types", ",").alias("types_csv"),
+        F.array_join("preds", ",").alias("preds_csv"),
+        F.col("out_degree").cast("long").alias("out_degree"),
+        F.col("n_docs").cast("long").alias("n_docs"),
+    )
+
+
+def _bucketed_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The transcript KG published by ``materialize_kg`` as a
+    subj-bucketed managed table (16 buckets), one table per sf dir."""
+    tag = re.sub(r"[^A-Za-z0-9]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    table = f"kg_triples_bucketed_{tag}"
+    materialize_kg(
+        transcripts_from_documents(spark, sf_dir),
+        f"/tmp/json_ld_spark_bucketed/{tag}",
+        n_buckets=16,
+        bucketed_table=table,
+    )
+    return spark.table(table)
+
+
+def _assistant_turns(triples: DataFrame) -> DataFrame:
+    """BGP: every assistant turn with its conversation and index."""
+    return bgp_query(
+        triples,
+        [
+            ("?turn", _V + "role", "assistant"),
+            ("?turn", _V + "conversation", "?conv"),
+            ("?turn", _V + "turnIndex", "?idx"),
+        ],
+    ).select("turn", "conv", "idx")
+
+
+def _doc_mentions(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Mentions of the ``documents`` texts (subj ``doc-<doc_id>``) and
+    the 2000-entry synthesized entity dictionary."""
+    docs = _read(spark, sf_dir, "documents")
+    mention_src = docs.select(
+        F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("subj"),
+        "text",
+    )
+    mentions = lk.extract_mentions(mention_src)
+    dictionary = lk.synthesize_entity_dictionary(spark, sf_dir, max_entities=2000)
+    return mentions, dictionary
+
+
+def _doc_links(spark: SparkSession, sf_dir: str, **strategy) -> DataFrame:
+    """``link_entities`` over ``_doc_mentions`` under ``strategy``, with
+    prior and score rounded to 6 dp."""
+    links = lk.link_entities(*_doc_mentions(spark, sf_dir), **strategy)
+    return links.select(
+        "subj",
+        "surface",
+        "entity_id",
+        F.col("tf").cast("long").alias("tf"),
+        F.col("first_pos").cast("long").alias("first_pos"),
+        F.round("prior", 6).alias("prior_r"),
+        F.round("score", 6).alias("score_r"),
+    )
+
+
+def _hot_surfaces(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 50 most frequent document words as entity surfaces (ties
+    broken by word)."""
+    return (
+        lk._doc_words(_read(spark, sf_dir, "documents"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy(F.desc("n"), "word")
+        .limit(50)
+        .select(F.col("word").alias("surface"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# Shared inputs, oracle side. Each fragment is a CTE body or a run of CTEs;
+# every oracle keeps its own WITH [RECURSIVE] name AS [MATERIALIZED] wrapper,
+# so DuckDB plans each one as before.
+# ---------------------------------------------------------------------------
+
+# the part co-purchase graph (u < v) over orders sampled by key % 5
+_COPURCHASE_SQL = """
+  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+  FROM lineitem a JOIN lineitem b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+  WHERE a.l_orderkey % 5 = 0
+"""
+
+# one supplier -> customer pair per lineitem, duplicates kept
+_SUPPLIER_CUSTOMER_SQL = """
+  SELECT 's' || l_suppkey AS u, 'c' || o_custkey AS v
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+"""
+
+# the documents' mentions (tf and first position per subj and surface)
+# and the 2000 most frequent tokens as the prior-weighted dictionary
+_DOC_MENTIONS_CTE = """
+WITH mention_rows AS (
+  SELECT 'doc-' || CAST(doc_id AS VARCHAR) AS subj,
+         e.pos AS pos, e.surface AS surface
+  FROM documents
+  CROSS JOIN UNNEST(list_transform(
+      string_split_regex(lower(text), '[^a-z0-9]+'),
+      (x, i) -> {'pos': i - 1, 'surface': x})) AS m(e)
+  WHERE length(e.surface) >= 3
+), tf AS (
+  SELECT subj, surface, COUNT(*) AS tf, MIN(pos) AS first_pos
+  FROM mention_rows GROUP BY subj, surface
+), toks AS (
+  SELECT t.e AS surface FROM documents
+  CROSS JOIN UNNEST(string_split_regex(lower(text), '[^a-z0-9]+')) AS t(e)
+  WHERE length(t.e) >= 3
+), freq AS (
+  SELECT surface, COUNT(*) AS n FROM toks GROUP BY surface
+), dict AS (
+  SELECT 'https://example.org/entity/' || surface AS entity_id, surface,
+         n / (SELECT CAST(SUM(n) AS DOUBLE) FROM freq) AS prior
+  FROM freq ORDER BY n DESC, surface ASC LIMIT 2000
+)
+"""
+
+# per-document distinct words (>= 3 chars) and the 50 most frequent of
+# them as surfaces
+_HOT_CTE = """dwords AS (
+  SELECT DISTINCT doc_id, word FROM (
+    SELECT doc_id,
+           unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS word
+    FROM documents)
+  WHERE length(word) >= 3
+), hot AS (
+  SELECT word AS surface FROM (
+    SELECT word, COUNT(*) AS n FROM dwords GROUP BY word)
+  ORDER BY n DESC, word LIMIT 50
+)"""
+
+# MRR over a rank column: integer micros summed exactly, one division,
+# one rounding (the Spark side's _mrr_r)
+_MRR_SQL = "round(CAST(SUM(1000000 // rank) AS DOUBLE) / (1e6 * COUNT(*)), 6)"
+
+
+def _lpa_round(k: int) -> str:
+    return f"""
+, v{k} AS (
+  SELECT e.u, l.label, COUNT(*) AS n
+  FROM lpa_und e JOIN l{k - 1} l ON l.node = e.v
+  GROUP BY e.u, l.label
+), p{k} AS (
+  SELECT u AS node, label FROM (
+    SELECT u, label,
+           ROW_NUMBER() OVER (PARTITION BY u ORDER BY n DESC, label ASC) AS rk
+    FROM v{k}
+  ) WHERE rk = 1
+), l{k} AS (
+  SELECT * FROM lpa_sd
+  UNION ALL
+  SELECT p.node, p.label FROM p{k} p
+  WHERE NOT EXISTS (SELECT 1 FROM lpa_sd s WHERE s.node = p.node)
+)"""
+
+
+# the co-purchase graph (lpa_e), both orientations (lpa_und), the seeds
+# (every 250th part, class c<node % 3>) and two label-propagation rounds
+# unrolled as join -> count -> ROW_NUMBER-argmax CTEs; l2 holds the labels
+_LPA_CTE = (
+    "WITH lpa_e AS (" + _COPURCHASE_SQL + """), lpa_und AS (
+  SELECT u, v FROM lpa_e UNION SELECT v AS u, u AS v FROM lpa_e
+), lpa_sd AS (
+  SELECT node, 'c' || CAST(node % 3 AS VARCHAR) AS label
+  FROM (SELECT DISTINCT u AS node FROM lpa_und)
+  WHERE node % 250 = 0
+), l0 AS (SELECT * FROM lpa_sd)"""
+    + _lpa_round(1)
+    + _lpa_round(2)
 )
 
 
@@ -151,15 +476,14 @@ def q_kg_rdfs_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _utc(spark)
-    v = "https://example.org/transcript#"
     onto = spark.createDataFrame(
         [
-            (None, v + "Turn", SUB_CLASS, "iri", v + "Utterance", None, None),
-            (None, v + "Utterance", SUB_CLASS, "iri", v + "Resource", None, None),
-            (None, v + "Conversation", SUB_CLASS, "iri", v + "Resource", None, None),
-            (None, v + "role", SUB_PROP, "iri", v + "attribute", None, None),
-            (None, v + "conversation", DOMAIN, "iri", v + "Turn", None, None),
-            (None, v + "conversation", RANGE, "iri", v + "Conversation", None, None),
+            (None, _V + "Turn", SUB_CLASS, "iri", _V + "Utterance", None, None),
+            (None, _V + "Utterance", SUB_CLASS, "iri", _V + "Resource", None, None),
+            (None, _V + "Conversation", SUB_CLASS, "iri", _V + "Resource", None, None),
+            (None, _V + "role", SUB_PROP, "iri", _V + "attribute", None, None),
+            (None, _V + "conversation", DOMAIN, "iri", _V + "Turn", None, None),
+            (None, _V + "conversation", RANGE, "iri", _V + "Conversation", None, None),
         ],
         "graph string, subj string, pred string, obj_kind string, "
         "obj string, datatype string, lang string",
@@ -208,14 +532,12 @@ def q_kg_owl_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.entailment import (
         INVERSE_OF, RDF_TYPE as _RT, TRANSITIVE_PROP, owl_property_closure,
     )
-    from json_ld_spark.operators.native import transcript_adjacency_native
 
     _utc(spark)
-    v = "https://example.org/transcript#"
     onto = spark.createDataFrame(
         [
-            (None, v + "nextTurn", _RT, "iri", TRANSITIVE_PROP, None, None),
-            (None, v + "nextTurn", INVERSE_OF, "iri", v + "prevTurn", None, None),
+            (None, _V + "nextTurn", _RT, "iri", TRANSITIVE_PROP, None, None),
+            (None, _V + "nextTurn", INVERSE_OF, "iri", _V + "prevTurn", None, None),
         ],
         "graph string, subj string, pred string, obj_kind string, "
         "obj string, datatype string, lang string",
@@ -256,13 +578,11 @@ def q_kg_owl_functional(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.entailment import (
         FUNCTIONAL_PROP, RDF_TYPE as _RT, functional_conflicts,
     )
-    from json_ld_spark.operators.native import transcript_triples_native
 
     _utc(spark)
-    v = "https://example.org/transcript#"
     xs = "http://www.w3.org/2001/XMLSchema#string"
     onto = spark.createDataFrame(
-        [(None, v + "role", _RT, "iri", FUNCTIONAL_PROP, None, None)],
+        [(None, _V + "role", _RT, "iri", FUNCTIONAL_PROP, None, None)],
         "graph string, subj string, pred string, obj_kind string, "
         "obj string, datatype string, lang string",
     )
@@ -279,7 +599,7 @@ def q_kg_owl_functional(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("https://example.org/conv/"), F.col("conv_id"),
                 F.lit("/turn/"), F.col("turn_idx").cast("string"),
             ).alias("subj"),
-            F.lit(v + "role").alias("pred"),
+            F.lit(_V + "role").alias("pred"),
             F.lit("literal").alias("obj_kind"),
             F.lit("auditor").alias("obj"),
             F.lit(xs).alias("datatype"),
@@ -324,23 +644,15 @@ def q_kg_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _utc(spark)
-    v = "https://example.org/transcript#"
     t = transcripts_from_documents(spark, sf_dir)
     base = transcript_triples_native(t.filter(F.col("turn_idx") < 12))
     adds = transcript_triples_native(t.filter(F.col("turn_idx") >= 12))
-    deletes = base.filter(F.col("pred") == v + "tool")
+    deletes = base.filter(F.col("pred") == _V + "tool")
     merged = merge_triples(base, adds=adds, deletes=deletes)
     old_nodes = node_table(dedup_triples(base))
-    nodes = refresh_node_table(
+    return _node_rows(refresh_node_table(
         old_nodes, merged, affected_subjects(adds=adds, deletes=deletes)
-    )
-    return nodes.select(
-        "node_id",
-        F.array_join("types", ",").alias("types_csv"),
-        F.array_join("preds", ",").alias("preds_csv"),
-        F.col("out_degree").cast("long").alias("out_degree"),
-        F.col("n_docs").cast("long").alias("n_docs"),
-    )
+    ))
 
 
 # kg_update_where: predicate rename is the whole effect (role objects
@@ -362,18 +674,11 @@ def q_kg_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.maintenance import update_where
 
     _utc(spark)
-    v = "https://example.org/transcript#"
-    t = transcripts_from_documents(spark, sf_dir)
-    tri3 = (
-        transcript_triples_native(t)
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-    )
     return update_where(
-        tri3,
-        where=[("?t", v + "role", "?r")],
-        delete=[("?t", v + "role", "?r")],
-        insert=[("?t", v + "speakerRole", "?r")],
+        _spo(transcripts_from_documents(spark, sf_dir)),
+        where=[("?t", _V + "role", "?r")],
+        delete=[("?t", _V + "role", "?r")],
+        insert=[("?t", _V + "speakerRole", "?r")],
     )
 
 
@@ -628,14 +933,7 @@ def q_kg_node_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregation over the deduped triple table."""
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)
-    nodes = node_table(dedup_triples(transcript_triples_native(t)))
-    return nodes.select(
-        "node_id",
-        F.array_join("types", ",").alias("types_csv"),
-        F.array_join("preds", ",").alias("preds_csv"),
-        F.col("out_degree").cast("long").alias("out_degree"),
-        F.col("n_docs").cast("long").alias("n_docs"),
-    )
+    return _node_rows(node_table(dedup_triples(transcript_triples_native(t))))
 
 
 @query(oracle=_NODES_SQL)
@@ -648,52 +946,14 @@ def q_kg_bucketed_node_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ZERO Exchange — the shuffle was paid once at publish time
     (PLANS.md §25; plan asserted in tests/test_layout.py). Output and
     oracle are identical to kg_node_table."""
-    import re as _re
-
-    from json_ld_spark.plans.kg import materialize_kg
-
     _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    tag = _re.sub(r"[^A-Za-z0-9]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    out_dir = f"/tmp/json_ld_spark_bucketed/{tag}"
-    table = f"kg_triples_bucketed_{tag}"
-    materialize_kg(t, out_dir, n_buckets=16, bucketed_table=table)
-    nodes = node_table(spark.table(table))
-    return nodes.select(
-        "node_id",
-        F.array_join("types", ",").alias("types_csv"),
-        F.array_join("preds", ",").alias("preds_csv"),
-        F.col("out_degree").cast("long").alias("out_degree"),
-        F.col("n_docs").cast("long").alias("n_docs"),
-    )
+    return _node_rows(node_table(_bucketed_triples(spark, sf_dir)))
 
 
-# kg_fuzzy_links: vocabulary-level blocked Levenshtein replay — the
-# mention/dict CTEs are _LINKS_SQL's; blocks via substring (DuckDB
-# negative-start substring counts from the end, like Spark's).
-_FUZZY_LINKS_SQL = """
-WITH mention_rows AS (
-  SELECT 'doc-' || CAST(doc_id AS VARCHAR) AS subj,
-         e.pos AS pos, e.surface AS surface
-  FROM documents
-  CROSS JOIN UNNEST(list_transform(
-      string_split_regex(lower(text), '[^a-z0-9]+'),
-      (x, i) -> {'pos': i - 1, 'surface': x})) AS m(e)
-  WHERE length(e.surface) >= 3
-), tf AS (
-  SELECT subj, surface, COUNT(*) AS tf, MIN(pos) AS first_pos
-  FROM mention_rows GROUP BY subj, surface
-), toks AS (
-  SELECT t.e AS surface FROM documents
-  CROSS JOIN UNNEST(string_split_regex(lower(text), '[^a-z0-9]+')) AS t(e)
-  WHERE length(t.e) >= 3
-), freq AS (
-  SELECT surface, COUNT(*) AS n FROM toks GROUP BY surface
-), dict AS (
-  SELECT 'https://example.org/entity/' || surface AS entity_id, surface,
-         n / (SELECT CAST(SUM(n) AS DOUBLE) FROM freq) AS prior
-  FROM freq ORDER BY n DESC, surface ASC LIMIT 2000
-), surf AS (
+# kg_fuzzy_links: vocabulary-level blocked Levenshtein replay over the
+# shared mention/dict CTEs; blocks via substring (DuckDB negative-start
+# substring counts from the end, like Spark's).
+_FUZZY_LINKS_SQL = _DOC_MENTIONS_CTE + """, surf AS (
   SELECT DISTINCT surface FROM tf
 ), cand AS (
   SELECT DISTINCT s.surface, d.entity_id, d.surface AS dsurf, d.prior
@@ -731,39 +991,10 @@ def q_kg_fuzzy_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     only equi-joins back. Oracle: same blocks + levenshtein() +
     ROW_NUMBER replay."""
     _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    mention_src = docs.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("subj"),
-        "text",
-    )
-    mentions = lk.extract_mentions(mention_src)
-    dictionary = lk.synthesize_entity_dictionary(spark, sf_dir, max_entities=2000)
-    return lk.fuzzy_link_entities(mentions, dictionary, max_dist=1)
+    return lk.fuzzy_link_entities(*_doc_mentions(spark, sf_dir), max_dist=1)
 
 
-_LINKS_SQL = """
-WITH mention_rows AS (
-  SELECT 'doc-' || CAST(doc_id AS VARCHAR) AS subj,
-         e.pos AS pos, e.surface AS surface
-  FROM documents
-  CROSS JOIN UNNEST(list_transform(
-      string_split_regex(lower(text), '[^a-z0-9]+'),
-      (x, i) -> {'pos': i - 1, 'surface': x})) AS m(e)
-  WHERE length(e.surface) >= 3
-), tf AS (
-  SELECT subj, surface, COUNT(*) AS tf, MIN(pos) AS first_pos
-  FROM mention_rows GROUP BY subj, surface
-), toks AS (
-  SELECT t.e AS surface FROM documents
-  CROSS JOIN UNNEST(string_split_regex(lower(text), '[^a-z0-9]+')) AS t(e)
-  WHERE length(t.e) >= 3
-), freq AS (
-  SELECT surface, COUNT(*) AS n FROM toks GROUP BY surface
-), dict AS (
-  SELECT 'https://example.org/entity/' || surface AS entity_id, surface,
-         n / (SELECT CAST(SUM(n) AS DOUBLE) FROM freq) AS prior
-  FROM freq ORDER BY n DESC, surface ASC LIMIT 2000
-)
+_LINKS_SQL = _DOC_MENTIONS_CTE + """
 SELECT tf.subj AS subj, tf.surface AS surface, dict.entity_id AS entity_id,
        tf.tf AS tf, CAST(tf.first_pos AS BIGINT) AS first_pos,
        round(dict.prior, 6) AS prior_r,
@@ -777,23 +1008,7 @@ def q_kg_entity_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mention extraction (JVM posexplode) + broadcast dictionary join +
     vectorized pandas-UDF link scoring (north_star entity-linking stage)."""
     _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    mention_src = docs.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("subj"),
-        "text",
-    )
-    mentions = lk.extract_mentions(mention_src)
-    dictionary = lk.synthesize_entity_dictionary(spark, sf_dir, max_entities=2000)
-    links = lk.link_entities(mentions, dictionary, strategy="broadcast")
-    return links.select(
-        "subj",
-        "surface",
-        "entity_id",
-        F.col("tf").cast("long").alias("tf"),
-        F.col("first_pos").cast("long").alias("first_pos"),
-        F.round("prior", 6).alias("prior_r"),
-        F.round("score", 6).alias("score_r"),
-    )
+    return _doc_links(spark, sf_dir, strategy="broadcast")
 
 
 @query(oracle=_LINKS_SQL)
@@ -804,23 +1019,7 @@ def q_kg_entity_links_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the strategy changes only the physical plan, so the value hash must
     be identical."""
     _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    mention_src = docs.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("subj"),
-        "text",
-    )
-    mentions = lk.extract_mentions(mention_src)
-    dictionary = lk.synthesize_entity_dictionary(spark, sf_dir, max_entities=2000)
-    links = lk.link_entities(mentions, dictionary, strategy="salted", n_salts=8)
-    return links.select(
-        "subj",
-        "surface",
-        "entity_id",
-        F.col("tf").cast("long").alias("tf"),
-        F.col("first_pos").cast("long").alias("first_pos"),
-        F.round("prior", 6).alias("prior_r"),
-        F.round("score", 6).alias("score_r"),
-    )
+    return _doc_links(spark, sf_dir, strategy="salted", n_salts=8)
 
 
 # Full-pipeline per-predicate counts: extraction counts fall out of the
@@ -909,8 +1108,7 @@ def q_kg_dataset_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)
     base = transcript_triples_native(t).select(*TRIPLE_COLS)
-    v = "https://example.org/transcript#"
-    turn_pred = v + "turnIndex"
+    turn_pred = _V + "turnIndex"
     # try_cast: ANSI mode would throw casting IRI objects, and SQL AND
     # does not short-circuit
     right = base.filter(
@@ -923,7 +1121,7 @@ def q_kg_dataset_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.filter((F.col("pred") == turn_pred) & (F.col("obj") == "0"))
         .select(
             "graph", "subj",
-            F.lit(v + "extra").alias("pred"),
+            F.lit(_V + "extra").alias("pred"),
             F.lit("literal").alias("obj_kind"),
             F.lit("x").alias("obj"),
             F.lit("http://www.w3.org/2001/XMLSchema#string").alias("datatype"),
@@ -1116,8 +1314,6 @@ def q_kg_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     turn_idx) replayed in SQL, brute-force exact Jaccard >= 0.7 (band
     recall 1.0 at the injected pairs' ~0.9 Jaccard; same argument as
     dedup_minhash_lsh)."""
-    from json_ld_spark.sources.transcripts import transcripts_from_documents
-
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)
     conv_num = F.split(F.col("conv_id"), "-").getItem(1).cast("long")
@@ -1203,16 +1399,13 @@ def q_kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.graphops import random_walks
 
     _utc(spark)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    e = li.select(
-        F.concat(F.lit("p"), F.col("l_partkey")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
-    ).dropDuplicates()
+    e = _part_supplier_edges(spark, sf_dir)
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     starts = (
-        li.filter(F.col("l_partkey") % 50 == 0)
+        _read(spark, sf_dir, "lineitem")
+        .filter(F.col("l_partkey") % 50 == 0)
         .select(F.concat(F.lit("p"), F.col("l_partkey")).alias("node"))
         .dropDuplicates()
     )
@@ -1256,20 +1449,10 @@ def q_kg_lpg_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     (out_deg = conversation edge + optional nextTurn; n_props = 4 +
     optional tool)."""
     from json_ld_spark.operators.lpg import to_property_graph
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native, transcript_triples_native,
-    )
 
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)
-    quads = (
-        transcript_triples_native(t, with_doc_id=False)
-        .select(*TRIPLE_COLS)
-        .unionByName(
-            transcript_adjacency_native(t, with_doc_id=False).select(*TRIPLE_COLS)
-        )
-    )
-    nodes, edges, props = to_property_graph(quads)
+    nodes, edges, props = to_property_graph(_turn_graph(t))
     deg = edges.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("out_deg")
     )
@@ -1336,10 +1519,6 @@ def q_kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the round's single job. Oracle: the peel unrolled as CTE rounds."""
     _utc(spark)
     from json_ld_spark.operators.graphops import k_core
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native,
-        transcript_triples_native,
-    )
 
     t = transcripts_from_documents(spark, sf_dir)
     chain = transcript_adjacency_native(t, with_doc_id=False).select(
@@ -1347,26 +1526,36 @@ def q_kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     conv = (
         transcript_triples_native(t)
-        .filter(F.col("pred") == "https://example.org/transcript#conversation")
+        .filter(F.col("pred") == _V + "conversation")
         .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
     )
-    cop = (
-        _read(spark, sf_dir, "lineitem")
-        .select(
-            F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .dropDuplicates()
-    )
+    cop = _part_supplier_edges(spark, sf_dir)
     return k_core(chain.unionByName(conv).unionByName(cop), k=5)
 
 
-# kg_transe_rank: SQL replay of the filtered TransE ranking —
-# integer-lattice md5-bridge embeddings (list_transform), exact
-# integer L1 distances, the same better-all minus better-known
-# counting aggregations as kge.transe_rank. Ranks are integers, so
-# the oracle is value-exact with no float rounding.
-_TRANSE_RANK_SQL = _BASE_CTE + f"""
+def _kge_lattice(kind: str, term: str) -> str:
+    """Dimension ``i`` of the integer-lattice hash embedding of
+    ``term``: md5-bridge value mod 2001, centred on 0."""
+    return (
+        f"(('0x' || substr(md5('kge|{kind}|' || {term} || '|' || CAST(i AS VARCHAR)),"
+        "\n      1, 8))::BIGINT % 2001) - 1000"
+    )
+
+
+def _kge_rank_sql(kernel: str, test_mod: int) -> str:
+    """SQL replay of kge.transe_rank / kge.distmult_rank: the positives
+    (rdf:type, conversation and nextTurn edges of every turn), dim-16
+    lattice embeddings, a hash test split (mod ``test_mod``), exact
+    integer scores and the same better-all minus better-known counting
+    aggregations. TransE scores the L1 distance of E + R to the tail,
+    lower better; DistMult the dot product of E * R with it, higher
+    better. Ranks are integers, so the replay is value-exact."""
+    e, r = _kge_lattice("E", "subj"), _kge_lattice("R", "pred")
+    qvec, score, better = {
+        "transe": (f"{e}\n           + {r}", "abs(t.qvec[i] - e.v[i])", "<"),
+        "distmult": (f"({e})\n           * ({r})", "t.qvec[i] * e.v[i]", ">"),
+    }[kernel]
+    return _BASE_CTE + f"""
 , adjp AS (
   SELECT conv_id, turn_idx,
          LEAD(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nxt
@@ -1389,39 +1578,35 @@ _TRANSE_RANK_SQL = _BASE_CTE + f"""
   FROM (SELECT subj AS entity FROM pos UNION SELECT obj FROM pos)
 ), evec AS (
   SELECT entity, list_transform(range(0, 16), i ->
-    (('0x' || substr(md5('kge|E|' || entity || '|' || CAST(i AS VARCHAR)),
-      1, 8))::BIGINT % 2001) - 1000) AS v
+    {_kge_lattice("E", "entity")}) AS v
   FROM kents
 ), test AS (
   SELECT subj, pred, obj,
          list_transform(range(0, 16), i ->
-           (('0x' || substr(md5('kge|E|' || subj || '|' || CAST(i AS VARCHAR)),
-             1, 8))::BIGINT % 2001) - 1000
-           + (('0x' || substr(md5('kge|R|' || pred || '|' || CAST(i AS VARCHAR)),
-               1, 8))::BIGINT % 2001) - 1000) AS qvec
+           {qvec}) AS qvec
   FROM pos
   WHERE ('0x' || substr(md5('kge|test|' || subj || '|' || pred || '|' || obj),
-         1, 8))::BIGINT % 97 = 0
+         1, 8))::BIGINT % {test_mod} = 0
 ), td AS (
   SELECT t.subj, t.pred, t.obj, t.qvec,
          CAST(list_sum(list_transform(range(1, 17),
-              i -> abs(t.qvec[i] - e.v[i]))) AS BIGINT) AS true_d
+              i -> {score})) AS BIGINT) AS true_sc
   FROM test t JOIN evec e ON e.entity = t.obj
 ), scored AS (
-  SELECT td.subj, td.pred, td.obj, td.true_d, e.entity,
+  SELECT t.subj, t.pred, t.obj, t.true_sc, e.entity,
          CAST(list_sum(list_transform(range(1, 17),
-              i -> abs(td.qvec[i] - e.v[i]))) AS BIGINT) AS dd
-  FROM td CROSS JOIN evec e
+              i -> {score})) AS BIGINT) AS sc
+  FROM td t CROSS JOIN evec e
 ), ball AS (
   SELECT subj, pred, obj,
          CAST(SUM(CASE WHEN entity <> obj
-                        AND (dd < true_d OR (dd = true_d AND entity < obj))
+                        AND (sc {better} true_sc OR (sc = true_sc AND entity < obj))
                   THEN 1 ELSE 0 END) AS BIGINT) AS n_better
   FROM scored GROUP BY 1, 2, 3
 ), kb AS (
   SELECT s.subj, s.pred, s.obj,
-         CAST(SUM(CASE WHEN s.dd < s.true_d
-                        OR (s.dd = s.true_d AND s.entity < s.obj)
+         CAST(SUM(CASE WHEN s.sc {better} s.true_sc
+                        OR (s.sc = s.true_sc AND s.entity < s.obj)
                   THEN 1 ELSE 0 END) AS BIGINT) AS n_known
   FROM scored s JOIN pos p
     ON p.subj = s.subj AND p.pred = s.pred AND p.obj = s.entity
@@ -1432,6 +1617,9 @@ SELECT b.subj, b.pred, b.obj,
        CAST(1 + b.n_better - COALESCE(k.n_known, 0) AS BIGINT) AS rank
 FROM ball b LEFT JOIN kb k USING (subj, pred, obj)
 """
+
+
+_TRANSE_RANK_SQL = _kge_rank_sql("transe", 97)
 
 
 @query(oracle=_TRANSE_RANK_SQL)
@@ -1447,23 +1635,9 @@ def q_kg_transe_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     an anti-join on the cross product. Oracle: full SQL replay
     (list_transform embeddings + the same two counting aggregations)."""
     from json_ld_spark.operators.kge import transe_rank
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native,
-        transcript_triples_native,
-    )
 
     _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    edges = (
-        transcript_triples_native(t)
-        .filter(F.col("obj_kind") == "iri")
-        .select("subj", "pred", "obj")
-        .unionByName(
-            transcript_adjacency_native(t, with_doc_id=False)
-            .select("subj", "pred", "obj")
-        )
-    )
-    return transe_rank(edges, dim=16, test_mod=97)
+    return transe_rank(_kge_edges(spark, sf_dir), dim=16, test_mod=97)
 
 
 _NEGATIVE_SAMPLES_SQL = _BASE_CTE + f"""
@@ -1516,7 +1690,6 @@ def q_kg_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-task sort), corruptions that are true edges dropped by one
     anti-join. Oracle: full SQL replay through the md5 bridge +
     ROW_NUMBER dictionary + NOT EXISTS."""
-    from json_ld_spark.operators.native import transcript_adjacency_native
     from json_ld_spark.operators.sampling import negative_triples
 
     _utc(spark)
@@ -1524,23 +1697,6 @@ def q_kg_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = transcript_adjacency_native(t, with_doc_id=False)
     return negative_triples(
         adj, k=2, corrupt="both", seed="neg3", hash_fn="md5"
-    )
-
-
-def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Part co-purchase graph: undirected edge {u, v} when two parts
-    share an order (orders sampled by key % 5 to bound the oracle's
-    all-pairs replay; the Spark side scales to the full table — the
-    per-order fan-out is C(lines_per_order, 2), bounded by order size,
-    not corpus size)."""
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    return (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .dropDuplicates()
     )
 
 
@@ -1685,45 +1841,9 @@ def q_kg_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lpa_round(k: int) -> str:
-    return f"""
-, v{k} AS (
-  SELECT e.u, l.label, COUNT(*) AS n
-  FROM lpa_und e JOIN l{k - 1} l ON l.node = e.v
-  GROUP BY e.u, l.label
-), p{k} AS (
-  SELECT u AS node, label FROM (
-    SELECT u, label,
-           ROW_NUMBER() OVER (PARTITION BY u ORDER BY n DESC, label ASC) AS rk
-    FROM v{k}
-  ) WHERE rk = 1
-), l{k} AS (
-  SELECT * FROM lpa_sd
-  UNION ALL
-  SELECT p.node, p.label FROM p{k} p
-  WHERE NOT EXISTS (SELECT 1 FROM lpa_sd s WHERE s.node = p.node)
-)"""
-
-
-_LABEL_PROP_SQL = (
-    """
-WITH lpa_e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), lpa_und AS (
-  SELECT u, v FROM lpa_e UNION SELECT v AS u, u AS v FROM lpa_e
-), lpa_sd AS (
-  SELECT node, 'c' || CAST(node % 3 AS VARCHAR) AS label
-  FROM (SELECT DISTINCT u AS node FROM lpa_und)
-  WHERE node % 250 = 0
-), l0 AS (SELECT * FROM lpa_sd)"""
-    + _lpa_round(1) + _lpa_round(2)
-    + """
+_LABEL_PROP_SQL = _LPA_CTE + """
 SELECT node, label FROM l2
 """
-)
 
 
 @query(oracle=_LABEL_PROP_SQL)
@@ -1734,30 +1854,15 @@ def q_kg_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     spread types across the co-purchase graph — semi-supervised KG
     type inference. Oracle: both rounds unrolled as
     join→count→ROW_NUMBER-argmax CTEs."""
-    from json_ld_spark.operators.graphops import label_propagation
-
     _utc(spark)
-    e = _copurchase_edges(spark, sf_dir)
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .dropDuplicates()
-    )
-    seeds = nodes.filter(F.col("node") % 250 == 0).select(
-        "node",
-        F.concat(F.lit("c"), (F.col("node") % 3).cast("string")).alias("label"),
-    )
-    out = label_propagation(e, seeds, iters=2, src="u", dst="v")
+    _, out = _lpa_labels(spark, sf_dir)
     return out.select(F.col("node").cast("long").alias("node"), "label")
 
 
-_LINK_PREDICTION_SQL = r"""
-WITH ed0 AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), und AS (
+# the co-purchase graph (ed0), both orientations, degrees, and every
+# wedge-connected pair with its common-neighbour count and Adamic-Adar
+# sum: the link-prediction features and their AUC share it
+_WEDGE_PAIRS_CTE = "WITH ed0 AS (" + _COPURCHASE_SQL + """), und AS (
   SELECT u, v FROM ed0 UNION SELECT v AS u, u AS v FROM ed0
 ), deg AS (
   SELECT u, COUNT(*) AS deg FROM und GROUP BY u
@@ -1769,7 +1874,9 @@ WITH ed0 AS (
          SUM(1.0 / ln(d.deg)) AS aa
   FROM wed JOIN deg d ON d.u = wed.w
   GROUP BY a, b
-)
+)"""
+
+_LINK_PREDICTION_SQL = _WEDGE_PAIRS_CTE + """
 SELECT p.u, p.v, p.n_common,
        round(p.n_common / CAST(du.deg + dv.deg - p.n_common AS DOUBLE), 6)
          AS jaccard_r,
@@ -1805,29 +1912,12 @@ def q_kg_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tie-aware AUC as an integer rank statistic: the oracle's SUM OVER
 # (ORDER BY score) is exactly what ordered_cumsum computes without the
 # single-partition window on the Spark side
-_LINKPRED_AUC_SQL = r"""
-WITH ed0 AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), und AS (
-  SELECT u, v FROM ed0 UNION SELECT v AS u, u AS v FROM ed0
-), deg AS (
-  SELECT u, COUNT(*) AS deg FROM und GROUP BY u
-), wed AS (
-  SELECT l.v AS a, r.v AS b, l.u AS w
-  FROM und l JOIN und r ON l.u = r.u AND l.v < r.v
-), pairs AS (
-  SELECT a AS u, b AS v, CAST(COUNT(*) AS BIGINT) AS n_common,
-         round(SUM(1.0 / ln(d.deg)), 6) AS score
-  FROM wed JOIN deg d ON d.u = wed.w
-  GROUP BY a, b
-  HAVING COUNT(*) >= 2
-), lab AS (
-  SELECT p.score,
+_LINKPRED_AUC_SQL = _WEDGE_PAIRS_CTE + """
+, lab AS (
+  SELECT round(p.aa, 6) AS score,
          CASE WHEN e.u IS NULL THEN 0 ELSE 1 END AS pos
   FROM pairs p LEFT JOIN ed0 e ON e.u = p.u AND e.v = p.v
+  WHERE p.n_common >= 2
 ), per_score AS (
   SELECT score,
          CAST(SUM(pos) AS BIGINT) AS n_pos,
@@ -1897,13 +1987,7 @@ def q_kg_linkpred_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TRIANGLES_SQL = r"""
-WITH ed AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), tri AS (
+_TRIANGLES_SQL = "WITH ed AS (" + _COPURCHASE_SQL + """), tri AS (
   SELECT e1.u AS x, e1.v AS y, e2.v AS z
   FROM ed e1
   JOIN ed e2 ON e2.u = e1.v
@@ -1939,13 +2023,7 @@ def q_kg_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Depth-bounded reachability: the recursive UNION dedups (node, depth)
 # states, MIN(depth) = shortest distance within the bound — exactly the
 # BFS first-visit depth the Spark frontier loop records.
-_KHOP_SQL = r"""
-WITH RECURSIVE ed AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), sym AS (
+_KHOP_SQL = "WITH RECURSIVE ed AS (" + _COPURCHASE_SQL + """), sym AS (
   SELECT u, v FROM ed UNION SELECT v AS u, u AS v FROM ed
 ), seeds AS (
   SELECT p_partkey AS node FROM part WHERE p_partkey <= 5
@@ -1971,16 +2049,25 @@ def q_kg_khop_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).dropDuplicates()
-    seeds = (
-        _read(spark, sf_dir, "part")
-        .filter(F.col("p_partkey") <= 5)
-        .select(F.col("p_partkey").alias("node"))
-    )
+    seeds = _seed_parts(spark, sf_dir, F.col("p_partkey") <= 5)
     out = gops.k_hop(sym, seeds, k=3, src="u", dst="v")
     return out.select(
         F.col("node").cast("long").alias("part_id"),
         F.col("depth").cast("long").alias("depth"),
     )
+
+
+def _pr_spread(i: int) -> str:
+    """Round ``i`` of the PageRank and PPR replays over the ``e`` and
+    ``outdeg`` CTEs: the rank mass on dangling nodes (d{i}) and the rank
+    each node receives over its in-edges (i{i})."""
+    return f""",
+d{i} AS (SELECT COALESCE(SUM(r.rank), 0.0) AS dang
+         FROM r{i} r LEFT JOIN outdeg od ON r.node = od.u
+         WHERE od.u IS NULL),
+i{i} AS (SELECT e.v AS node, SUM(r.rank / od.outd) AS inflow
+         FROM r{i} r JOIN outdeg od ON r.node = od.u JOIN e ON e.u = od.u
+         GROUP BY e.v),"""
 
 
 def _pagerank_sql(iters: int = 5, damping: float = 0.85) -> str:
@@ -1992,11 +2079,7 @@ def _pagerank_sql(iters: int = 5, damping: float = 0.85) -> str:
     d = repr(damping)
     omd = repr(1.0 - damping)
     parts = [
-        r"""
-WITH e AS (
-  SELECT DISTINCT 's' || l_suppkey AS u, 'c' || o_custkey AS v
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-),
+        "WITH e AS (SELECT DISTINCT * FROM (" + _SUPPLIER_CUSTOMER_SQL + """)),
 nodes AS (SELECT u AS node FROM e UNION SELECT v AS node FROM e),
 outdeg AS (SELECT u, COUNT(*) AS outd FROM e GROUP BY u),
 nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
@@ -2004,13 +2087,8 @@ r0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS rank FROM nodes)"""
     ]
     for i in range(iters):
         parts.append(
-            f""",
-d{i} AS (SELECT COALESCE(SUM(r.rank), 0.0) AS dang
-         FROM r{i} r LEFT JOIN outdeg od ON r.node = od.u
-         WHERE od.u IS NULL),
-i{i} AS (SELECT e.v AS node, SUM(r.rank / od.outd) AS inflow
-         FROM r{i} r JOIN outdeg od ON r.node = od.u JOIN e ON e.u = od.u
-         GROUP BY e.v),
+            _pr_spread(i)
+            + f"""
 r{i + 1} AS (SELECT nodes.node,
             {omd} / (SELECT n FROM nn)
             + {d} * (COALESCE(i.inflow, 0.0)
@@ -2036,16 +2114,7 @@ def q_kg_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     constants inlined; ranks rounded to 6 dp on both sides (the only
     cross-engine divergence is summation order, ~1e-16)."""
     _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
-    e = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("dst"),
-        )
-        .dropDuplicates()
-    )
+    e = _supplier_customer_edges(spark, sf_dir).dropDuplicates()
     pr = gops.pagerank(e, iters=5, damping=0.85)
     return pr.select("node", F.round("rank", 6).alias("rank_r"))
 
@@ -2058,11 +2127,7 @@ def _ppr_sql(iters: int = 5, damping: float = 0.85) -> str:
     d = repr(damping)
     omd = repr(1.0 - damping)
     parts = [
-        r"""
-WITH e AS (
-  SELECT DISTINCT 's' || l_suppkey AS u, 'c' || o_custkey AS v
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-),
+        "WITH e AS (SELECT DISTINCT * FROM (" + _SUPPLIER_CUSTOMER_SQL + """)),
 sd AS (SELECT DISTINCT 's' || l_suppkey AS node FROM lineitem
        WHERE l_suppkey % 10 = 0),
 nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e
@@ -2077,13 +2142,8 @@ r0 AS (SELECT node, restart AS rank FROM rst)"""
     ]
     for i in range(iters):
         parts.append(
-            f""",
-d{i} AS (SELECT COALESCE(SUM(r.rank), 0.0) AS dang
-         FROM r{i} r LEFT JOIN outdeg od ON r.node = od.u
-         WHERE od.u IS NULL),
-i{i} AS (SELECT e.v AS node, SUM(r.rank / od.outd) AS inflow
-         FROM r{i} r JOIN outdeg od ON r.node = od.u JOIN e ON e.u = od.u
-         GROUP BY e.v),
+            _pr_spread(i)
+            + f"""
 r{i + 1} AS (SELECT rst.node,
             {omd} * rst.restart
             + {d} * (COALESCE(i.inflow, 0.0)
@@ -2106,18 +2166,10 @@ def q_kg_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds, not to all nodes). Oracle: the same 5 iterations unrolled
     as SQL CTEs over the seed restart vector, 6-dp rounded."""
     _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
-    e = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("dst"),
-        )
-        .dropDuplicates()
-    )
+    e = _supplier_customer_edges(spark, sf_dir).dropDuplicates()
     seeds = (
-        li.filter(F.col("l_suppkey") % 10 == 0)
+        _read(spark, sf_dir, "lineitem")
+        .filter(F.col("l_suppkey") % 10 == 0)
         .select(F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("node"))
         .dropDuplicates()
     )
@@ -2132,15 +2184,7 @@ def _ktruss_sql(k: int = 7, rounds: int = 4) -> str:
     MATERIALIZED everywhere — each level is referenced 4x and DuckDB
     would otherwise inline the chain exponentially (the _hits_sql
     lesson)."""
-    parts = [
-        r"""
-WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-)"""
-    ]
+    parts = ["WITH e0(a, b) AS MATERIALIZED (" + _COPURCHASE_SQL + ")"]
     for i in range(rounds):
         parts.append(
             f""",
@@ -2181,15 +2225,7 @@ def q_kg_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     its honest bounded-peel semantics). Oracle: the 4 rounds unrolled
     as MATERIALIZED CTEs (triangle enumeration + HAVING filter)."""
     _utc(spark)
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    ed = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .dropDuplicates()
-    )
+    ed = _copurchase_src_dst(spark, sf_dir)
     kt = gops.k_truss(ed, k=7, rounds=4)
     return kt.select(
         F.col("src").cast("long").alias("src"),
@@ -2198,23 +2234,23 @@ def q_kg_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# the symmetric co-purchase graph and the sampled BFS sources
+# (p_partkey % 199 = 3) of the betweenness and harmonic-closeness replays
+_SAMPLED_BFS_CTE = "WITH ed AS MATERIALIZED (" + _COPURCHASE_SQL + """), sym AS MATERIALIZED (
+  SELECT u, v FROM ed UNION SELECT v AS u, u AS v FROM ed
+), seeds AS MATERIALIZED (
+  SELECT p_partkey AS s FROM part WHERE p_partkey % 199 = 3
+)"""
+
+
 def _betweenness_sql(max_hops: int = 3) -> str:
     """Unrolled sampled-Brandes: forward sigma levels l0..lk (left-anti
     == NOT EXISTS against the cumulative assigned set), backward
     dependency levels dk..d0 mirroring sigma/sw * (1 + delta)
     association-for-association; 6-dp sum round."""
     parts = [
-        r"""
-WITH ed AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), sym AS MATERIALIZED (
-  SELECT u, v FROM ed UNION SELECT v AS u, u AS v FROM ed
-), seeds AS MATERIALIZED (
-  SELECT p_partkey AS s FROM part WHERE p_partkey % 199 = 3
-),
+        _SAMPLED_BFS_CTE
+        + """,
 l0 AS MATERIALIZED (SELECT s, s AS v, CAST(1 AS BIGINT) AS sigma FROM seeds),
 a0 AS MATERIALIZED (SELECT s, v FROM l0)"""
     ]
@@ -2274,20 +2310,8 @@ def q_kg_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the forward sigma levels and backward dependency levels unrolled
     as MATERIALIZED CTEs, 6-dp rounded."""
     _utc(spark)
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    ed = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .dropDuplicates()
-    )
-    seeds = (
-        _read(spark, sf_dir, "part")
-        .filter(F.col("p_partkey") % 199 == 3)
-        .select(F.col("p_partkey").alias("node"))
-    )
+    ed = _copurchase_src_dst(spark, sf_dir)
+    seeds = _seed_parts(spark, sf_dir, F.col("p_partkey") % 199 == 3)
     out = gops.betweenness_sampled(ed, seeds, max_hops=3)
     return out.select(F.col("node").cast("long").alias("node"), "betweenness_r")
 
@@ -2296,17 +2320,8 @@ def _harmonic_sql(max_hops: int = 3) -> str:
     """Unrolled sampled harmonic closeness: the _betweenness_sql
     forward levels without sigma; 1/d weights inlined via repr()."""
     parts = [
-        r"""
-WITH ed AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), sym AS MATERIALIZED (
-  SELECT u, v FROM ed UNION SELECT v AS u, u AS v FROM ed
-), seeds AS MATERIALIZED (
-  SELECT p_partkey AS s FROM part WHERE p_partkey % 199 = 3
-),
+        _SAMPLED_BFS_CTE
+        + """,
 l0 AS MATERIALIZED (SELECT s, s AS v FROM seeds),
 a0 AS MATERIALIZED (SELECT s, v FROM l0)"""
     ]
@@ -2343,20 +2358,8 @@ def q_kg_harmonic_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the forward BFS levels unrolled (the betweenness CTEs
     minus sigma) with literal 1/d weights."""
     _utc(spark)
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    ed = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .dropDuplicates()
-    )
-    seeds = (
-        _read(spark, sf_dir, "part")
-        .filter(F.col("p_partkey") % 199 == 3)
-        .select(F.col("p_partkey").alias("node"))
-    )
+    ed = _copurchase_src_dst(spark, sf_dir)
+    seeds = _seed_parts(spark, sf_dir, F.col("p_partkey") % 199 == 3)
     out = gops.harmonic_closeness_sampled(ed, seeds, max_hops=3)
     return out.select(F.col("node").cast("long").alias("node"), "harmonic_r")
 
@@ -2373,12 +2376,7 @@ def _hyperball_sql(max_t: int = 3, p: int = 6) -> str:
     m = 1 << p
     q = 32 - p
     num = repr(float(_alpha(m)) * float(m * m) * float(1 << 32))
-    parts = [f"""WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), e AS MATERIALIZED (
+    parts = ["WITH e0 AS MATERIALIZED (" + _COPURCHASE_SQL + f"""), e AS MATERIALIZED (
   SELECT u, v FROM e0 UNION SELECT v, u FROM e0
 ), r0 AS MATERIALIZED (
   SELECT node, hv // {1 << q} AS bucket,
@@ -2430,25 +2428,11 @@ def q_kg_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded. Oracle: registers + 3 merge rounds + per-node estimator
     unrolled in SQL (integer register math end-to-end)."""
     _utc(spark)
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    ed = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .dropDuplicates()
-    )
+    ed = _copurchase_src_dst(spark, sf_dir)
     return gops.hyperball(ed, max_t=3, p=6)
 
 
-_GRAPH_METRICS_SQL = r"""
-WITH e AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), deg AS MATERIALIZED (
+_GRAPH_METRICS_SQL = "WITH e(a, b) AS MATERIALIZED (" + _COPURCHASE_SQL + """), deg AS MATERIALIZED (
   SELECT n, COUNT(*) AS d FROM (
     SELECT a AS n FROM e UNION ALL SELECT b AS n FROM e) GROUP BY n
 ), tri AS MATERIALIZED (
@@ -2491,15 +2475,7 @@ def q_kg_graph_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     every statistic an exact integer sum until the final divisions.
     Oracle: the same integer aggregates in DuckDB, 6-dp rounded."""
     _utc(spark)
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    ed = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .dropDuplicates()
-    )
+    ed = _copurchase_src_dst(spark, sf_dir)
     return gops.graph_metrics(ed)
 
 
@@ -2511,12 +2487,9 @@ def _wpagerank_sql(iters: int = 5, damping: float = 0.85) -> str:
     d = repr(damping)
     omd = repr(1.0 - damping)
     parts = [
-        r"""
-WITH e AS MATERIALIZED (
-  SELECT 's' || l_suppkey AS u, 'c' || o_custkey AS v, COUNT(*) AS w
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-  GROUP BY 1, 2
-),
+        "WITH e AS MATERIALIZED (SELECT u, v, COUNT(*) AS w FROM ("
+        + _SUPPLIER_CUSTOMER_SQL
+        + """) GROUP BY u, v),
 nodes AS MATERIALIZED (SELECT u AS node FROM e UNION SELECT v AS node FROM e),
 wdeg AS MATERIALIZED (SELECT u, SUM(w) AS wd FROM e GROUP BY u),
 frac AS MATERIALIZED (
@@ -2556,14 +2529,9 @@ def q_kg_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     path runs every iteration. Oracle: the 5 iterations unrolled with
     a w/wdeg fraction table (integer weights -> exact ratios; 6-dp)."""
     _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
     e = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy(
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("dst"),
-        )
+        _supplier_customer_edges(spark, sf_dir)
+        .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
     pr = gops.weighted_pagerank(e, iters=5, damping=0.85)
@@ -2580,10 +2548,7 @@ def _hits_sql(iters: int = 4) -> str:
     un-hinted, the 4-level unroll expands to 4^4 parquet re-scans and
     dies on file descriptors."""
     parts = [
-        r"""
-WITH e AS MATERIALIZED (
-  SELECT DISTINCT 's' || l_suppkey AS u, 'c' || o_custkey AS v
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+        "WITH e AS MATERIALIZED (SELECT * FROM (" + _SUPPLIER_CUSTOMER_SQL + """)
   UNION
   SELECT DISTINCT 'c' || c_custkey AS u, 'n' || c_nationkey AS v FROM customer
 ),
@@ -2630,14 +2595,8 @@ def q_kg_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled as SQL CTEs; 6-dp round absorbs SUM-order drift (the
     pagerank recipe)."""
     _utc(spark)
-    li = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
-    c = _read(spark, sf_dir, "customer")
-    sc_e = li.join(o, li["l_orderkey"] == o["o_orderkey"]).select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("dst"),
-    )
-    cn_e = c.select(
+    sc_e = _supplier_customer_edges(spark, sf_dir)
+    cn_e = _read(spark, sf_dir, "customer").select(
         F.concat(F.lit("c"), F.col("c_custkey").cast("string")).alias("src"),
         F.concat(F.lit("n"), F.col("c_nationkey").cast("string")).alias("dst"),
     )
@@ -2652,13 +2611,7 @@ def q_kg_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Hop-bounded Bellman-Ford == depth-bounded recursive relaxation: the
 # recursive UNION dedups (node, dist, hops) states; MIN(dist) per node
 # over <= 3-edge paths is exactly what 3 frontier rounds compute.
-_WPATHS_SQL = r"""
-WITH RECURSIVE ed AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), sym AS (
+_WPATHS_SQL = "WITH RECURSIVE ed AS (" + _COPURCHASE_SQL + """), sym AS (
   SELECT u, v FROM ed UNION SELECT v AS u, u AS v FROM ed
 ), wed AS (
   SELECT u, v, 1 + (u + v) % 5 AS w FROM sym
@@ -2686,26 +2639,14 @@ def q_kg_weighted_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     improved-count probe is each round's single job. Oracle: DuckDB
     recursive CTE with a hop counter, MIN(dist) per node."""
     _utc(spark)
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    ed = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .dropDuplicates()
-    )
+    ed = _copurchase_edges(spark, sf_dir)
     sym = ed.unionByName(ed.select(F.col("v").alias("u"), F.col("u").alias("v")))
     wed = sym.select(
         F.col("u").alias("src"),
         F.col("v").alias("dst"),
         (F.lit(1) + (F.col("u") + F.col("v")) % 5).alias("w"),
     )
-    seeds = (
-        _read(spark, sf_dir, "part")
-        .filter(F.col("p_partkey") <= 5)
-        .select(F.col("p_partkey").alias("node"))
-    )
+    seeds = _seed_parts(spark, sf_dir, F.col("p_partkey") <= 5)
     sp = gops.shortest_paths(wed, seeds, max_hops=3)
     return sp.select(F.col("node").cast("long").alias("node"), "dist")
 
@@ -2725,8 +2666,6 @@ def q_kg_bgp_optional_tool(spark: SparkSession, sf_dir: str) -> DataFrame:
     assistant turn with its index, plus its tool IF a tool triple
     exists (tool is emitted only for doc_id % 7 == 3 turns, so the
     NULL and bound arms are both populated). Oracle: LEFT JOIN."""
-    from json_ld_spark.operators.bgp import bgp_query
-
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)
     triples = transcript_triples_native(t)
@@ -2795,8 +2734,6 @@ def q_kg_turn_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     '(conv_id, turn_idx) ordering' materialized into the KG): one
     conv-partitioned lead() window, whole-stage codegen, no Python.
     Oracle: the same LEAD window in DuckDB."""
-    from json_ld_spark.operators.native import transcript_adjacency_native
-
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)
     return transcript_adjacency_native(t, with_doc_id=False).select(*TRIPLE_COLS)
@@ -2833,7 +2770,6 @@ def q_kg_turn_chain_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     traversal as a graph query. Oracle: bounded recursive CTE over the
     SQL-replayed adjacency edges."""
     from json_ld_spark.operators.graphops import k_hop
-    from json_ld_spark.operators.native import transcript_adjacency_native
 
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)
@@ -2870,8 +2806,6 @@ def q_kg_bgp_values_minus(spark: SparkSession, sf_dir: str) -> DataFrame:
     turn that carries a tool triple (null-unsafe LEFT ANTI join on the
     shared variable). Oracle: IN-list filter + tool IS NULL over the
     replayed transcript table."""
-    from json_ld_spark.operators.bgp import bgp_query
-
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)
     triples = transcript_triples_native(t)
@@ -2912,24 +2846,11 @@ def q_kg_construct_responds(spark: SparkSession, sf_dir: str) -> DataFrame:
     (subj, pred, obj) triple table ready to union into the KG. Oracle:
     the consecutive-turn self-join with role predicates in SQL."""
     from json_ld_spark.operators.bgp import bgp_construct
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native,
-        transcript_triples_native,
-    )
 
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)
-    allt = (
-        transcript_triples_native(t, with_doc_id=False)
-        .select("subj", "pred", "obj")
-        .unionByName(
-            transcript_adjacency_native(t, with_doc_id=False).select(
-                "subj", "pred", "obj"
-            )
-        )
-    )
     out = bgp_construct(
-        allt,
+        _turn_graph(t, ["subj", "pred", "obj"]),
         [
             ("?u", _V + "role", "user"),
             ("?u", _V + "nextTurn", "?a"),
@@ -2961,7 +2882,6 @@ def q_kg_path_turn_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     every ordered (earlier, later) turn pair within a conversation —
     which is the closed-form SQL oracle (the Spark side still runs the
     real fixpoint loop; the analytic form just makes it value-exact)."""
-    from json_ld_spark.operators.native import transcript_adjacency_native
     from json_ld_spark.operators.paths import path_pairs
 
     _utc(spark)
@@ -2998,23 +2918,12 @@ def q_kg_path_next_speaker(spark: SparkSession, sf_dir: str) -> DataFrame:
     declarative plan (every atomic step is a pushed pred-filter scan).
     Oracle: the same relation as plain SQL joins over the replayed
     transcript table."""
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native,
-        transcript_triples_native,
-    )
     from json_ld_spark.operators.paths import path_pairs
 
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)
-    triples = transcript_triples_native(t, with_doc_id=False).select(
-        "subj", "pred", "obj"
-    )
-    adj = transcript_adjacency_native(t, with_doc_id=False).select(
-        "subj", "pred", "obj"
-    )
-    allt = triples.unionByName(adj)
     out = path_pairs(
-        allt,
+        _turn_graph(t, ["subj", "pred", "obj"]),
         f"^<{_V}conversation>/<{_V}nextTurn>/(<{_V}role>|<{_V}tool>)",
     )
     return out.select("s", "o")
@@ -3036,20 +2945,9 @@ def q_kg_bgp_assistant_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     index — three patterns folded into two subj-keyed equi-joins, most
     selective scan first. Oracle: the same conjunction as SQL
     self-joins on the replayed triple table."""
-    from json_ld_spark.operators.bgp import bgp_query
-
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)
-    triples = transcript_triples_native(t)
-    out = bgp_query(
-        triples,
-        [
-            ("?turn", _V + "role", "assistant"),
-            ("?turn", _V + "conversation", "?conv"),
-            ("?turn", _V + "turnIndex", "?idx"),
-        ],
-    )
-    return out.select("turn", "conv", "idx")
+    return _assistant_turns(transcript_triples_native(t))
 
 
 @query(oracle=_BGP_ASSISTANT_SQL)
@@ -3062,27 +2960,8 @@ def q_kg_bucketed_bgp(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-side complement to kg_bucketed_node_table's aggregation
     evidence (PLANS.md §25). Oracle: identical to
     kg_bgp_assistant_turns."""
-    import re as _re
-
-    from json_ld_spark.operators.bgp import bgp_query
-    from json_ld_spark.plans.kg import materialize_kg
-
     _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    tag = _re.sub(r"[^A-Za-z0-9]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    out_dir = f"/tmp/json_ld_spark_bucketed/{tag}"
-    table = f"kg_triples_bucketed_{tag}"
-    materialize_kg(t, out_dir, n_buckets=16, bucketed_table=table)
-    triples = spark.table(table)
-    out = bgp_query(
-        triples,
-        [
-            ("?turn", _V + "role", "assistant"),
-            ("?turn", _V + "conversation", "?conv"),
-            ("?turn", _V + "turnIndex", "?idx"),
-        ],
-    )
-    return out.select("turn", "conv", "idx")
+    return _assistant_turns(_bucketed_triples(spark, sf_dir))
 
 
 _BGP_PAIRS_SQL = _TRIPLES_CTE + f"""
@@ -3101,8 +2980,6 @@ def q_kg_bgp_dialogue_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BGP with a cross-subject variable join (the join-on-object case
     that makes BGPs non-trivial): user turn and assistant turn bound to
     the SAME conversation variable."""
-    from json_ld_spark.operators.bgp import bgp_query
-
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)
     triples = transcript_triples_native(t)
@@ -3273,12 +3150,7 @@ def q_kg_sparql_path(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)
-    tri3 = (
-        transcript_triples_native(t.filter(F.col("turn_idx") < 4))
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-    )
-    return sparql(tri3, """
+    return sparql(_spo(t.filter(F.col("turn_idx") < 4)), """
         PREFIX t: <https://example.org/transcript#>
         SELECT ?a ?b
         WHERE { ?a t:conversation/^t:conversation ?b FILTER (?a < ?b) }
@@ -3313,12 +3185,7 @@ def q_kg_sparql_negated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)
-    tri3 = (
-        transcript_triples_native(t.filter(F.col("turn_idx") < 4))
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-    )
-    return sparql(tri3, """
+    return sparql(_spo(t.filter(F.col("turn_idx") < 4)), """
         PREFIX t: <https://example.org/transcript#>
         SELECT ?a ?b ?conv
         WHERE {
@@ -3350,18 +3217,9 @@ def q_kg_sparql_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.sparql import sparql
 
     _utc(spark)
-    v = "https://example.org/transcript#"
     t = transcripts_from_documents(spark, sf_dir)
-    quads = (
-        transcript_triples_native(t)
-        .select(
-            F.regexp_extract(F.col("subj"), r"^(.*)/turn/", 1).alias("graph"),
-            "subj", "pred", "obj",
-        )
-        .dropDuplicates()
-    )
-    return sparql(quads, f"""
-        PREFIX t: <{v}>
+    return sparql(_conv_graphs(transcript_triples_native(t)), f"""
+        PREFIX t: <{_V}>
         SELECT ?g (COUNT(*) AS ?n)
         WHERE {{ GRAPH ?g {{ ?turn t:role "assistant" }} }}
         GROUP BY ?g HAVING (COUNT(*) >= 3) ORDER BY DESC(?n) ?g LIMIT 40
@@ -3383,14 +3241,8 @@ def q_kg_bgp_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.bgp import bgp_describe
 
     _utc(spark)
-    v = "https://example.org/transcript#"
-    t = transcripts_from_documents(spark, sf_dir)
-    tri3 = (
-        transcript_triples_native(t)
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-    )
-    return bgp_describe(tri3, [("?t", v + "tool", "search")], "?t")
+    tri3 = _spo(transcripts_from_documents(spark, sf_dir))
+    return bgp_describe(tri3, [("?t", _V + "tool", "search")], "?t")
 
 
 _BGP_ASK_SQL = _TRIPLES_CTE + f"""
@@ -3409,15 +3261,9 @@ def q_kg_bgp_ask(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.bgp import bgp_ask
 
     _utc(spark)
-    v = "https://example.org/transcript#"
-    t = transcripts_from_documents(spark, sf_dir)
-    tri3 = (
-        transcript_triples_native(t)
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-    )
-    a1 = bgp_ask(tri3, [("?t", v + "tool", "search")])
-    a2 = bgp_ask(tri3, [("?t", v + "tool", "browser")])
+    tri3 = _spo(transcripts_from_documents(spark, sf_dir))
+    a1 = bgp_ask(tri3, [("?t", _V + "tool", "search")])
+    a2 = bgp_ask(tri3, [("?t", _V + "tool", "browser")])
     return spark.createDataFrame(
         [(a1, a2)], "ask_search boolean, ask_browser boolean"
     )
@@ -3444,12 +3290,7 @@ def q_kg_sparql_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.sparql import sparql
 
     _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    tri3 = (
-        transcript_triples_native(t)
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-    )
+    tri3 = _spo(transcripts_from_documents(spark, sf_dir))
     return sparql(tri3, """
         PREFIX t: <https://example.org/transcript#>
         SELECT ?conv (COUNT(*) AS ?n)
@@ -3479,22 +3320,13 @@ def q_kg_sparql_graph_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     term)-encoded so the one distributed closure cannot cross graphs
     (bgp._graph_path_scan). Oracle: each conversation is a chain, so
     the within-graph closure has n·(n-1)/2 pairs."""
-    from json_ld_spark.operators.native import transcript_adjacency_native
     from json_ld_spark.sparql import sparql
 
     _utc(spark)
-    v = "https://example.org/transcript#"
     t = transcripts_from_documents(spark, sf_dir)
-    quads = (
-        transcript_adjacency_native(t, with_doc_id=False)
-        .select(
-            F.regexp_extract(F.col("subj"), r"^(.*)/turn/", 1).alias("graph"),
-            "subj", "pred", "obj",
-        )
-        .dropDuplicates()
-    )
-    return sparql(quads, f"""
-        PREFIX t: <{v}>
+    adj = transcript_adjacency_native(t, with_doc_id=False)
+    return sparql(_conv_graphs(adj), f"""
+        PREFIX t: <{_V}>
         SELECT ?g (COUNT(*) AS ?n_pairs)
         WHERE {{ GRAPH ?g {{ ?a t:nextTurn+ ?b }} }}
         GROUP BY ?g ORDER BY ?g
@@ -3522,21 +3354,13 @@ def q_kg_sparql_named(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.sparql import sparql
 
     _utc(spark)
-    v = "https://example.org/transcript#"
     t = transcripts_from_documents(spark, sf_dir)
-    quads = (
-        transcript_triples_native(t)
-        .select(
-            F.regexp_extract(F.col("subj"), r"^(.*)/turn/", 1).alias("graph"),
-            "subj", "pred", "obj",
-        )
-        .dropDuplicates()
-    )
+    quads = _conv_graphs(transcript_triples_native(t))
     named = "\n".join(
         f"FROM NAMED <https://example.org/conv/conv-{i}>" for i in range(12)
     )
     return sparql(quads, f"""
-        PREFIX t: <{v}>
+        PREFIX t: <{_V}>
         SELECT ?g (COUNT(*) AS ?n)
         {named}
         WHERE {{ GRAPH ?g {{ ?turn t:role "assistant" }} }}
@@ -3572,22 +3396,16 @@ def q_kg_sparql_analyst(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-partial hash agg. Oracle: on a per-conversation chain the
     nextTurn+ closure from turn 0 is analytic — all turns with index
     >= 1."""
-    from json_ld_spark.operators.native import transcript_adjacency_native
     from json_ld_spark.sparql import sparql
 
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)
-    tri = (
-        transcript_triples_native(t)
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-    )
     adj = (
         transcript_adjacency_native(t, with_doc_id=False)
         .select("subj", "pred", "obj")
         .dropDuplicates()
     )
-    return sparql(tri.unionByName(adj), """
+    return sparql(_spo(t).unionByName(adj), """
         PREFIX t: <https://example.org/transcript#>
         SELECT ?conv (COUNT(?later) AS ?n_reachable) (COUNT(?tool) AS ?n_tooled)
         WHERE {
@@ -3714,19 +3532,10 @@ def q_kg_schema_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     endpoint-type joins + one count agg; the oracle is analytic on
     the synthesis (every turn has one conversation edge; every
     non-final turn one nextTurn edge)."""
-    from json_ld_spark.operators.native import transcript_adjacency_native
     from json_ld_spark.operators.profile import schema_summary
 
     _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    quads = (
-        transcript_triples_native(t, with_doc_id=False)
-        .select(*TRIPLE_COLS)
-        .unionByName(
-            transcript_adjacency_native(t, with_doc_id=False).select(*TRIPLE_COLS)
-        )
-    )
-    out = schema_summary(quads)
+    out = schema_summary(_turn_graph(transcripts_from_documents(spark, sf_dir)))
     return out.select(
         "src_type", "pred", "dst_type",
         F.col("n_edges").cast("long").alias("n_edges"),
@@ -3833,22 +3642,11 @@ def q_kg_topic_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Context-scored sense disambiguation: co-occurrence signatures + list
 # intersection, all integer counts/ranks (no float parity risk)
-_DISAMBIGUATE_SQL = """
-WITH words AS (
-  SELECT DISTINCT doc_id, word FROM (
-    SELECT doc_id,
-           unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS word
-    FROM documents)
-  WHERE length(word) >= 3
-), freq AS (
-  SELECT word, COUNT(*) AS n FROM words GROUP BY word
-), hot AS (
-  SELECT word AS surface FROM freq ORDER BY n DESC, word LIMIT 50
-), present AS (
-  SELECT w.doc_id, h.surface FROM words w JOIN hot h ON w.word = h.surface
+_DISAMBIGUATE_SQL = "WITH " + _HOT_CTE + """, present AS (
+  SELECT w.doc_id, h.surface FROM dwords w JOIN hot h ON w.word = h.surface
 ), cooc AS (
   SELECT p.surface, CAST(p.doc_id % 2 AS INT) AS sense, w.word, COUNT(*) AS c
-  FROM present p JOIN words w ON p.doc_id = w.doc_id
+  FROM present p JOIN dwords w ON p.doc_id = w.doc_id
   WHERE w.word <> p.surface
   GROUP BY 1, 2, 3
 ), sig AS (
@@ -3860,10 +3658,10 @@ WITH words AS (
   WHERE r <= 5
   GROUP BY surface, sense
 ), docsets AS (
-  SELECT doc_id, list_sort(list(word)) AS doc_words FROM words GROUP BY doc_id
+  SELECT doc_id, list_sort(list(word)) AS doc_words FROM dwords GROUP BY doc_id
 ), m AS (
   SELECT w.doc_id, s.surface
-  FROM words w JOIN (SELECT DISTINCT surface FROM sig) s ON w.word = s.surface
+  FROM dwords w JOIN (SELECT DISTINCT surface FROM sig) s ON w.word = s.surface
 ), cand AS (
   SELECT m.doc_id, m.surface, sig.sense,
          CAST(len(list_intersect(d.doc_words, sig.signature)) AS INT) AS score
@@ -3899,22 +3697,11 @@ def q_kg_disambiguate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Coreference-lite pronoun antecedents: injection + dictionary join +
 # conv-windows replayed exactly
-_PRONOUN_LINKS_SQL = _BASE_CTE + """
-, t2 AS (
+_PRONOUN_LINKS_SQL = _BASE_CTE + ", " + _HOT_CTE + """, t2 AS (
   SELECT conv_id, turn_idx,
          text || CASE WHEN turn_idx % 3 = 0 THEN ' and it worked'
                       ELSE '' END AS text
   FROM base
-), dwords AS (
-  SELECT DISTINCT doc_id, word FROM (
-    SELECT doc_id,
-           unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS word
-    FROM documents)
-  WHERE length(word) >= 3
-), hot AS (
-  SELECT word AS surface FROM (
-    SELECT word, COUNT(*) AS n FROM dwords GROUP BY word)
-  ORDER BY n DESC, word LIMIT 50
 ), toks AS (
   SELECT conv_id, turn_idx,
          string_split_regex(lower(text), '[^a-z0-9]+') AS l
@@ -3963,15 +3750,6 @@ def q_kg_pronoun_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically (turn_idx % 3) so the corpus contains matches;
     the oracle replays injection, dictionary, and windows."""
     _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    words = lk._doc_words(docs)
-    hot = (
-        words.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "word")
-        .limit(50)
-        .select(F.col("word").alias("surface"))
-    )
     t = transcripts_from_documents(spark, sf_dir).withColumn(
         "text",
         F.concat(
@@ -3981,19 +3759,13 @@ def q_kg_pronoun_links(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     )
-    return lk.pronoun_links(t, hot)
+    return lk.pronoun_links(t, _hot_surfaces(spark, sf_dir))
 
 
 # shared copurchase-graph CTE prefix for the WL / neighbor-sample
 # oracles: the same sampled co-purchase edge set as _LCC_SQL, plus the
 # symmetrized (both-orientations) view graphops._symmetrize produces
-_COPURCHASE_SYM_CTE = r"""
-WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), e AS MATERIALIZED (
+_COPURCHASE_SYM_CTE = "WITH e0(a, b) AS MATERIALIZED (" + _COPURCHASE_SQL + """), e AS MATERIALIZED (
   SELECT a AS u, b AS v FROM e0 UNION ALL SELECT b, a FROM e0
 )
 """
@@ -4027,9 +3799,7 @@ def q_kg_square_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer math; the oracle replays the capped wedge join."""
     _utc(spark)
     return gops.square_count(
-        _copurchase_edges(spark, sf_dir).select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        ),
+        _copurchase_src_dst(spark, sf_dir),
         max_degree=64,
     )
 
@@ -4070,26 +3840,13 @@ def q_kg_degree_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (length(bin(d))) and the Hill micro-sum."""
     _utc(spark)
     return gops.degree_distribution(
-        _copurchase_edges(spark, sf_dir).select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        ),
+        _copurchase_src_dst(spark, sf_dir),
         tail_min_degree=4,
     )
 
 
 # per-entity KB rollup: dictionary join + profile agg + co-mention argmax
-_ENTITY_PROFILES_SQL = _BASE_CTE + """
-, dwords AS (
-  SELECT DISTINCT doc_id, word FROM (
-    SELECT doc_id,
-           unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS word
-    FROM documents)
-  WHERE length(word) >= 3
-), hot AS (
-  SELECT word AS surface FROM (
-    SELECT word, COUNT(*) AS n FROM dwords GROUP BY word)
-  ORDER BY n DESC, word LIMIT 50
-), ment AS (
+_ENTITY_PROFILES_SQL = _BASE_CTE + ", " + _HOT_CTE + """, ment AS (
   SELECT t.word AS surface, t.conv_id, t.turn_idx, t.ts_lex,
          t.conv_id || '#' || CAST(t.turn_idx AS VARCHAR) AS turn_key
   FROM (
@@ -4140,17 +3897,8 @@ def q_kg_entity_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the dictionary, the aggregation, and the co-mention
     window over the transcript synthesis."""
     _utc(spark)
-    docs = _read(spark, sf_dir, "documents")
-    words = lk._doc_words(docs)
-    hot = (
-        words.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "word")
-        .limit(50)
-        .select(F.col("word").alias("surface"))
-    )
     t = transcripts_from_documents(spark, sf_dir)
-    return lk.entity_profiles(t, hot)
+    return lk.entity_profiles(t, _hot_surfaces(spark, sf_dir))
 
 
 # integer-MMR exemplar selection: 3 unrolled greedy rounds
@@ -4248,75 +3996,7 @@ def q_kg_mmr_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mmr_select_turns(t, k=3)
 
 
-# kg_distmult_rank: the multiplicative-kernel twin of the TransE
-# replay — qvec_i = E_i·R_i, score = Σ qvec_i·t_i, HIGHER better,
-# same integer lattice, same filtered counting aggregations.
-_DISTMULT_RANK_SQL = _BASE_CTE + f"""
-, adjp AS (
-  SELECT conv_id, turn_idx,
-         LEAD(turn_idx) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nxt
-  FROM base
-), pos AS (
-  SELECT DISTINCT subj, pred, obj FROM (
-    SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR) AS subj,
-           '{_RDF_TYPE}' AS pred, '{_V}Turn' AS obj FROM base
-    UNION ALL
-    SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR),
-           '{_V}conversation', '{_CB}' || conv_id FROM base
-    UNION ALL
-    SELECT '{_CB}' || conv_id || '/turn/' || CAST(turn_idx AS VARCHAR),
-           '{_V}nextTurn',
-           '{_CB}' || conv_id || '/turn/' || CAST(nxt AS VARCHAR)
-    FROM adjp WHERE nxt IS NOT NULL
-  )
-), kents AS (
-  SELECT DISTINCT entity
-  FROM (SELECT subj AS entity FROM pos UNION SELECT obj FROM pos)
-), evec AS (
-  SELECT entity, list_transform(range(0, 16), i ->
-    (('0x' || substr(md5('kge|E|' || entity || '|' || CAST(i AS VARCHAR)),
-      1, 8))::BIGINT % 2001) - 1000) AS v
-  FROM kents
-), test AS (
-  SELECT subj, pred, obj,
-         list_transform(range(0, 16), i ->
-           ((('0x' || substr(md5('kge|E|' || subj || '|' || CAST(i AS VARCHAR)),
-             1, 8))::BIGINT % 2001) - 1000)
-           * ((('0x' || substr(md5('kge|R|' || pred || '|' || CAST(i AS VARCHAR)),
-               1, 8))::BIGINT % 2001) - 1000)) AS qvec
-  FROM pos
-  WHERE ('0x' || substr(md5('kge|test|' || subj || '|' || pred || '|' || obj),
-         1, 8))::BIGINT % 97 = 0
-), td AS (
-  SELECT t.subj, t.pred, t.obj, t.qvec,
-         CAST(list_sum(list_transform(range(1, 17),
-              i -> t.qvec[i] * e.v[i])) AS BIGINT) AS true_s
-  FROM test t JOIN evec e ON e.entity = t.obj
-), scored AS (
-  SELECT td.subj, td.pred, td.obj, td.true_s, e.entity,
-         CAST(list_sum(list_transform(range(1, 17),
-              i -> td.qvec[i] * e.v[i])) AS BIGINT) AS ss
-  FROM td CROSS JOIN evec e
-), ball AS (
-  SELECT subj, pred, obj,
-         CAST(SUM(CASE WHEN entity <> obj
-                        AND (ss > true_s OR (ss = true_s AND entity < obj))
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_better
-  FROM scored GROUP BY 1, 2, 3
-), kb AS (
-  SELECT s.subj, s.pred, s.obj,
-         CAST(SUM(CASE WHEN s.ss > s.true_s
-                        OR (s.ss = s.true_s AND s.entity < s.obj)
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_known
-  FROM scored s JOIN pos p
-    ON p.subj = s.subj AND p.pred = s.pred AND p.obj = s.entity
-  WHERE s.entity <> s.obj
-  GROUP BY 1, 2, 3
-)
-SELECT b.subj, b.pred, b.obj,
-       CAST(1 + b.n_better - COALESCE(k.n_known, 0) AS BIGINT) AS rank
-FROM ball b LEFT JOIN kb k USING (subj, pred, obj)
-"""
+_DISTMULT_RANK_SQL = _kge_rank_sql("distmult", 97)
 
 
 @query(oracle=_DISTMULT_RANK_SQL)
@@ -4329,42 +4009,21 @@ def q_kg_distmult_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join filtered correction. Oracle: full SQL replay with the
     product kernel."""
     from json_ld_spark.operators.kge import distmult_rank
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native,
-        transcript_triples_native,
-    )
 
     _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    edges = (
-        transcript_triples_native(t)
-        .filter(F.col("obj_kind") == "iri")
-        .select("subj", "pred", "obj")
-        .unionByName(
-            transcript_adjacency_native(t, with_doc_id=False)
-            .select("subj", "pred", "obj")
-        )
-    )
-    return distmult_rank(edges, dim=16, test_mod=97)
+    return distmult_rank(_kge_edges(spark, sf_dir), dim=16, test_mod=97)
 
 
 # kg_kge_compare: both rank replays wrapped in the scoreboard agg
-_KGE_COMPARE_SQL = (
-    """
-SELECT 'transe' AS model, CAST(COUNT(*) AS BIGINT) AS n_test,
-       round(AVG(1.0 / CAST(rank AS DOUBLE)), 6) AS mrr_r,
+_KGE_COMPARE_SQL = "UNION ALL".join(
+    f"""
+SELECT '{model}' AS model, CAST(COUNT(*) AS BIGINT) AS n_test,
+       {_MRR_SQL} AS mrr_r,
        round(AVG(CASE WHEN rank <= 1 THEN 1.0 ELSE 0.0 END), 6) AS hits1_r,
        round(AVG(CASE WHEN rank <= 10 THEN 1.0 ELSE 0.0 END), 6) AS hits10_r
-FROM (__TRANSE__) t
-UNION ALL
-SELECT 'distmult', CAST(COUNT(*) AS BIGINT),
-       round(AVG(1.0 / CAST(rank AS DOUBLE)), 6),
-       round(AVG(CASE WHEN rank <= 1 THEN 1.0 ELSE 0.0 END), 6),
-       round(AVG(CASE WHEN rank <= 10 THEN 1.0 ELSE 0.0 END), 6)
-FROM (__DISTMULT__) d
+FROM ({_kge_rank_sql(model, 97)}) r
 """
-    .replace("__TRANSE__", _TRANSE_RANK_SQL)
-    .replace("__DISTMULT__", _DISTMULT_RANK_SQL)
+    for model in ("transe", "distmult")
 )
 
 
@@ -4373,34 +4032,19 @@ def q_kg_kge_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KGE model scoreboard: MRR / Hits@{1,10} for TransE AND DistMult
     on the IDENTICAL deterministic test split — the side-by-side
     leaderboard an embedding team reads before picking a kernel. One
-    aggregation over each rank table (ranks are exact integers; MRR is
-    a rounded sum of exact reciprocals). Oracle wraps both rank
-    replays in the same aggregation."""
+    aggregation over each rank table (ranks are exact integers; MRR
+    sums integer micros, so it is exact before its one rounding).
+    Oracle wraps both rank replays in the same aggregation."""
     from json_ld_spark.operators.kge import distmult_rank, transe_rank
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native,
-        transcript_triples_native,
-    )
 
     _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    edges = (
-        transcript_triples_native(t)
-        .filter(F.col("obj_kind") == "iri")
-        .select("subj", "pred", "obj")
-        .unionByName(
-            transcript_adjacency_native(t, with_doc_id=False)
-            .select("subj", "pred", "obj")
-        )
-    )
+    edges = _kge_edges(spark, sf_dir)
 
     def metrics(ranks: DataFrame, model: str) -> DataFrame:
         return ranks.agg(
             F.lit(model).alias("model"),
             F.count(F.lit(1)).cast("long").alias("n_test"),
-            F.round(F.avg(F.lit(1.0) / F.col("rank").cast("double")), 6).alias(
-                "mrr_r"
-            ),
+            _mrr_r().alias("mrr_r"),
             F.round(F.avg((F.col("rank") <= 1).cast("double")), 6).alias(
                 "hits1_r"
             ),
@@ -4418,21 +4062,7 @@ def q_kg_kge_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-community algebra; every intermediate is an exact long and the
 # single double expression mirrors the Spark column order exactly
 _MODULARITY_SQL = (
-    """
-WITH lpa_e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), lpa_und AS (
-  SELECT u, v FROM lpa_e UNION SELECT v AS u, u AS v FROM lpa_e
-), lpa_sd AS (
-  SELECT node, 'c' || CAST(node % 3 AS VARCHAR) AS label
-  FROM (SELECT DISTINCT u AS node FROM lpa_und)
-  WHERE node % 250 = 0
-), l0 AS (SELECT * FROM lpa_sd)"""
-    + _lpa_round(1)
-    + _lpa_round(2)
+    _LPA_CTE
     + """
 , mdeg AS (
   SELECT u AS node, COUNT(*) AS deg FROM lpa_und GROUP BY u
@@ -4477,42 +4107,16 @@ def q_kg_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     never reached fall into '_unlabeled' so the partition is total.
     Oracle: the unrolled 2-round LPA CTEs + the same modularity algebra
     in SQL (every intermediate an exact long; one double expression)."""
-    from json_ld_spark.operators.graphops import label_propagation, modularity
-
     _utc(spark)
-    e = _copurchase_edges(spark, sf_dir)
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .dropDuplicates()
-    )
-    seeds = nodes.filter(F.col("node") % 250 == 0).select(
-        "node",
-        F.concat(F.lit("c"), (F.col("node") % 3).cast("string")).alias("label"),
-    )
-    labels = label_propagation(e, seeds, iters=2, src="u", dst="v")
-    return modularity(e, labels, src="u", dst="v")
+    e, labels = _lpa_labels(spark, sf_dir)
+    return gops.modularity(e, labels, src="u", dst="v")
 
 
 # kg_louvain_move: LPA communities feed one synchronized Louvain round;
 # gains are HUGEINT-exact so the argmax ordering is identical to the
 # Spark decimal lattice
 _LOUVAIN_MOVE_SQL = (
-    """
-WITH lpa_e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), lpa_und AS (
-  SELECT u, v FROM lpa_e UNION SELECT v AS u, u AS v FROM lpa_e
-), lpa_sd AS (
-  SELECT node, 'c' || CAST(node % 3 AS VARCHAR) AS label
-  FROM (SELECT DISTINCT u AS node FROM lpa_und)
-  WHERE node % 250 = 0
-), l0 AS (SELECT * FROM lpa_sd)"""
-    + _lpa_round(1)
-    + _lpa_round(2)
+    _LPA_CTE
     + """
 , ldeg AS (
   SELECT u AS node, COUNT(*) AS k FROM lpa_und GROUP BY u
@@ -4568,21 +4172,9 @@ def q_kg_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
     community mass agg + per-NODE argmax window + 1-row m broadcast.
     Oracle: the unrolled LPA CTEs + the same algebra with HUGEINT
     gains and the identical ROW_NUMBER ordering."""
-    from json_ld_spark.operators.graphops import label_propagation, louvain_move
-
     _utc(spark)
-    e = _copurchase_edges(spark, sf_dir)
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .dropDuplicates()
-    )
-    seeds = nodes.filter(F.col("node") % 250 == 0).select(
-        "node",
-        F.concat(F.lit("c"), (F.col("node") % 3).cast("string")).alias("label"),
-    )
-    labels = label_propagation(e, seeds, iters=2, src="u", dst="v")
-    out = louvain_move(e, labels, src="u", dst="v")
+    e, labels = _lpa_labels(spark, sf_dir)
+    out = gops.louvain_move(e, labels, src="u", dst="v")
     return out.select(
         F.col("node").cast("long").alias("node"),
         "old_label", "new_label", "moved",
@@ -4661,13 +4253,7 @@ def q_kg_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # kg_local_clustering: id-ordered triangle enumeration (a<b via the edge
 # canon, b<c via the join) + corner re-attribution; same algebra, 6 dp
-_LCC_SQL = r"""
-WITH e AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_orderkey % 5 = 0
-), deg AS (
+_LCC_SQL = "WITH e(a, b) AS MATERIALIZED (" + _COPURCHASE_SQL + """), deg AS (
   SELECT n AS node, COUNT(*) AS deg FROM (
     SELECT a AS n FROM e UNION ALL SELECT b AS n FROM e) GROUP BY n
 ), tri AS (
@@ -4700,11 +4286,7 @@ def q_kg_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     until the single division. Oracle: the id-ordered triangle
     enumeration + corner re-attribution in SQL."""
     _utc(spark)
-    return gops.local_clustering(
-        _copurchase_edges(spark, sf_dir).select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        )
-    )
+    return gops.local_clustering(_copurchase_src_dst(spark, sf_dir))
 
 
 # kg_ppmi_edges: pair counts over distinct (order, part) membership, node
@@ -4854,9 +4436,7 @@ def q_kg_wl_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two rounds unrolled as CTEs with the identical md5 algebra."""
     _utc(spark)
     return gops.wl_refinement(
-        _copurchase_edges(spark, sf_dir).select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        ),
+        _copurchase_src_dst(spark, sf_dir),
         rounds=2,
     )
 
@@ -4904,9 +4484,7 @@ def q_kg_neighbor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows in SQL."""
     _utc(spark)
     return gops.neighbor_sample(
-        _copurchase_edges(spark, sf_dir).select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        ),
+        _copurchase_src_dst(spark, sf_dir),
         fanouts=(3, 2),
         root_filter=lambda c: c % 10 == 0,
         seed="ns",
@@ -4915,22 +4493,19 @@ def q_kg_neighbor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # kg_kge_eval: the full filtered-TransE ranking replay (same CTEs as
 # kg_transe_rank, at the denser mod-29 test sample) wrapped in the
-# per-relation MRR / Hits@k aggregation; ranks are exact integers so
-# only the final reciprocal sum is float (rounded once, like ppmi's ln)
-_KGE_EVAL_SQL = (
-    "SELECT pred, CAST(COUNT(*) AS BIGINT) AS n_test,\n"
-    "       round(SUM(1.0::DOUBLE / rank) / COUNT(*), 6) AS mrr_r,\n"
-    "       round(SUM(CASE WHEN rank <= 1 THEN 1 ELSE 0 END)\n"
-    "             / CAST(COUNT(*) AS DOUBLE), 6) AS hits1_r,\n"
-    "       round(SUM(CASE WHEN rank <= 3 THEN 1 ELSE 0 END)\n"
-    "             / CAST(COUNT(*) AS DOUBLE), 6) AS hits3_r,\n"
-    "       round(SUM(CASE WHEN rank <= 10 THEN 1 ELSE 0 END)\n"
-    "             / CAST(COUNT(*) AS DOUBLE), 6) AS hits10_r\n"
-    "FROM (\n"
-    # the % 97 test-sample literal appears exactly once in the rank SQL
-    + _TRANSE_RANK_SQL.replace("% 97 = 0", "% 29 = 0")
-    + "\n) ranks GROUP BY pred"
-)
+# per-relation MRR / Hits@k aggregation; ranks are exact integers, MRR
+# sums integer micros, so only the final divisions are float
+_KGE_EVAL_SQL = f"""
+SELECT pred, CAST(COUNT(*) AS BIGINT) AS n_test,
+       {_MRR_SQL} AS mrr_r,
+       round(SUM(CASE WHEN rank <= 1 THEN 1 ELSE 0 END)
+             / CAST(COUNT(*) AS DOUBLE), 6) AS hits1_r,
+       round(SUM(CASE WHEN rank <= 3 THEN 1 ELSE 0 END)
+             / CAST(COUNT(*) AS DOUBLE), 6) AS hits3_r,
+       round(SUM(CASE WHEN rank <= 10 THEN 1 ELSE 0 END)
+             / CAST(COUNT(*) AS DOUBLE), 6) AS hits10_r
+FROM ({_kge_rank_sql("transe", 29)}) ranks GROUP BY pred
+"""
 
 
 @query(oracle=_KGE_EVAL_SQL)
@@ -4939,31 +4514,18 @@ def q_kg_kge_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered TransE ranking (kge.transe_rank, Bordes et al. NeurIPS'13
     protocol) at a denser test sample (mod 29) than kg_transe_rank's:
     the leaderboard aggregation every embedding trainer reports. Ranks
-    are exact integers (integer-lattice embeddings), so MRR is a sum of
-    exact reciprocals rounded once; Hits@k are integer-count ratios.
-    One extra map-side-combinable groupBy over the rank table. Oracle:
-    the full ranking replay wrapped in the same aggregation."""
+    are exact integers (integer-lattice embeddings), so MRR is an exact
+    sum of integer-micro reciprocals rounded once; Hits@k are
+    integer-count ratios. One extra map-side-combinable groupBy over
+    the rank table. Oracle: the full ranking replay wrapped in the same
+    aggregation."""
     from json_ld_spark.operators.kge import transe_rank
-    from json_ld_spark.operators.native import (
-        transcript_adjacency_native,
-        transcript_triples_native,
-    )
 
     _utc(spark)
-    t = transcripts_from_documents(spark, sf_dir)
-    edges = (
-        transcript_triples_native(t)
-        .filter(F.col("obj_kind") == "iri")
-        .select("subj", "pred", "obj")
-        .unionByName(
-            transcript_adjacency_native(t, with_doc_id=False)
-            .select("subj", "pred", "obj")
-        )
-    )
-    ranks = transe_rank(edges, dim=16, test_mod=29)
+    ranks = transe_rank(_kge_edges(spark, sf_dir), dim=16, test_mod=29)
     return ranks.groupBy("pred").agg(
         F.count(F.lit(1)).cast("long").alias("n_test"),
-        F.round(F.sum(1.0 / F.col("rank")) / F.count(F.lit(1)), 6).alias("mrr_r"),
+        _mrr_r().alias("mrr_r"),
         F.round(
             F.sum(F.when(F.col("rank") <= 1, 1).otherwise(0))
             / F.count(F.lit(1)), 6,
@@ -5141,7 +4703,6 @@ def q_kg_reify(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-way explode + md5-keyed dedup; zero other shuffles. Oracle: the
     same md5 statement id + UNNEST in SQL."""
     from json_ld_spark.operators.canonical import reify_statements
-    from json_ld_spark.operators.native import transcript_triples_native
 
     _utc(spark)
     t = transcripts_from_documents(spark, sf_dir)

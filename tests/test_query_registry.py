@@ -1,8 +1,9 @@
 """The query registry behind ``__spark_entry__``, checked without Spark:
 229 queries, each a ``q_<name>`` in its family module with a non-empty
-DuckDB oracle; ``queries()`` puts never-checked queries first; and
-every function in the query modules resolves its globals (a helper lost
-in a move would otherwise surface only as a NameError at run time)."""
+DuckDB oracle; ``queries()`` puts never-checked queries first; every
+function in the query modules resolves its globals (a helper lost in a
+move would otherwise surface only as a NameError at run time); and the
+kg family does not grow back copies of its shared inputs."""
 
 import builtins
 import dis
@@ -13,6 +14,7 @@ import json
 import os
 import pkgutil
 import types
+from collections import defaultdict
 
 import pytest
 
@@ -117,3 +119,37 @@ def test_global_resolution_check_flags_a_missing_helper():
         return [_no_such_helper(x) for x in sf_dir]  # noqa: F821
 
     assert _unresolved_globals(q_planted, globals()) == {"_no_such_helper"}
+
+
+def _duplicate_window_lines(text: str, width: int = 8, min_filled: int = 6) -> int:
+    """Lines of ``text`` covered by a run of ``width`` whitespace-stripped
+    lines, at least ``min_filled`` of them non-blank, that occurs at two
+    or more places; each covered line counts once."""
+    lines = [line.strip() for line in text.splitlines()]
+    starts = defaultdict(list)
+    for i in range(len(lines) - width + 1):
+        window = tuple(lines[i:i + width])
+        if sum(1 for line in window if line) >= min_filled:
+            starts[window].append(i)
+    covered = set()
+    for idx in starts.values():
+        if len(idx) > 1:
+            for i in idx:
+                covered.update(range(i, i + width))
+    return len(covered)
+
+
+def test_kg_family_duplicate_windows_ratchet():
+    # kg.py builds each shared input (co-purchase and supplier-customer
+    # graphs, KGE edges and rank SQL, LPA seeding, mention dictionary)
+    # once per engine; an inlined copy of one would push this back up
+    with open(os.path.join(REPO, "json_ld_spark", "queries", "kg.py")) as f:
+        assert _duplicate_window_lines(f.read()) <= 36
+
+
+def test_duplicate_window_scan_counts_a_planted_copy():
+    block = "\n".join(f"x{i} = {i}" for i in range(8))
+    assert _duplicate_window_lines(block) == 0
+    assert _duplicate_window_lines(block + "\n\ny = 0\n" + block) == 16
+    sparse = "\n".join(["a", "", "", "", "b", "c", "d", "e"])
+    assert _duplicate_window_lines(sparse + "\n" + sparse) == 0
